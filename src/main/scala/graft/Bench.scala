@@ -163,7 +163,10 @@ object Bench {
     * chars (3-decimal seconds, Locale.ROOT), descending by time — the
     * queries that matter for perf adjudication — while the COMPLETE
     * map stays in target/bench.json / bench_history.jsonl exactly as
-    * before. Returns (jsonObject, nInlined).
+    * before. The inline map is a strict top-N prefix of the cost order:
+    * it stops at the first entry that does not fit, so a reader can
+    * take "not inlined" to mean "cheaper than every inlined query".
+    * Returns (jsonObject, nInlined).
     */
   def topQueriesJson(times: Map[String, Double], budget: Int)
       : (String, Int) = {
@@ -171,12 +174,9 @@ object Bench {
       case (k, v) =>
         "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
     }
-    var len = 2 // the braces
-    val kept = scala.collection.mutable.ArrayBuffer[String]()
-    parts.foreach { p =>
-      val add = p.length + (if (kept.nonEmpty) 1 else 0)
-      if (len + add <= budget) { len += add; kept += p }
-    }
+    // serialized length after each entry: braces + entries + commas
+    val lens = parts.scanLeft(2)((len, p) => len + p.length + (if (len > 2) 1 else 0)).tail
+    val kept = parts.zip(lens).takeWhile(_._2 <= budget).map(_._1)
     (kept.mkString("{", ",", "}"), kept.size)
   }
 
@@ -204,14 +204,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // JVM/codegen/parquet-reader warmup so the first timed query isn't
     // charged for one-time initialization (~4 s of JIT + classloading).
     try SparkEntry.queries("q14_summary_stats")(spark, sfDir).count()

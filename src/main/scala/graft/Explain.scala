@@ -1,16 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for selected queries so plan
   * regressions (missed broadcast, lost pushdown, dropped exchange reuse)
   * are visible. Usage: runMain graft.Explain [queryName ...]
+  * Plans on the same session as Bench (Session.local), so they are the
+  * plans that get timed.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ops.Lifecycle
 
 /** Runnable per-market lifecycle (reference main.py entrypoint):
@@ -26,14 +25,7 @@ object Main {
       }
       Lifecycle.MarketConfig(market, dir, root, expected, asOf)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     try {
       val (_, report) = Lifecycle.run(spark, configs)
       println(report)

@@ -60,20 +60,6 @@ object Lifecycle {
   private val rejectionSchema = StructType(Seq(
     StructField("key", StringType), StructField("reason", StringType)))
 
-  /** Freshness gate (check_needs_update, main.py:100-111): sync iff the
-    * store is absent, empty, or its MAX(date) predates `asOf`. Only the
-    * 1-row max aggregate runs; a missing path is "needs update", any
-    * other failure propagates (same posture as Merge.upsertIntoPath).
-    */
-  def needsUpdate(spark: SparkSession, path: String, asOf: String): Boolean =
-    try {
-      val mx = spark.read.parquet(path).agg(max(col("date"))).first()
-      mx.isNullAt(0) || mx.getDate(0).toString < asOf
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getCondition == "PATH_NOT_FOUND" => true
-    }
-
   /** One market through the full loop: freshness gate → CSV ingest →
     * validation gates → MERGE of the valid day bars into the prices
     * store (version = ingest day, so re-running a day is idempotent) →
@@ -96,15 +82,18 @@ object Lifecycle {
           case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "PATH_NOT_FOUND" => None
         }
-    val ran = readStore() match {
+    // Freshness gate (check_needs_update, main.py:100-111): sync iff
+    // the store is absent, empty, or its MAX(date) predates `asOf`.
+    val before = readStore()
+    val ran = before match {
       case None => true
       case Some(df) =>
         val mx = df.agg(max(col("date"))).first()
         mx.isNullAt(0) || mx.getDate(0).toString < cfg.asOf
     }
-    val rejections =
-      if (!ran) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rejectionSchema)
+    val (rejections, nRejected) =
+      if (!ran) (spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rejectionSchema), 0L)
       else {
         // Backfill window clamp BEFORE validation: the date predicates
         // sit directly on the scan (pushed to the reader; at warehouse
@@ -128,10 +117,12 @@ object Lifecycle {
         else
           Merge.upsertIntoPath(validBars, prices,
             Seq("symbol", "date"), "version", "date")
-        Pipeline.writeSlice(slice, s"${cfg.warehouseRoot}/${cfg.marketId}", cfg.marketId)
-        slice.rejections
+        val n = Pipeline.writeSlice(slice,
+          s"${cfg.warehouseRoot}/${cfg.marketId}", cfg.marketId)
+        (slice.rejections, n)
       }
-    val store = readStore().get
+    // a skipped run left the store as the gate read it
+    val store = (if (ran) readStore() else before).get
     val stats = Report.summaryStats(store, col("symbol"), col("date")).first()
     val success = stats.getLong(0)
     val endDate = Option(stats.getDate(1)).map(_.toString).getOrElse("N/A")
@@ -145,7 +136,7 @@ object Lifecycle {
       status = if (coverage >= 80) "OK" else "LOW",
       endDate = endDate,
       totalRows = totalRows,
-      nRejected = rejections.count(),
+      nRejected = nRejected,
       ranSync = ran)
     (summary, rejections)
   }

@@ -9,12 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Normalize {
 
-  /** P1: lowercase all column names (reference flattens yfinance headers,
-    * downloader_tw.py:87-91 ×6).
-    */
-  def lowercaseColumns(df: DataFrame): DataFrame =
-    df.toDF(df.columns.toIndexedSeq.map(_.toLowerCase): _*)
-
   /** P9: null-ish sector normalization (downloader_us.py:80). */
   def normalizeSector(c: Column): Column =
     when(lower(trim(c)).isin("nan", "n/a", "") || c.isNull, lit("Unknown"))
@@ -55,17 +49,6 @@ object Normalize {
 
   /** P14: HK alternate symbol — strip leading zeros (downloader_hk.py:116). */
   def hkAltCode(code: Column): Column = regexp_replace(code, "^0+", "")
-
-  /** P4: date normalization — tz strip + ISO day precision
-    * (downloader_tw.py:92 ×6). Engine-side, dates are real DateType;
-    * `yyyy-MM-dd` formatting happens only at sinks to preserve the
-    * lexicographic==chronological contract (main.py:111).
-    */
-  def normalizeDate(c: Column): Column = to_date(c)
-
-  /** P15: null-row drop on price columns (downloader_wmy.py:36). */
-  def dropNullPrices(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.drop(cols)
 
   /** P5: fallback date-column pick (downloader_us.py:119-120): the
     * column literally named `date` when present, else the FIRST column

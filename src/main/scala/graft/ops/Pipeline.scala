@@ -102,8 +102,9 @@ object Pipeline {
 
   /** K3/K4: persist the slice — one parquet dataset per period plus an
     * append-only audit row (reference downloader_wmy.py:62-83,165-167).
+    * Returns the number of rejected symbols the audit row records.
     */
-  def writeSlice(out: SliceOutputs, root: String, marketId: String): Unit = {
+  def writeSlice(out: SliceOutputs, root: String, marketId: String): Long = {
     out.weekly.write.mode("overwrite").parquet(s"$root/weekly")
     out.monthly.write.mode("overwrite").parquet(s"$root/monthly")
     out.yearly.write.mode("overwrite").parquet(s"$root/yearly")
@@ -119,6 +120,7 @@ object Pipeline {
         "skip_count", "success_rate")
       .withColumn("execution_time", current_timestamp())
       .write.mode("append").parquet(s"$root/audit")
+    failed
   }
 
   /** Schema reconciliation on load — the reference's one dynamic-schema

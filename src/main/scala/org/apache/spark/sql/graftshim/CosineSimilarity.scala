@@ -12,6 +12,22 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
+/** Input contract of the pair kernels below: both vectors have one
+  * length. A ragged pair raises, naming both lengths, instead of
+  * silently dotting the shorter prefix.
+  */
+object VectorLengths {
+  /** The common length, or the error. */
+  def check(fn: String, a: Int, b: Int): Int =
+    if (a == b) a
+    else throw new IllegalArgumentException(
+      s"$fn: vector lengths differ ($a vs $b); both sides must share one dimensionality")
+
+  /** Java for [[check]] over two generated `double[]` locals. */
+  def checkCode(fn: String, x: String, y: String): String =
+    s"${getClass.getName.stripSuffix("$")}.check(\"$fn\", $x.length, $y.length)"
+}
+
 /** Native Catalyst expression for cosine similarity over two double
   * arrays, with whole-stage codegen (`doGenCode` emits one fused Java
   * loop). This replaces the composable-but-interpreted higher-order
@@ -39,7 +55,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData].toDoubleArray()
     val y = b.asInstanceOf[ArrayData].toDoubleArray()
-    val n = math.min(x.length, y.length)
+    val n = VectorLengths.check(prettyName, x.length, y.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) { dot += x(i) * y(i); na += x(i) * x(i); nb += y(i) * y(i); i += 1 }
     dot / (math.sqrt(na) * math.sqrt(nb))
@@ -54,7 +70,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
       s"""
          |double[] $x = $a.toDoubleArray();
          |double[] $y = $b.toDoubleArray();
-         |int $n = Math.min($x.length, $y.length);
+         |int $n = ${VectorLengths.checkCode(prettyName, x, y)};
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $dot += $x[$i] * $y[$i];
@@ -83,14 +99,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * norm loops paid |Q|+|C| times instead of |Q|·|C| (guide §1.2 step 2:
   * per-task work, measured on the q403/q224 cross kernels).
   *
-  * CALLER PRECONDITION (r15 advice): this dots over the MIN-length
-  * prefix, while the hoisted per-row norms (Similarity.normHoisted)
-  * norm each FULL vector — the recomposition is bit-identical to the
-  * fused cosine only when both sides share one dimensionality. Every
-  * current caller (the Similarity pair kernels, EntriesSimilarityAnn /
-  * EntriesStatsExperiments pair blocks, Streams.annDedupStream) holds
-  * it via the fixed-dim embedding model; a future ragged-vector caller
-  * gets silently wrong similarities, not an error.
+  * Both sides must share one dimensionality (the recomposition with
+  * hoisted full-vector norms is only meaningful then): a ragged pair
+  * fails the task with an error naming both lengths, in the
+  * interpreted and the generated path alike, as CosineSimilarity does.
   */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression with ImplicitCastInputTypes
@@ -106,7 +118,7 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData].toDoubleArray()
     val y = b.asInstanceOf[ArrayData].toDoubleArray()
-    val n = math.min(x.length, y.length)
+    val n = VectorLengths.check(prettyName, x.length, y.length)
     var dot = 0.0; var i = 0
     while (i < n) { dot += x(i) * y(i); i += 1 }
     dot
@@ -120,7 +132,7 @@ case class DotProduct(left: Expression, right: Expression)
       s"""
          |double[] $x = $a.toDoubleArray();
          |double[] $y = $b.toDoubleArray();
-         |int $n = Math.min($x.length, $y.length);
+         |int $n = ${VectorLengths.checkCode(prettyName, x, y)};
          |double $dot = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $dot += $x[$i] * $y[$i];

@@ -142,6 +142,19 @@ class BenchSpec extends SparkSpec {
     assert(jt.indexOf("\"qa\"") < jt.indexOf("\"qb\""))
   }
 
+  test("topQueriesJson is a strict top-N prefix: it stops at the first " +
+      "entry that does not fit, even when a later, shorter one would") {
+    val times = Map("q_a" -> 9.0, "q_a_very_long_query_name" -> 5.0,
+      "q_b" -> 1.0)
+    // fits q_a and q_b together, but not q_a with the long name
+    val budget = "{\"q_a\":9.000,\"q_b\":1.000}".length
+    val (j, n) = Bench.topQueriesJson(times, budget)
+    assert(j == "{\"q_a\":9.000}" && n == 1, s"got $j ($n)")
+    val costOrder = times.toSeq.sortBy { case (k, v) => (-v, k) }.map(_._1)
+    val inlined = "\"([^\"]+)\":".r.findAllMatchIn(j).map(_.group(1)).toSeq
+    assert(inlined == costOrder.take(inlined.size))
+  }
+
   test("lastHistoryCalibMed finds the LAST entry for the requested sf " +
       "dir only, and survives a missing or malformed history") {
     val dir = java.nio.file.Files.createTempDirectory("benchhist")

@@ -112,6 +112,26 @@ class LifecycleSpec extends SparkSpec {
     }
   }
 
+  test("nRejected counts the returned rejection frame; a gated re-run " +
+      "reports no sync and no rejections") {
+    withTempDir { tmp =>
+      val dir = new java.io.File(tmp, "csv")
+      writeCsv(dir, "2330_day.csv", Seq(
+        "2024-01-02,10,12,9,11,100", "2024-01-03,11,13,10,12,100"))
+      writeCsv(dir, "badp_day.csv", Seq("2024-01-02,10,12,9,-5,100"))
+      val cfg = MarketConfig("tw", dir.getAbsolutePath,
+        tmp.getAbsolutePath + "/wh", 1, asOf = "2024-01-03")
+
+      val (first, rej) = Lifecycle.runMarket(spark, cfg)
+      assert(first.ranSync && first.nRejected == 1)
+      assert(rej.count() == first.nRejected)
+
+      val (second, rej2) = Lifecycle.runMarket(spark, cfg)
+      assert(!second.ranSync && second.nRejected == 0 && rej2.count() == 0)
+      assert(second.totalRows == first.totalRows)
+    }
+  }
+
   test("freshness gate: an up-to-date store skips sync; a newer asOf re-runs idempotently") {
     withTempDir { tmp =>
       val dir = new java.io.File(tmp, "csv")

@@ -20,6 +20,43 @@ class SimilaritySpec extends SparkSpec {
     assert(native.toSeq == hof.toSeq) // exact equality, not approximate
   }
 
+  test("cosine and dot product reject ragged vectors in the interpreted " +
+      "and generated paths, naming both lengths; equal lengths unchanged") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graftshim.{CosineSimilarity, DotProduct}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val a = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    val b = BoundReference(1, ArrayType(DoubleType), nullable = true)
+    def row(x: Array[Double], y: Array[Double]) =
+      InternalRow(new GenericArrayData(x), new GenericArrayData(y))
+    val x = Array(1.0, 2.0, 3.0); val y = Array(4.0, 5.0, 6.0)
+    // the ascending-index accumulation both paths implement
+    val dot = 1.0 * 4.0 + 2.0 * 5.0 + 3.0 * 6.0
+    val cos = dot / (math.sqrt(1.0 + 4.0 + 9.0) * math.sqrt(16.0 + 25.0 + 36.0))
+    for ((e, want) <- Seq[(Expression, Double)](
+        (CosineSimilarity(a, b), cos), (DotProduct(a, b), dot))) {
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      def viaCodegen(r: InternalRow): Double = generated(r).getDouble(0)
+      assert(e.eval(row(x, y)) == want && viaCodegen(row(x, y)) == want)
+      val interpreted = intercept[IllegalArgumentException](
+        e.eval(row(x, Array(1.0, 2.0))))
+      assert(interpreted.getMessage.contains("(3 vs 2)"), interpreted.getMessage)
+      val codegen = intercept[IllegalArgumentException](
+        viaCodegen(row(Array(1.0), y)))
+      assert(codegen.getMessage.contains("(1 vs 3)"), codegen.getMessage)
+    }
+    // and through a whole-stage-codegen query on the Column face
+    val ragged = spark.range(1).select(
+      array($"id".cast("double"), lit(1.0)).as("a"),
+      array($"id".cast("double"), lit(1.0), lit(2.0)).as("b"))
+    val err = intercept[Exception](
+      ragged.select(Similarity.cosine($"a", $"b")).collect())
+    assert(err.getMessage.contains("vector lengths differ (2 vs 3)"), err.getMessage)
+  }
+
   test("hoisted-norm cosine recomposes the fused expression bit-for-bit") {
     // the r15 pair-kernel optimization: dot(a,b)/(√dot(a,a)·√dot(b,b))
     // with per-row hoisted norms must be EXACTLY the fused cosine — any
