@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -9,12 +9,16 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * merge, resample the period outputs, summarize, and render one report
   * across all markets.
   *
-  * Engine posture: one market = one composed Spark job graph over a
-  * directory of pre-fetched day-bar CSVs (the network fetch stays outside
-  * the engine; see ListAdapters). Everything here reuses the operator
-  * library — `Pipeline.dailySlice` (validate/resample), `Merge
-  * .upsertIntoPath` (K1 partition-scoped MERGE), `Report` (A2-A6 + K7) —
-  * so the lifecycle adds sequencing, not new semantics.
+  * Engine posture: one market reads a directory of pre-fetched day-bar
+  * CSVs (the network fetch stays outside the engine; see ListAdapters).
+  * Its rejection set is resolved by one driver action into a local
+  * relation of at most one row per symbol (`Pipeline.dailySlice`), and
+  * the merge, the period writes, the summary and the report all read
+  * that relation. Markets run side by side on one shared session, one
+  * thread each. Everything here reuses the operator library —
+  * `Pipeline.dailySlice` (validate/resample), `Merge.upsertIntoPath`
+  * (K1 partition-scoped MERGE), `Report` (A2-A6 + K7) — so the lifecycle
+  * adds sequencing, not new semantics.
   */
 object Lifecycle {
 
@@ -93,7 +97,7 @@ object Lifecycle {
     }
     val (rejections, nRejected) =
       if (!ran) (spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rejectionSchema), 0L)
+        java.util.Collections.emptyList[Row](), rejectionSchema), 0L)
       else {
         // Backfill window clamp BEFORE validation: the date predicates
         // sit directly on the scan (pushed to the reader; at warehouse
@@ -141,12 +145,34 @@ object Lifecycle {
     (summary, rejections)
   }
 
-  /** The whole fleet: run every market, then render ONE report across
-    * all summaries + the union of rejection lists (main.py:196-201 →
-    * notifier.send_stock_report_email).
+  /** The whole fleet: run every market at once, then render ONE report
+    * across all summaries + the union of rejection lists (main.py:196-201
+    * → notifier.send_stock_report_email). Summaries and report follow
+    * config order.
+    *
+    * Each market runs `runMarket` on its own thread; their Spark jobs
+    * share the session's scheduler. `run` waits for every market, even
+    * after one throws, so no market's write is still running and no
+    * lifecycle thread is alive when it returns or throws; then it
+    * rethrows the first failure in config order.
     */
   def run(spark: SparkSession, configs: Seq[MarketConfig]): (Seq[MarketSummary], String) = {
-    val results = configs.map(cfg => (cfg, runMarket(spark, cfg)))
+    val outcomes = new Array[Either[Throwable, (MarketSummary, DataFrame)]](configs.size)
+    val threads = configs.zipWithIndex.map { case (cfg, i) =>
+      val t = new Thread(() =>
+        outcomes(i) = try Right(runMarket(spark, cfg)) catch { case e: Throwable => Left(e) },
+        s"lifecycle-${cfg.marketId}")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    // an interrupt does not cut the wait short; it is re-asserted after
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val results = configs.zip(outcomes.toSeq.map(_.fold(e => throw e, identity)))
     val summaries = results.map(_._2._1)
     import spark.implicits._
     val summaryDf = summaries.toDF()

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * upsert = union + keep-latest-per-key, made deterministic by an explicit
   * version column (ingest batch id). At 100 TB the full-table rewrite is
   * unacceptable, so the write path is partition-scoped: with the table
-  * partitioned by a date column and `partitionOverwriteMode=dynamic`, a
+  * partitioned by a date column and a dynamic partition overwrite, a
   * merge only rewrites the date partitions present in the incoming batch —
   * the same "touch only what changed" property the reference gets from
   * row-level REPLACE.
@@ -80,33 +80,28 @@ object Merge {
 
   /** Partition-scoped physical merge: only date-partitions present in the
     * incoming batch are read, merged and rewritten (dynamic partition
-    * overwrite). Requires `spark.sql.sources.partitionOverwriteMode=dynamic`.
+    * overwrite, set on this write only — the session conf is untouched).
     * This is the 100 TB write path: cost scales with the touched dates,
     * not the table.
     */
   def upsertIntoPath(incoming: DataFrame, tablePath: String, keys: Seq[String],
                      versionCol: String, partitionCol: String): Unit = {
     val spark = incoming.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // Only a definite path-not-found means "table absent". A transient FS
     // or parse error must PROPAGATE — treating it as absent would rewrite
     // the table with just the incoming batch and silently drop history.
-    val exists = try {
-      spark.read.parquet(tablePath).schema.nonEmpty
-    } catch {
+    val table = try Some(spark.read.parquet(tablePath)) catch {
       case e: org.apache.spark.sql.AnalysisException
-        if e.getCondition == "PATH_NOT_FOUND" => false
+        if e.getCondition == "PATH_NOT_FOUND" => None
     }
-    val merged =
-      if (!exists) incoming
-      else {
-        // Partition-prune the existing side to the touched partitions only.
-        val touched = incoming.select(col(partitionCol)).distinct()
-        val existing = spark.read.parquet(tablePath)
-          .join(broadcast(touched), Seq(partitionCol), "left_semi")
-        upsert(existing, incoming, keys, versionCol)
-      }
+    val merged = table.fold(incoming) { existing =>
+      // Partition-prune the existing side to the touched partitions only.
+      val touched = incoming.select(col(partitionCol)).distinct()
+      upsert(existing.join(broadcast(touched), Seq(partitionCol), "left_semi"),
+        incoming, keys, versionCol)
+    }
     merged.write
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .mode(SaveMode.Overwrite)
       .parquet(tablePath)

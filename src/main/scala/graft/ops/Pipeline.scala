@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** The end-to-end daily slice — the reference's richest lifecycle
   * (downloader_wmy.main + the K1 merge, SURVEY §3.3/§7): ingest a
@@ -12,10 +14,10 @@ import org.apache.spark.sql.types._
   * rejected symbols from ALL period outputs atomically → emit rejection,
   * audit and summary tables.
   *
-  * One Spark job graph replaces the reference's per-file thread pool:
-  * file-split parallelism subsumes the pool, per-symbol isolation
-  * becomes groupBy-key isolation, and every validator is a single
-  * aggregate pass (no per-symbol loops).
+  * Distributed scans and aggregates replace the reference's per-file
+  * thread pool: file-split parallelism subsumes the pool, per-symbol
+  * isolation becomes groupBy-key isolation, and every validator is a
+  * single aggregate pass (no per-symbol loops).
   */
 object Pipeline {
 
@@ -56,6 +58,13 @@ object Pipeline {
     * frames and then rejects (order matters for V3) — here V3 is
     * evaluated on the resampled weekly/monthly/yearly union, so a
     * violation in any period output rejects the symbol everywhere.
+    *
+    * The rejection set is resolved with ONE driver action (all gates,
+    * all three resamples) into a local relation. It holds at most one
+    * row per symbol, so the collect is bounded by the listed universe,
+    * not by bar volume. Every returned frame reads that relation instead
+    * of re-running the gates, and nothing is cached, so nothing outlives
+    * the call.
     */
   def dailySlice(bars: DataFrame,
                  gapDays: Int = 14, gapSince: String = "2024-01-01"): SliceOutputs = {
@@ -65,39 +74,40 @@ object Pipeline {
     val withOrd = clean0.withColumn("ord",
       Resample.ordinal(col("date"), lit(0)))
 
+    def periods(valid: DataFrame): Seq[DataFrame] =
+      Seq(Resample.weekEndFri(col("date")), Resample.monthEnd(col("date")),
+          Resample.yearStart(col("date"))).map { bucket =>
+        Resample.periodReturn(
+          Resample.ohlcFromBars(valid, col("symbol"), bucket,
+            col("open"), col("high"), col("low"), col("close"),
+            col("volume"), col("ord")))
+      }
+
     val priceRejects = Quality.invalidPriceKeys(withOrd, col("symbol"), col("close"))
     val gapRejects = Quality.gapKeys(withOrd, col("symbol"), col("date"),
       gapDays, gapSince)
     val preRejects = Quality.firstReasonPerKey(
       priceRejects.unionByName(gapRejects))
-
-    val valid = Quality.excludeRejected(withOrd, col("symbol"), preRejects)
-
-    def resample(bucket: Column): DataFrame =
-      Resample.periodReturn(
-        Resample.ohlcFromBars(valid, col("symbol"), bucket,
-          col("open"), col("high"), col("low"), col("close"),
-          col("volume"), col("ord")))
-
-    val weekly = resample(Resample.weekEndFri(col("date")))
-    val monthly = resample(Resample.monthEnd(col("date")))
-    val yearly = resample(Resample.yearStart(col("date")))
-
-    // V3 on every resampled bar, rejection applied to ALL outputs
-    val allPeriods = Seq(weekly, monthly, yearly).reduce(_.unionByName(_))
-    val ohlcRejects = Quality.ohlcViolationKeys(allPeriods,
+    // V3 on every resampled bar of the pre-gate survivors
+    val ohlcRejects = Quality.ohlcViolationKeys(
+      periods(Quality.excludeRejected(withOrd, col("symbol"), preRejects))
+        .reduce(_.unionByName(_)),
       col("symbol"), col("low"), col("close"), col("high"))
-    val rejections = Quality.firstReasonPerKey(
-      preRejects.unionByName(ohlcRejects))
+    val resolved = Quality.firstReasonPerKey(preRejects.unionByName(ohlcRejects))
+    val rows = resolved.collect()
+    val rejections = bars.sparkSession.createDataFrame(rows.toSeq.asJava, resolved.schema)
 
-    def finalize(df: DataFrame): DataFrame =
-      Quality.excludeRejected(df, col("symbol"), ohlcRejects)
-
+    // V3 only sees pre-gate survivors, so the two reason sets are
+    // disjoint; resampling is per symbol, so dropping every rejected
+    // symbol before the resample equals dropping V3's after it
+    val valid = Quality.excludeRejected(withOrd, col("symbol"),
+      rejections.filter(col("reason") =!= Quality.ReasonOhlcLogic))
+    val Seq(weekly, monthly, yearly) =
+      periods(Quality.excludeRejected(withOrd, col("symbol"), rejections))
     val summary = Report.summaryStats(valid, col("symbol"), col("date"))
-      .crossJoin(rejections.agg(count(lit(1)).as("n_rejected")))
+      .withColumn("n_rejected", lit(rows.length.toLong))
 
-    SliceOutputs(finalize(weekly), finalize(monthly), finalize(yearly),
-      rejections, summary)
+    SliceOutputs(weekly, monthly, yearly, rejections, summary)
   }
 
   /** K3/K4: persist the slice — one parquet dataset per period plus an
@@ -109,8 +119,8 @@ object Pipeline {
     out.monthly.write.mode("overwrite").parquet(s"$root/monthly")
     out.yearly.write.mode("overwrite").parquet(s"$root/yearly")
     val spark = out.weekly.sparkSession
-    val total = out.summary.select(col("n_symbols")).first().getLong(0)
-    val failed = out.rejections.count()
+    val counts = out.summary.select(col("n_symbols"), col("n_rejected")).first()
+    val (total, failed) = (counts.getLong(0), counts.getLong(1))
     import spark.implicits._
     Seq((java.util.UUID.randomUUID().toString, marketId, total + failed,
         total, failed,

@@ -152,7 +152,8 @@ case class DotProduct(left: Expression, right: Expression)
   * pair). Numerics identical to the interpreted HOF definition and the
   * DuckDB oracle: (x[i]−y[i])² accumulated sequentially in ascending
   * index order; float inputs arrive via the exact array<float>→
-  * array<double> implicit cast.
+  * array<double> implicit cast. A ragged pair fails with both lengths,
+  * as in [[CosineSimilarity]].
   */
 case class SquaredL2(left: Expression, right: Expression)
   extends BinaryExpression with ImplicitCastInputTypes
@@ -168,7 +169,7 @@ case class SquaredL2(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData].toDoubleArray()
     val y = b.asInstanceOf[ArrayData].toDoubleArray()
-    val n = math.min(x.length, y.length)
+    val n = VectorLengths.check(prettyName, x.length, y.length)
     var s = 0.0; var i = 0
     while (i < n) { val d = x(i) - y(i); s += d * d; i += 1 }
     s
@@ -182,7 +183,7 @@ case class SquaredL2(left: Expression, right: Expression)
       s"""
          |double[] $x = $a.toDoubleArray();
          |double[] $y = $b.toDoubleArray();
-         |int $n = Math.min($x.length, $y.length);
+         |int $n = ${VectorLengths.checkCode(prettyName, x, y)};
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $d = $x[$i] - $y[$i];

@@ -1,7 +1,10 @@
 package graft
 
-import graft.ops.Lifecycle
+import graft.ops.{Lifecycle, Report}
 import graft.ops.Lifecycle.MarketConfig
+import org.apache.spark.sql.functions.lit
+
+import scala.jdk.CollectionConverters._
 
 class LifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -47,6 +50,50 @@ class LifecycleSpec extends SparkSpec {
       // the fleet report carries both markets and the TW rejection
       assert(report.contains("market=TW") && report.contains("market=HK"))
       assert(report.contains("TW:BADP:invalid_price"))
+
+      // markets run side by side give what one market at a time gives,
+      // in config order (the report's timestamp header aside)
+      val seqCfgs = cfgs.map(_.copy(warehouseRoot = tmp.getAbsolutePath + "/seq"))
+      val seq = seqCfgs.map(c => (c, Lifecycle.runMarket(spark, c)))
+      assert(summaries == seq.map(_._2._1))
+      val seqReport = Report.renderReport(seq.map(_._2._1).toDF(),
+        seq.map { case (c, (_, rej)) =>
+          rej.select(lit(c.marketId.toUpperCase).as("market"), $"key", $"reason")
+        }.reduce(_.unionByName(_)))
+      assert(report.linesIterator.drop(1).toSeq == seqReport.linesIterator.drop(1).toSeq)
+    }
+  }
+
+  test("a failing market is rethrown after the other markets finish; " +
+      "no lifecycle thread is left") {
+    withTempDir { tmp =>
+      val badDir = new java.io.File(tmp, "bad"); val okDir = new java.io.File(tmp, "ok")
+      writeCsv(badDir, "2330_day.csv", Seq("2024-01-02,10,12,9,11,100"))
+      writeCsv(okDir, "aapl_day.csv", Seq(
+        "2024-01-02,10,12,9,11,100", "2024-01-03,11,13,10,12,100",
+        "2024-01-04,12,14,11,13,100"))
+      val root = tmp.getAbsolutePath + "/wh"
+      val bad = MarketConfig("bad", badDir.getAbsolutePath, root, 1, asOf = "2024-01-02")
+      Lifecycle.runMarket(spark, bad)
+      // corrupt the bad market's store: an unreadable footer, not a missing path
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+      files(new java.io.File(Lifecycle.pricesPath(bad)))
+        .filter(_.getName.endsWith(".parquet")).foreach { f =>
+          val w = new java.io.FileOutputStream(f); w.write(Array.fill(8)(0x00.toByte)); w.close()
+        }
+      val ok = MarketConfig("ok", okDir.getAbsolutePath, root, 1, asOf = "2024-01-05")
+
+      intercept[Exception](Lifecycle.run(spark, Seq(bad.copy(asOf = "2024-01-05"), ok)))
+
+      // the healthy market finished its store, all three periods and its audit row
+      assert(spark.read.parquet(Lifecycle.pricesPath(ok)).count() == 3)
+      for (p <- Seq("weekly", "monthly", "yearly"))
+        assert(spark.read.parquet(s"$root/ok/$p").count() == 1, p)
+      assert(spark.read.parquet(s"$root/ok/audit").count() == 1)
+      val left = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.getName.startsWith("lifecycle-") && t.isAlive)
+      assert(left.isEmpty, left.map(_.getName))
     }
   }
 

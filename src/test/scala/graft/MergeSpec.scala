@@ -115,6 +115,24 @@ class MergeSpec extends SparkSpec {
     }
   }
 
+  test("upsertIntoPath overwrites partitions dynamically without changing the session") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "STATIC")
+    try withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      Merge.upsertIntoPath(batch(("A", "2024-01-01", 10.0, 0L)), path,
+        Seq("symbol", "date"), "version", "date")
+      Merge.upsertIntoPath(batch(("A", "2024-01-02", 11.0, 1L)), path,
+        Seq("symbol", "date"), "version", "date")
+      assert(spark.conf.get(key) == "STATIC")
+      // a static overwrite would have dropped the untouched partition
+      val out = spark.read.parquet(path)
+        .select($"date".cast("string"), $"close").as[(String, Double)].collect().toSet
+      assert(out == Set(("2024-01-01", 10.0), ("2024-01-02", 11.0)))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("reconcile: exact cent classification with tolerance, missing keys both ways") {
     val a = Seq((1L, 100L), (2L, 200L), (3L, 300L), (4L, 400L))
       .toDF("k", "cents")

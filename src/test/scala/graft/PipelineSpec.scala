@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Merge, Pipeline}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 
 class PipelineSpec extends SparkSpec {
@@ -71,6 +72,15 @@ class PipelineSpec extends SparkSpec {
         .select($"n_symbols", $"total_rows", $"n_rejected")
         .as[(Long, Long, Long)].head()
       assert(sm == ((1L, 10L, 2L)))
+
+      // the rejection set is resolved once: it scans no file, and every
+      // other output scans the CSVs once instead of re-running the gates
+      def scans(df: org.apache.spark.sql.DataFrame): Int =
+        df.queryExecution.optimizedPlan.collectLeaves()
+          .count(_.isInstanceOf[LogicalRelation])
+      assert(scans(out.rejections) == 0)
+      for (df <- Seq(out.weekly, out.monthly, out.yearly, out.summary))
+        assert(scans(df) == 1, df.queryExecution.optimizedPlan)
     }
   }
 

@@ -26,7 +26,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.graftshim.{CosineSimilarity, DotProduct}
+    import org.apache.spark.sql.graftshim.{CosineSimilarity, DotProduct, SquaredL2}
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val a = BoundReference(0, ArrayType(DoubleType), nullable = true)
     val b = BoundReference(1, ArrayType(DoubleType), nullable = true)
@@ -36,8 +36,10 @@ class SimilaritySpec extends SparkSpec {
     // the ascending-index accumulation both paths implement
     val dot = 1.0 * 4.0 + 2.0 * 5.0 + 3.0 * 6.0
     val cos = dot / (math.sqrt(1.0 + 4.0 + 9.0) * math.sqrt(16.0 + 25.0 + 36.0))
+    val l2 = 9.0 + 9.0 + 9.0
     for ((e, want) <- Seq[(Expression, Double)](
-        (CosineSimilarity(a, b), cos), (DotProduct(a, b), dot))) {
+        (CosineSimilarity(a, b), cos), (DotProduct(a, b), dot),
+        (SquaredL2(a, b), l2))) {
       val generated = GenerateUnsafeProjection.generate(Seq(e))
       def viaCodegen(r: InternalRow): Double = generated(r).getDouble(0)
       assert(e.eval(row(x, y)) == want && viaCodegen(row(x, y)) == want)
