@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Query surface + DuckDB oracles: dedup + record linkage (exact/MinHash/SimHash/LSH/ER/URL).
   *
@@ -262,9 +263,6 @@ private[graft] object EntriesDedupLinkage {
     // exact token-set Jaccard on planted every-9th-substituted pairs.
     "q456_oph_minhash" -> ((s, dir) => {
       import graft.ops.Dedup
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def fdiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
       val elems = ophElems(s, dir)
       val sig = Dedup.ophDensifiedSignature(elems, col("id"),
         col("h"), 32)
@@ -495,7 +493,6 @@ private[graft] object EntriesDedupLinkage {
     // fingerprint per-source counts keep the pair algebra n·(n−1)/2
     // on the tiny (fp, source) groups — the corpus never self-joins.
     "q293_dup_source_matrix" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       // the crawl-mirror scenario: every 3rd doc re-hosted verbatim
       // on mirror1, every 7th on mirror2 (raw texts are unique, so
       // the cross-source structure is planted and known)
@@ -512,7 +509,7 @@ private[graft] object EntriesDedupLinkage {
         .agg(count(lit(1)).as("c"))
       val within = fp.filter(col("c") > 1)
         .groupBy(col("source").as("source_a"))
-        .agg(sum(d38(col("c")) * (col("c") - 1) / 2).cast("long")
+        .agg(sum(dec(col("c")) * (col("c") - 1) / 2).cast("long")
           .as("n_pairs"))
         .select(col("source_a"), col("source_a").as("source_b"),
           col("n_pairs"))
@@ -521,7 +518,7 @@ private[graft] object EntriesDedupLinkage {
             col("x.source") < col("y.source"))
         .groupBy(col("x.source").as("source_a"),
           col("y.source").as("source_b"))
-        .agg(sum(d38(col("x.c")) * col("y.c")).cast("long")
+        .agg(sum(dec(col("x.c")) * col("y.c")).cast("long")
           .as("n_pairs"))
       within.unionByName(across).filter(col("n_pairs") > 0)
     }),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.dec
 
 /** Query surface + DuckDB oracles: event/session/funnel/product analytics.
   *
@@ -120,7 +121,6 @@ private[graft] object EntriesEventsProduct {
     // sweep is a 7-way shifted equi-join on the tiny day grid, exact
     // DECIMAL(38,0) moment algebra, one sqrt + one division per lag.
     "q258_lead_lag" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val dd = t(s, dir, "events")
         .filter(col("event_type").isin("view", "purchase"))
         .groupBy(to_date(col("ts")).as("d"), col("event_type"))
@@ -135,20 +135,20 @@ private[graft] object EntriesEventsProduct {
         .join(p, expr("pd = date_add(d, lag)"))
         .groupBy(col("lag"))
         .agg(count(lit(1)).as("n_days"),
-          sum(d38(col("x"))).as("sx"), sum(d38(col("y"))).as("sy"),
-          sum(d38(col("x")) * col("y")).as("sxy"),
-          sum(d38(col("x")) * col("x")).as("sxx"),
-          sum(d38(col("y")) * col("y")).as("syy"))
+          sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+          sum(dec(col("x")) * col("y")).as("sxy"),
+          sum(dec(col("x")) * col("x")).as("sxx"),
+          sum(dec(col("y")) * col("y")).as("syy"))
         .select(col("lag"), col("n_days"),
-          when(d38(col("n_days")) * col("sxx") === col("sx") * col("sx")
-            || d38(col("n_days")) * col("syy") === col("sy") * col("sy"),
+          when(dec(col("n_days")) * col("sxx") === col("sx") * col("sx")
+            || dec(col("n_days")) * col("syy") === col("sy") * col("sy"),
             lit(null))
             .otherwise(round(
-              ((d38(col("n_days")) * col("sxy") - col("sx") * col("sy"))
+              ((dec(col("n_days")) * col("sxy") - col("sx") * col("sy"))
                 .cast("double") /
-                (sqrt((d38(col("n_days")) * col("sxx") -
+                (sqrt((dec(col("n_days")) * col("sxx") -
                   col("sx") * col("sx")).cast("double")) *
-                 sqrt((d38(col("n_days")) * col("syy") -
+                 sqrt((dec(col("n_days")) * col("syy") -
                   col("sy") * col("sy")).cast("double"))))
               .cast("decimal(20,10)"), 4).cast("double")).as("r"))
     }),
@@ -157,7 +157,6 @@ private[graft] object EntriesEventsProduct {
     // VWAP weighs price by traded size, TWAP by time). Exact integer
     // cent·unit numerators, two divisions per group at the end.
     "q320_vwap" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       bars(s, dir)
         .select(col("symbol"), date_format(col("d"), "yyyy-MM")
             .as("m"),
@@ -165,8 +164,8 @@ private[graft] object EntriesEventsProduct {
           round(col("vol")).cast("long").as("q"))
         .groupBy(col("symbol"), col("m"))
         .agg(count(lit(1)).as("n_fills"), sum(col("q")).as("qty"),
-          sum(d38(col("pxc")) * col("q")).as("pv"),
-          sum(d38(col("pxc"))).as("sp"))
+          sum(dec(col("pxc")) * col("q")).as("pv"),
+          sum(dec(col("pxc"))).as("sp"))
         .select(col("symbol"), col("m"), col("n_fills"), col("qty"),
           // qty = 0 (an all-zero-volume month) yields null, not a
           // NaN→null-by-cast oracle divergence (ADVICE r11)
@@ -187,7 +186,6 @@ private[graft] object EntriesEventsProduct {
     // one sqrt per symbol and the comparison itself; ties and
     // windows stay on the symbol key.
     "q321_sax_motifs" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val wk = bars(s, dir)
         .select(col("symbol"), date_trunc("week", col("d"))
             .cast("date").as("w"),
@@ -196,14 +194,14 @@ private[graft] object EntriesEventsProduct {
         .agg(round(sum(col("pxc")).cast("double") / count(lit(1)) *
           1e4).cast("long").as("v9"))
       val mom = wk.groupBy(col("symbol"))
-        .agg(count(lit(1)).as("mw"), sum(d38(col("v9"))).as("sv"),
-          sum(d38(col("v9")) * col("v9")).as("svv"))
+        .agg(count(lit(1)).as("mw"), sum(dec(col("v9"))).as("sv"),
+          sum(dec(col("v9")) * col("v9")).as("svv"))
         .filter(col("mw") >= 8)
         .select(col("symbol"), col("mw"), col("sv"),
-          (d38(col("mw")) * col("svv") - col("sv") * col("sv"))
+          (dec(col("mw")) * col("svv") - col("sv") * col("sv"))
             .as("vm"))
         .filter(col("vm") > 0)
-      val lhs = (d38(col("mw")) * col("v9") - col("sv"))
+      val lhs = (dec(col("mw")) * col("v9") - col("sv"))
         .cast("double")
       val thr = lit(0.6745) * sqrt(col("vm").cast("double"))
       val lettered = wk.join(mom, "symbol")
@@ -436,18 +434,17 @@ private[graft] object EntriesEventsProduct {
     // (√(nΣg²−(Σg)²) + Σg) on exact DECIMAL moments with one sqrt.
     // Users need ≥ 4 gaps; an all-zero-gap user is null (declared).
     "q231_burstiness" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val um = unix_micros(col("ts"))
       val gaps = t(s, dir, "events")
         .select(col("user_id"), (um - lag(um, 1).over(w)).as("g"))
         .filter(col("g").isNotNull)
-      val r = sqrt((d38(col("n_gaps")) * col("sxx") -
+      val r = sqrt((dec(col("n_gaps")) * col("sxx") -
         col("sx") * col("sx")).cast("double"))
       gaps.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_gaps"), sum(d38(col("g"))).as("sx"),
-          sum(d38(col("g")) * col("g")).as("sxx"))
+        .agg(count(lit(1)).as("n_gaps"), sum(dec(col("g"))).as("sx"),
+          sum(dec(col("g")) * col("g")).as("sxx"))
         .filter(col("n_gaps") >= 4)
         .select(col("user_id"), col("n_gaps"),
           when(r + col("sx").cast("double") === 0.0, lit(null))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.dec
 
 /** Query surface + DuckDB oracles: graph algorithms and web/link analysis.
   *
@@ -84,7 +85,6 @@ private[graft] object EntriesGraphWeb {
     // the user key is the only data-sized shuffle), exact integer
     // ratios snapped 4dp.
     "q263_association_rules" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val ut = t(s, dir, "events")
         .select(col("user_id").as("u"), col("event_type").as("it"))
         .distinct()
@@ -105,8 +105,8 @@ private[graft] object EntriesGraphWeb {
             .cast("decimal(20,10)"), 4).cast("double").as("support"),
           round((col("n_ab").cast("double") / col("n_a").cast("double"))
             .cast("decimal(20,10)"), 4).cast("double").as("confidence"),
-          round(((d38(col("n")) * col("n_ab")).cast("double") /
-            (d38(col("n_a")) * col("n_b")).cast("double"))
+          round(((dec(col("n")) * col("n_ab")).cast("double") /
+            (dec(col("n_a")) * col("n_b")).cast("double"))
             .cast("decimal(20,10)"), 4).cast("double").as("lift"))
     }),
     // Recommender: ITEM-ITEM COLLABORATIVE SIMILARITY — cosine on
@@ -308,18 +308,17 @@ private[graft] object EntriesGraphWeb {
         .join(lab, Seq("id"))
         .groupBy(col("community").as("c")).agg(sum(col("deg")).as("d_c"))
       val m = ue.agg(count(lit(1)).as("m_edges"))
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       dc.join(ec, Seq("c"), "left")
         .withColumn("e_c", coalesce(col("e_c"), lit(0L)))
         .crossJoin(broadcast(m))
         .select(col("m_edges"),
-          (d38(lit(4)) * col("m_edges") * col("e_c") -
-            d38(col("d_c")) * col("d_c")).as("num"))
+          (dec(lit(4)) * col("m_edges") * col("e_c") -
+            dec(col("d_c")) * col("d_c")).as("num"))
         .groupBy(col("m_edges"))
         .agg(count(lit(1)).as("n_comms"), sum(col("num")).as("s_num"))
         .select(col("m_edges"), col("n_comms"),
           round((col("s_num").cast("double") /
-            (d38(lit(4)) * col("m_edges") * col("m_edges"))
+            (dec(lit(4)) * col("m_edges") * col("m_edges"))
               .cast("double")).cast("decimal(20,10)"), 6)
             .cast("double").as("modularity"))
     }),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.dec
 
 /** Query surface + DuckDB oracles: label quality, agreement, preference (RLHF), valuation, eval metrics.
   *
@@ -523,7 +524,6 @@ private[graft] object EntriesLabelsEval {
     // aggregate, one division); MCE snaps each group's gap ×1e9
     // before the max.
     "q288_calibration_error" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val ev = t(s, dir, "events")
         .select(hour(col("ts")).as("h"),
           (col("event_type") === "purchase").cast("long").as("y"),
@@ -536,8 +536,8 @@ private[graft] object EntriesLabelsEval {
       val g = ev.filter(col("b") =!= 0).join(broadcast(tr), "h")
         .groupBy(col("p"))
         .agg(count(lit(1)).as("nk"), sum(col("y")).as("sk"))
-        .withColumn("dl", abs(d38(col("p")) * col("nk")
-          - d38(lit(1000000L)) * col("sk")))
+        .withColumn("dl", abs(dec(col("p")) * col("nk")
+          - dec(lit(1000000L)) * col("sk")))
       g.agg(sum(col("nk")).as("n"), sum(col("dl")).as("sdl"),
           max(round(col("dl").cast("double") /
             col("nk").cast("double") / lit(1e6) * lit(1e9))
@@ -560,7 +560,6 @@ private[graft] object EntriesLabelsEval {
     // data-sized stage is one (source, panel) aggregate; everything
     // after lives on the sources×sources duel table.
     "q275_bradley_terry" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val sp = t(s, dir, "documents")
         .select(col("source").as("g"),
           Sampling.hashBucket(col("doc_id"), 64).as("p"),
@@ -570,8 +569,8 @@ private[graft] object EntriesLabelsEval {
       val duel = sp.as("x").join(sp.as("y"),
           col("x.p") === col("y.p") && col("x.g") =!= col("y.g"))
         .select(col("x.g").as("a"), col("y.g").as("b"),
-          (d38(col("x.sv")) * col("y.n") >
-            d38(col("y.sv")) * col("x.n")).as("win"))
+          (dec(col("x.sv")) * col("y.n") >
+            dec(col("y.sv")) * col("x.n")).as("win"))
       val w = duel.groupBy(col("a"), col("b"))
         .agg(sum(when(col("win"), 1L).otherwise(0L)).as("w"))
       val m = w.as("u").join(w.as("v"),
@@ -645,7 +644,6 @@ private[graft] object EntriesLabelsEval {
     // DECIMAL integers into one snapped division. den = 0 (both
     // runs a single cluster) is null.
     "q232_ari" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val e = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       def assignFrom(lo: Long, hi: Long) =
@@ -659,14 +657,14 @@ private[graft] object EntriesLabelsEval {
           "id")
         .groupBy(col("cell"), col("cellb")).agg(count(lit(1)).as("nij"))
       val av = cells.groupBy(col("cell")).agg(sum(col("nij")).as("ai"))
-        .agg(sum(d38(col("ai")) * (col("ai") - 1)).as("a2"),
+        .agg(sum(dec(col("ai")) * (col("ai") - 1)).as("a2"),
           count(lit(1)).as("ka"))
       val bv = cells.groupBy(col("cellb")).agg(sum(col("nij")).as("bi"))
-        .agg(sum(d38(col("bi")) * (col("bi") - 1)).as("b2"),
+        .agg(sum(dec(col("bi")) * (col("bi") - 1)).as("b2"),
           count(lit(1)).as("kb"))
-      val cv = cells.agg(sum(d38(col("nij")) * (col("nij") - 1)).as("c2"),
+      val cv = cells.agg(sum(dec(col("nij")) * (col("nij") - 1)).as("c2"),
         sum(col("nij")).as("n"))
-      val t2 = d38(col("n")) * (col("n") - 1)
+      val t2 = dec(col("n")) * (col("n") - 1)
       val den = t2 * (col("a2") + col("b2")) -
         lit(2) * col("a2") * col("b2")
       cv.crossJoin(broadcast(av)).crossJoin(broadcast(bv))

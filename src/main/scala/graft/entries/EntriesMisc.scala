@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.fdiv
 
 /** Query surface + DuckDB oracles: cross-cutting operators that fit no single family.
   *
@@ -56,14 +57,12 @@ private[graft] object EntriesMisc {
     // the ONE symbol-key window exchange, run-table windows are
     // per-symbol and tiny.
     "q265_scd2_history" -> ((s, dir) => {
-      def floorDiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
       val W = org.apache.spark.sql.expressions.Window
       val b = Merge.keepLatestInSeries(
           bars(s, dir).filter(col("symbol") <= 500), Seq("symbol"),
           Seq("d"), struct(col("ord"), col("px"), col("vol")))
         .select(col("symbol"), col("d"),
-          floorDiv(round(col("px") * 100).cast("long"), lit(2000L))
+          fdiv(round(col("px") * 100).cast("long"), lit(2000L))
             .as("band"))
       val w = W.partitionBy("symbol").orderBy("d")
       val runs = b

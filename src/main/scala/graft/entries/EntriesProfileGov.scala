@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.dec
 
 /** Query surface + DuckDB oracles: profiling, privacy, schema/layout governance.
   *
@@ -129,24 +130,23 @@ private[graft] object EntriesProfileGov {
     // keeps n³Σx⁴ inside 38 digits for groups to ~10⁵ rows; larger
     // groups lower the snap.)
     "q307_shape_profile" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val rows = t(s, dir, "documents")
         .select(col("source"),
           round(log(col("n_chars").cast("double")) * 1e3)
             .cast("long").as("x"))
       val g = rows.groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(d38(col("x"))).as("s1"),
-          sum(d38(col("x")) * col("x")).as("s2"),
-          sum(d38(col("x")) * col("x") * col("x")).as("s3"),
-          sum(d38(col("x")) * col("x") * col("x") * col("x")).as("s4"))
-      val a2 = d38(col("n")) * col("s2") - col("s1") * col("s1")
-      val a3 = d38(col("n")) * col("n") * col("s3") -
-        d38(lit(3L)) * col("n") * col("s1") * col("s2") +
-        d38(lit(2L)) * col("s1") * col("s1") * col("s1")
-      val a4 = d38(col("n")) * col("n") * col("n") * col("s4") -
-        d38(lit(4L)) * col("n") * col("n") * col("s1") * col("s3") +
-        d38(lit(6L)) * col("n") * col("s1") * col("s1") * col("s2") -
-        d38(lit(3L)) * col("s1") * col("s1") * col("s1") * col("s1")
+        .agg(count(lit(1)).as("n"), sum(dec(col("x"))).as("s1"),
+          sum(dec(col("x")) * col("x")).as("s2"),
+          sum(dec(col("x")) * col("x") * col("x")).as("s3"),
+          sum(dec(col("x")) * col("x") * col("x") * col("x")).as("s4"))
+      val a2 = dec(col("n")) * col("s2") - col("s1") * col("s1")
+      val a3 = dec(col("n")) * col("n") * col("s3") -
+        dec(lit(3L)) * col("n") * col("s1") * col("s2") +
+        dec(lit(2L)) * col("s1") * col("s1") * col("s1")
+      val a4 = dec(col("n")) * col("n") * col("n") * col("s4") -
+        dec(lit(4L)) * col("n") * col("n") * col("s1") * col("s3") +
+        dec(lit(6L)) * col("n") * col("s1") * col("s1") * col("s2") -
+        dec(lit(3L)) * col("s1") * col("s1") * col("s1") * col("s1")
       g.select(col("source"), col("n"),
         when(a2 === 0, lit(null)).otherwise(
           round((a3.cast("double") /

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.{dec, snap4}
 
 /** Query surface + DuckDB oracles: sampling, corpus mixing/planning, sequence packing.
   *
@@ -249,7 +250,6 @@ private[graft] object EntriesSamplingPacking {
     // read behind every hot-key mitigation (q94/q195 find the keys;
     // this prices the cache).
     "q284_cache_curve" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val hc = t(s, dir, "events")
         .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
         .groupBy(col("n").as("c")).agg(count(lit(1)).as("k"))
@@ -260,9 +260,9 @@ private[graft] object EntriesSamplingPacking {
         .withColumn("k_before", coalesce(sum(col("k")).over(w),
           lit(0L)))
         .withColumn("m_before",
-          coalesce(sum(d38(col("c")) * col("k")).over(w),
+          coalesce(sum(dec(col("c")) * col("k")).over(w),
             lit(0).cast("decimal(38,0)")))
-      val tot = hc.agg(sum(d38(col("c")) * col("k")).as("m_tot"),
+      val tot = hc.agg(sum(dec(col("c")) * col("k")).as("m_tot"),
         sum(col("k")).as("n_keys"))
       val grid = {
         import s.implicits._
@@ -270,7 +270,7 @@ private[graft] object EntriesSamplingPacking {
       }
       grid.join(cum, col("k_before") < col("n_cache"))
         .groupBy(col("n_cache"))
-        .agg(sum(d38(col("c")) *
+        .agg(sum(dec(col("c")) *
           least(col("k"), col("n_cache") - col("k_before")))
           .as("m_hit"))
         .crossJoin(broadcast(tot))
@@ -288,7 +288,6 @@ private[graft] object EntriesSamplingPacking {
     // DECIMAL(38,0), ×1e9 term snaps (q260's convention), 4-row
     // fold table out.
     "q271_kfold_cv" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val fh = t(s, dir, "events")
         .select(hour(col("ts")).as("h"),
           (col("event_type") === "purchase").cast("long").as("y"),
@@ -302,9 +301,9 @@ private[graft] object EntriesSamplingPacking {
           round(((col("pos_h") - col("pos_fh")).cast("double") /
             (col("n_h") - col("n_fh")).cast("double") * 1e6)
             .cast("decimal(20,10)")).cast("long"))
-        .withColumn("bs", d38(col("n_fh")) * col("p") * col("p")
-          - d38(lit(2L)) * col("p") * lit(1000000L) * col("pos_fh")
-          + d38(lit(1000000L)) * lit(1000000L) * col("pos_fh"))
+        .withColumn("bs", dec(col("n_fh")) * col("p") * col("p")
+          - dec(lit(2L)) * col("p") * lit(1000000L) * col("pos_fh")
+          + dec(lit(1000000L)) * lit(1000000L) * col("pos_fh"))
       val nf = j.groupBy(col("f")).agg(sum(col("n_fh")).as("n_f"))
       j.join(nf, "f")
         .select(col("f"), col("n_f"),
@@ -361,9 +360,6 @@ private[graft] object EntriesSamplingPacking {
         .select(col("source"), explode(grams).as("u"))
       val vf = units.groupBy(col("source"), col("u"))
         .agg(count(lit(1)).as("r"))
-      def snap4(num: Column, den: Column): Column =
-        round((num.cast("double") / den.cast("double"))
-          .cast("decimal(20,10)"), 4).cast("double")
       vf.groupBy(col("source"))
         .agg(sum(col("r")).as("n_units"),
           count(lit(1)).as("vocab"),
@@ -394,7 +390,6 @@ private[graft] object EntriesSamplingPacking {
     // source the row count, mean before/after, how many rows moved,
     // and the normalized range.
     "q223_quantile_norm" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       def m4(num: Column, den: Column): Column =
         round((num.cast("double") / den.cast("double"))
           .cast("decimal(20,10)"), 4).cast("double")
@@ -402,8 +397,8 @@ private[graft] object EntriesSamplingPacking {
           col("source"), col("n_chars"), 100, 64L)
         .groupBy(col("g"))
         .agg(sum(col("cnt")).as("n"),
-          sum(d38(col("v")) * col("cnt")).as("sb"),
-          sum(d38(col("v_norm")) * col("cnt")).as("sa"),
+          sum(dec(col("v")) * col("cnt")).as("sb"),
+          sum(dec(col("v_norm")) * col("cnt")).as("sa"),
           sum(when(col("v") =!= col("v_norm"), col("cnt"))
             .otherwise(0L)).as("n_changed"),
           min(col("v_norm")).as("norm_min"),

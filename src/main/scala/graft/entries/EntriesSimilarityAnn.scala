@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.dec
 
 /** Query surface + DuckDB oracles: embeddings: ANN (IVF/PQ/LSH), kernels, PCA, retrieval.
   *
@@ -84,7 +85,6 @@ private[graft] object EntriesSimilarityAnn {
     // (map-side combine to labels×dims rows); everything after is
     // labels×dims-sized.
     "q246_centroid_separation" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val dims = t(s, dir, "embeddings")
         .select(col("label").cast("long").as("g"),
           posexplode(col("embedding")))
@@ -92,12 +92,12 @@ private[graft] object EntriesSimilarityAnn {
         .agg(sum(round(col("col").cast("double") * 1e6).cast("long"))
           .as("sv"), count(lit(1)).as("nn"))
       val norms = dims.groupBy(col("g"))
-        .agg(sum(d38(col("sv")) * col("sv")).as("nrm2"),
+        .agg(sum(dec(col("sv")) * col("sv")).as("nrm2"),
           max(col("nn")).as("n"))
       val dots = dims.as("a").join(dims.as("b"),
           col("a.pos") === col("b.pos") && col("a.g") < col("b.g"))
         .groupBy(col("a.g").as("la"), col("b.g").as("lb"))
-        .agg(sum(d38(col("a.sv")) * col("b.sv")).as("dt"))
+        .agg(sum(dec(col("a.sv")) * col("b.sv")).as("dt"))
       dots
         .join(broadcast(norms.select(col("g").as("la"),
           col("nrm2").as("na2"), col("n").as("n_a"))), "la")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.snap4
 
 /** Query surface + DuckDB oracles: probabilistic sketches (HLL/CM/Bloom/KMV) and their joins.
   *
@@ -158,9 +159,6 @@ private[graft] object EntriesSketch {
           w8 :+ "w8", 32)
         .withColumnRenamed("owner", "o9")
       val n = docs.agg(count(lit(1)).as("n_total"))
-      def snap4(num: Column, den: Column): Column =
-        round((num.cast("double") / den.cast("double"))
-          .cast("decimal(20,10)"), 4).cast("double")
       o8.join(o9, "k")
         .groupBy(col("o8").as("worker"))
         .agg(count(lit(1)).as("n_docs"),

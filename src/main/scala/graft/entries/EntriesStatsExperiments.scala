@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Query surface + DuckDB oracles: statistics, experiments, drift and time-series reads.
   *
@@ -324,13 +325,12 @@ private[graft] object EntriesStatsExperiments {
           datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
       val w = W.partitionBy(col("symbol")).orderBy(col("d"))
         .rowsBetween(-29, 0)
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val rolled = daily.select(col("symbol"), col("d"),
         count(lit(1)).over(w).as("n"),
-        sum(d38(col("x"))).over(w).as("sx"),
-        sum(d38(col("y"))).over(w).as("sy"),
-        sum(d38(col("x")) * d38(col("x"))).over(w).as("sxx"),
-        sum(d38(col("x")) * d38(col("y"))).over(w).as("sxy"))
+        sum(dec(col("x"))).over(w).as("sx"),
+        sum(dec(col("y"))).over(w).as("sy"),
+        sum(dec(col("x")) * dec(col("x"))).over(w).as("sxx"),
+        sum(dec(col("x")) * dec(col("y"))).over(w).as("sxy"))
       val last = rolled.groupBy(col("symbol"))
         .agg(max_by(struct(col("n"), col("sx"), col("sy"), col("sxx"),
           col("sxy")), col("d")).as("r"))
@@ -449,7 +449,6 @@ private[graft] object EntriesStatsExperiments {
     // algebra (the q147 OLS shape), ×1e6 slope snap, sign from the
     // exact integers — never from the rounded double.
     "q259_simpson_audit" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val rows = t(s, dir, "events")
         .select(col("event_type").as("g"),
           hour(col("ts")).cast("long").as("x"),
@@ -457,12 +456,12 @@ private[graft] object EntriesStatsExperiments {
       def moments(df: DataFrame, keys: Seq[Column]): DataFrame =
         df.groupBy(keys: _*)
           .agg(count(lit(1)).as("n"),
-            sum(d38(col("x"))).as("sx"), sum(d38(col("y"))).as("sy"),
-            sum(d38(col("x")) * col("y")).as("sxy"),
-            sum(d38(col("x")) * col("x")).as("sxx"))
-          .withColumn("num", d38(col("n")) * col("sxy") -
+            sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+            sum(dec(col("x")) * col("y")).as("sxy"),
+            sum(dec(col("x")) * col("x")).as("sxx"))
+          .withColumn("num", dec(col("n")) * col("sxy") -
             col("sx") * col("sy"))
-          .withColumn("den", d38(col("n")) * col("sxx") -
+          .withColumn("den", dec(col("n")) * col("sxx") -
             col("sx") * col("sx"))
       val pooled = moments(rows.withColumn("g", lit("_all")),
           Seq(col("g")))
@@ -489,8 +488,6 @@ private[graft] object EntriesStatsExperiments {
     // monetary means. The classic audience/cohort cut for any
     // engagement warehouse.
     "q262_rfm_segments" -> ((s, dir) => {
-      def floorDiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
       val ev = t(s, dir, "events").select(col("user_id").as("u"),
         to_date(col("ts")).as("d"),
         round(col("value") * 100).cast("long").as("vc"))
@@ -506,7 +503,7 @@ private[graft] object EntriesStatsExperiments {
         Ranks.withRunningBelow(byV, "v", 64L, Seq("cnt"))
           .crossJoin(broadcast(nn))
           .select(col("v"),
-            (floorDiv(col("cnt_below") * 5, col("n")) + 1).cast("int")
+            (fdiv(col("cnt_below") * 5, col("n")) + 1).cast("int")
               .as("q"))
       }
       val r = qscore("rec")
@@ -549,13 +546,12 @@ private[graft] object EntriesStatsExperiments {
     // One (cohort, user) aggregate; residual algebra in DECIMAL(38,0)
     // cross-multiples (×N keeps it integer), two snapped divisions.
     "q287_cluster_robust_se" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val ug = t(s, dir, "events")
         .select((col("user_id") % 2 === 0).as("tr"), col("user_id"),
           round(col("value") * 100).cast("long").as("vc"))
         .groupBy(col("tr"), col("user_id"))
         .agg(count(lit(1)).as("nu"), sum(col("vc")).as("su"),
-          sum(d38(col("vc")) * col("vc")).as("ssu"))
+          sum(dec(col("vc")) * col("vc")).as("ssu"))
       val tot = ug.groupBy(col("tr"))
         .agg(count(lit(1)).as("n_users"), sum(col("nu")).as("n"),
           sum(col("su")).as("sv"), sum(col("ssu")).as("ssv"))
@@ -563,26 +559,26 @@ private[graft] object EntriesStatsExperiments {
       // exact because every factor is an integer
       val crm = ug.join(broadcast(tot), "tr")
         .select(col("tr"),
-          ((d38(col("n")) * col("su") - d38(col("nu")) * col("sv")) *
-            (d38(col("n")) * col("su") - d38(col("nu")) * col("sv")))
+          ((dec(col("n")) * col("su") - dec(col("nu")) * col("sv")) *
+            (dec(col("n")) * col("su") - dec(col("nu")) * col("sv")))
             .as("r2"))
         .groupBy(col("tr")).agg(sum(col("r2")).as("crm"))
-      val xiid = d38(col("n")) * col("ssv") - col("sv") * col("sv")
+      val xiid = dec(col("n")) * col("ssv") - col("sv") * col("sv")
       tot.join(crm, "tr")
         .select(col("tr").as("treat_cohort"), col("n_users"), col("n"),
           round((col("sv").cast("double") / col("n").cast("double") /
             lit(100.0)).cast("decimal(20,10)"), 2).cast("double")
             .as("mean_value"),
           round((sqrt(xiid.cast("double") /
-            (d38(col("n")) * col("n") * col("n")).cast("double")) /
+            (dec(col("n")) * col("n") * col("n")).cast("double")) /
             lit(100.0)).cast("decimal(20,10)"), 4).cast("double")
             .as("se_iid"),
           round((sqrt(col("crm").cast("double") /
-            (d38(col("n")) * col("n") * col("n") * col("n"))
+            (dec(col("n")) * col("n") * col("n") * col("n"))
               .cast("double")) / lit(100.0)).cast("decimal(20,10)"), 4)
             .cast("double").as("se_cluster"),
           round((col("crm").cast("double") /
-            (d38(col("n")) * xiid).cast("double"))
+            (dec(col("n")) * xiid).cast("double"))
             .cast("decimal(20,10)"), 2).cast("double")
             .as("design_effect"))
     }),
@@ -610,27 +606,26 @@ private[graft] object EntriesStatsExperiments {
     // and R² leave integerland in one deterministic double division
     // each.
     "q312_multi_ols" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val r = t(s, dir, "part").select(
         round(col("p_retailprice") * 100).cast("long").as("y"),
         col("p_size").cast("long").as("a"),
         length(col("p_name")).cast("long").as("b"))
       val g = r.agg(count(lit(1)).as("n"),
-        sum(d38(col("a"))).as("sa"), sum(d38(col("b"))).as("sb"),
-        sum(d38(col("y"))).as("sy"),
-        sum(d38(col("a")) * col("a")).as("saa"),
-        sum(d38(col("a")) * col("b")).as("sab"),
-        sum(d38(col("b")) * col("b")).as("sbb"),
-        sum(d38(col("a")) * col("y")).as("say"),
-        sum(d38(col("b")) * col("y")).as("sby"),
-        sum(d38(col("y")) * col("y")).as("syy"))
+        sum(dec(col("a"))).as("sa"), sum(dec(col("b"))).as("sb"),
+        sum(dec(col("y"))).as("sy"),
+        sum(dec(col("a")) * col("a")).as("saa"),
+        sum(dec(col("a")) * col("b")).as("sab"),
+        sum(dec(col("b")) * col("b")).as("sbb"),
+        sum(dec(col("a")) * col("y")).as("say"),
+        sum(dec(col("b")) * col("y")).as("sby"),
+        sum(dec(col("y")) * col("y")).as("syy"))
       val c = g.select(col("n"), col("sa"), col("sb"), col("sy"),
-        (d38(col("n")) * col("saa") - col("sa") * col("sa")).as("caa"),
-        (d38(col("n")) * col("sab") - col("sa") * col("sb")).as("cab"),
-        (d38(col("n")) * col("sbb") - col("sb") * col("sb")).as("cbb"),
-        (d38(col("n")) * col("say") - col("sa") * col("sy")).as("cay"),
-        (d38(col("n")) * col("sby") - col("sb") * col("sy")).as("cby"),
-        (d38(col("n")) * col("syy") - col("sy") * col("sy")).as("cyy"))
+        (dec(col("n")) * col("saa") - col("sa") * col("sa")).as("caa"),
+        (dec(col("n")) * col("sab") - col("sa") * col("sb")).as("cab"),
+        (dec(col("n")) * col("sbb") - col("sb") * col("sb")).as("cbb"),
+        (dec(col("n")) * col("say") - col("sa") * col("sy")).as("cay"),
+        (dec(col("n")) * col("sby") - col("sb") * col("sy")).as("cby"),
+        (dec(col("n")) * col("syy") - col("sy") * col("sy")).as("cyy"))
       // degenerate designs (constant regressor → det = 0; constant
       // response → cyy = 0) yield null, never a NaN→null-by-cast
       // divergence from the SQL oracle (ADVICE r11, the q313 guard)
@@ -667,7 +662,6 @@ private[graft] object EntriesStatsExperiments {
     // variance-reduction share θ·Sxy/Syy (= ρ²) — each leaving
     // integerland in one deterministic double chain.
     "q313_cuped" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val ev = t(s, dir, "events").select(col("user_id"),
         unix_micros(col("ts")).as("us"),
         round(col("value") * 100).cast("long").as("vc"))
@@ -681,19 +675,19 @@ private[graft] object EntriesStatsExperiments {
             .otherwise(0L)).as("y"))
         .select((col("user_id") % 2).as("arm"), col("x"), col("y"))
       val tot = pu.agg(count(lit(1)).as("n"),
-          sum(d38(col("x"))).as("sx"), sum(d38(col("y"))).as("sy"),
-          sum(d38(col("x")) * col("x")).as("sxx"),
-          sum(d38(col("x")) * col("y")).as("sxy"),
-          sum(d38(col("y")) * col("y")).as("syy"))
+          sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+          sum(dec(col("x")) * col("x")).as("sxx"),
+          sum(dec(col("x")) * col("y")).as("sxy"),
+          sum(dec(col("y")) * col("y")).as("syy"))
         .select(col("n"), col("sx"),
-          (d38(col("n")) * col("sxx") - col("sx") * col("sx"))
+          (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
             .as("cxx"),
-          (d38(col("n")) * col("sxy") - col("sx") * col("sy"))
+          (dec(col("n")) * col("sxy") - col("sx") * col("sy"))
             .as("cxy"),
-          (d38(col("n")) * col("syy") - col("sy") * col("sy"))
+          (dec(col("n")) * col("syy") - col("sy") * col("sy"))
             .as("cyy"))
       val arms = pu.groupBy(col("arm")).agg(count(lit(1)).as("ng"),
-        sum(d38(col("x"))).as("sxg"), sum(d38(col("y"))).as("syg"))
+        sum(dec(col("x"))).as("sxg"), sum(dec(col("y"))).as("syg"))
       val theta = col("cxy").cast("double") / col("cxx").cast("double")
       val meanx = col("sx").cast("double") / col("n").cast("double")
       arms.crossJoin(broadcast(tot))
@@ -983,15 +977,14 @@ private[graft] object EntriesStatsExperiments {
     // void (run before q171/q272/q286 ever get read). Pure integer
     // numerator, one division, 3.84 = χ²₁ @ 95%.
     "q299_srm_check" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val daily = t(s, dir, "events")
         .groupBy(to_date(col("ts")).as("d"))
         .agg(sum(when(col("user_id") % 2 === 0, 1L).otherwise(0L))
             .as("n_t"),
           sum(when(col("user_id") % 2 =!= 0, 1L).otherwise(0L))
             .as("n_c"))
-      val chi2 = round((((d38(col("n_t")) - col("n_c")) *
-        (d38(col("n_t")) - col("n_c"))).cast("double") /
+      val chi2 = round((((dec(col("n_t")) - col("n_c")) *
+        (dec(col("n_t")) - col("n_c"))).cast("double") /
         (col("n_t") + col("n_c")).cast("double"))
         .cast("decimal(20,10)"), 4).cast("double")
       daily.select(col("d"), col("n_t"), col("n_c"),
@@ -1006,7 +999,6 @@ private[graft] object EntriesStatsExperiments {
     // the bucketed prefix kernel over the hash domain; gaps are a
     // per-source window; moments exact.
     "q292_shuffle_quality" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val rated = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           Dedup.hashLong(concat(lit("sq"),
@@ -1023,14 +1015,14 @@ private[graft] object EntriesStatsExperiments {
         .filter(col("g").isNotNull)
       gaps.groupBy(col("source"))
         .agg(count(lit(1)).as("n_gaps"), sum(col("g")).as("sg"),
-          sum(d38(col("g")) * col("g")).as("sgg"))
+          sum(dec(col("g")) * col("g")).as("sgg"))
         .select(col("source"), col("n_gaps"),
           round((col("sg").cast("double") /
             col("n_gaps").cast("double")).cast("decimal(20,10)"), 2)
             .cast("double").as("mean_gap"),
-          round(((d38(col("n_gaps")) * col("sgg") -
+          round(((dec(col("n_gaps")) * col("sgg") -
             col("sg") * col("sg")).cast("double") /
-            (d38(col("n_gaps")) * col("n_gaps")).cast("double") /
+            (dec(col("n_gaps")) * col("n_gaps")).cast("double") /
             (col("sg").cast("double") / col("n_gaps").cast("double")))
             .cast("decimal(20,10)"), 4).cast("double")
             .as("dispersion"))
@@ -1043,7 +1035,6 @@ private[graft] object EntriesStatsExperiments {
     // (covariate, cohort) aggregate; moments exact, one snapped
     // division.
     "q285_covariate_balance" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val ev = t(s, dir, "events")
         .select((col("user_id") % 2 === 0).as("tr"),
           explode(array(
@@ -1056,8 +1047,8 @@ private[graft] object EntriesStatsExperiments {
             .as("m"))
         .select(col("tr"), col("m.cov").as("cov"), col("m.x").as("x"))
       val g = ev.groupBy(col("cov"), col("tr"))
-        .agg(count(lit(1)).as("n"), sum(d38(col("x"))).as("sx"),
-          sum(d38(col("x")) * col("x")).as("ss"))
+        .agg(count(lit(1)).as("n"), sum(dec(col("x"))).as("sx"),
+          sum(dec(col("x")) * col("x")).as("ss"))
       def side(t0: Boolean, c: String, out: String): Column =
         max(when(col("tr") === t0, col(c))).as(out)
       val wide = g.groupBy(col("cov"))
@@ -1067,8 +1058,8 @@ private[graft] object EntriesStatsExperiments {
       def mean(sx: String, n: String): Column =
         col(sx).cast("double") / col(n).cast("double")
       def variance(n: String, sx: String, ss: String): Column =
-        (d38(col(n)) * col(ss) - col(sx) * col(sx)).cast("double") /
-          (d38(col(n)) * col(n)).cast("double")
+        (dec(col(n)) * col(ss) - col(sx) * col(sx)).cast("double") /
+          (dec(col(n)) * col(n)).cast("double")
       val vsum = variance("n_t", "s_t", "ss_t") +
         variance("n_c", "s_c", "ss_c")
       wide.select(col("cov").as("covariate"), col("n_t"), col("n_c"),
@@ -1168,7 +1159,6 @@ private[graft] object EntriesStatsExperiments {
     // pair-quadratic): candidate scoring is points×16 through one
     // aggregate — linear, broadcast-only.
     "q270_ransac_fit" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val pts = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars").as("x"),
           size(Text.tokens(col("text"))).cast("long").as("y"))
@@ -1187,9 +1177,9 @@ private[graft] object EntriesStatsExperiments {
           (col("pb.y2") - col("pa.y1")).as("dy"))
         .filter(col("dx") =!= 0)
       val scored = pts.crossJoin(broadcast(cands))
-        .filter(abs(d38(col("dy")) * (col("x") - col("x1")) -
-          d38(col("dx")) * (col("y") - col("y1"))) <=
-          d38(lit(5L)) * abs(col("dx")))
+        .filter(abs(dec(col("dy")) * (col("x") - col("x1")) -
+          dec(col("dx")) * (col("y") - col("y1"))) <=
+          dec(lit(5L)) * abs(col("dx")))
         .groupBy(col("ci"), col("dx"), col("dy"))
         .agg(count(lit(1)).as("n_inliers"))
       val nTot = pts.agg(count(lit(1)).as("n_points"))
@@ -1254,21 +1244,20 @@ private[graft] object EntriesStatsExperiments {
     // never materialize as floats, so the verdict is exact on any
     // engine. One day aggregate + a 7-row broadcast.
     "q269_seasonal_anomaly" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val daily = t(s, dir, "events")
         .groupBy(to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("c"))
         .withColumn("dow", dayofweek(col("d")))
       val g = daily.groupBy(col("dow"))
         .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-          sum(d38(col("c")) * col("c")).as("m2"))
+          sum(dec(col("c")) * col("c")).as("m2"))
       daily.join(broadcast(g), "dow")
         .select(col("d"), col("dow"), col("c").as("n_events"),
           round((col("sc").cast("double") / col("n").cast("double"))
             .cast("decimal(20,10)"), 2).cast("double").as("expected"),
-          ((d38(col("c")) * col("n") - col("sc")) *
-            (d38(col("c")) * col("n") - col("sc")) >
-            (d38(col("n")) * col("m2") - d38(col("sc")) * col("sc"))
+          ((dec(col("c")) * col("n") - col("sc")) *
+            (dec(col("c")) * col("n") - col("sc")) >
+            (dec(col("n")) * col("m2") - dec(col("sc")) * col("sc"))
               * 4).as("is_anomaly"))
     }),
     // Sampling: NEYMAN-ALLOCATED stratified sample of event values by

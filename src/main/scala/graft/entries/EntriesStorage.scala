@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Query surface + DuckDB oracles: the Snapshot transactional storage layer (MERGE/time-travel/retention/governance).
   *
@@ -836,15 +837,12 @@ private[graft] object EntriesStorage {
     // Emits the differing (level, idx) nodes of both trees — a dozen
     // leaves localize in ~7·k nodes instead of a 64-bucket rescan.
     "q282_merkle_diff" -> ((s, dir) => {
-      def floorDiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       def treeOf(leaves: DataFrame): DataFrame = {
         var out = leaves.select(lit(0).as("level"), col("idx"),
           col("h"))
         var cur = leaves
         for (lvl <- 1 to 6) {
-          cur = cur.groupBy(floorDiv(col("idx"), lit(2L)).as("idx"))
+          cur = cur.groupBy(fdiv(col("idx"), lit(2L)).as("idx"))
             .agg(md5(concat(min_by(col("h"), col("idx")),
               max_by(col("h"), col("idx")))).as("h"))
           out = out.unionByName(
@@ -865,7 +863,7 @@ private[graft] object EntriesStorage {
           rh(when(col("doc_id") % 503 === 0, col("n_chars") + 1)
             .otherwise(col("n_chars"))).as("rd"))
         .groupBy(col("bkt").as("idx"))
-        .agg(sum(d38(col("rb"))).as("sb"), sum(d38(col("rd"))).as("sd"))
+        .agg(sum(dec(col("rb"))).as("sb"), sum(dec(col("rd"))).as("sd"))
       val dense = s.range(0, 64).toDF("idx")
         .join(sums, Seq("idx"), "left")
         .localCheckpoint(true) // 64 rows; both tree folds read it
@@ -887,9 +885,6 @@ private[graft] object EntriesStorage {
     // checksum says only THAT they differ). One data-sized bucket
     // aggregate; the tree build is 6 rounds over ≤64 rows.
     "q276_merkle_tree" -> ((s, dir) => {
-      def floorDiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val rows = t(s, dir, "documents").select(
         Sampling.hashBucket(concat(lit("mk"),
           col("doc_id").cast("string")), 64).as("bkt"),
@@ -897,14 +892,14 @@ private[graft] object EntriesStorage {
           col("lang"), col("n_chars"))).as("rh"))
       val leaves = s.range(0, 64).toDF("idx")
         .join(rows.groupBy(col("bkt").as("idx"))
-          .agg(sum(d38(col("rh"))).as("sx")), Seq("idx"), "left")
+          .agg(sum(dec(col("rh"))).as("sx")), Seq("idx"), "left")
         .select(col("idx"),
           md5(coalesce(col("sx").cast("string"), lit("empty")))
             .as("h"))
       var out = leaves.select(lit(0).as("level"), col("idx"), col("h"))
       var cur = leaves
       for (lvl <- 1 to 6) {
-        cur = cur.groupBy(floorDiv(col("idx"), lit(2L)).as("idx"))
+        cur = cur.groupBy(fdiv(col("idx"), lit(2L)).as("idx"))
           .agg(md5(concat(min_by(col("h"), col("idx")),
             max_by(col("h"), col("idx")))).as("h"))
         out = out.unionByName(

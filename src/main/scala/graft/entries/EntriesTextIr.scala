@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.ops.Cols.{dec, fdiv, snap4}
 
 /** Query surface + DuckDB oracles: text analysis, tokenizers, IR scoring, LM-adjacent reads.
   *
@@ -332,7 +333,6 @@ private[graft] object EntriesTextIr {
     // One (source, token) aggregate + one per-source rollup, exact
     // DECIMAL(38,0) moments, one snapped division.
     "q261_yules_k" -> ((s, dir) => {
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       t(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text")))
           .as("tok"))
@@ -341,10 +341,10 @@ private[graft] object EntriesTextIr {
         .groupBy(col("source"))
         .agg(sum(col("c")).as("n_tokens"),
           count(lit(1)).as("vocab"),
-          sum(d38(col("c")) * col("c")).as("m2"))
+          sum(dec(col("c")) * col("c")).as("m2"))
         .select(col("source"), col("n_tokens"), col("vocab"),
           round((lit(1e4) * (col("m2") - col("n_tokens")).cast("double")
-            / (d38(col("n_tokens")) * col("n_tokens")).cast("double"))
+            / (dec(col("n_tokens")) * col("n_tokens")).cast("double"))
             .cast("decimal(20,10)"), 4).cast("double").as("yules_k"))
     }),
     // Stylometry: BURROWS' DELTA between sources — mean |Δz| of the
@@ -371,12 +371,11 @@ private[graft] object EntriesTextIr {
           round(coalesce(col("c"), lit(0L)).cast("double") /
             col("tt").cast("double") * 1e9).cast("long").as("f9"))
         .localCheckpoint(true)
-      val d38 = (c: Column) => c.cast("decimal(38,0)")
       val vt = dense.groupBy(col("tok"))
-        .agg(count(lit(1)).as("k"), sum(d38(col("f9"))).as("sf"),
-          sum(d38(col("f9")) * col("f9")).as("sff"))
+        .agg(count(lit(1)).as("k"), sum(dec(col("f9"))).as("sf"),
+          sum(dec(col("f9")) * col("f9")).as("sff"))
         .select(col("tok").as("vtok"), col("k"),
-          (d38(col("k")) * col("sff") - col("sf") * col("sf"))
+          (dec(col("k")) * col("sff") - col("sf") * col("sf"))
             .as("v"))
       val diffs = dense.as("a").join(dense.as("b"),
           col("a.tok") === col("b.tok") &&
@@ -610,8 +609,6 @@ private[graft] object EntriesTextIr {
     // CONTENT mass). First-seen is one min-aggregate on the shingle
     // key; deciles are exact integer floor-division — no rank pass.
     "q296_novelty_curve" -> ((s, dir) => {
-      def floorDiv(a: Column, b: Column): Column =
-        ((a - pmod(a, b)) / b).cast("long")
       val ds = t(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(
           Dedup.hashedShingles(Text.tokens(col("text")), 3)))
@@ -624,7 +621,7 @@ private[graft] object EntriesTextIr {
             .as("n_novel"))
       val mx = t(s, dir, "documents").agg(max(col("doc_id")).as("mid"))
       per.crossJoin(broadcast(mx))
-        .groupBy(floorDiv(col("doc_id") * 10, col("mid") + 1)
+        .groupBy(fdiv(col("doc_id") * 10, col("mid") + 1)
           .as("decile"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_sh")).as("n_sh"),
           sum(col("n_novel")).as("n_novel"))
@@ -775,9 +772,6 @@ private[graft] object EntriesTextIr {
         .agg(sum(col("o")).as("predicted"))
       val diag = cells.filter(col("truth") === col("pred"))
         .select(col("truth").as("cls"), col("o").as("tp"))
-      def snap4(num: Column, den: Column): Column =
-        round((num.cast("double") / den.cast("double"))
-          .cast("decimal(20,10)"), 4).cast("double")
       sup.join(prd, Seq("cls"), "full_outer")
         .join(diag, Seq("cls"), "left")
         .na.fill(0L, Seq("support", "predicted", "tp"))

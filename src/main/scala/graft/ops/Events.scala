@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv, tdiv}
 
 /** Event-stream analytics — funnel conversion, sessionization and
   * cohort retention: the behavioral-analysis face of an events table
@@ -146,9 +147,6 @@ object Events {
   def dayRetention(df: DataFrame, user: Column, ts: Column,
                    offsets: Seq[Int]): DataFrame = {
     require(offsets.nonEmpty && offsets.forall(_ >= 1))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val act = df.select(user.as("u"), to_date(ts).as("day")).distinct()
     val first = act.groupBy(col("u")).agg(min(col("day")).as("c0"))
     val spine = explode(array(offsets.map(lit): _*)).as("d")
@@ -173,9 +171,6 @@ object Events {
     * per active day: (day, dau, wau, mau, stickiness_micro).
     */
   def engagement(df: DataFrame, user: Column, ts: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val base = df.select(to_date(ts).as("day"), user.as("u"))
     val dau = base.groupBy(col("day"))
       .agg(countDistinct(col("u")).as("dau"))
@@ -248,11 +243,6 @@ object Events {
     */
   def diffInDiff(df: DataFrame, treated: Column, post: Column,
                  yMicro: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     val cells = df
       .select(when(treated, 1L).otherwise(0L).as("t"),
         when(post, 1L).otherwise(0L).as("p"),
@@ -300,9 +290,6 @@ object Events {
   def marketBasket(df: DataFrame, basket: Column, item: Column,
                    minCount: Long, maxBasket: Long = 0L): DataFrame = {
     require(minCount >= 1, "minCount must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val bi0 = df.select(basket.as("bk"), item.as("it")).distinct()
     // q102/OPH density guard: one mega-basket of m items yields m²
     // pairs in a single join task. Over-cap baskets are dropped from
@@ -357,11 +344,6 @@ object Events {
   def smdBalance(df: DataFrame, treated: Column,
                  covs: Seq[(String, Column)]): DataFrame = {
     require(covs.nonEmpty, "need at least one covariate")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     val melted = df
       .select(when(treated, 1L).otherwise(0L).as("t"),
         explode(array(covs.map { case (nm, c) =>
@@ -417,13 +399,6 @@ object Events {
                       scoreMicro: Column, yMicro: Column,
                       buckets: Int): DataFrame = {
     require(buckets >= 2 && buckets <= 64, "buckets must be in [2, 64]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val base = df.select(when(treated, 1L).otherwise(0L).as("t"),
       least(lit(buckets - 1L),
         fdiv(scoreMicro.cast("long") * buckets, lit(1000000L)))
@@ -477,9 +452,6 @@ object Events {
   def ipsPolicyEval(df: DataFrame, loggedArm: Column, targetArm: Column,
                     rewardMicro: Column,
                     propensityMicro: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     df
       .select(
         (loggedArm.cast("string") === targetArm.cast("string"))
@@ -518,9 +490,6 @@ object Events {
     */
   def interArrivalBurstiness(events: DataFrame, user: Column,
                              ts: Column, order: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(user).orderBy(ts, order)
     val gaps = events
       .select((unix_micros(ts) - lag(unix_micros(ts), 1).over(w))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Link-analysis operators over an edge list — the web-graph side of a
   * crawl corpus (reference analog: none; this is the beyond-reference
@@ -461,9 +462,6 @@ object Graph {
     */
   def linkPredictionScores(edges: DataFrame,
                            maxDegree: Long = 0L): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val ue = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
     val sym0 = ue.unionByName(
@@ -593,9 +591,6 @@ object Graph {
     */
   def reciprocity(edges: DataFrame, src: Column,
                   dst: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val e = edges.select(src.as("u"), dst.as("v"))
       .filter(col("u") =!= col("v")).distinct()
     val mutual = e.join(e.select(col("v").as("u"), col("u").as("v")),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv, tdiv}
 
 /** Gradient-trained linear models INSIDE the engine — the supervised
   * tier above [[Text.naiveBayesEval]]'s closed-form counts and the
@@ -131,8 +132,6 @@ object LinearModel {
     * (⌊|…|/n_b⌋ micro, the "where is it miscalibrated" pointer).
     */
   def expectedCalibrationError(bins: DataFrame): DataFrame = {
-    def fdiv(x: Column, y: Column): Column =
-      ((x - pmod(x, y)) / y).cast("long")
     bins
       .select(col("n"), abs(col("positives").cast("decimal(38,0)")
         * lit(1000000L) - col("pmu_mass")).as("gap12"))
@@ -173,11 +172,6 @@ object LinearModel {
                     k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     val pid = probeIds.select(col("id"))
     val resid = scoreLogistic(vecs, weights)
       .join(labels.select(col("id"),

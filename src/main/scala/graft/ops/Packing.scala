@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.fdiv
 
 /** Training-sequence PACKING — the layout step between a curated
   * corpus and a pretraining dataloader (reference analog: none; the
@@ -113,8 +114,6 @@ object Packing {
   def paddingWaste(docs: DataFrame, id: Column, nTokens: Column,
                    batchSize: Int): DataFrame = {
     require(batchSize >= 1, "batchSize must be >= 1")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val base = docs.select(id.as("id"),
       nTokens.cast("long").as("len")).localCheckpoint(true)
     def strat(name: String, orderVal: Column, width: Long): DataFrame = {

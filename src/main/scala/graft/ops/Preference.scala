@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv, tdiv}
 
 /** Pairwise-preference analytics — the RLHF data tier (reference
   * analog: none; the reference never ranks, but every preference
@@ -183,9 +184,6 @@ object Preference {
   def bestOfNCurve(samples: DataFrame, prompt: Column, scoreMicro: Column,
                    ord: Column, maxN: Int): DataFrame = {
     require(maxN >= 1 && maxN <= 8, "maxN must be in [1, 8]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     // C(x, j) for a LITERAL j: product of j consecutive terms / j!
     // (consecutive-integer products are exactly divisible, so the
     // division is exact in decimal)
@@ -283,11 +281,6 @@ object Preference {
   def grpoAdvantage(samples: DataFrame, prompt: Column, ord: Column,
                     rewardMicro: Column, logpPolicyMicro: Column,
                     logpRefMicro: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("prompt"))
     samples
@@ -323,9 +316,6 @@ object Preference {
     */
   def lengthBias(duels: DataFrame, winLen: Column,
                  loseLen: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     duels
       .select(winLen.cast("long").as("lw"), loseLen.cast("long")
         .as("ll"))
@@ -355,9 +345,6 @@ object Preference {
     */
   def positionBias(duels: DataFrame, first: Column, second: Column,
                    firstWon: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val base = duels.select(first.cast("string").as("f"),
       second.cast("string").as("s"),
       when(firstWon, 1L).otherwise(0L).as("fw"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
+import graft.ops.Cols.{dec, fdiv, tdiv}
 
 /** Column profiler — the ANALYZE face of a training-data pipeline:
   * per-column row/null/distinct counts and numeric min/max in ONE job,
@@ -474,7 +475,6 @@ object Profile {
     */
   def kendallTauB(df: DataFrame, group: Column, x: Column,
                   y: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     // four consumers (both pair-join sides + both marginal collapses)
     // all live in ONE plan: ReusedExchange dedups the identical cell
     // aggregate — persist() here would BLOCK that reuse (the measured
@@ -490,29 +490,29 @@ object Profile {
       .groupBy(col("a.g").as("g"))
       .agg(
         sum(when(col("a.x") < col("b.x") && col("a.y") < col("b.y"),
-          d38(col("a.w")) * d38(col("b.w"))).otherwise(d38(lit(0))))
+          dec(col("a.w")) * dec(col("b.w"))).otherwise(dec(lit(0))))
           .as("cc"),
         sum(when(col("a.x") < col("b.x") && col("a.y") > col("b.y"),
-          d38(col("a.w")) * d38(col("b.w"))).otherwise(d38(lit(0))))
+          dec(col("a.w")) * dec(col("b.w"))).otherwise(dec(lit(0))))
           .as("dd"))
     def marginalDoubled(v: String, out: String): DataFrame =
       cells.groupBy(col("g"), col(v)).agg(sum(col("w")).as("t"))
         .groupBy(col("g"))
-        .agg(sum(d38(col("t")) * d38(col("t") - 1)).as(out))
+        .agg(sum(dec(col("t")) * dec(col("t") - 1)).as(out))
     val totals = cells.groupBy(col("g")).agg(sum(col("w")).as("n"))
       .join(marginalDoubled("x", "n1d"), Seq("g"))
       .join(marginalDoubled("y", "n2d"), Seq("g"))
       .join(pairs, Seq("g"), "left")
-      .withColumn("cc", coalesce(col("cc"), d38(lit(0))))
-      .withColumn("dd", coalesce(col("dd"), d38(lit(0))))
-    val n0d = d38(col("n")) * d38(col("n") - 1)
+      .withColumn("cc", coalesce(col("cc"), dec(lit(0))))
+      .withColumn("dd", coalesce(col("dd"), dec(lit(0))))
+    val n0d = dec(col("n")) * dec(col("n") - 1)
     val denx = n0d - col("n1d")
     val deny = n0d - col("n2d")
     totals.select(col("g"), col("n"),
       col("cc").cast("long").as("concordant"),
       col("dd").cast("long").as("discordant"),
       when(denx === 0 || deny === 0, lit(null))
-        .otherwise(round(((d38(lit(2)) * (col("cc") - col("dd")))
+        .otherwise(round(((dec(lit(2)) * (col("cc") - col("dd")))
           .cast("double") /
           sqrt(denx.cast("double") * deny.cast("double")))
           .cast("decimal(20,10)"), 6).cast("double")).as("tau_b"))
@@ -572,7 +572,6 @@ object Profile {
     * one row (n, n_a, n_b, mi, nmi).
     */
   def mutualInformation(df: DataFrame, a: Column, b: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val cells = df.select(a.as("__a"), b.as("__b"))
       .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("o"))
     val rt = cells.groupBy(col("__a")).agg(sum(col("o")).as("rt"))
@@ -585,8 +584,8 @@ object Profile {
       .crossJoin(broadcast(tot))
       .select(col("nn"), col("na"), col("nb"),
         round(lit(1e9) * col("o").cast("double") *
-          log((d38(col("nn")) * col("o")).cast("double") /
-            (d38(col("rt")) * col("ct")).cast("double")))
+          log((dec(col("nn")) * col("o")).cast("double") /
+            (dec(col("rt")) * col("ct")).cast("double")))
           .cast("long").as("term_fp"))
       .groupBy(col("nn"), col("na"), col("nb"))
       .agg(sum(col("term_fp")).as("s_fp"))
@@ -614,7 +613,6 @@ object Profile {
     * the observed cells. Output: one row (n, n_a, n_b, dof, chi2).
     */
   def chiSquareIndependence(df: DataFrame, a: Column, b: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val cells = df.select(a.as("__a"), b.as("__b"))
       .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("o"))
     val rt = cells.groupBy(col("__a")).agg(sum(col("o")).as("rt"))
@@ -627,10 +625,10 @@ object Profile {
       .crossJoin(broadcast(tot))
       .select(col("nn"), col("na"), col("nb"),
         round(lit(1e6) *
-          ((d38(col("nn")) * col("o") - d38(col("rt")) * col("ct")) *
-            (d38(col("nn")) * col("o") - d38(col("rt")) * col("ct")))
+          ((dec(col("nn")) * col("o") - dec(col("rt")) * col("ct")) *
+            (dec(col("nn")) * col("o") - dec(col("rt")) * col("ct")))
             .cast("double") /
-          (d38(col("nn")) * col("rt") * col("ct")).cast("double"))
+          (dec(col("nn")) * col("rt") * col("ct")).cast("double"))
           .cast("long").as("term_fp"))
       .groupBy(col("nn"), col("na"), col("nb"))
       .agg(sum(col("term_fp")).as("s_fp"))
@@ -695,9 +693,6 @@ object Profile {
     */
   def logRankTest(df: DataFrame, group1: Column, duration: Column,
                   event: Column, bucketWidth: Long): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val rows = df.select(duration.cast("long").as("__t"),
       when(group1, 1L).otherwise(0L).as("g1"),
       when(event, 1L).otherwise(0L).as("e"))
@@ -825,9 +820,6 @@ object Profile {
     */
   def tCloseness(df: DataFrame, quasi: Column,
                  sensitive: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val base = df.select(quasi.as("grp"), sensitive.as("v"))
     val gv = base.groupBy(col("grp"), col("v"))
       .agg(count(lit(1)).as("c"))
@@ -876,9 +868,6 @@ object Profile {
     */
   def hhiConcentration(df: DataFrame, group: Column,
                        member: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     df.groupBy(group.as("grp"), member.as("m"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("grp"))
@@ -904,9 +893,6 @@ object Profile {
   def giniCoefficient(df: DataFrame, value: Column,
                       bucketWidth: Long): DataFrame = {
     require(bucketWidth >= 1)
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val byV = df.select(value.cast("long").as("v"))
       .filter(col("v") >= 0L)
       .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
@@ -938,9 +924,6 @@ object Profile {
     */
   def inferContract(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val aggs = cols.flatMap(c => Seq(
       count(col(c)).as(s"nn_$c"),
       countDistinct(col(c)).as(s"nd_$c"))) :+
@@ -974,9 +957,6 @@ object Profile {
   def averagePrecision(df: DataFrame, id: Column, score: Column,
                        label: Column, bucketWidth: Long): DataFrame = {
     require(bucketWidth >= 1, "bucketWidth must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val rows = df.select(id.as("id"), score.cast("long").as("v"),
       when(label, 1L).otherwise(0L).as("y"))
     val byV = rows.groupBy(col("v"))
@@ -1021,7 +1001,6 @@ object Profile {
   def decileLift(df: DataFrame, score: Column, label: Column,
                  tiles: Int, bucketWidth: Long): DataFrame = {
     require(tiles >= 1, "tiles must be >= 1")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     def ceilDiv(a: Column, b: Column): Column = {
       val t = a + b - lit(1L)
       ((t - pmod(t, b)) / b).cast("long")
@@ -1052,8 +1031,8 @@ object Profile {
           col("cum_n").cast("double")).cast("decimal(20,10)"), 4)
           .cast("double").as("cum_rate"),
         when(col("npos") === 0, lit(null)).otherwise(
-          round(((d38(col("cum_pos")) * col("nn")).cast("double") /
-            (d38(col("cum_n")) * col("npos")).cast("double"))
+          round(((dec(col("cum_pos")) * col("nn")).cast("double") /
+            (dec(col("cum_n")) * col("npos")).cast("double"))
             .cast("decimal(20,10)"), 4).cast("double")).as("lift"))
   }
 
@@ -1078,7 +1057,6 @@ object Profile {
     */
   def giniSplitStump(df: DataFrame, value: Column, label: Column,
                      bucketWidth: Long): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val byV = df.select(value.cast("long").as("v"),
         when(label, 1L).otherwise(0L).as("y"))
       .groupBy(col("v"))
@@ -1088,7 +1066,7 @@ object Profile {
     val totals = byV.agg(sum(col("pos")).as("npos"),
       sum(col("tot")).as("n"))
     def purity(p: Column, m: Column, den: Column): Column =
-      (d38(p) * p + d38(m - p) * (m - p)).cast("double") /
+      (dec(p) * p + dec(m - p) * (m - p)).cast("double") /
         den.cast("double")
     val sc = ranked.crossJoin(broadcast(totals))
       .withColumn("posl", col("pos_below") + col("pos"))
@@ -1097,11 +1075,11 @@ object Profile {
       .withColumn("posr", col("npos") - col("posl"))
       .withColumn("nr", col("n") - col("nl"))
       .withColumn("gfp", round((
-        purity(col("posl"), col("nl"), d38(col("nl")) * col("n")) +
-        purity(col("posr"), col("nr"), d38(col("nr")) * col("n"))) *
+        purity(col("posl"), col("nl"), dec(col("nl")) * col("n")) +
+        purity(col("posr"), col("nr"), dec(col("nr")) * col("n"))) *
         lit(1e9)).cast("long"))
     val pfp = round(purity(col("npos"), col("n"),
-      d38(col("n")) * col("n")) * lit(1e9)).cast("long")
+      dec(col("n")) * col("n")) * lit(1e9)).cast("long")
     def m6(fp: Column): Column =
       round((fp.cast("double") / lit(1e9)).cast("decimal(20,10)"), 6)
         .cast("double")
@@ -1135,14 +1113,13 @@ object Profile {
   def blockBootstrapMean(df: DataFrame, key: Column, valueCents: Column,
                          m: Int, reps: Int): DataFrame = {
     require(m >= 1 && reps >= 2, "need m >= 1 blocks and reps >= 2")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val spark = df.sparkSession
     val rows = df.select(
       pmod(Dedup.hashLong(concat(lit("u"), key.cast("string"))),
         lit(m.toLong)).as("blk"),
       valueCents.cast("long").as("v"))
     val blocks = rows.groupBy(col("blk"))
-      .agg(sum(d38(col("v"))).as("s"), count(lit(1)).as("c"))
+      .agg(sum(dec(col("v"))).as("s"), count(lit(1)).as("c"))
     val grid = spark.range(0, reps).toDF("b")
       .crossJoin(spark.range(0, m).toDF("i"))
       .select(col("b"), pmod(Dedup.hashLong(concat(lit("r"),
@@ -1163,15 +1140,15 @@ object Profile {
       (t - pmod(t, lit(1000L))) / lit(1000L)
     }
     val stats = repMeans.agg(count(lit(1)).as("nb"),
-      sum(d38(col("mfp"))).as("sx"),
-      sum(d38(col("mfp")) * col("mfp")).as("sxx"))
+      sum(dec(col("mfp"))).as("sx"),
+      sum(dec(col("mfp")) * col("mfp")).as("sxx"))
     val ci = ranked.crossJoin(broadcast(stats))
       .groupBy(col("nb"), col("sx"), col("sxx"))
       .agg(max(when(col("rn") === pick(25).cast("long"), col("mfp")))
           .as("lofp"),
         max(when(col("rn") === pick(975).cast("long"), col("mfp")))
           .as("hifp"))
-    val full = rows.agg(sum(d38(col("v"))).as("st"),
+    val full = rows.agg(sum(dec(col("v"))).as("st"),
       count(lit(1)).as("ct"), count_distinct(col("blk")).as("nblk"))
       .filter(col("ct") > 0)
     def money4(fp: Column): Column =
@@ -1185,9 +1162,9 @@ object Profile {
           .as("mean_full"),
         money4(col("lofp")).as("ci_lo"),
         money4(col("hifp")).as("ci_hi"),
-        round((sqrt((d38(col("nb")) * col("sxx") -
+        round((sqrt((dec(col("nb")) * col("sxx") -
             col("sx") * col("sx")).cast("double") /
-            (d38(col("nb")) * (col("nb") - 1)).cast("double")) /
+            (dec(col("nb")) * (col("nb") - 1)).cast("double")) /
           lit(1e8)).cast("decimal(20,10)"), 6).cast("double").as("se"))
   }
 
@@ -1208,7 +1185,6 @@ object Profile {
     * p_e = 1 (a single category on both sides).
     */
   def cohenKappa(df: DataFrame, a: Column, b: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val cells = df.select(a.as("a"), b.as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("o"))
     val ra = cells.groupBy(col("a")).agg(sum(col("o")).as("ra"))
@@ -1217,19 +1193,19 @@ object Profile {
     val agree = cells.filter(col("a") === col("b"))
       .agg(coalesce(sum(col("o")), lit(0L)).as("agree"))
     val spc = ra.join(cb, col("a") === col("b"))
-      .agg(coalesce(sum(d38(col("ra")) * col("cb")),
+      .agg(coalesce(sum(dec(col("ra")) * col("cb")),
         lit(0).cast("decimal(38,0)")).as("spc"))
     n.crossJoin(agree).crossJoin(spc)
       .select(col("n"), col("agree"),
         round((col("agree").cast("double") / col("n").cast("double"))
           .cast("decimal(20,10)"), 4).cast("double").as("po"),
         round((col("spc").cast("double") /
-          (d38(col("n")) * col("n")).cast("double"))
+          (dec(col("n")) * col("n")).cast("double"))
           .cast("decimal(20,10)"), 4).cast("double").as("pe"),
-        when(d38(col("n")) * col("n") === col("spc"), lit(null))
+        when(dec(col("n")) * col("n") === col("spc"), lit(null))
           .otherwise(round(
-            ((d38(col("n")) * col("agree") - col("spc")).cast("double") /
-             (d38(col("n")) * col("n") - col("spc")).cast("double"))
+            ((dec(col("n")) * col("agree") - col("spc")).cast("double") /
+             (dec(col("n")) * col("n") - col("spc")).cast("double"))
             .cast("decimal(20,10)"), 6).cast("double")).as("kappa"))
   }
 
@@ -1306,25 +1282,24 @@ object Profile {
     */
   def changePointSSE(df: DataFrame, group: Column, ord: Column,
                      valueCents: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val rows = df.select(group.as("g"), ord.as("ord"),
       valueCents.cast("long").as("v"))
     val wOrd = Window.partitionBy(col("g")).orderBy(col("ord"))
     val wAll = Window.partitionBy(col("g"))
     val pre = rows
       .withColumn("i", row_number().over(wOrd))
-      .withColumn("si", sum(d38(col("v"))).over(
+      .withColumn("si", sum(dec(col("v"))).over(
         wOrd.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("n", count(lit(1)).over(wAll))
-      .withColumn("st", sum(d38(col("v"))).over(wAll))
+      .withColumn("st", sum(dec(col("v"))).over(wAll))
     val scored = pre
       .filter(col("i") < col("n") && col("st") =!= 0)
       .withColumn("sr", col("st") - col("si"))
       .withColumn("gfp", round((
-        (d38(col("n")) * col("si") * col("si")).cast("double") /
-          (d38(col("i")) * col("st") * col("st")).cast("double") +
-        (d38(col("n")) * col("sr") * col("sr")).cast("double") /
-          (d38(col("n") - col("i")) * col("st") * col("st")).cast("double") -
+        (dec(col("n")) * col("si") * col("si")).cast("double") /
+          (dec(col("i")) * col("st") * col("st")).cast("double") +
+        (dec(col("n")) * col("sr") * col("sr")).cast("double") /
+          (dec(col("n") - col("i")) * col("st") * col("st")).cast("double") -
         lit(1.0)) * lit(1e9)).cast("long"))
     scored
       .withColumn("rn", row_number().over(
@@ -1362,42 +1337,41 @@ object Profile {
     */
   def mannWhitneyVsRest(df: DataFrame, group: Column, value: Column,
                         bucketWidth: Long = 64L): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val gv = df.select(group.as("g"), value.cast("long").as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("n_gv"))
     val byV = gv.groupBy(col("v")).agg(sum(col("n_gv")).as("n_v"))
     val bl = Ranks.withRunningBelow(byV, "v", bucketWidth, Seq("n_v"))
       .select(col("v"), col("n_v"), col("n_v_below"))
     val tot = byV.agg(sum(col("n_v")).as("n_tot"),
-      sum(d38(col("n_v")) * col("n_v") * col("n_v") - col("n_v"))
+      sum(dec(col("n_v")) * col("n_v") * col("n_v") - col("n_v"))
         .as("tie_t"))
     val perG = gv.join(bl, "v")
       .groupBy(col("g"))
       .agg(sum(col("n_gv")).as("n_g"),
-        sum(d38(col("n_gv")) *
+        sum(dec(col("n_gv")) *
           (col("n_v_below") * 2 + col("n_v") + 1)).as("r2"))
     val withTot = perG.crossJoin(broadcast(tot))
       .withColumn("n_o", col("n_tot") - col("n_g"))
       .withColumn("u2",
-        (col("r2") - d38(col("n_g")) * (col("n_g") + 1)).cast("long"))
+        (col("r2") - dec(col("n_g")) * (col("n_g") + 1)).cast("long"))
       .withColumn("var_num",
-        d38(col("n_g")) * col("n_o") *
-          (d38(col("n_tot") + 1) * col("n_tot") * (col("n_tot") - 1) -
+        dec(col("n_g")) * col("n_o") *
+          (dec(col("n_tot") + 1) * col("n_tot") * (col("n_tot") - 1) -
             col("tie_t")))
       .withColumn("var_den",
-        d38(col("n_tot")) * (col("n_tot") - 1) * 12)
+        dec(col("n_tot")) * (col("n_tot") - 1) * 12)
     val sd = sqrt(col("var_num").cast("double") /
       col("var_den").cast("double"))
     withTot.select(col("g"), col("n_g"), col("u2"),
       when(col("n_o") === 0 || col("var_num") === 0, lit(null))
         .otherwise(round(
-          ((col("u2") - d38(col("n_g")) * col("n_o")).cast("double") /
+          ((col("u2") - dec(col("n_g")) * col("n_o")).cast("double") /
             (sd * 2.0)).cast("decimal(20,10)"), 4).cast("double"))
         .as("z"),
       when(col("n_o") === 0, lit(null))
         .otherwise(round(
-          ((col("u2") - d38(col("n_g")) * col("n_o")).cast("double") /
-            (d38(col("n_g")) * col("n_o")).cast("double"))
+          ((col("u2") - dec(col("n_g")) * col("n_o")).cast("double") /
+            (dec(col("n_g")) * col("n_o")).cast("double"))
             .cast("decimal(20,10)"), 4).cast("double"))
         .as("r_rb"))
   }
@@ -1425,17 +1399,12 @@ object Profile {
   def wassersteinVsRest(df: DataFrame, group: Column, value: Column,
                         bins: Int): DataFrame = {
     require(bins >= 2, "bins must be >= 2")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    // exact floor-div for nonnegative integers via subtract-mod (the
-    // quotient is an exact integer, so the double division is exact)
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val rows = df.select(group.as("g"), value.cast("long").as("v"))
     val ext = rows.agg(min(col("v")).as("vmin"),
-        (floorDiv(max(col("v")) - min(col("v")), lit(bins.toLong)) + 1L)
+        (fdiv(max(col("v")) - min(col("v")), lit(bins.toLong)) + 1L)
           .as("w"))
     val gb = rows.crossJoin(broadcast(ext))
-      .select(col("g"), floorDiv(col("v") - col("vmin"), col("w")).as("bin"))
+      .select(col("g"), fdiv(col("v") - col("vmin"), col("w")).as("bin"))
       .groupBy(col("g"), col("bin")).agg(count(lit(1)).as("n_gb"))
     val gs = gb.groupBy(col("g")).agg(sum(col("n_gb")).as("n_g"))
     val tot = gs.agg(sum(col("n_g")).as("n_tot"))
@@ -1460,12 +1429,12 @@ object Profile {
     cumG.join(broadcast(bt), "bin")
       .crossJoin(broadcast(tot))
       .groupBy(col("g"), col("n_g"), col("n_tot"))
-      .agg(sum(abs(d38(col("cum_g")) * (col("n_tot") - col("n_g")) -
-        d38(col("cum_t") - col("cum_g")) * col("n_g"))).as("num"))
+      .agg(sum(abs(dec(col("cum_g")) * (col("n_tot") - col("n_g")) -
+        dec(col("cum_t") - col("cum_g")) * col("n_g"))).as("num"))
       .select(col("g"), col("n_g"),
         when(col("n_tot") === col("n_g"), lit(null))
           .otherwise(round((col("num").cast("double") /
-            (d38(col("n_g")) * (col("n_tot") - col("n_g")))
+            (dec(col("n_g")) * (col("n_tot") - col("n_g")))
               .cast("double")).cast("decimal(20,10)"), 4)
             .cast("double")).as("w1"))
   }
@@ -1491,28 +1460,27 @@ object Profile {
     */
   def brierDecomposition(df: DataFrame, pMicro: Column,
                          label: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val rows = df.select(pMicro.cast("long").as("p"),
       label.cast("long").as("y"))
     val g = rows.groupBy(col("p"))
       .agg(count(lit(1)).as("nk"), sum(col("y")).as("sk"))
     val tot = g.agg(sum(col("nk")).as("n"), sum(col("sk")).as("s1"))
     val per = g.crossJoin(broadcast(tot))
-      .withColumn("bs", d38(col("nk")) * col("p") * col("p")
-        - d38(lit(2L)) * col("p") * lit(1000000L) * col("sk")
-        + d38(lit(1000000L)) * lit(1000000L) * col("sk"))
-      .withColumn("dl", d38(col("p")) * col("nk")
-        - d38(lit(1000000L)) * col("sk"))
-      .withColumn("dr", d38(col("sk")) * col("n")
-        - d38(col("s1")) * col("nk"))
+      .withColumn("bs", dec(col("nk")) * col("p") * col("p")
+        - dec(lit(2L)) * col("p") * lit(1000000L) * col("sk")
+        + dec(lit(1000000L)) * lit(1000000L) * col("sk"))
+      .withColumn("dl", dec(col("p")) * col("nk")
+        - dec(lit(1000000L)) * col("sk"))
+      .withColumn("dr", dec(col("sk")) * col("n")
+        - dec(col("s1")) * col("nk"))
       .select(col("n"), col("s1"),
         round(col("bs").cast("double") / col("n").cast("double")
           / lit(1e12) * lit(1e9)).cast("long").as("tb"),
         round((col("dl") * col("dl")).cast("double") /
-          (d38(col("nk")) * col("n")).cast("double")
+          (dec(col("nk")) * col("n")).cast("double")
           / lit(1e12) * lit(1e9)).cast("long").as("tl"),
         round((col("dr") * col("dr")).cast("double") /
-          (d38(col("nk")) * col("n") * col("n") * col("n"))
+          (dec(col("nk")) * col("n") * col("n") * col("n"))
             .cast("double") * lit(1e9)).cast("long").as("tr"))
     per.groupBy(col("n"), col("s1"))
       .agg(sum(col("tb")).as("sb"), sum(col("tl")).as("sl"),
@@ -1524,8 +1492,8 @@ object Profile {
           .cast("decimal(20,10)"), 6).cast("double").as("reliability"),
         round((col("sr").cast("double") / lit(1e9))
           .cast("decimal(20,10)"), 6).cast("double").as("resolution"),
-        round(((d38(col("s1")) * (col("n") - col("s1"))).cast("double") /
-          (d38(col("n")) * col("n")).cast("double"))
+        round(((dec(col("s1")) * (col("n") - col("s1"))).cast("double") /
+          (dec(col("n")) * col("n")).cast("double"))
           .cast("decimal(20,10)"), 6).cast("double").as("uncertainty"))
   }
 
@@ -1551,10 +1519,9 @@ object Profile {
   def signFlipTest(pairs: DataFrame, unit: Column, diffMicro: Column,
                    reps: Int = 64): DataFrame = {
     require(reps >= 1, "reps must be >= 1")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val rows = pairs.select(unit.cast("string").as("u"),
       diffMicro.cast("long").as("d"))
-    val obs = rows.agg(sum(d38(col("d"))).cast("long").as("t_obs"),
+    val obs = rows.agg(sum(dec(col("d"))).cast("long").as("t_obs"),
       count(lit(1)).as("n_units"))
     val repsDf = pairs.sparkSession.range(1, reps + 1).toDF("r")
     val tr = rows.crossJoin(broadcast(repsDf))
@@ -1562,7 +1529,7 @@ object Profile {
         when(pmod(Dedup.hashLong(concat(lit("sf"), col("u"), lit(":"),
           col("r").cast("string"))), lit(2L)) === 0, col("d"))
           .otherwise(-col("d")).as("sd"))
-      .groupBy(col("r")).agg(sum(d38(col("sd"))).cast("long").as("t_r"))
+      .groupBy(col("r")).agg(sum(dec(col("sd"))).cast("long").as("t_r"))
     tr.crossJoin(broadcast(obs))
       .groupBy(col("n_units"), col("t_obs"))
       .agg(count(lit(1)).as("m"),
@@ -1640,11 +1607,6 @@ object Profile {
   def medianOfMeans(df: DataFrame, group: Column, valueMicro: Column,
                     key: Column, k: Int): DataFrame = {
     require(k >= 3 && k <= 99, "k must be in [3, 99]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     val perB = df
       .select(group.as("grp"), valueMicro.cast("long").as("v"),
         Sampling.hashBucket(key, k).as("b"))
@@ -1685,9 +1647,6 @@ object Profile {
   def pinballLoss(df: DataFrame, group: Column, qPct: Column,
                   actualMicro: Column,
                   forecastMicro: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     df
       .select(group.as("grp"), qPct.cast("long").as("q"),
         actualMicro.cast("long").as("a"),

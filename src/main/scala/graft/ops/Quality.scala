@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv, tdiv}
 
 /** Data-quality gates — first-class semantics in the reference
   * (downloader_wmy.py:94-122): a key failing any gate contributes NO
@@ -258,9 +259,6 @@ object Quality {
     */
   def macroF1(confusion: DataFrame, y: Column, pred: Column,
               n: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val base = confusion.select(y.as("y"), pred.as("pred"),
       n.cast("long").as("n"))
     val tp = base.filter(col("y") === col("pred"))
@@ -299,9 +297,6 @@ object Quality {
     * kappa_micro).
     */
   def cohenKappa(df: DataFrame, a: Column, b: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(x: Column, y: Column): Column =
-      ((x - pmod(x, y)) / y).cast("long")
     val counts = df.agg(count(lit(1)).as("n"),
       sum(when(a, 1L).otherwise(0L)).as("a_yes"),
       sum(when(b, 1L).otherwise(0L)).as("b_yes"),
@@ -339,9 +334,6 @@ object Quality {
   def passAtK(df: DataFrame, task: Column, correct: Column,
               k: Int): DataFrame = {
     require(k >= 1 && k <= 10, "k must be in [1, 10]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val agg = df.groupBy(task.as("task"))
       .agg(count(lit(1)).as("n"),
         sum(when(correct, 1L).otherwise(0L)).as("c"))
@@ -440,7 +432,6 @@ object Quality {
     * (total_n, total_defects) constants.
     */
   def pChart(df: DataFrame, group: Column, isDefect: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val per = df.groupBy(group.as("grp"))
       .agg(count(lit(1)).as("n"),
         sum(when(isDefect, 1L).otherwise(0L)).as("defects"))
@@ -472,9 +463,6 @@ object Quality {
   def benfordAudit(df: DataFrame, valueCents: Column,
                    expectedMicro: Seq[Long]): DataFrame = {
     require(expectedMicro.length == 9, "need 9 digit expectations")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val exp = expectedMicro.zipWithIndex.map { case (e, i) =>
       (i + 1, e)
     }
@@ -537,11 +525,6 @@ object Quality {
     */
   def krippendorffAlpha(df: DataFrame, unit: Column,
                         vote: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     val perUnit = df
       .select(unit.as("u"), when(vote, 1L).otherwise(0L).as("v"))
       .groupBy(col("u"))
@@ -590,7 +573,6 @@ object Quality {
     */
   def confidentJoint(df: DataFrame, id: Column, given: Column,
                      probs: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df
       .select(id.as("id"), given.cast("int").as("y"),
         posexplode(probs).as(Seq("j", "p")))
@@ -640,9 +622,6 @@ object Quality {
                            alphaPcts: Seq[Int]): DataFrame = {
     require(alphaPcts.nonEmpty && alphaPcts.forall(a => a >= 1 && a <= 99),
       "alpha percents must be in [1, 99]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(col("grp"))
       .orderBy(col("score"), col("o"))
     val ranked = cal
@@ -695,9 +674,6 @@ object Quality {
                              alphaPcts: Seq[Int]): DataFrame = {
     require(alphaPcts.nonEmpty && alphaPcts.forall(a => a >= 1 && a <= 99),
       "alpha percents must be in [1, 99]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(col("grp")).orderBy(col("score"))
     val cum = hist
       .select(col("grp"), col("score").cast("long").as("score"),
@@ -761,9 +737,6 @@ object Quality {
                           scoreMicro: Column, label: Column,
                           bins: Int): DataFrame = {
     require(bins >= 2 && bins <= 64, "bins must be in [2, 64]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val cells = df
       .select(grp.as("grp"),
         least(lit(bins - 1L),
@@ -815,9 +788,6 @@ object Quality {
     */
   def fairnessAudit(df: DataFrame, group: Column, label: Column,
                     pred: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     def rate(num: Column, den: Column): Column =
       when(den === 0, lit(null).cast("long"))
         .otherwise(fdiv(dec(num) * lit(1000000L), dec(den)))
@@ -871,9 +841,6 @@ object Quality {
     */
   def bCubed(df: DataFrame, item: Column, pred: Column,
              gold: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val cells = df
       .select(item.as("id"), pred.cast("string").as("p"),
         gold.cast("string").as("g"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Calendar OHLC resampling — the reference's flagship aggregation
   * (downloader_wmy.py:39-58): day bars → weekly (Friday-anchored),
@@ -133,9 +134,6 @@ object Resample {
     */
   def maxDrawdown(bars: DataFrame, key: Column, ord: Column,
                   priceCents: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(key).orderBy(ord)
       .rowsBetween(Window.unboundedPreceding, 0)
     bars.select(key.as("k"), ord.as("o"),
@@ -160,9 +158,6 @@ object Resample {
   def rollingVariance(bars: DataFrame, key: Column, ord: Column,
                       priceCents: Column, w: Int): DataFrame = {
     require(w >= 2, "window must be >= 2")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val win = Window.partitionBy(key).orderBy(ord)
       .rowsBetween(-(w - 1), 0)
     bars.select(key.as("k"), ord.as("o"),
@@ -290,9 +285,6 @@ object Resample {
   def maseBacktest(bars: DataFrame, key: Column, ord: Column,
                    valueCents: Column, season: Int): DataFrame = {
     require(season >= 2, "season must be >= 2 (1 is the naive lag)")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(col("__k")).orderBy(col("__o"))
     val e = bars
       .select(key.as("__k"), ord.as("__o"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Deterministic corpus sampling — reproducibility is the whole point at
   * 100 TB: the SAME rows must be selected on every run, every cluster
@@ -435,13 +436,12 @@ object Sampling {
   def neymanAllocation(df: DataFrame, stratum: Column, valueCents: Column,
                        rowKey: Column, budget: Int): DataFrame = {
     require(budget >= 1, "budget must be >= 1")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val rows = df.select(stratum.as("h"), valueCents.cast("long").as("v"),
       rowKey.cast("string").as("k"))
     val st = rows.groupBy(col("h")).agg(count(lit(1)).as("n"),
-      sum(d38(col("v"))).as("sx"), sum(d38(col("v")) * col("v")).as("sxx"))
+      sum(dec(col("v"))).as("sx"), sum(dec(col("v")) * col("v")).as("sxx"))
     val wts = st.withColumn("sd",
-        sqrt((d38(col("n")) * col("sxx") - col("sx") * col("sx"))
+        sqrt((dec(col("n")) * col("sxx") - col("sx") * col("sx"))
           .cast("double")) / col("n").cast("double"))
       .withColumn("wfp",
         round(col("n").cast("double") * col("sd") * lit(1e6)).cast("long"))
@@ -468,7 +468,7 @@ object Sampling {
           .orderBy(Dedup.hashLong(concat(lit("s"), col("k"))), col("k"))))
       .filter(col("srn") <= col("alloc"))
       .groupBy(col("h"))
-      .agg(count(lit(1)).as("n_sampled"), sum(d38(col("v"))).as("ssum"))
+      .agg(count(lit(1)).as("n_sampled"), sum(dec(col("v"))).as("ssum"))
     alloc.join(sampled, Seq("h"), "left")
       .na.fill(0L, Seq("n_sampled"))
       .select(col("h"), col("n"),
@@ -571,7 +571,6 @@ object Sampling {
     */
   def egReweight(losses: DataFrame, etaMicro: Long): DataFrame = {
     require(etaMicro >= 0, "eta must be >= 0")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = losses.select(col("source"),
       col("loss_micro").cast("long").as("loss_micro"))
     val mean = base.agg(pmFloorDiv(dec(sum(col("loss_micro"))),
@@ -627,7 +626,6 @@ object Sampling {
     require(wSum > 0, "weights must not all be zero")
     val spark = docs.sparkSession
     import spark.implicits._
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val avail = docs
       .select(source.as("source"), tokens.cast("long").as("tk"))
       .groupBy(col("source"))
@@ -672,7 +670,6 @@ object Sampling {
                           rowKey: Column,
                           bins: Int): (DataFrame, DataFrame) = {
     require(bins >= 2, "bins must be >= 2")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val rows = df.select(group.as("g"), value.cast("long").as("v"),
       rowKey.cast("string").as("k"))
     val ext = rows.agg(min(col("v")).as("vmin"),
@@ -688,8 +685,8 @@ object Sampling {
     val tot = gs.agg(sum(col("n_g")).as("n_tot"))
     val stats = gb.join(bt, "bin").join(gs, "g")
       .crossJoin(broadcast(tot))
-      .withColumn("num", d38(lit(1000000L)) * col("n_b") * col("n_g"))
-      .withColumn("den", d38(col("n_tot")) * col("n_gb"))
+      .withColumn("num", dec(lit(1000000L)) * col("n_b") * col("n_g"))
+      .withColumn("den", dec(col("n_tot")) * col("n_gb"))
       .crossJoin(broadcast(ext))
       .select(col("g"), col("bin"), col("n_gb"), col("num"),
         col("den"), col("vmin"), col("w"))
@@ -702,11 +699,10 @@ object Sampling {
     */
   private[graft] def profileMatchRule(binned: DataFrame,
                                       stats: DataFrame): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     binned
       .join(broadcast(stats.select(col("g"), col("bin"), col("num"),
         col("den"))), Seq("g", "bin"))
-      .filter(d38(pmod(Dedup.hashLong(concat(lit("dm"), col("k"))),
+      .filter(dec(pmod(Dedup.hashLong(concat(lit("dm"), col("k"))),
         lit(1000000L))) * col("den") < col("num"))
   }
 
@@ -874,9 +870,6 @@ object Sampling {
                             batchSizes: Seq[Int]): DataFrame = {
     require(nRows >= 1 && batchSizes.nonEmpty &&
       batchSizes.forall(_ >= 2), "need nRows >= 1, batch sizes >= 2")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(x: Column, y: Column): Column =
-      ((x - pmod(x, y)) / y).cast("long")
     batchSizes.map { bs =>
       val nb = math.max(1L, (nRows + bs - 1) / bs).toInt
       pairs
@@ -930,9 +923,6 @@ object Sampling {
   def interleaveAudit(docs: DataFrame, source: Column, key: Column,
                       prefixes: Seq[Long]): DataFrame = {
     require(prefixes.nonEmpty && prefixes.forall(_ >= 1))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val spark = docs.sparkSession
     import spark.implicits._
     val rows = docs.select(source.as("src"),
@@ -963,9 +953,6 @@ object Sampling {
     * (n_shards, min_tokens, max_tokens, imbalance_micro).
     */
   def shardBalanceAudit(shards: DataFrame): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     shards.groupBy(col("shard"))
       .agg(sum(col("weight")).as("tokens"))
       .agg(count(lit(1)).as("n_shards"),
@@ -1016,9 +1003,6 @@ object Sampling {
   def repeatValueCurve(docs: DataFrame, source: Column, tokens: Column,
                        maxEpochs: Int, rStar: Double): DataFrame = {
     require(maxEpochs >= 1 && rStar > 0.0)
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val u = docs.groupBy(source.as("source"))
       .agg(sum(tokens.cast("long")).as("unique_tokens"))
     // decay factors as engine expressions (exp parity, the q361

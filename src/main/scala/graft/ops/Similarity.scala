@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv, tdiv, snapMicro}
 
 /** Vector-similarity operators over an embedding column (array<float>):
   * exact cosine, brute-force top-k (the correctness baseline) and an
@@ -195,8 +196,6 @@ object Similarity {
       s"mmrRerank runs k driver-coordinated greedy rounds — k=$k exceeds" +
         " the 1000-round bound")
     val spark = queries.sparkSession
-    def snapMicro(c: Column): Column =
-      round(c.cast("decimal(20,10)") * 1000000).cast("long")
     val rel = bruteForceTopK(queries, candidates, poolK, maxQueries)
       .select(col("query_id").cast("long").as("qid"),
         col("neighbor_id").cast("long").as("cid"),
@@ -1380,9 +1379,6 @@ object Similarity {
   def rrfFusion(lists: DataFrame, queryId: Column, docId: Column,
                 rank: Column, k0: Int, topK: Int): DataFrame = {
     require(k0 >= 1 && topK >= 1, "k0 and topK must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score_micro").desc, col("doc_id"))
     lists
@@ -1407,11 +1403,6 @@ object Similarity {
     * One broadcast-sized row: (thr: array&lt;long&gt;).
     */
   def binaryThresholds(vecs: DataFrame): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     vecs.select(posexplode(col("vec")))
       .select(col("pos"),
         round(col("col").cast("double") * 1e6).cast("long").as("xm"))
@@ -2000,8 +1991,6 @@ object Similarity {
     */
   def projectionDistortion(vecs: DataFrame, id: Column, vec: Column,
                            k: Int, d: Int, scale: Int): DataFrame = {
-    def snapMicro(c: Column): Column =
-      round(c.cast("decimal(20,10)") * 1000000).cast("long")
     def dotL(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (p, q) => p * q), lit(0L),
         (acc, t) => acc + t)
@@ -2076,10 +2065,6 @@ object Similarity {
                  maxCandidates: Long = 100000L): DataFrame = {
     require(k >= 1, "k must be >= 1")
     guardBoundedQueries(candidates, maxCandidates, "knnShapley")
-    def snapMicro(c: Column): Column =
-      round(c.cast("decimal(20,10)") * 1000000).cast("long")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val p = probeVec.select(col("vec").as("pv"), col("y").as("py"))
     val scored = candidates.crossJoin(broadcast(p))
       .select(col("id"),
@@ -2110,10 +2095,6 @@ object Similarity {
 
   def marginMining(left: DataFrame, right: DataFrame, k: Int,
                    maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    def snapMicro(c: Column): Column =
-      round(c.cast("decimal(20,10)") * 1000000).cast("long")
-    def tdiv(a: Column, b: Column): Column =
-      (a.cast("double") / b.cast("double")).cast("long")
     val lr = bruteForceTopK(left, right, k, maxQueries)
     val rl = bruteForceTopK(right, left, k, maxQueries)
     val ml = lr.groupBy(col("query_id").as("id_l"))
@@ -2147,8 +2128,6 @@ object Similarity {
                           maxQueries: Long = DefaultMaxQueries): DataFrame = {
     require(k >= 1, "k must be >= 1")
     guardBoundedQueries(queries, maxQueries, "lateInteractionTopK")
-    def snapMicro(c: Column): Column =
-      round(c.cast("decimal(20,10)") * 1000000).cast("long")
     // slot norms hoisted out of the m²·|Q|·|D| pair block (subVectors
     // enforces equal slot lengths, so cosineHoisted's equal-dim
     // precondition holds across every slot pair)
@@ -2191,9 +2170,6 @@ object Similarity {
   def neighborStability(queriesA: DataFrame, candsA: DataFrame,
                         queriesB: DataFrame, candsB: DataFrame,
                         k: Int): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val ta = bruteForceTopK(queriesA, candsA, k)
       .select(col("query_id"), col("neighbor_id"))
     val tb = bruteForceTopK(queriesB, candsB, k)
@@ -2224,9 +2200,6 @@ object Similarity {
     * compare). Two dim-explode aggregates, one label-sized join.
     */
   def centroidDrift(a: DataFrame, b: DataFrame): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(x: Column, y: Column): Column =
-      ((x - pmod(x, y)) / y).cast("long")
     def side(df: DataFrame, tag: String): DataFrame = df
       .select(col("label"), posexplode(col("vec"))
         .as(Seq("dim", "xv")))
@@ -2268,11 +2241,6 @@ object Similarity {
                   cands: DataFrame, alphaMicro: Long, betaMicro: Long,
                   gammaMicro: Long, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
     def x12(df: DataFrame): DataFrame = df
       .select(col("id"), posexplode(col("vec")).as(Seq("dim", "xv")))
       .select(col("id"), col("dim").cast("int").as("dim"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv}
 
 /** Engine-portable HyperLogLog — approximate distinct counting as pure
   * relational algebra over the md5 hash, so the SAME registers and the
@@ -283,9 +284,6 @@ object Sketch {
     */
   def kmvEstimate(registers: DataFrame, groups: Seq[String],
                   k: Int): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     registers.groupBy(groups.map(col): _*)
       .agg(count(lit(1)).as("n_kept"), max(col("h")).as("theta"))
       .select(groups.map(col) ++ Seq(col("n_kept"), col("theta"),
@@ -306,9 +304,6 @@ object Sketch {
     * jaccard_micro).
     */
   def kmvOverlap(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(x: Column, y: Column): Column =
-      ((x - pmod(x, y)) / y).cast("long")
     def est(r: DataFrame, name: String): DataFrame =
       kmvEstimate(r, Nil, k).select(col("n_est").as(name),
         when(col("n_kept") < k, lit(KmvMax)).otherwise(col("theta"))

@@ -143,18 +143,19 @@ object SuffixArray {
     * routes through withAction and fires the metric listener (r15
     * advice: a lazy-checkpoint refactor or a Spark listener change
     * would hang the build loop forever). The listener is async, so
-    * poll getOrEmpty briefly; past the deadline fall back to counting
-    * the checkpointed frame directly — one extra job in a pathological
-    * case, never a hang.
+    * wait on the observation's own future under a deadline — no
+    * thread of ours is left blocked when it never completes; past the
+    * deadline fall back to counting the checkpointed frame directly —
+    * one extra job in a pathological case, never a hang.
     */
-  private def unresolvedOf(obs: org.apache.spark.sql.Observation,
-                           fallback: => Long): Long = {
-    import scala.concurrent.{Await, Future}
+  private[graft] def unresolvedOf(obs: org.apache.spark.sql.Observation,
+                                  fallback: => Long): Long = {
+    import scala.concurrent.Await
     import scala.concurrent.duration.DurationInt
-    import scala.concurrent.ExecutionContext.Implicits.global
     try {
-      val m = Await.result(Future(obs.get), 30.seconds)
-      m.get("unresolved").map(_.asInstanceOf[Long]).getOrElse(fallback)
+      val row = Await.result(obs.future, 30.seconds)
+      // a sum over no rows is null: nothing is unresolved
+      Option(row.getAs[java.lang.Long]("unresolved")).fold(0L)(_.longValue)
     } catch {
       case _: java.util.concurrent.TimeoutException => fallback
     }

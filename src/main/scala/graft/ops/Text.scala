@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Cols.{dec, fdiv, tdiv}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language-ID heuristics, fingerprinting,
@@ -639,9 +640,6 @@ object Text {
     */
   def ccLuhnAudit(df: DataFrame, group: Column,
                   text: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     df
       .select(group.as("grp"), luhnCandidates(text).as("cands"))
       .select(col("grp"), size(col("cands")).as("nc"),
@@ -673,13 +671,6 @@ object Text {
     */
   def readabilityGrade(df: DataFrame, group: Column,
                        text: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
-    }
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val perDoc = df
       .select(group.as("grp"),
         tokenCount(text).cast("long").as("w"),
@@ -716,9 +707,6 @@ object Text {
     */
   def mixedScriptAudit(df: DataFrame, group: Column,
                        text: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     df
       .select(group.as("grp"), tokens(text).as("tk"))
       .select(col("grp"), size(col("tk")).cast("long").as("nt"),
@@ -1632,8 +1620,6 @@ object Text {
   def perplexityBuckets(docs: DataFrame, id: Column, text: Column,
                         lang: Column, nBuckets: Int = 3): DataFrame = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val toks = docs.select(id.as("id"), lang.as("lang"),
       tokens(text).as("tk"))
     val bigrams = toks
@@ -1661,7 +1647,7 @@ object Text {
           (col("ca") + col("v")).cast("double")) * lit(1e6))
           .cast("long").as("tfp"))
       .groupBy(col("id"), col("lang"))
-      .agg(floorDiv(sum(col("tfp")), count(lit(1))).as("nll_micro"))
+      .agg(fdiv(sum(col("tfp")), count(lit(1))).as("nll_micro"))
     val nPerLang = perDoc.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_lang"))
     val w = Window.partitionBy(col("lang"))
@@ -1670,7 +1656,7 @@ object Text {
       .withColumn("rn", row_number().over(w))
       .join(broadcast(nPerLang), Seq("lang"))
       .withColumn("bucket",
-        floorDiv((col("rn") - 1) * nBuckets, col("n_lang")).cast("int"))
+        fdiv((col("rn") - 1) * nBuckets, col("n_lang")).cast("int"))
       .groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         min(col("nll_micro")).as("nll_min_micro"),
@@ -1748,8 +1734,6 @@ object Text {
     */
   def watermarkGreens(docs: DataFrame, idCol: Column, text: Column,
                       salt: String): DataFrame = {
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val toks = docs.select(idCol.as("id"), tokens(text).as("tk"))
     toks
       .select(col("id"), explode(Cols.bound(col("tk")) { t =>
@@ -1767,7 +1751,7 @@ object Text {
         sum(col("green")).as("n_green"))
       .select(col("id"), col("n_transitions"), col("n_green"),
         (col("n_green") * 2 - col("n_transitions")).as("excess"),
-        floorDiv(col("n_green") * 1000000L, col("n_transitions"))
+        fdiv(col("n_green") * 1000000L, col("n_transitions"))
           .as("green_micro"))
   }
 
@@ -1785,8 +1769,6 @@ object Text {
     */
   def tokenFertility(docs: DataFrame, lang: Column,
                      text: Column): DataFrame = {
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     docs.select(lang.as("lang"),
         tokenCount(text).cast("long").as("nw"),
         bpeTokenCount(text).cast("long").as("nb"),
@@ -1798,9 +1780,9 @@ object Text {
         sum(col("nby")).as("total_bytes"))
       .select(col("lang"), col("n_docs"), col("total_words"),
         col("total_bpe"), col("total_bytes"),
-        floorDiv(col("total_bpe") * 1000000L, col("total_words"))
+        fdiv(col("total_bpe") * 1000000L, col("total_words"))
           .as("fertility_micro"),
-        floorDiv(col("total_bytes") * 1000000L, col("total_bpe"))
+        fdiv(col("total_bytes") * 1000000L, col("total_bpe"))
           .as("bytes_per_token_micro"))
   }
 
@@ -2224,9 +2206,6 @@ object Text {
                          ratePct: Int, meanSpan: Int): DataFrame = {
     require(ratePct >= 1 && ratePct <= 99, "rate must be in [1, 99]")
     require(meanSpan >= 1, "meanSpan must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     docs
       .select(group.as("grp"), tokenCount(text).cast("long").as("n"))
       .select(col("grp"), col("n"),
@@ -2265,9 +2244,6 @@ object Text {
   def vocabCoveragePlan(docs: DataFrame, text: Column,
                         vs: Seq[Int]): DataFrame = {
     require(vs.nonEmpty && vs.forall(_ >= 1))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val spectrum = docs.select(explode(tokens(text)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .groupBy(col("freq")).agg(count(lit(1)).as("n_types"))
@@ -2304,9 +2280,6 @@ object Text {
     */
   def goodTuringUnseen(docs: DataFrame, group: Column,
                        text: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     docs.select(group.as("grp"), explode(tokens(text)).as("w"))
       .groupBy(col("grp"), col("w")).agg(count(lit(1)).as("c"))
       .groupBy(col("grp"))
@@ -2340,9 +2313,6 @@ object Text {
   def ngramNoveltyCurve(docs: DataFrame, id: Column, text: Column,
                         isRef: Column, maxN: Int): DataFrame = {
     require(maxN >= 1 && maxN <= 16, "maxN must be in [1, 16]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val p61 = 2305843009213693951L // 2^61 − 1: 4·(p−1) < Long.Max
     // Level-by-level ROLLING gram keys (r16): level n extends level
     // n−1 by one token hash — g_n(i) = (g_{n−1}(i)·3 + h(i+n−1)) mod p,
@@ -2407,8 +2377,6 @@ object Text {
                             ref: Column, window: Int): DataFrame = {
     require(window >= 1, "window must be >= 1")
     val w = lit(window.toLong)
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val n = size(ref).cast("long")
     // mismatch positions, 0-based (CaseWhen guards the OOB read)
     val mm = when(n === 0, array().cast("array<long>"))
@@ -2430,17 +2398,14 @@ object Text {
         }.as("s"))
       .select(col("id"), col("n_tokens"),
         col("s.nm").as("n_mismatch"), col("s.rounds").as("n_rounds"))
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdivL(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     out.select(col("id"), col("n_tokens"), col("n_mismatch"),
       col("n_rounds"),
       when(col("n_tokens") === 0, lit(null).cast("long"))
-        .otherwise(fdivL(dec(col("n_tokens") - col("n_mismatch")) *
+        .otherwise(fdiv(dec(col("n_tokens") - col("n_mismatch")) *
           lit(1000000L), dec(col("n_tokens"))))
         .as("accept_rate_micro"),
       when(col("n_rounds") === 0, lit(null).cast("long"))
-        .otherwise(fdivL(dec(col("n_tokens")) * lit(1000000L),
+        .otherwise(fdiv(dec(col("n_tokens")) * lit(1000000L),
           dec(col("n_rounds")))).as("speedup_micro"))
   }
 
@@ -2523,9 +2488,6 @@ object Text {
     */
   def rougeN(pairs: DataFrame, n: Int): DataFrame = {
     require(n >= 1 && n <= 8, "n must be in [1, 8]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     def grams(c: Column): Column =
       when(size(c) < n, array().cast("array<string>"))
         .otherwise(transform(sequence(lit(1), size(c) - (n - 1)),
@@ -2573,9 +2535,6 @@ object Text {
     */
   def chrF(pairs: DataFrame, maxN: Int): DataFrame = {
     require(maxN >= 1 && maxN <= 10, "maxN must be in [1, 10]")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    def fdiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     def grams(c: Column, n: Int): Column =
       when(length(c) < n, array().cast("array<string>"))
         .otherwise(transform(sequence(lit(1), length(c) - (n - 1)),
@@ -2692,10 +2651,6 @@ object Text {
         .join(uni.select(col("w").as("b"), col(s"cw_$tag")
           .as(s"cb1_$tag")), Seq("b"), "left")
         .crossJoin(broadcast(tv))
-    }
-    def tdiv(a: Column, b: Column): Column = {
-      val q = (abs(a) - pmod(abs(a), b)) / b
-      (when(a < 0, -q).otherwise(q)).cast("long")
     }
     val scored = joined(joined(bg.filter(col("bkt") === 2), 0, "m"),
       1, "r")

@@ -128,9 +128,9 @@ object Snapshot {
 
   def latestVersion(table: String): Option[Long] = versions(table).lastOption
 
-  private def enc(s: String): String =
+  private def urlEncode(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
+  private def urlDecode(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
   /** Dir lines are `path` (no stats — pre-stats manifests parse
@@ -154,10 +154,10 @@ object Snapshot {
     // carries the write-audit-publish id the version was published from
     require(header.length == 3 || header.length == 4,
       s"corrupt manifest header: ${lines.head}")
-    val wapId = if (header.length == 4) dec(header(3)) else ""
+    val wapId = if (header.length == 4) urlDecode(header(3)) else ""
     val v = header(0).toLong
     def triples(fields: Seq[String]) = fields.grouped(3).collect {
-      case Seq(c, mn, mx) => (dec(c), dec(mn), dec(mx))
+      case Seq(c, mn, mx) => (urlDecode(c), urlDecode(mn), urlDecode(mx))
     }.toSeq
     def statsOf(rows: String, fields: Seq[String]) = {
       val t = triples(fields)
@@ -181,7 +181,7 @@ object Snapshot {
       val f = line.split("\t", -1)
       f(1) -> statsOf(f(2), f.drop(3).toSeq)
     }.toMap
-    val uvKeys = uvLines.map(l => dec(l.split("\t", -1)(2))).distinct
+    val uvKeys = uvLines.map(l => urlDecode(l.split("\t", -1)(2))).distinct
     require(uvKeys.size <= 1,
       s"upsert sidecars must share one key; found $uvKeys")
     Manifest(v, header(1), header(2), lines(1), parsed.map(_._1),
@@ -193,7 +193,7 @@ object Snapshot {
   private def manifestBody(m: Manifest): String = {
     def statFields(st: DirStats): Seq[String] =
       st.rows.toString +: st.mins.keys.toSeq.sorted.flatMap(c =>
-        Seq(enc(c), enc(st.mins(c)), enc(st.maxs(c))))
+        Seq(urlEncode(c), urlEncode(st.mins(c)), urlEncode(st.maxs(c))))
     val dirLines = m.dirs.map { d =>
       m.stats.get(d) match {
         case None => d
@@ -204,9 +204,9 @@ object Snapshot {
       (Seq("F", f) ++ statFields(st)).mkString("\t")
     }
     val dvLines = m.dvDirs.map(d => s"D\t$d")
-    val uvLines = m.uvDirs.map(d => s"U\t$d\t${enc(m.uvKey)}")
+    val uvLines = m.uvDirs.map(d => s"U\t$d\t${urlEncode(m.uvKey)}")
     val header = s"${m.version}\t${m.partitionCol}\t${m.partitionType}" +
-      (if (m.wapId.isEmpty) "" else s"\t${enc(m.wapId)}")
+      (if (m.wapId.isEmpty) "" else s"\t${urlEncode(m.wapId)}")
     (Seq(header, m.dataSchemaJson) ++ dirLines ++ fileLines ++ dvLines
       ++ uvLines).mkString("", "\n", "\n")
   }
@@ -643,7 +643,7 @@ object Snapshot {
       .saveAsTable(tmpName)
     spark.sql(s"DROP TABLE `$tmpName`")
     Files.writeString(dataRoot.resolve("_bucketing"),
-      s"${enc(bucketKey)}\t$buckets")
+      s"${urlEncode(bucketKey)}\t$buckets")
     val next = latestVersion(table).getOrElse(0L) + 1
     writeManifest(table, Manifest(next, "", "", df.schema.json,
       Seq(dataRoot.toString)))
@@ -671,7 +671,7 @@ object Snapshot {
     val dir = m.dirs.head
     val spec = Files.readString(Paths.get(dir, "_bucketing")).trim
       .split('\t')
-    val (key, buckets) = (dec(spec(0)), spec(1).toInt)
+    val (key, buckets) = (urlDecode(spec(0)), spec(1).toInt)
     spark.sql(s"DROP TABLE IF EXISTS `$catalogName`")
     spark.sql(
       s"""CREATE TABLE `$catalogName` (${m.dataSchema.toDDL})

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ops.{Merge, Resample}
+import graft.ops.Cols.{dec, fdiv, tdiv}
+import org.apache.spark.sql.Column
 import java.sql.Date
 
 /** Property layer (SURVEY §5): invariants that must hold for arbitrary
@@ -335,5 +337,30 @@ class PropertySpec extends SparkSpec {
       for (y <- 0 until oh; x <- 0 until ow)
         assert(r.pixels(y * ow + x) == px((y * h / oh) * w + (x * w / ow)))
     }
+  }
+
+  test("property: Cols.fdiv is Math.floorDiv and Cols.tdiv is Scala /, exactly") {
+    // fdiv needs a positive divisor; tdiv also takes a negative one
+    // random, exact-multiple and near-zero numerators of either sign
+    def pairs(aMax: Long, bMax: Long): Gen[(Long, Long)] = for {
+      b <- Gen.oneOf(Gen.choose(1L, bMax), Gen.choose(1L, 7L))
+      a <- Gen.oneOf(Gen.choose(-aMax, aMax),
+        Gen.choose(-aMax / b, aMax / b).map(_ * b),
+        Gen.choose(-2L * b, 2L * b))
+    } yield (a, b)
+    def check(ps: Seq[(Long, Long)], lift: Column => Column): Unit = {
+      val got = ps.toDF("a", "b")
+        .select($"a", $"b", fdiv(lift($"a"), lift($"b")),
+          tdiv(lift($"a"), lift($"b")), tdiv(lift($"a"), lift(-$"b")))
+        .as[(Long, Long, Long, Long, Long)].collect()
+      assert(got.length == ps.length)
+      val bad = got.filter { case (a, b, f, t, tn) =>
+        f != Math.floorDiv(a, b) || t != a / b || tn != a / -b }
+      assert(bad.isEmpty, bad.take(5).mkString(", "))
+    }
+    // long operands: the division runs in double, exact below 2^53
+    check(samples(pairs((1L << 53) - (1L << 20), 1L << 20), 2000), c => c)
+    // dec operands: exact far past 2^53
+    check(samples(pairs(1L << 62, 1L << 40), 2000), dec)
   }
 }

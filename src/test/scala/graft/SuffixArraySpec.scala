@@ -425,4 +425,18 @@ class SuffixArraySpec extends SparkSpec {
       b.unpersistAll()
     }
   }
+
+  test("unresolvedOf: an observation that never fires falls back and parks no thread") {
+    import scala.jdk.CollectionConverters._
+    // never attached to a plan, so its metric row never arrives: the
+    // read waits out the full 30 s deadline, then counts instead
+    val obs = org.apache.spark.sql.Observation()
+    assert(SuffixArray.unresolvedOf(obs, 42L) == 42L)
+    val parked = Thread.getAllStackTraces.asScala.collect {
+      case (t, frames) if frames.exists(f =>
+          f.getClassName == "org.apache.spark.sql.Observation" &&
+            f.getMethodName == "get") => t.getName
+    }
+    assert(parked.isEmpty, s"threads still blocked in Observation.get: $parked")
+  }
 }
