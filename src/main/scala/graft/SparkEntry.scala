@@ -120,16 +120,6 @@ object SparkEntry {
         col("l_orderkey") * 10 + col("l_linenumber")).as("ord"))
   }
 
-  /** Write `batches` as ONE parquet file each under base/in with strictly
-    * increasing modification times, so a file-source stream with
-    * maxFilesPerTrigger=1 replays them as deterministic micro-batches
-    * 0..n-1 (FileStreamSource orders pending files by mtime; the
-    * zero-padded names break any residual tie the same way). Returns the
-    * input directory path. This is how the q322/q324 gate queries make a
-    * streaming pipeline's MULTI-batch incremental semantics
-    * oracle-checkable: the batch split is part of the query definition,
-    * so the SQL oracle can replay batch 0's survivors before batch 1.
-    */
   /** Run-scoped root for the stream/storage gate queries' scratch
     * tables and checkpoints: every gate allocates under ONE directory
     * that a JVM shutdown hook deletes recursively, so repeated
@@ -154,8 +144,19 @@ object SparkEntry {
     java.nio.file.Files.createTempDirectory(gateTmpRoot, tag)
       .toFile.getAbsolutePath
 
-  private[graft] def writeStreamBatches(batches: Seq[DataFrame],
-                                        base: String): String = {
+  /** Write `batches` as ONE parquet file each under base/in with strictly
+    * increasing modification times, and open them as the file-stream
+    * source (maxFilesPerTrigger=1, schema read back from the files) that
+    * replays them as deterministic micro-batches 0..n-1
+    * (FileStreamSource orders pending files by mtime; the zero-padded
+    * names break any residual tie the same way). This is how the
+    * q322/q324 gate queries make a streaming pipeline's MULTI-batch
+    * incremental semantics oracle-checkable: the batch split is part of
+    * the query definition, so the SQL oracle can replay batch 0's
+    * survivors before batch 1.
+    */
+  private[graft] def replayBatches(s: SparkSession, batches: Seq[DataFrame],
+                                   base: String): DataFrame = {
     val in = new java.io.File(base, "in"); in.mkdirs()
     batches.zipWithIndex.foreach { case (b, i) =>
       val tmp = new java.io.File(base, s"b$i")
@@ -170,7 +171,7 @@ object SparkEntry {
         .find(f => f.getName.startsWith("part-") &&
           f.getName.endsWith(".parquet"))
         .getOrElse(sys.error(
-          s"writeStreamBatches: no part-*.parquet under ${tmp.getPath}; " +
+          s"replayBatches: no part-*.parquet under ${tmp.getPath}; " +
             s"found ${tmp.listFiles().map(_.getName).mkString(", ")}"))
       val dst = new java.io.File(in, f"$i%04d.parquet")
       java.nio.file.Files.move(part.toPath, dst.toPath)
@@ -178,7 +179,8 @@ object SparkEntry {
         java.nio.file.attribute.FileTime.fromMillis(1000000L * (i + 1)))
       tmp.listFiles().foreach(_.delete()); tmp.delete()
     }
-    in.getPath
+    s.readStream.schema(s.read.parquet(in.getPath).schema)
+      .option("maxFilesPerTrigger", 1).parquet(in.getPath)
   }
 
   /** Run `body` with spark.sql.shuffle.partitions scoped to `n`,

@@ -236,18 +236,15 @@ private[graft] object EntriesEventsProduct {
         .cast("long").as("mid"))
       val em = ev.crossJoin(broadcast(ext))
       val tmp = gateTempDir("q345")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         em.filter(col("us") <= col("mid"))
           .select(col("userId"), col("ts"), col("value")),
         em.filter(col("us") > col("mid"))
           .select(col("userId"), col("ts"), col("value"))), tmp)
-      val schema = s.read.parquet(in).schema
       val out = graft.streaming.Streams.expiringSessions(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in)
-          .as[graft.streaming.Streams.SessionEvent](
-            org.apache.spark.sql.Encoders.product[
-              graft.streaming.Streams.SessionEvent]),
+        in.as[graft.streaming.Streams.SessionEvent](
+          org.apache.spark.sql.Encoders.product[
+            graft.streaming.Streams.SessionEvent]),
         watermark = "0 seconds", gapMs = 1800000L)
       withShufflePartitions(s, 8) {
         graft.streaming.Streams.runAvailableNow(out.toDF(),

@@ -247,8 +247,10 @@ private[graft] object EntriesExactSub {
         val c = SuffixArray.corpus(train, col("doc_id"), col("text"))
         val b = SuffixArray.buildTo(c, 8L)
         SuffixArray.persistProbeIndex(c, b, idx, 8L)
-        val m = SuffixArray.decontaminateIncrement(s, idx, inc, 8L)
+        val index = SuffixArray.loadProbeIndex(s, idx, 8L)
+        val m = SuffixArray.decontaminateIncrement(index, inc)
           .localCheckpoint(true)
+        index.unpersistAll()
         val nTok = inc.select(col("doc_id"),
           Text.tokenCount(col("text")).cast("long").as("n_tokens"))
         m.groupBy(col("doc_id"))

@@ -58,14 +58,11 @@ private[graft] object EntriesStreaming {
     "q322_lsh_dedup_stream" -> ((s, dir) => {
       val dd = docsDup(s, dir)
       val tmp = gateTempDir("q322")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         dd.filter(col("doc_id") % 2 === 0),
         dd.filter(col("doc_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.lshDedupStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        graft.streaming.Streams.lshDedupStream(in,
           tmp + "/t", tmp + "/idx", tmp + "/ck", threshold = 0.5,
           bands = 4, rowsPerBand = 4)
       }
@@ -91,12 +88,9 @@ private[graft] object EntriesStreaming {
         concat(col("name").substr(lit(1), k),
           col("name").substr(k + 2, len)).as("name"))
       val tmp = gateTempDir("q324")
-      val in = writeStreamBatches(Seq(base, variants), tmp)
-      val schema = s.read.parquet(in).schema
+      val in = replayBatches(s, Seq(base, variants), tmp)
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.erStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        graft.streaming.Streams.erStream(in,
           tmp + "/t", tmp + "/ck", maxDist = 1)
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
@@ -137,13 +131,10 @@ private[graft] object EntriesStreaming {
         .unionByName(pick(col("us") <= col("t1") &&
           col("event_id") % 13 === 0))
       val tmp = gateTempDir("q326")
-      val in = writeStreamBatches(Seq(b0, b1, b2), tmp)
-      val schema = s.read.parquet(in).schema
+      val in = replayBatches(s, Seq(b0, b1, b2), tmp)
       withShufflePartitions(s, 8) {
         graft.streaming.Streams.runAvailableNow(
-          graft.streaming.Streams.hourlyRollup(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-              .parquet(in), watermark = "72 hours"),
+          graft.streaming.Streams.hourlyRollup(in, watermark = "72 hours"),
           tmp + "/out", tmp + "/ck")
       }
       s.read.parquet(tmp + "/out")
@@ -157,14 +148,11 @@ private[graft] object EntriesStreaming {
     "q328_url_dedup_stream" -> ((s, dir) => {
       val du = docUrls(s, dir).select(col("doc_id"), col("url"))
       val tmp = gateTempDir("q328")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         du.filter(col("doc_id") % 2 === 0),
         du.filter(col("doc_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.urlDedupStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tmp + "/t", tmp + "/ck")
+        graft.streaming.Streams.urlDedupStream(in, tmp + "/t", tmp + "/ck")
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
         .groupBy(col("ingest_batch"))
@@ -182,14 +170,11 @@ private[graft] object EntriesStreaming {
       val ev = t(s, dir, "events")
         .select(col("event_type"), col("user_id"), col("event_id"))
       val tmp = gateTempDir("q329")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.sketchStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tmp + "/reg", tmp + "/ck",
+        graft.streaming.Streams.sketchStream(in, tmp + "/reg", tmp + "/ck",
           Seq("event_type"), col("user_id"))
       }
       Sketch.hllEstimate(s.read.parquet(tmp + "/reg"),
@@ -208,14 +193,12 @@ private[graft] object EntriesStreaming {
       // ~1/9 the pair-join cost
       val dd = docsDup(s, dir).filter((col("doc_id") % 1000000000) % 3 === 0)
       val tmp = gateTempDir("q330")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         dd.filter(col("doc_id") % 2 === 0),
         dd.filter(col("doc_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.dedupStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tmp + "/t", tmp + "/ck", threshold = 0.5)
+        graft.streaming.Streams.dedupStream(in,
+          tmp + "/t", tmp + "/ck", threshold = 0.5)
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
         .groupBy(col("ingest_batch"))
@@ -236,14 +219,12 @@ private[graft] object EntriesStreaming {
         .select(col("id").as("doc_id"),
           transform(col("vec"), _.cast("float")).as("vec"))
       val tmp = gateTempDir("q331")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         vecs.filter(col("doc_id") % 2 === 0),
         vecs.filter(col("doc_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.annDedupStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tmp + "/t", tmp + "/model", tmp + "/ck",
+        graft.streaming.Streams.annDedupStream(in,
+          tmp + "/t", tmp + "/model", tmp + "/ck",
           threshold = 0.9, centroidsK = 16)
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
@@ -264,14 +245,12 @@ private[graft] object EntriesStreaming {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val bench = docs.filter(col("doc_id") % 10 === 0)
       val tmp = gateTempDir("q338")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.hygieneStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), bench, tmp + "/acc", tmp + "/rej", tmp + "/ck",
+        graft.streaming.Streams.hygieneStream(in,
+          bench, tmp + "/acc", tmp + "/rej", tmp + "/ck",
           minQuality = 0.35)
       }
       s.read.parquet(tmp + "/rej")
@@ -294,14 +273,11 @@ private[graft] object EntriesStreaming {
         .groupBy(floor(col("v") / 500.0).cast("long").as("bin"))
         .agg(count(lit(1)).as("n_r"))
       val tmp = gateTempDir("q339")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         ev.filter(col("event_id") % 4 === 1).select(col("v")),
         ev.filter(col("event_id") % 4 === 3).select(col("v"))), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.driftStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), col("v"), 500.0, ref,
+        graft.streaming.Streams.driftStream(in, col("v"), 500.0, ref,
           tmp + "/reg", tmp + "/alarms", tmp + "/ck")
       }
       s.read.parquet(tmp + "/alarms")
@@ -322,12 +298,9 @@ private[graft] object EntriesStreaming {
       val b1 = uniq.filter(col("symbol") % 3 === 0)
         .withColumn("px", col("px") * 2).withColumn("version", lit(1L))
       val tmp = gateTempDir("q340")
-      val in = writeStreamBatches(Seq(b0, b1), tmp)
-      val schema = s.read.parquet(in).schema
+      val in = replayBatches(s, Seq(b0, b1), tmp)
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.mergeStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tmp + "/t", tmp + "/ck",
+        graft.streaming.Streams.mergeStream(in, tmp + "/t", tmp + "/ck",
           Seq("symbol", "d"), "version", "m")
       }
       s.read.parquet(tmp + "/t").groupBy(col("symbol"))
@@ -352,29 +325,20 @@ private[graft] object EntriesStreaming {
         .cast("long").as("mid"))
       val bm = b.crossJoin(broadcast(ext))
       val tmp = gateTempDir("q344")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         bm.filter(col("dd") <= col("mid"))
           .select(col("symbol"), col("date"), col("close")),
         bm.filter(col("dd") > col("mid"))
           .select(col("symbol"), col("date"), col("close"))), tmp)
-      val schema = s.read.parquet(in).schema
       val states = graft.streaming.Streams.symbolRunningState(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in)
-          .as[graft.streaming.Streams.BarEvent](
-            org.apache.spark.sql.Encoders.product[
-              graft.streaming.Streams.BarEvent]))
+        in.as[graft.streaming.Streams.BarEvent](
+          org.apache.spark.sql.Encoders.product[
+            graft.streaming.Streams.BarEvent]))
       withShufflePartitions(s, 8) {
-        val q = states.toDF().writeStream
-          .outputMode(OutputMode.Update)
-          .option("checkpointLocation", tmp + "/ck")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) =>
-              batch.write.mode("append").parquet(tmp + "/out")
-          }.start()
-        q.awaitTermination()
+        graft.streaming.Streams.drain(states.toDF(), tmp + "/ck",
+            OutputMode.Update) { (batch, _) =>
+          batch.write.mode("append").parquet(tmp + "/out")
+        }
       }
       s.read.parquet(tmp + "/out")
         .groupBy(col("symbol").cast("long").as("symbol"))
@@ -397,21 +361,17 @@ private[graft] object EntriesStreaming {
         .cast("long").as("mid"))
       val em = e.crossJoin(broadcast(ext))
       val tmp = gateTempDir("q346")
-      val inL = writeStreamBatches(Seq(
+      val l = replayBatches(s, Seq(
         em.filter(col("us") <= col("mid"))
           .select(col("user_id"), col("ts").as("lts")),
         em.filter(col("us") > col("mid"))
           .select(col("user_id"), col("ts").as("lts"))), tmp + "/L")
-      val inR = writeStreamBatches(Seq(
+      val r = replayBatches(s, Seq(
         em.filter(col("us") <= col("mid"))
           .select(col("user_id"), col("ts").as("rts"), col("value")),
         em.filter(col("us") > col("mid"))
           .select(col("user_id"), col("ts").as("rts"), col("value"))),
         tmp + "/R")
-      val l = s.readStream.schema(s.read.parquet(inL).schema)
-        .option("maxFilesPerTrigger", 1).parquet(inL)
-      val r = s.readStream.schema(s.read.parquet(inR).schema)
-        .option("maxFilesPerTrigger", 1).parquet(inR)
       val joined = graft.streaming.Streams.intervalJoin(l, r, "user_id",
           "lts", "rts", watermark = "0 seconds", within = "10 minutes")
         .filter(col("rts") < col("lts"))
@@ -438,15 +398,13 @@ private[graft] object EntriesStreaming {
         .cast("long").as("mid"))
       val em = e.crossJoin(broadcast(ext))
       val tmp = gateTempDir("q347")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         em.filter(col("us") <= col("mid"))
           .select(col("user_id"), col("ts"), col("value")),
         em.filter(col("us") > col("mid"))
           .select(col("user_id"), col("ts"), col("value"))), tmp)
-      val schema = s.read.parquet(in).schema
-      val sess = graft.streaming.Streams.sessionRollup(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in), "user_id", "30 minutes",
+      val sess = graft.streaming.Streams.sessionRollup(in,
+        "user_id", "30 minutes",
         watermark = Some("0 seconds"))
       withShufflePartitions(s, 8) {
         graft.streaming.Streams.runAvailableNow(sess,
@@ -474,15 +432,13 @@ private[graft] object EntriesStreaming {
       val pick = (c: Column) => em.filter(c)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       val tmp = gateTempDir("q348")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         pick(col("us") <= col("mid")),
         pick(col("us") > col("mid"))
           .unionByName(pick(col("us") <= col("mid") &&
             col("event_id") % 13 === 0))), tmp)
-      val schema = s.read.parquet(in).schema
-      val deduped = graft.streaming.Streams.dedupByKey(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in), "ts", "0 seconds", Seq("event_id"))
+      val deduped = graft.streaming.Streams.dedupByKey(in,
+        "ts", "0 seconds", Seq("event_id"))
       withShufflePartitions(s, 8) {
         graft.streaming.Streams.runAvailableNow(deduped,
           tmp + "/out", tmp + "/ck")
@@ -514,15 +470,13 @@ private[graft] object EntriesStreaming {
             when(i === 0, (x.cast("double") + 0.5).cast("float"))
               .otherwise(x)).as("vec"))
       val tmp = gateTempDir("q353")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         vecs.filter(col("doc_id") < 8),
         vecs.filter(col("doc_id") >= 8 && col("doc_id") < 200),
         vecs.filter(col("doc_id") >= 200).unionByName(twins)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.annDedupStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tmp + "/t", tmp + "/model", tmp + "/ck",
+        graft.streaming.Streams.annDedupStream(in,
+          tmp + "/t", tmp + "/model", tmp + "/ck",
           threshold = 0.9, refreshFactor = 2.0)
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
@@ -548,15 +502,12 @@ private[graft] object EntriesStreaming {
       val bad = col("doc_id") % 10 === 1
       val tmp = gateTempDir("q370")
       val tbl = tmp + "/t"
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         docs.filter(col("doc_id") % 3 === 0 && !bad),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2 && !bad)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.wapStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), tbl, tmp + "/ck", bad)
+        graft.streaming.Streams.wapStream(in, tbl, tmp + "/ck", bad)
       }
       Snapshot.read(s, tbl)
         .agg(count(lit(1)).as("published_rows"),
@@ -574,16 +525,13 @@ private[graft] object EntriesStreaming {
       import graft.streaming.Streams
       val duels = duelFixture(s, dir)
       val tmp = gateTempDir("q419")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         duels.filter(col("event_id") % 2 === 0)
           .select(col("winner"), col("loser")),
         duels.filter(col("event_id") % 2 === 1)
           .select(col("winner"), col("loser"))), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        Streams.preferenceStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        Streams.preferenceStream(in,
           col("winner"), col("loser"), tmp + "/matrix", tmp + "/ck")
       }
       Streams.streamedRatings(s, tmp + "/matrix", 3)
@@ -607,14 +555,11 @@ private[graft] object EntriesStreaming {
         (lit(1000L) + h("dp", 9000L)).as("e"),
         h("dd", 1000L).as("d"))
       val tmp = gateTempDir("q510")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         ledger.filter(col("event_id") % 2 === 0),
         ledger.filter(col("event_id") % 2 === 1)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        Streams.dpLedgerStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        Streams.dpLedgerStream(in,
           col("an"), col("pt"), col("e"), col("d"),
           tmp + "/ledger", tmp + "/ck")
       }
@@ -637,15 +582,12 @@ private[graft] object EntriesStreaming {
       val cal = scored.filter(col("doc_id") % 2 === 0)
         .select(col("grp"), col("doc_id"), col("score"))
       val tmp = gateTempDir("q496")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         cal.filter(col("doc_id") % 6 === 0),
         cal.filter(col("doc_id") % 6 === 2),
         cal.filter(col("doc_id") % 6 === 4)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        Streams.conformalStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        Streams.conformalStream(in,
           col("grp"), col("score"), tmp + "/cal", tmp + "/ck")
       }
       Streams.streamedConformal(s, tmp + "/cal",
@@ -666,14 +608,11 @@ private[graft] object EntriesStreaming {
       val tbl = tmp + "/t"
       Snapshot.commit(docs, tbl)
       val reqs = docs.filter(erased).select(col("doc_id"))
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         reqs.filter(col("doc_id") % 26 === 0),
         reqs.filter(col("doc_id") % 26 =!= 0)), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        Streams.erasureStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        Streams.erasureStream(in,
           tbl, "doc_id", tmp + "/ck")
       }
       val rows = Snapshot.read(s, tbl).count()
@@ -697,16 +636,13 @@ private[graft] object EntriesStreaming {
       val model = Sampling.dsirModel(docs, col("doc_id"), col("text"),
         col("lang") === "en", 4096)
       val tmp = gateTempDir("q408")
-      val in = writeStreamBatches(Seq(
+      val in = replayBatches(s, Seq(
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"), col("text")),
         docs.filter(col("doc_id") % 2 === 1)
           .select(col("doc_id"), col("text"))), tmp)
-      val schema = s.read.parquet(in).schema
       withShufflePartitions(s, 8) {
-        graft.streaming.Streams.dsirStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in),
+        graft.streaming.Streams.dsirStream(in,
           model, 4096, tmp + "/keep", tmp + "/drop", tmp + "/ck", 0L)
       }
       def side(path: String, name: String) =
@@ -738,11 +674,9 @@ private[graft] object EntriesStreaming {
         val c = SuffixArray.corpus(train, col("doc_id"), col("text"))
         val b = SuffixArray.buildTo(c, 8L)
         SuffixArray.persistProbeIndex(c, b, idx, 8L)
-        val in = writeStreamBatches(Seq(inc(0), inc(1)), tmp)
-        val schema = s.read.parquet(in).schema
-        graft.streaming.Streams.decontaminationStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), idx, tmp + "/t", tmp + "/ck", 8L)
+        val in = replayBatches(s, Seq(inc(0), inc(1)), tmp)
+        graft.streaming.Streams.decontaminationStream(in,
+          idx, tmp + "/t", tmp + "/ck", 8L)
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
         .select(col("doc_id"), col("n_tokens"),
@@ -771,11 +705,9 @@ private[graft] object EntriesStreaming {
         val c = SuffixArray.corpus(train, col("doc_id"), col("text"))
         val b = SuffixArray.buildTo(c, 8L)
         SuffixArray.persistProbeIndex(c, b, idx, 8L)
-        val in = writeStreamBatches(Seq(inc(0), inc(1)), tmp)
-        val schema = s.read.parquet(in).schema
-        graft.streaming.Streams.excisionStream(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(in), idx, tmp + "/t", tmp + "/ck", 8L)
+        val in = replayBatches(s, Seq(inc(0), inc(1)), tmp)
+        graft.streaming.Streams.excisionStream(in,
+          idx, tmp + "/t", tmp + "/ck", 8L)
       }
       graft.sources.Snapshot.read(s, tmp + "/t")
         .select(col("doc_id"), col("n_tokens"), col("n_removed"),

@@ -928,8 +928,10 @@ object Dedup {
     * pairs-sized) edge list against the label table plus a hash
     * aggregate — the standard large-graph CC recipe (label propagation
     * converges in O(diameter) rounds; near-dup clusters are shallow).
-    * Labels persist per round and unpersist as soon as the next round
-    * materializes; convergence is detected by a changed-label count.
+    * Labels are local checkpoints, one per round; each is released
+    * ([[Frames.release]]) once the next round has materialized, so only
+    * the returned labels' blocks outlive the call. Convergence is
+    * detected by a changed-label count.
     * Deterministic: the component id is the cluster's minimum member id.
     *
     * Input `pairs`: (id_a, id_b). Output: (id, component) for every id
@@ -984,7 +986,7 @@ object Dedup {
         least(col("src"), col("nmin")).as("component"))
       .localCheckpoint(true)
     // labels is a projection of the checkpointed frame from round 2 on;
-    // unpersist must target the frame that owns the materialized blocks
+    // release must target the frame that owns the materialized blocks
     var owned = labels
     var iter = 0
     var converged = false
@@ -1032,7 +1034,7 @@ object Dedup {
       // one adopt-count round and exits.
       val nChanged = adopted.filter(col("component") =!= col("__prev")).count()
       if (nChanged == 0L) {
-        owned.unpersist()
+        Frames.release(owned)
         owned = adopted
         labels = adopted.select(col("id"), col("component"))
         converged = true
@@ -1063,8 +1065,8 @@ object Dedup {
           .select(col("a.id"),
             coalesce(col("b.component"), col("a.component")).as("component"))
           .localCheckpoint(true)
-        owned.unpersist()
-        adopted.unpersist()
+        Frames.release(owned)
+        Frames.release(adopted)
         owned = next
         labels = next
       }

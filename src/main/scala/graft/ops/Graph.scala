@@ -14,8 +14,9 @@ import graft.ops.Cols.{dec, fdiv}
   *
   * Lineage control: every [[ckptEvery]] rounds (and at the final
   * round) the working frame localCheckpoints (EAGER) and the previous
-  * checkpoint unpersists — the measured [[Dedup.duplicateClusters]]
-  * pattern (plan nesting there went 1.7 s → 25 s/round by iteration 5
+  * checkpoint is released ([[Frames.release]]) — the measured
+  * [[Dedup.duplicateClusters]] pattern (plan nesting there went
+  * 1.7 s → 25 s/round by iteration 5
   * without it). Loops at or under the cadence (the pinned 2–3
   * iteration audit runs) keep their single-plan shape and pay zero
   * checkpoint overhead; only longer runs persist the loop-invariant
@@ -42,7 +43,7 @@ object Graph {
   private def truncate(df: DataFrame,
                        owned: Option[DataFrame]): (DataFrame, Option[DataFrame]) = {
     val c = df.localCheckpoint(true)
-    owned.foreach(_.unpersist())
+    owned.foreach(Frames.release)
     (c, Some(c))
   }
 
@@ -317,13 +318,18 @@ object Graph {
       // dead, so its truncation there would be one wasted
       // materialization job — best's own checkpoint still bounds the
       // returned lineage
-      if (big && (r % ckptEvery == 0 || r == rounds) && r < rounds) {
-        val (cf, of) = truncate(frontier, ownedF); frontier = cf; ownedF = of
+      val cadence = big && (r % ckptEvery == 0 || r == rounds)
+      val staleF = ownedF
+      if (cadence && r < rounds) {
+        val (cf, of) = truncate(frontier, None); frontier = cf; ownedF = of
       }
       best = best.unionByName(frontier)
         .groupBy(col("id")).agg(min(col("arrival")).as("arrival"))
-      if (big && (r % ckptEvery == 0 || r == rounds)) {
+      if (cadence) {
         val (cb, ob) = truncate(best, ownedB); best = cb; ownedB = ob
+        // best's uncheckpointed rounds read the previous frontier
+        // checkpoint until best's own checkpoint above has run
+        staleF.foreach(Frames.release)
       }
     }
     if (big) e.unpersist(): Unit

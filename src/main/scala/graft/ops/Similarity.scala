@@ -400,15 +400,11 @@ object Similarity {
     * as (new, old) regardless of id order. Id spaces must be disjoint.
     *
     * Both packed sides persist internally (each is read by Bn·Ba
-    * block-pair tasks); `registerCache` receives them so a long-lived
-    * caller (a streaming loop) can unpersist once the result is
-    * consumed — the jaccardPairsIncremental contract.
+    * block-pair tasks).
     */
   def cosineNearDupPairsIncremental(oldVecs: DataFrame, newVecs: DataFrame,
                                     threshold: Double,
-                                    blocks: Int = 16,
-                                    registerCache: DataFrame => Unit = _ => ())
-      : DataFrame = {
+                                    blocks: Int = 16): DataFrame = {
     val spark = oldVecs.sparkSession
     import spark.implicits._
     val margin = threshold - 1e-7
@@ -434,9 +430,7 @@ object Similarity {
     // both packed sides are read by every opposing block: persist
     // (divergent consumers across Bn·Ba tasks, the q28-index rationale)
     val np = packBlocks(newVecs, blocks).persist()
-    registerCache(np)
     val ap = flagged.persist()
-    registerCache(ap)
     val pairs = np.as("x").crossJoin(ap.as("y"))
       .select(col("x.ids").as("xids"), col("x.vs").as("xvs"),
         col("x.ns").as("xns"), col("y.ids").as("yids"),

@@ -74,7 +74,7 @@ object SuffixArray {
     */
   final case class Built(sa: DataFrame, tables: Seq[(Long, DataFrame)],
                          owned: Seq[DataFrame]) {
-    def unpersistAll(): Unit = owned.foreach(_.unpersist())
+    def unpersistAll(): Unit = owned.foreach(Frames.release)
   }
 
   /** Tokenize + lay out the global sequence. `docs` must carry one row
@@ -679,19 +679,12 @@ object SuffixArray {
     * positions whose g-window occurs somewhere in train, with the
     * train rank identifying WHICH window. Cost is increment-sized:
     * the big sides are the persisted faces, clustered on the join key.
-    */
-  def probeGramRanks(index: ProbeIndex, docs: DataFrame,
-                     idCol: Column, textCol: Column): DataFrame =
-    probeGramRanks(index, docs, idCol, textCol,
-      materializeLevels = false)
-
-  /** As above; `materializeLevels` checkpoints each descent level (see
-    * the loop comment). No default — the dir-based overload already
-    * carries one and Scala forbids defaults on both.
+    * `materializeLevels` checkpoints each descent level (see the loop
+    * comment).
     */
   def probeGramRanks(index: ProbeIndex, docs: DataFrame,
                      idCol: Column, textCol: Column,
-                     materializeLevels: Boolean): DataFrame = {
+                     materializeLevels: Boolean = false): DataFrame = {
     var cur = docs
       .select(idCol.cast("long").as("doc_id"),
         posexplode(Text.tokens(textCol)).as(Seq("pos", "token")))
@@ -720,16 +713,6 @@ object SuffixArray {
     cur
   }
 
-  /** Dir-based convenience: load the faces, probe once. Repeated
-    * consumers should [[loadProbeIndex]] themselves and reuse it.
-    */
-  def probeGramRanks(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String, docs: DataFrame,
-                     idCol: Column, textCol: Column,
-                     g: Long = 8L): DataFrame =
-    probeGramRanks(loadProbeIndex(spark, indexDir, g), docs, idCol,
-      textCol)
-
   /** The train documents an increment could share a g-token span with:
     * distinct docs holding any g-window the probe matched. Any train
     * match of length ≥ g tiles into aligned g-grams inside ONE train
@@ -741,13 +724,6 @@ object SuffixArray {
     index.occ
       .join(gramRanks.select(col("rank")).distinct(), Seq("rank"))
       .select(col("doc_id")).distinct()
-
-  /** Dir-based convenience (see [[probeGramRanks]]). */
-  def probeCandidateDocs(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String,
-                         gramRanks: DataFrame): DataFrame =
-    probeCandidateDocs(
-      loadProbeIndex(spark, indexDir), gramRanks)
 
   /** INCREMENTAL exact-span decontamination: score a NEW eval batch
     * against an existing train corpus WITHOUT rebuilding any suffix
@@ -810,10 +786,4 @@ object SuffixArray {
       .join(runs, Seq("doc_id", "pos"), "left")
       .select(col("doc_id"), col("pos"), col("m").as("train_match"))
   }
-
-  /** Dir-based convenience (see [[probeGramRanks]]): load, probe once. */
-  def decontaminateIncrement(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String, evalDocs: DataFrame,
-                             g: Long): DataFrame =
-    decontaminateIncrement(loadProbeIndex(spark, indexDir, g), evalDocs)
 }

@@ -1172,10 +1172,9 @@ object Text {
     */
   def fuzzyJoinSegments(probes: DataFrame, refs: DataFrame, probeId: String,
                         probeName: Column, refId: String, refName: Column,
-                        maxDist: Int, maxBlockPairs: Long = 0L,
-                        registerCache: DataFrame => Unit = _ => ()): DataFrame = {
+                        maxDist: Int, maxBlockPairs: Long = 0L): DataFrame = {
     val (strPairs, pAll, rAll) = segmentStringMatches(probes, refs, probeId,
-      probeName, refId, refName, maxDist, maxBlockPairs, registerCache)
+      probeName, refId, refName, maxDist, maxBlockPairs)
     // multiplicity expansion: every (probe copy, ref copy) of a matched
     // string pair is an output pair
     strPairs
@@ -1204,10 +1203,9 @@ object Text {
     */
   def fuzzyResolveBest(probes: DataFrame, refs: DataFrame, probeId: String,
                        probeName: Column, refId: String, refName: Column,
-                       maxDist: Int, maxBlockPairs: Long = 0L,
-                       registerCache: DataFrame => Unit = _ => ()): DataFrame = {
+                       maxDist: Int, maxBlockPairs: Long = 0L): DataFrame = {
     val (strPairs, pAll, rAll) = segmentStringMatches(probes, refs, probeId,
-      probeName, refId, refName, maxDist, maxBlockPairs, registerCache)
+      probeName, refId, refName, maxDist, maxBlockPairs)
     val rByName = rAll.groupBy(col("rn"))
       .agg(min(col("ref_id")).as("r_min"), count(lit(1)).as("n_copies"))
     val bestByString = strPairs.join(rByName, Seq("rn"))
@@ -1228,8 +1226,7 @@ object Text {
   private def segmentStringMatches(probes: DataFrame, refs: DataFrame,
                                    probeId: String, probeName: Column,
                                    refId: String, refName: Column,
-                                   maxDist: Int, maxBlockPairs: Long,
-                                   registerCache: DataFrame => Unit)
+                                   maxDist: Int, maxBlockPairs: Long)
       : (DataFrame, DataFrame, DataFrame) = {
     require(maxDist >= 1, "segment blocking needs maxDist >= 1 (use an " +
       "equality join for exact matching)")
@@ -1305,12 +1302,11 @@ object Text {
     // part of either pass) — so when the guard runs, persist both
     // sides: the guard's histogram materializes them once and the
     // main join reads the cache (cross-action reuse, where persist
-    // earns its cost — lesson 23's exception). registerCache lets a
-    // long-lived caller (the streaming ER loop) release them; batch
-    // harnesses clear the cache between queries.
+    // earns its cost — lesson 23's exception). Batch harnesses clear
+    // the cache between queries.
     val salts = if (maxBlockPairs > 0L) {
-      pLong.persist(); registerCache(pLong)
-      rLong.persist(); registerCache(rLong)
+      pLong.persist()
+      rLong.persist()
       resolveBlockSalts(pLong, rLong, maxBlockPairs,
         Seq("bc", "seg", "blen"))
     } else None
@@ -1383,13 +1379,11 @@ object Text {
     */
   def fuzzyJoinIncrementalSegments(oldRefs: DataFrame, batch: DataFrame,
                                    id: String, name: Column, maxDist: Int,
-                                   maxBlockPairs: Long = 0L,
-                                   registerCache: DataFrame => Unit = _ => ())
-      : DataFrame = {
+                                   maxBlockPairs: Long = 0L): DataFrame = {
     val vsOld = fuzzyJoinSegments(batch, oldRefs, id, name, id, name,
-      maxDist, maxBlockPairs, registerCache)
+      maxDist, maxBlockPairs)
     val vsNew = fuzzyJoinSegments(batch, batch, id, name, id, name,
-      maxDist, maxBlockPairs, registerCache)
+      maxDist, maxBlockPairs)
       .filter(col("ref_id") < col("probe_id"))
     vsOld.unionByName(vsNew)
   }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.ops.Frames
 
 /** Structured Streaming surface of the engine. The reference is a daily
   * batch cron whose only incremental semantics are (a) the freshness gate
@@ -16,8 +18,47 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale posture: state stores are keyed by (date,symbol)-grade keys
   * (high cardinality, well distributed); watermarks bound state size;
   * aggregations are partial-agg friendly (count/sum/min/max only).
+  *
+  * Every micro-batch pipeline runs through [[drain]], which releases
+  * each frame a batch persisted or checkpointed (handed to `hold`) when
+  * that batch ends, also when the batch throws; frames pinned for the
+  * whole run are released in a `finally` around the `drain` call.
   */
 object Streams {
+
+  /** The frames the running [[drain]] batch holds. */
+  private val batchFrames =
+    new scala.util.DynamicVariable[ArrayBuffer[DataFrame]](null)
+
+  /** Hand a persisted or checkpointed frame to the running [[drain]]
+    * batch, which releases it when the batch ends. Returns `df`.
+    */
+  private def hold(df: DataFrame): DataFrame = {
+    batchFrames.value += df
+    df
+  }
+
+  /** The one AvailableNow loop: runs `body` once per micro-batch over
+    * everything pending in `in` (progress checkpointed at `checkpoint`),
+    * then stops. Frames the batch handed to [[hold]] are released with
+    * [[graft.ops.Frames.release]] as the batch ends, whether `body`
+    * returns or throws; a throw then fails the stream, and
+    * `awaitTermination` rethrows it to the caller.
+    */
+  def drain(in: DataFrame, checkpoint: String,
+            mode: OutputMode = OutputMode.Append)(
+      body: (DataFrame, Long) => Unit): Unit =
+    in.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val held = ArrayBuffer.empty[DataFrame]
+        try batchFrames.withValue(held)(body(batch, batchId))
+        finally held.foreach(Frames.release)
+      }
+      .start()
+      .awaitTermination()
 
   /** Exactly-once ingest dedup: keep the first arrival per key inside
     * the watermark horizon — the streaming face of the K1 upsert. Late
@@ -153,18 +194,11 @@ object Streams {
     */
   def mergeStream(in: DataFrame, tablePath: String, checkpoint: String,
                   keys: Seq[String], versionCol: String,
-                  partitionCol: String): Unit = {
-    val q = in.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Merge.upsertIntoPath(batch.toDF(), tablePath, keys,
-          versionCol, partitionCol)
-      }
-      .start()
-    q.awaitTermination()
-  }
+                  partitionCol: String): Unit =
+    drain(in, checkpoint, OutputMode.Update) { (batch, _) =>
+      graft.ops.Merge.upsertIntoPath(batch, tablePath, keys,
+        versionCol, partitionCol)
+    }
 
   /** mergeStream's transactional sibling: each micro-batch lands as an
     * ATOMIC snapshot commit (Snapshot.merge) — a crash mid-batch leaves
@@ -184,19 +218,12 @@ object Streams {
     */
   def snapshotMergeStream(in: DataFrame, table: String, checkpoint: String,
                           keys: Seq[String], versionCol: String,
-                          partitionCol: String): Unit = {
-    val q = in.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.Snapshot.merge(batch.toDF(), table, keys,
-            versionCol, partitionCol): Unit
-      }
-      .start()
-    q.awaitTermination()
-  }
+                          partitionCol: String): Unit =
+    drain(in, checkpoint, OutputMode.Update) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.sources.Snapshot.merge(batch, table, keys,
+          versionCol, partitionCol): Unit
+    }
 
   /** Streaming distinct-count sketching: fold each micro-batch's HLL
     * registers into a running register table (per-bucket max). The
@@ -226,34 +253,28 @@ object Streams {
     // restart with no pending files would otherwise never run a batch
     // (so never recover) while readers of registerPath fail meanwhile
     recoverRegisters(registerPath)
-    val q = in.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        recoverRegisters(registerPath)
-        val live = new java.io.File(registerPath)
-        val staged = new java.io.File(registerPath + ".staged")
-        val retired = new java.io.File(registerPath + ".retired")
-        val fresh = graft.ops.Sketch.hllRegisters(batch.toDF(), groups, value, bHex)
-        val merged =
-          if (live.exists())
-            graft.ops.Sketch.hllMerge(
-              spark.read.parquet(registerPath), fresh, groups)
-          else fresh
-        // 1. full write beside the live table (which stays untouched)
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(staged.getPath)
-        // 2. swap: two atomic directory renames
-        if (live.exists() && !live.renameTo(retired))
-          throw new java.io.IOException(s"could not retire $registerPath")
-        if (!staged.renameTo(live))
-          throw new java.io.IOException(s"could not publish $registerPath")
-        deleteRecursively(retired)
-      }
-      .start()
-    q.awaitTermination()
+    drain(in, checkpoint, OutputMode.Update) { (batch, _) =>
+      val spark = batch.sparkSession
+      recoverRegisters(registerPath)
+      val live = new java.io.File(registerPath)
+      val staged = new java.io.File(registerPath + ".staged")
+      val retired = new java.io.File(registerPath + ".retired")
+      val fresh = graft.ops.Sketch.hllRegisters(batch, groups, value, bHex)
+      val merged =
+        if (live.exists())
+          graft.ops.Sketch.hllMerge(
+            spark.read.parquet(registerPath), fresh, groups)
+        else fresh
+      // 1. full write beside the live table (which stays untouched)
+      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(staged.getPath)
+      // 2. swap: two atomic directory renames
+      if (live.exists() && !live.renameTo(retired))
+        throw new java.io.IOException(s"could not retire $registerPath")
+      if (!staged.renameTo(live))
+        throw new java.io.IOException(s"could not publish $registerPath")
+      deleteRecursively(retired)
+    }
   }
 
   /** Repair an interrupted [[sketchStream]] swap (idempotent, cheap):
@@ -319,35 +340,28 @@ object Streams {
   def wapStream(in: DataFrame, table: String, checkpoint: String,
                 badPred: org.apache.spark.sql.Column): Unit = {
     import graft.sources.Snapshot
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val b = batch.toDF()
-          val name = f"wap-$bid%06d"
-          // replay short-circuit: a version already published from
-          // this batch's wap id means the crash window landed between
-          // publish and the checkpoint commit — skip staging entirely
-          if (Snapshot.publishedWap(table, name).isEmpty) {
-            val candidate = (Snapshot.latestVersion(table) match {
-              case Some(_) => Snapshot.read(spark, table).unionByName(b)
-              case None => b
-            }).dropDuplicates()
-            Snapshot.commitStaged(candidate, table, name)
-            // the audit runs against the STAGED face — exactly what
-            // would publish, never the raw batch frame
-            val bad = Snapshot.readStaged(spark, table, name)
-              .filter(badPred).count()
-            if (bad == 0) { Snapshot.publishIdempotent(table, name); () }
-            else Snapshot.discardStaged(table, name)
-          }
+    drain(in, checkpoint) { (batch, bid) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val name = f"wap-$bid%06d"
+        // replay short-circuit: a version already published from
+        // this batch's wap id means the crash window landed between
+        // publish and the checkpoint commit — skip staging entirely
+        if (Snapshot.publishedWap(table, name).isEmpty) {
+          val candidate = (Snapshot.latestVersion(table) match {
+            case Some(_) => Snapshot.read(spark, table).unionByName(batch)
+            case None => batch
+          }).dropDuplicates()
+          Snapshot.commitStaged(candidate, table, name)
+          // the audit runs against the STAGED face — exactly what
+          // would publish, never the raw batch frame
+          val bad = Snapshot.readStaged(spark, table, name)
+            .filter(badPred).count()
+          if (bad == 0) { Snapshot.publishIdempotent(table, name); () }
+          else Snapshot.discardStaged(table, name)
         }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   def hygieneStream(in: DataFrame, benchDocs: DataFrame,
@@ -362,38 +376,31 @@ object Streams {
     val bench = benchDocs.select(
       Dedup.hashedShingles(Text.tokens(col("text")), 3).as("hs"))
       .persist()
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val scored = batch.toDF()
-            .withColumn("quality", Text.qualityScore(col("text")))
-            .withColumn("repetition", Text.repetitionScore(col("text"), 3))
-            .withColumn("hs", Dedup.hashedShingles(Text.tokens(col("text")), 3))
-          val shared = Dedup.contaminationOverlap(
-            scored.select(col("doc_id").as("id"), col("hs")), "id", "hs",
-            bench, "hs")
-            .select(col("id").as("doc_id"), col("n_shared"))
-          val routed = scored.join(shared, "doc_id")
-            .withColumn("reason",
-              when(col("quality") < minQuality, lit("low_quality"))
-                .when(col("repetition") > maxRepetition, lit("repetitive"))
-                .when(col("n_shared") > maxSharedShingles, lit("contaminated")))
-            .persist()
-          routed.filter(col("reason").isNull)
-            .drop("hs", "reason")
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(acceptPath)
-          routed.filter(col("reason").isNotNull)
-            .select(col("doc_id"), col("reason"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(rejectPath)
-          routed.unpersist(): Unit
-        }
+    try drain(in, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val scored = batch
+          .withColumn("quality", Text.qualityScore(col("text")))
+          .withColumn("repetition", Text.repetitionScore(col("text"), 3))
+          .withColumn("hs", Dedup.hashedShingles(Text.tokens(col("text")), 3))
+        val shared = Dedup.contaminationOverlap(
+          scored.select(col("doc_id").as("id"), col("hs")), "id", "hs",
+          bench, "hs")
+          .select(col("id").as("doc_id"), col("n_shared"))
+        val routed = hold(scored.join(shared, "doc_id")
+          .withColumn("reason",
+            when(col("quality") < minQuality, lit("low_quality"))
+              .when(col("repetition") > maxRepetition, lit("repetitive"))
+              .when(col("n_shared") > maxSharedShingles, lit("contaminated")))
+          .persist())
+        routed.filter(col("reason").isNull)
+          .drop("hs", "reason")
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(acceptPath)
+        routed.filter(col("reason").isNotNull)
+          .select(col("doc_id"), col("reason"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(rejectPath)
       }
-      .start()
-    q.awaitTermination()
-    bench.unpersist(): Unit
+    }
+    finally bench.unpersist(): Unit
   }
 
   /** Streaming DSIR gate — the continuous face of
@@ -412,29 +419,22 @@ object Streams {
                  thresholdMicro: Long): Unit = {
     import graft.ops.Sampling
     val m = model.persist()
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val scored = Sampling.dsirScore(batch.toDF(), col("doc_id"),
-            col("text"), m, buckets)
-            .select(col("id").as("doc_id"), col("n_feats"),
-              col("w_micro"))
-            .persist()
-          scored.filter(col("w_micro") >= thresholdMicro)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(keepPath)
-          scored.filter(col("w_micro") < thresholdMicro)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(dropPath)
-          scored.unpersist(): Unit
-        }
+    try drain(in, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val scored = hold(Sampling.dsirScore(batch, col("doc_id"),
+          col("text"), m, buckets)
+          .select(col("id").as("doc_id"), col("n_feats"),
+            col("w_micro"))
+          .persist())
+        scored.filter(col("w_micro") >= thresholdMicro)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(keepPath)
+        scored.filter(col("w_micro") < thresholdMicro)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(dropPath)
       }
-      .start()
-    q.awaitTermination()
-    m.unpersist(): Unit
+    }
+    finally m.unpersist(): Unit
   }
 
   /** Streaming PREFERENCE-DUEL ingestion — the RLHF data tier's
@@ -453,20 +453,13 @@ object Streams {
     */
   def preferenceStream(in: DataFrame, winner: org.apache.spark.sql.Column,
                        loser: org.apache.spark.sql.Column,
-                       matrixPath: String, checkpoint: String): Unit = {
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.Preference.duelMatrix(batch.toDF(), winner, loser)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$matrixPath/batch=$bid")
-      }
-      .start()
-    q.awaitTermination()
-  }
+                       matrixPath: String, checkpoint: String): Unit =
+    drain(in, checkpoint) { (batch, bid) =>
+      if (!batch.isEmpty)
+        graft.ops.Preference.duelMatrix(batch, winner, loser)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$matrixPath/batch=$bid")
+    }
 
   /** Streaming CONFORMAL calibration ingestion (15th pipeline) — the
     * continuous face of [[graft.ops.Quality.conformalCalibration]]:
@@ -482,22 +475,15 @@ object Streams {
     */
   def conformalStream(in: DataFrame, grp: org.apache.spark.sql.Column,
                       score: org.apache.spark.sql.Column,
-                      calPath: String, checkpoint: String): Unit = {
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .groupBy(grp.as("grp"), score.cast("long").as("score"))
-            .agg(count(lit(1)).as("c"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$calPath/batch=$bid")
-      }
-      .start()
-    q.awaitTermination()
-  }
+                      calPath: String, checkpoint: String): Unit =
+    drain(in, checkpoint) { (batch, bid) =>
+      if (!batch.isEmpty)
+        batch
+          .groupBy(grp.as("grp"), score.cast("long").as("score"))
+          .agg(count(lit(1)).as("c"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$calPath/batch=$bid")
+    }
 
   /** Read back [[conformalStream]]'s accumulated histogram and audit
     * coverage against a static holdout — the running-count threshold
@@ -523,24 +509,17 @@ object Streams {
                      partition: org.apache.spark.sql.Column,
                      epsMicro: org.apache.spark.sql.Column,
                      deltaNano: org.apache.spark.sql.Column,
-                     ledgerPath: String, checkpoint: String): Unit = {
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .groupBy(analyst.as("analyst"), partition.as("part"))
-            .agg(count(lit(1)).as("nq"),
-              sum(epsMicro.cast("long")).as("se"),
-              sum(deltaNano.cast("long")).as("sd"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$ledgerPath/batch=$bid")
-      }
-      .start()
-    q.awaitTermination()
-  }
+                     ledgerPath: String, checkpoint: String): Unit =
+    drain(in, checkpoint) { (batch, bid) =>
+      if (!batch.isEmpty)
+        batch
+          .groupBy(analyst.as("analyst"), partition.as("part"))
+          .agg(count(lit(1)).as("nq"),
+            sum(epsMicro.cast("long")).as("se"),
+            sum(deltaNano.cast("long")).as("sd"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$ledgerPath/batch=$bid")
+    }
 
   /** Read back [[dpLedgerStream]]'s accumulated partials and apply
     * the cap verdicts — the dpBudgetAccountant algebra over the
@@ -583,21 +562,14 @@ object Streams {
     * retention policy makes the erasure real.
     */
   def erasureStream(in: DataFrame, table: String, keyCol: String,
-                    checkpoint: String): Unit = {
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val keys = batch.select(col(keyCol)).distinct().collect()
-          .map(_.get(0))
-        if (keys.nonEmpty)
-          graft.sources.Snapshot.deleteVectored(batch.sparkSession,
-            table, keyCol, col(keyCol).isin(keys.toSeq: _*)): Unit
-      }
-      .start()
-    q.awaitTermination()
-  }
+                    checkpoint: String): Unit =
+    drain(in, checkpoint) { (batch, _) =>
+      val keys = batch.select(col(keyCol)).distinct().collect()
+        .map(_.get(0))
+      if (keys.nonEmpty)
+        graft.sources.Snapshot.deleteVectored(batch.sparkSession,
+          table, keyCol, col(keyCol).isin(keys.toSeq: _*)): Unit
+    }
 
   /** Fold the per-batch duel-matrix partials written by
     * [[preferenceStream]] and run the fixed-point MM rounds on the
@@ -645,44 +617,36 @@ object Streams {
     import graft.sources.Snapshot
     require(binWidth > 0, "binWidth must be positive")
     val ref = refHist.select(col("bin"), col("n_r")).persist()
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val vals = batch.toDF().select(value.as("v")).persist()
-          try {
-            val fpRow = vals.agg(
-              pmod(sum(Dedup.hashLong(col("v").cast("string"))
-                  .cast("decimal(38,0)")),
-                lit(1152921504606846976L)).cast("long").as("fp"),
-              count(lit(1)).as("n")).head()
-            val fp = "b" + batchId + "_" + fpRow.getLong(0)
-            val hist = vals
-              .groupBy(floor(col("v") / binWidth).cast("long").as("bin"))
-              .agg(count(lit(1)).as("n_c"))
-              .withColumn("batch_fp", lit(fp))
-            Snapshot.merge(hist, registerTable, Seq("batch_fp", "bin"),
-              "n_c", "batch_fp")
-            val cum = Snapshot.read(spark, registerTable)
-              .groupBy(col("bin")).agg(sum(col("n_c")).as("n_c"))
-            Quality.psiBetween(ref, cum)
-              .select(lit(fp).as("batch_fp"),
-                lit(fpRow.getLong(1)).as("n_rows"),
-                col("n_bins"),
-                col("psi"),
-                when(col("n_bins") === 0, lit(true))
-                  .otherwise(col("psi") >= psiAlarm).as("alarm"))
-              .write.mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(alarmPath)
-          } finally vals.unpersist(): Unit
-        }
+    try drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val vals = hold(batch.select(value.as("v")).persist())
+        val fpRow = vals.agg(
+          pmod(sum(Dedup.hashLong(col("v").cast("string"))
+              .cast("decimal(38,0)")),
+            lit(1152921504606846976L)).cast("long").as("fp"),
+          count(lit(1)).as("n")).head()
+        val fp = "b" + batchId + "_" + fpRow.getLong(0)
+        val hist = vals
+          .groupBy(floor(col("v") / binWidth).cast("long").as("bin"))
+          .agg(count(lit(1)).as("n_c"))
+          .withColumn("batch_fp", lit(fp))
+        Snapshot.merge(hist, registerTable, Seq("batch_fp", "bin"),
+          "n_c", "batch_fp")
+        val cum = Snapshot.read(spark, registerTable)
+          .groupBy(col("bin")).agg(sum(col("n_c")).as("n_c"))
+        Quality.psiBetween(ref, cum)
+          .select(lit(fp).as("batch_fp"),
+            lit(fpRow.getLong(1)).as("n_rows"),
+            col("n_bins"),
+            col("psi"),
+            when(col("n_bins") === 0, lit(true))
+              .otherwise(col("psi") >= psiAlarm).as("alarm"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(alarmPath)
       }
-      .start()
-    q.awaitTermination()
-    ref.unpersist(): Unit
+    }
+    finally ref.unpersist(): Unit
   }
 
   /** Corpus-growing streaming dedup — the continuous face of
@@ -715,64 +679,51 @@ object Streams {
     */
   def dedupStream(in: DataFrame, table: String, checkpoint: String,
                   threshold: Double = 0.5, compactEvery: Int = 16,
-                  vacuumKeep: Int = 0,
-                  onBatch: (Long, Double) => Unit = (_, _) => ()): Unit = {
+                  vacuumKeep: Int = 0): Unit = {
     import graft.ops.{Dedup, Text}
     import graft.sources.Snapshot
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val probeT0 = System.nanoTime
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val fresh = batch.toDF().select(col("doc_id"), col("text"))
-            // cast to the DDL (containsNull=true) array form: the
-            // expression's containsNull=false schema won't round-trip
-            // through the manifest, and ARRAY casts only widen
-            .withColumn("hs",
-              Dedup.hashedShingles(Text.tokens(col("text")), 3)
-                .cast("array<bigint>"))
-            .persist()
-          val corpus = Snapshot.latestVersion(table) match {
-            case Some(_) => Snapshot.read(spark, table)
-              .select(col("doc_id"), col("hs"))
-            case None => fresh.select(col("doc_id"), col("hs")).limit(0)
-          }
-          // the incremental op persists corpus-sized frames internally;
-          // collect their handles so THIS batch releases exactly what
-          // it created (a clearCache() here would evict caller-owned
-          // tables from the shared session)
-          val created = scala.collection.mutable.ArrayBuffer
-            .empty[org.apache.spark.sql.DataFrame]
-          val dropIds = Dedup.jaccardPairsIncremental(
-              corpus.withColumnRenamed("doc_id", "id"),
-              fresh.select(col("doc_id").as("id"), col("hs")),
-              "id", "hs", threshold, registerCache = created += _)
-            .select(col("id_new").as("doc_id")).distinct()
-          // eager checkpoint: emptiness probe + merge (collect + upsert)
-          // each re-ran the candidate/verify cascade past the op's own
-          // internal persists (r16: the decontaminationStream lesson)
-          val survivors = fresh.join(dropIds, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .localCheckpoint(true)
-          if (!survivors.isEmpty)
-            Snapshot.merge(survivors, table, Seq("doc_id"), "doc_id",
-              "ingest_batch"): Unit
-          if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-            if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
-              Snapshot.compactInto(spark, table, lit(batchId))
-              if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-            }
-          }
-          fresh.unpersist()
-          created.foreach(_.unpersist(): Unit)
+    drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val fresh = hold(batch.select(col("doc_id"), col("text"))
+          // cast to the DDL (containsNull=true) array form: the
+          // expression's containsNull=false schema won't round-trip
+          // through the manifest, and ARRAY casts only widen
+          .withColumn("hs",
+            Dedup.hashedShingles(Text.tokens(col("text")), 3)
+              .cast("array<bigint>"))
+          .persist())
+        val corpus = Snapshot.latestVersion(table) match {
+          case Some(_) => Snapshot.read(spark, table)
+            .select(col("doc_id"), col("hs"))
+          case None => fresh.select(col("doc_id"), col("hs")).limit(0)
         }
-        onBatch(batchId, (System.nanoTime - probeT0) / 1e9)
+        // the incremental op persists corpus-sized frames internally;
+        // hold their handles so THIS batch releases exactly what it
+        // created (a clearCache() here would evict caller-owned tables
+        // from the shared session)
+        val dropIds = Dedup.jaccardPairsIncremental(
+            corpus.withColumnRenamed("doc_id", "id"),
+            fresh.select(col("doc_id").as("id"), col("hs")),
+            "id", "hs", threshold, registerCache = df => hold(df): Unit)
+          .select(col("id_new").as("doc_id")).distinct()
+        // eager checkpoint: emptiness probe + merge (collect + upsert)
+        // each re-ran the candidate/verify cascade past the op's own
+        // internal persists (r16: the decontaminationStream lesson)
+        val survivors = hold(fresh.join(dropIds, Seq("doc_id"), "left_anti")
+          .withColumn("ingest_batch", lit(batchId))
+          .localCheckpoint(true))
+        if (!survivors.isEmpty)
+          Snapshot.merge(survivors, table, Seq("doc_id"), "doc_id",
+            "ingest_batch"): Unit
+        if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
+          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+            Snapshot.compactInto(spark, table, lit(batchId))
+            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
+          }
+        }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming crawl-frontier dedup — the continuous face of
@@ -793,42 +744,36 @@ object Streams {
                      compactEvery: Int = 16, vacuumKeep: Int = 0): Unit = {
     import graft.ops.Web
     import graft.sources.Snapshot
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val fresh = batch.toDF()
-            .select(col("doc_id"), col("url"),
-              Web.canonicalizeUrl(col("url")).as("canonical_url"))
-            .groupBy(col("canonical_url"))
-            .agg(min(col("doc_id")).as("doc_id"),
-              min_by(col("url"), col("doc_id")).as("url"))
-          // eager checkpoint: emptiness probe + merge each re-ran the
-          // canonicalize + frontier anti-join (r16)
-          val survivors = (Snapshot.latestVersion(table) match {
-            case Some(_) =>
-              fresh.join(Snapshot.read(spark, table)
-                  .select(col("canonical_url")),
-                Seq("canonical_url"), "left_anti")
-            case None => fresh
-          }).withColumn("ingest_batch", lit(batchId))
-            .localCheckpoint(true)
-          if (!survivors.isEmpty)
-            Snapshot.merge(survivors, table, Seq("canonical_url"),
-              "doc_id", "ingest_batch"): Unit
-          if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-            if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
-              Snapshot.compactInto(spark, table, lit(batchId))
-              if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-            }
+    drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val fresh = batch
+          .select(col("doc_id"), col("url"),
+            Web.canonicalizeUrl(col("url")).as("canonical_url"))
+          .groupBy(col("canonical_url"))
+          .agg(min(col("doc_id")).as("doc_id"),
+            min_by(col("url"), col("doc_id")).as("url"))
+        // eager checkpoint: emptiness probe + merge each re-ran the
+        // canonicalize + frontier anti-join (r16)
+        val survivors = hold((Snapshot.latestVersion(table) match {
+          case Some(_) =>
+            fresh.join(Snapshot.read(spark, table)
+                .select(col("canonical_url")),
+              Seq("canonical_url"), "left_anti")
+          case None => fresh
+        }).withColumn("ingest_batch", lit(batchId))
+          .localCheckpoint(true))
+        if (!survivors.isEmpty)
+          Snapshot.merge(survivors, table, Seq("canonical_url"),
+            "doc_id", "ingest_batch"): Unit
+        if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
+          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+            Snapshot.compactInto(spark, table, lit(batchId))
+            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
           }
         }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming DISTRIBUTION-MATCH thinning — the streaming face of
@@ -850,22 +795,19 @@ object Streams {
     import graft.sources.Snapshot
     val statRows = stats.select(col("g"), col("bin"), col("num"),
       col("den"), col("vmin"), col("w")).persist()
-    // An EMPTY stats table would make cfg (limit(1)) empty and the
-    // crossJoin below silently drop EVERY incoming row — the opposite
-    // of the pass-through contract. Fail fast at stream setup instead.
-    require(!statRows.isEmpty,
-      "profileThinStream: fitted stats table is empty — fit " +
-        "Sampling.profileMatchStats first (an empty profile would " +
-        "silently discard the whole stream)")
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    try {
+      // An EMPTY stats table would make cfg (limit(1)) empty and the
+      // crossJoin below silently drop EVERY incoming row — the opposite
+      // of the pass-through contract. Fail fast at stream setup instead.
+      require(!statRows.isEmpty,
+        "profileThinStream: fitted stats table is empty — fit " +
+          "Sampling.profileMatchStats first (an empty profile would " +
+          "silently discard the whole stream)")
+      drain(in, checkpoint) { (batch, batchId) =>
         if (!batch.isEmpty) {
           val cfg = statRows.select(col("vmin"), col("w")).limit(1)
           val x = col("v") - col("vmin")
-          val binned = batch.toDF()
+          val binned = batch
             .select(col("g"), col("v").cast("long").as("v"),
               col("k").cast("string").as("k"))
             .crossJoin(broadcast(cfg))
@@ -873,7 +815,7 @@ object Streams {
               least(lit(bins.toLong - 1), greatest(lit(0L),
                 ((x - pmod(x, col("w"))) / col("w")).cast("long")))
                 .as("bin"))
-          val kept = binned
+          val kept = hold(binned
             .join(broadcast(statRows.select(col("g"), col("bin"),
               col("num"), col("den"))), Seq("g", "bin"), "left")
             .filter(col("den").isNull ||
@@ -884,15 +826,13 @@ object Streams {
             .withColumn("ingest_batch", lit(batchId))
             // eager checkpoint: emptiness probe + merge each re-ran the
             // bin + thin cascade (r16)
-            .localCheckpoint(true)
+            .localCheckpoint(true))
           if (!kept.isEmpty)
             Snapshot.merge(kept, table, Seq("k"), "bin",
               "ingest_batch"): Unit
         }
       }
-      .start()
-    q.awaitTermination()
-    statRows.unpersist(): Unit
+    } finally statRows.unpersist(): Unit
   }
 
   /** Streaming LSH dedup over a PERSISTENT banded-index snapshot — the
@@ -924,122 +864,110 @@ object Streams {
   def lshDedupStream(in: DataFrame, table: String, indexTable: String,
                      checkpoint: String, threshold: Double = 0.5,
                      bands: Int = 4, rowsPerBand: Int = 4,
-                     compactEvery: Int = 16, vacuumKeep: Int = 0,
-                     onBatch: (Long, Double) => Unit = (_, _) => ()): Unit = {
+                     compactEvery: Int = 16, vacuumKeep: Int = 0): Unit = {
     import graft.ops.{Dedup, Text}
     import graft.sources.Snapshot
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val probeT0 = System.nanoTime
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val fresh = batch.toDF().select(col("doc_id"), col("text"))
-            .withColumn("hs",
-              Dedup.hashedShingles(Text.tokens(col("text")), 3)
-                .cast("array<bigint>"))
-            .withColumn("sig",
-              Dedup.minhashSignatureNative(col("hs"), bands * rowsPerBand)
-                .cast("array<bigint>"))
-            .drop("text").persist()
-          val freshPostings = fresh.select(col("doc_id"),
-            posexplode(Dedup.lshBandBuckets(col("sig"), bands, rowsPerBand))
-              .as(Seq("band", "bucket")))
-          val stored = Snapshot.latestVersion(indexTable) match {
-            case Some(_) => Snapshot.read(spark, indexTable)
-              .select(col("band"), col("bucket"), col("doc_id"))
-            case None => freshPostings.limit(0)
-          }
-          // candidates: fresh postings probe stored ∪ earlier-fresh
-          // (old×old never pairs — the incremental asymmetry). A fresh
-          // doc pairs with a STORED near-dup regardless of id order
-          // (ids are opaque; history always wins) — the id-order
-          // constraint applies only WITHIN the increment, where it
-          // fixes keep-first semantics and halves new×new pairs. The
-          // self-pair exclusion keeps replays convergent: a re-played
-          // committed doc finds its own postings at jaccard 1.0 and
-          // must survive again (the keyed merge dedups), not drop.
-          val cands = freshPostings.as("a")
-            .join(stored.withColumn("is_new", lit(false)).as("b")
-                .unionByName(
-                  freshPostings.withColumn("is_new", lit(true)).as("b")),
-              col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.doc_id") =!= col("b.doc_id") &&
-                (!col("b.is_new") || col("a.doc_id") > col("b.doc_id")))
-            .select(col("a.doc_id").as("doc_id"),
-              col("b.doc_id").as("id_match"))
-            .distinct()
-          // verify on full hash sets: fresh side from this batch, match
-          // side from the corpus snapshot ∪ this batch. When the
-          // candidate id set is bounded, the corpus side becomes a
-          // POINT-LOOKUP scan (readForKeys): only files whose footer
-          // id-range can hold a matched id are opened — O(candidates)
-          // files at any corpus size, instead of a full corpus scan
-          // per batch. Unbounded candidate sets (a pathological batch)
-          // fall back to the full scan rather than a huge collect.
-          val candsP = cands.persist()
-          val corpusHs = Snapshot.latestVersion(table) match {
-            case Some(_) =>
-              val ids = candsP.select(col("id_match")).distinct()
-                .limit(65537).collect().map(_.getLong(0))
-              if (ids.length <= 65536)
-                Snapshot.readForKeys(spark, table, "doc_id",
-                    ids.map(_.toString).toSeq)
-                  .select(col("doc_id"), col("hs"))
-              else Snapshot.read(spark, table)
-                .select(col("doc_id"), col("hs"))
-            case None => fresh.select(col("doc_id"), col("hs")).limit(0)
-          }
-          val matchHs = corpusHs
-            .unionByName(fresh.select(col("doc_id"), col("hs")))
-          val dropIds = candsP
-            .join(fresh.select(col("doc_id"), col("hs").as("hsa")),
-              Seq("doc_id"))
-            .join(matchHs.select(col("doc_id").as("id_match"),
-              col("hs").as("hsb")), Seq("id_match"))
-            .filter(round(Dedup.jaccardHashed(col("hsa"), col("hsb")), 4)
-              >= threshold)
-            .select(col("doc_id")).distinct()
-          val survivors = fresh.join(dropIds, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId)).persist()
-          if (!survivors.isEmpty) {
-            Snapshot.merge(survivors.drop("sig")
-                .select(col("doc_id"), col("hs"), col("ingest_batch")),
-              table, Seq("doc_id"), "doc_id", "ingest_batch")
-            Snapshot.merge(survivors.select(col("doc_id"),
-                posexplode(Dedup.lshBandBuckets(col("sig"), bands,
-                  rowsPerBand)).as(Seq("band", "bucket")),
-                col("ingest_batch"))
-                .select(col("band"), col("bucket"), col("doc_id"),
-                  col("ingest_batch")),
-              indexTable, Seq("band", "bucket", "doc_id"), "doc_id",
-              "ingest_batch"): Unit
-          }
-          // corpus compaction RANGE-CLUSTERS on doc_id: that is what
-          // keeps per-file footer id-ranges disjoint, so the next
-          // batches' readForKeys verification stays a point lookup
-          // even after history collapses into one partition dir
-          for (t <- Seq(table, indexTable) if compactEvery > 0)
-            Snapshot.latestVersion(t).foreach { v =>
-              if (Snapshot.readManifest(t, v).dirs.size >= compactEvery) {
-                if (t == table)
-                  Snapshot.compactInto(spark, t, lit(batchId),
-                    targetFiles = compactEvery, clusterBy = Some("doc_id"))
-                else Snapshot.compactInto(spark, t, lit(batchId))
-                if (vacuumKeep > 0) Snapshot.vacuum(t, vacuumKeep)
-              }
-            }
-          survivors.unpersist()
-          candsP.unpersist()
-          fresh.unpersist(): Unit
+    drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val fresh = hold(batch.select(col("doc_id"), col("text"))
+          .withColumn("hs",
+            Dedup.hashedShingles(Text.tokens(col("text")), 3)
+              .cast("array<bigint>"))
+          .withColumn("sig",
+            Dedup.minhashSignatureNative(col("hs"), bands * rowsPerBand)
+              .cast("array<bigint>"))
+          .drop("text").persist())
+        val freshPostings = fresh.select(col("doc_id"),
+          posexplode(Dedup.lshBandBuckets(col("sig"), bands, rowsPerBand))
+            .as(Seq("band", "bucket")))
+        val stored = Snapshot.latestVersion(indexTable) match {
+          case Some(_) => Snapshot.read(spark, indexTable)
+            .select(col("band"), col("bucket"), col("doc_id"))
+          case None => freshPostings.limit(0)
         }
-        onBatch(batchId, (System.nanoTime - probeT0) / 1e9)
+        // candidates: fresh postings probe stored ∪ earlier-fresh
+        // (old×old never pairs — the incremental asymmetry). A fresh
+        // doc pairs with a STORED near-dup regardless of id order
+        // (ids are opaque; history always wins) — the id-order
+        // constraint applies only WITHIN the increment, where it
+        // fixes keep-first semantics and halves new×new pairs. The
+        // self-pair exclusion keeps replays convergent: a re-played
+        // committed doc finds its own postings at jaccard 1.0 and
+        // must survive again (the keyed merge dedups), not drop.
+        val cands = freshPostings.as("a")
+          .join(stored.withColumn("is_new", lit(false)).as("b")
+              .unionByName(
+                freshPostings.withColumn("is_new", lit(true)).as("b")),
+            col("a.band") === col("b.band") &&
+              col("a.bucket") === col("b.bucket") &&
+              col("a.doc_id") =!= col("b.doc_id") &&
+              (!col("b.is_new") || col("a.doc_id") > col("b.doc_id")))
+          .select(col("a.doc_id").as("doc_id"),
+            col("b.doc_id").as("id_match"))
+          .distinct()
+        // verify on full hash sets: fresh side from this batch, match
+        // side from the corpus snapshot ∪ this batch. When the
+        // candidate id set is bounded, the corpus side becomes a
+        // POINT-LOOKUP scan (readForKeys): only files whose footer
+        // id-range can hold a matched id are opened — O(candidates)
+        // files at any corpus size, instead of a full corpus scan
+        // per batch. Unbounded candidate sets (a pathological batch)
+        // fall back to the full scan rather than a huge collect.
+        val candsP = hold(cands.persist())
+        val corpusHs = Snapshot.latestVersion(table) match {
+          case Some(_) =>
+            val ids = candsP.select(col("id_match")).distinct()
+              .limit(65537).collect().map(_.getLong(0))
+            if (ids.length <= 65536)
+              Snapshot.readForKeys(spark, table, "doc_id",
+                  ids.map(_.toString).toSeq)
+                .select(col("doc_id"), col("hs"))
+            else Snapshot.read(spark, table)
+              .select(col("doc_id"), col("hs"))
+          case None => fresh.select(col("doc_id"), col("hs")).limit(0)
+        }
+        val matchHs = corpusHs
+          .unionByName(fresh.select(col("doc_id"), col("hs")))
+        val dropIds = candsP
+          .join(fresh.select(col("doc_id"), col("hs").as("hsa")),
+            Seq("doc_id"))
+          .join(matchHs.select(col("doc_id").as("id_match"),
+            col("hs").as("hsb")), Seq("id_match"))
+          .filter(round(Dedup.jaccardHashed(col("hsa"), col("hsb")), 4)
+            >= threshold)
+          .select(col("doc_id")).distinct()
+        val survivors = hold(fresh.join(dropIds, Seq("doc_id"), "left_anti")
+          .withColumn("ingest_batch", lit(batchId)).persist())
+        if (!survivors.isEmpty) {
+          Snapshot.merge(survivors.drop("sig")
+              .select(col("doc_id"), col("hs"), col("ingest_batch")),
+            table, Seq("doc_id"), "doc_id", "ingest_batch")
+          Snapshot.merge(survivors.select(col("doc_id"),
+              posexplode(Dedup.lshBandBuckets(col("sig"), bands,
+                rowsPerBand)).as(Seq("band", "bucket")),
+              col("ingest_batch"))
+              .select(col("band"), col("bucket"), col("doc_id"),
+                col("ingest_batch")),
+            indexTable, Seq("band", "bucket", "doc_id"), "doc_id",
+            "ingest_batch"): Unit
+        }
+        // corpus compaction RANGE-CLUSTERS on doc_id: that is what
+        // keeps per-file footer id-ranges disjoint, so the next
+        // batches' readForKeys verification stays a point lookup
+        // even after history collapses into one partition dir
+        for (t <- Seq(table, indexTable) if compactEvery > 0)
+          Snapshot.latestVersion(t).foreach { v =>
+            if (Snapshot.readManifest(t, v).dirs.size >= compactEvery) {
+              if (t == table)
+                Snapshot.compactInto(spark, t, lit(batchId),
+                  targetFiles = compactEvery, clusterBy = Some("doc_id"))
+              else Snapshot.compactInto(spark, t, lit(batchId))
+              if (vacuumKeep > 0) Snapshot.vacuum(t, vacuumKeep)
+            }
+          }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming EMBEDDING dedup over a persistent IVF cell index — the
@@ -1094,136 +1022,125 @@ object Streams {
                      checkpoint: String, threshold: Double = 0.99,
                      centroidsK: Int = 16, compactEvery: Int = 16,
                      vacuumKeep: Int = 0,
-                     refreshFactor: Double = 0.0,
-                     onBatch: (Long, Double) => Unit = (_, _) => ()): Unit = {
+                     refreshFactor: Double = 0.0): Unit = {
     import graft.ops.Similarity
     import graft.sources.Snapshot
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val probeT0 = System.nanoTime
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val fresh0 = batch.toDF()
-            .select(col("doc_id"), col("vec").cast("array<float>"))
-          if (Snapshot.latestVersion(modelTable).isEmpty) {
-            val k0 = if (refreshFactor > 0)
-              Similarity.chooseK(fresh0.count()) else centroidsK
-            val seed = fresh0.orderBy(col("doc_id")).limit(k0)
+    drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val fresh0 = batch
+          .select(col("doc_id"), col("vec").cast("array<float>"))
+        if (Snapshot.latestVersion(modelTable).isEmpty) {
+          val k0 = if (refreshFactor > 0)
+            Similarity.chooseK(fresh0.count()) else centroidsK
+          val seed = fresh0.orderBy(col("doc_id")).limit(k0)
+            .select(col("doc_id").as("cid"), col("vec").as("cvec"),
+              lit(0L).as("ingest_batch"))
+          Snapshot.merge(seed, modelTable, Seq("cid"), "cid",
+            "ingest_batch"): Unit
+        } else if (refreshFactor > 0 &&
+            Snapshot.latestVersion(table).nonEmpty) {
+          val n = Snapshot.countStar(table).getOrElse(0L)
+          val kTarget = Similarity.chooseK(n)
+          // manifest row-count stat — the model table commits through
+          // writeData's footer harvest, so a scan job per batch here
+          // was pure overhead (r16)
+          val kNow = Snapshot.countStar(modelTable).getOrElse(
+            Snapshot.read(spark, modelTable).count())
+          if (kTarget >= refreshFactor * kNow) {
+            val corpus = hold(Snapshot.read(spark, table)
+              .select(col("doc_id"), col("vec"), col("ingest_batch"))
+              .persist())
+            val newCen = corpus.orderBy(col("doc_id")).limit(kTarget)
               .select(col("doc_id").as("cid"), col("vec").as("cvec"),
-                lit(0L).as("ingest_batch"))
-            Snapshot.merge(seed, modelTable, Seq("cid"), "cid",
-              "ingest_batch"): Unit
-          } else if (refreshFactor > 0 &&
-              Snapshot.latestVersion(table).nonEmpty) {
-            val n = Snapshot.countStar(table).getOrElse(0L)
-            val kTarget = Similarity.chooseK(n)
-            // manifest row-count stat — the model table commits through
-            // writeData's footer harvest, so a scan job per batch here
-            // was pure overhead (r16)
-            val kNow = Snapshot.countStar(modelTable).getOrElse(
-              Snapshot.read(spark, modelTable).count())
-            if (kTarget >= refreshFactor * kNow) {
-              val corpus = Snapshot.read(spark, table)
-                .select(col("doc_id"), col("vec"), col("ingest_batch"))
-                .persist()
-              val newCen = corpus.orderBy(col("doc_id")).limit(kTarget)
-                .select(col("doc_id").as("cid"), col("vec").as("cvec"),
-                  lit(batchId).as("ingest_batch"))
-              Snapshot.commit(newCen, modelTable,
-                Some("ingest_batch")): Unit
-              val reassigned = Similarity.ivfAssignL2(
-                  corpus.select(col("doc_id").as("id"), col("vec")),
-                  newCen.select(col("cid"), col("cvec")))
-                .select(col("id").as("doc_id"),
-                  col("vec").cast("array<float>").as("vec"), col("cell"))
-                .join(corpus.select(col("doc_id"), col("ingest_batch")),
-                  Seq("doc_id"))
-              Snapshot.commit(reassigned, table, Some("ingest_batch"),
-                clusterBy = Some("doc_id")): Unit
-              corpus.unpersist(): Unit
-            }
+                lit(batchId).as("ingest_batch"))
+            Snapshot.commit(newCen, modelTable,
+              Some("ingest_batch")): Unit
+            val reassigned = Similarity.ivfAssignL2(
+                corpus.select(col("doc_id").as("id"), col("vec")),
+                newCen.select(col("cid"), col("cvec")))
+              .select(col("id").as("doc_id"),
+                col("vec").cast("array<float>").as("vec"), col("cell"))
+              .join(corpus.select(col("doc_id"), col("ingest_batch")),
+                Seq("doc_id"))
+            Snapshot.commit(reassigned, table, Some("ingest_batch"),
+              clusterBy = Some("doc_id")): Unit
+            corpus.unpersist(): Unit
           }
-          val centroids = Snapshot.read(spark, modelTable)
-            .select(col("cid"), col("cvec"))
-          val fresh = Similarity.ivfAssignL2(
-              fresh0.select(col("doc_id").as("id"), col("vec")), centroids)
-            .select(col("id").as("doc_id"),
-              col("vec").cast("array<float>").as("vec"), col("cell"))
-            .persist()
-          val storedCells = Snapshot.latestVersion(table) match {
-            case Some(_) => Snapshot.read(spark, table)
-              .select(col("doc_id"), col("cell"))
-            case None => fresh.select(col("doc_id"), col("cell")).limit(0)
-          }
-          val freshCells = fresh.select(col("doc_id"), col("cell"))
-          // fresh×stored pairs unconditionally (history wins whatever
-          // the id order); id-order only within the increment; self-
-          // pairs excluded so replays converge — see lshDedupStream.
-          // The candidate rule itself is the batch kernel's
-          // (Similarity.sameCellCandidates), so recall fixes land in
-          // both paths.
-          val candsP = Similarity.sameCellCandidates(
-              freshCells.select(col("doc_id").as("id"), col("cell")),
-              storedCells.select(col("doc_id").as("id"), col("cell"))
-                .withColumn("is_new", lit(false))
-                .unionByName(freshCells
-                  .select(col("doc_id").as("id"), col("cell"))
-                  .withColumn("is_new", lit(true))))
-            .select(col("id_new").as("doc_id"), col("id_match"))
-            .distinct().persist()
-          val corpusVecs = Snapshot.latestVersion(table) match {
-            case Some(_) =>
-              val ids = candsP.select(col("id_match")).distinct()
-                .limit(65537).collect().map(_.getLong(0))
-              if (ids.length <= 65536)
-                Snapshot.readForKeys(spark, table, "doc_id",
-                    ids.map(_.toString).toSeq)
-                  .select(col("doc_id"), col("vec"))
-              else Snapshot.read(spark, table)
-                .select(col("doc_id"), col("vec"))
-            case None => fresh.select(col("doc_id"), col("vec")).limit(0)
-          }
-          val matchVecs = corpusVecs
-            .unionByName(fresh.select(col("doc_id"), col("vec")))
-          val dropIds = candsP
-            .join(fresh.select(col("doc_id"),
-              col("vec").cast("array<double>").as("va"),
-              Similarity.normHoisted(col("vec")).as("na")),
-              Seq("doc_id"))
-            .join(matchVecs.select(col("doc_id").as("id_match"),
-              col("vec").cast("array<double>").as("vb"),
-              Similarity.normHoisted(col("vec")).as("nb")),
-              Seq("id_match"))
-            .filter(round(Similarity.cosineHoisted(col("va"), col("vb"),
-              col("na"), col("nb")), 6)
-              >= threshold)
-            .select(col("doc_id")).distinct()
-          // eager checkpoint: emptiness probe + merge each re-ran the
-          // point-lookup verify join (r16: the decontaminationStream
-          // lesson applied to the vector stream)
-          val survivors = fresh.join(dropIds, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .localCheckpoint(true)
-          if (!survivors.isEmpty)
-            Snapshot.merge(survivors, table, Seq("doc_id"), "doc_id",
-              "ingest_batch"): Unit
-          if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-            if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
-              Snapshot.compactInto(spark, table, lit(batchId),
-                targetFiles = compactEvery, clusterBy = Some("doc_id"))
-              if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-            }
-          }
-          candsP.unpersist()
-          fresh.unpersist(): Unit
         }
-        onBatch(batchId, (System.nanoTime - probeT0) / 1e9)
+        val centroids = Snapshot.read(spark, modelTable)
+          .select(col("cid"), col("cvec"))
+        val fresh = hold(Similarity.ivfAssignL2(
+            fresh0.select(col("doc_id").as("id"), col("vec")), centroids)
+          .select(col("id").as("doc_id"),
+            col("vec").cast("array<float>").as("vec"), col("cell"))
+          .persist())
+        val storedCells = Snapshot.latestVersion(table) match {
+          case Some(_) => Snapshot.read(spark, table)
+            .select(col("doc_id"), col("cell"))
+          case None => fresh.select(col("doc_id"), col("cell")).limit(0)
+        }
+        val freshCells = fresh.select(col("doc_id"), col("cell"))
+        // fresh×stored pairs unconditionally (history wins whatever
+        // the id order); id-order only within the increment; self-
+        // pairs excluded so replays converge — see lshDedupStream.
+        // The candidate rule itself is the batch kernel's
+        // (Similarity.sameCellCandidates), so recall fixes land in
+        // both paths.
+        val candsP = hold(Similarity.sameCellCandidates(
+            freshCells.select(col("doc_id").as("id"), col("cell")),
+            storedCells.select(col("doc_id").as("id"), col("cell"))
+              .withColumn("is_new", lit(false))
+              .unionByName(freshCells
+                .select(col("doc_id").as("id"), col("cell"))
+                .withColumn("is_new", lit(true))))
+          .select(col("id_new").as("doc_id"), col("id_match"))
+          .distinct().persist())
+        val corpusVecs = Snapshot.latestVersion(table) match {
+          case Some(_) =>
+            val ids = candsP.select(col("id_match")).distinct()
+              .limit(65537).collect().map(_.getLong(0))
+            if (ids.length <= 65536)
+              Snapshot.readForKeys(spark, table, "doc_id",
+                  ids.map(_.toString).toSeq)
+                .select(col("doc_id"), col("vec"))
+            else Snapshot.read(spark, table)
+              .select(col("doc_id"), col("vec"))
+          case None => fresh.select(col("doc_id"), col("vec")).limit(0)
+        }
+        val matchVecs = corpusVecs
+          .unionByName(fresh.select(col("doc_id"), col("vec")))
+        val dropIds = candsP
+          .join(fresh.select(col("doc_id"),
+            col("vec").cast("array<double>").as("va"),
+            Similarity.normHoisted(col("vec")).as("na")),
+            Seq("doc_id"))
+          .join(matchVecs.select(col("doc_id").as("id_match"),
+            col("vec").cast("array<double>").as("vb"),
+            Similarity.normHoisted(col("vec")).as("nb")),
+            Seq("id_match"))
+          .filter(round(Similarity.cosineHoisted(col("va"), col("vb"),
+            col("na"), col("nb")), 6)
+            >= threshold)
+          .select(col("doc_id")).distinct()
+        // eager checkpoint: emptiness probe + merge each re-ran the
+        // point-lookup verify join (r16: the decontaminationStream
+        // lesson applied to the vector stream)
+        val survivors = hold(fresh.join(dropIds, Seq("doc_id"), "left_anti")
+          .withColumn("ingest_batch", lit(batchId))
+          .localCheckpoint(true))
+        if (!survivors.isEmpty)
+          Snapshot.merge(survivors, table, Seq("doc_id"), "doc_id",
+            "ingest_batch"): Unit
+        if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
+          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+            Snapshot.compactInto(spark, table, lit(batchId),
+              targetFiles = compactEvery, clusterBy = Some("doc_id"))
+            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
+          }
+        }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming entity resolution — the continuous face of
@@ -1271,49 +1188,39 @@ object Streams {
                vacuumKeep: Int = 0): Unit = {
     import graft.ops.Text
     import graft.sources.Snapshot
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val fresh = batch.toDF().select(col("rec_id"), col("name"))
-            .persist()
-          val entities = Snapshot.latestVersion(table) match {
-            case Some(_) => Snapshot.read(spark, table)
-              .select(col("rec_id"), col("name"))
-            case None => fresh.limit(0)
+    drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val fresh = hold(batch.select(col("rec_id"), col("name"))
+          .persist())
+        val entities = Snapshot.latestVersion(table) match {
+          case Some(_) => Snapshot.read(spark, table)
+            .select(col("rec_id"), col("name"))
+          case None => fresh.limit(0)
+        }
+        val matched = Text.fuzzyJoinIncrementalSegments(
+            entities.withColumnRenamed("rec_id", "id"),
+            fresh.withColumnRenamed("rec_id", "id"),
+            "id", col("name"), maxDist)
+          .select(col("probe_id").as("rec_id")).distinct()
+        // eager checkpoint: the emptiness probe, the merge's
+        // touched-partition collect AND its upsert all consume the
+        // novel set — lazy, each re-ran the whole segment fuzzy join
+        // (the decontaminationStream lesson, r16: q324 measured)
+        val novel = hold(fresh.join(matched, Seq("rec_id"), "left_anti")
+          .withColumn("ingest_batch", lit(batchId))
+          .localCheckpoint(true))
+        if (!novel.isEmpty)
+          Snapshot.merge(novel, table, Seq("rec_id"), "rec_id",
+            "ingest_batch"): Unit
+        if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
+          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+            Snapshot.compactInto(spark, table, lit(batchId))
+            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
           }
-          val matched = Text.fuzzyJoinIncrementalSegments(
-              entities.withColumnRenamed("rec_id", "id"),
-              fresh.withColumnRenamed("rec_id", "id"),
-              "id", col("name"), maxDist)
-            .select(col("probe_id").as("rec_id")).distinct()
-          // eager checkpoint: the emptiness probe, the merge's
-          // touched-partition collect AND its upsert all consume the
-          // novel set — lazy, each re-ran the whole segment fuzzy join
-          // (the decontaminationStream lesson, r16: q324 measured)
-          val novel = fresh.join(matched, Seq("rec_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .localCheckpoint(true)
-          if (!novel.isEmpty)
-            Snapshot.merge(novel, table, Seq("rec_id"), "rec_id",
-              "ingest_batch"): Unit
-          if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-            if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
-              Snapshot.compactInto(spark, table, lit(batchId))
-              if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-            }
-          }
-          // fresh is the only cache this batch created (the fuzzy ops
-          // persist nothing across calls) — a clearCache() here would
-          // evict caller-owned tables from the shared session.
-          fresh.unpersist(): Unit
         }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** STREAMING eval-suite decontamination against a FIXED train index
@@ -1333,50 +1240,38 @@ object Streams {
     */
   def decontaminationStream(in: DataFrame, indexDir: String,
                             table: String, checkpoint: String,
-                            g: Long = 8L,
-                            onBatch: (Long, Double) => Unit = (_, _) => ())
-      : Unit = {
+                            g: Long = 8L): Unit = {
     import graft.ops.{SuffixArray, Text}
     import graft.sources.Snapshot
     // the index is FIXED for the stream's lifetime: load + pin the
     // probe faces ONCE; per-batch snapshot re-reads were the gate's
     // dominant fixed cost (measured, NOTES 123)
     val index = SuffixArray.loadProbeIndex(in.sparkSession, indexDir, g)
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val t0 = System.nanoTime
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val docs = batch.toDF().select(col("doc_id"), col("text"))
-            .persist()
-          val m = SuffixArray.decontaminateIncrement(index, docs)
-          val nTok = docs.select(col("doc_id"),
-            Text.tokenCount(col("text")).cast("long").as("n_tokens"))
-          // eager checkpoint: the emptiness probe AND the merge both
-          // consume verdicts — without it each re-runs the whole
-          // probe/chain cascade (measured 2× per batch)
-          val verdicts = m.groupBy(col("doc_id"))
-            .agg(max(col("train_match")).as("longest_train_match"),
-              sum(when(col("train_match") >= g, lit(1L)).otherwise(lit(0L)))
-                .as("contaminated_starts"))
-            .filter(col("longest_train_match") >= g)
-            .join(nTok, "doc_id")
-            .select(col("doc_id"), col("n_tokens"),
-              col("longest_train_match"), col("contaminated_starts"))
-            .withColumn("ingest_batch", lit(batchId))
-            .localCheckpoint(true)
-          if (!verdicts.isEmpty)
-            Snapshot.merge(verdicts, table, Seq("doc_id"), "doc_id",
-              "ingest_batch"): Unit
-          docs.unpersist(): Unit
-        }
-        onBatch(batchId, (System.nanoTime - t0) / 1e9)
+    try drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val docs = hold(batch.select(col("doc_id"), col("text"))
+          .persist())
+        val m = SuffixArray.decontaminateIncrement(index, docs)
+        val nTok = docs.select(col("doc_id"),
+          Text.tokenCount(col("text")).cast("long").as("n_tokens"))
+        // eager checkpoint: the emptiness probe AND the merge both
+        // consume verdicts — without it each re-runs the whole
+        // probe/chain cascade (measured 2× per batch)
+        val verdicts = hold(m.groupBy(col("doc_id"))
+          .agg(max(col("train_match")).as("longest_train_match"),
+            sum(when(col("train_match") >= g, lit(1L)).otherwise(lit(0L)))
+              .as("contaminated_starts"))
+          .filter(col("longest_train_match") >= g)
+          .join(nTok, "doc_id")
+          .select(col("doc_id"), col("n_tokens"),
+            col("longest_train_match"), col("contaminated_starts"))
+          .withColumn("ingest_batch", lit(batchId))
+          .localCheckpoint(true))
+        if (!verdicts.isEmpty)
+          Snapshot.merge(verdicts, table, Seq("doc_id"), "doc_id",
+            "ingest_batch"): Unit
       }
-      .start()
-    try q.awaitTermination()
+    }
     finally index.unpersistAll()
   }
 
@@ -1393,36 +1288,25 @@ object Streams {
     * clean_fp, ingest_batch).
     */
   def excisionStream(in: DataFrame, indexDir: String, table: String,
-                     checkpoint: String, g: Long = 8L,
-                     onBatch: (Long, Double) => Unit = (_, _) => ())
-      : Unit = {
+                     checkpoint: String, g: Long = 8L): Unit = {
     import graft.ops.SuffixArray
     import graft.sources.Snapshot
     val index = SuffixArray.loadProbeIndex(in.sparkSession, indexDir, g)
-    val q = in.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val t0 = System.nanoTime
-        if (!batch.isEmpty) {
-          val docs = batch.toDF().select(col("doc_id"), col("text"))
-            .persist()
-          // eager checkpoint: the emptiness probe AND the merge both
-          // consume the rewrite (the decontaminationStream lesson)
-          val cut = SuffixArray.exciseAgainstIndex(index, docs,
-              col("doc_id"), col("text"))
-            .withColumn("ingest_batch", lit(batchId))
-            .localCheckpoint(true)
-          if (!cut.isEmpty)
-            Snapshot.merge(cut, table, Seq("doc_id"), "doc_id",
-              "ingest_batch"): Unit
-          docs.unpersist(): Unit
-        }
-        onBatch(batchId, (System.nanoTime - t0) / 1e9)
+    try drain(in, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val docs = hold(batch.select(col("doc_id"), col("text"))
+          .persist())
+        // eager checkpoint: the emptiness probe AND the merge both
+        // consume the rewrite (the decontaminationStream lesson)
+        val cut = hold(SuffixArray.exciseAgainstIndex(index, docs,
+            col("doc_id"), col("text"))
+          .withColumn("ingest_batch", lit(batchId))
+          .localCheckpoint(true))
+        if (!cut.isEmpty)
+          Snapshot.merge(cut, table, Seq("doc_id"), "doc_id",
+            "ingest_batch"): Unit
       }
-      .start()
-    try q.awaitTermination()
+    }
     finally index.unpersistAll()
   }
 
@@ -1436,7 +1320,7 @@ object Streams {
     val q = out.writeStream
       .outputMode(mode)
       .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .format("parquet")
       .option("path", path)
       .start()

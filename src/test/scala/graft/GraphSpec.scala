@@ -75,6 +75,21 @@ class GraphSpec extends SparkSpec {
     assert(out.maxBy(_._2._1)._1 == 0L)
   }
 
+  test("pageRank past the checkpoint cadence releases every earlier " +
+      "round's checkpoint and its loop pins: only the result's RDD stays") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 1L))
+      .toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // 7 iterations checkpoint at rounds 3, 6 and 7
+    val pr = Graph.pageRank(edges, 7)
+    assert(pr.count() == 4L)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val own = pr.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(own.size == 1 && left == own, s"left $left, result owns $own")
+  }
+
   test("pageRank iterations are deterministic: same input, identical bits") {
     val rnd = new scala.util.Random(7)
     val edges = (0 until 200).map(_ =>
@@ -181,6 +196,24 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(!r2.contains(2L), s"node 2 needs the round-3 re-expansion: $r2")
     assert(r2(1L) == 3L, "the improvement itself lands in round 2")
+  }
+
+  test("temporalEarliestArrival past the checkpoint cadence keeps its " +
+      "arrivals and leaves only the result's RDD") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a time-increasing chain 0→1@1→…→9@9 plus a late shortcut 0→3@100
+    // that round 3 improves to 3: 7 rounds checkpoint the frontier at
+    // round 3 and 6 and best at rounds 3, 6 and 7
+    val chain = (0L until 9L).map(i => (i, i + 1, i + 1))
+    val es = (chain :+ ((0L, 3L, 100L))).toDF("src", "dst", "ts")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Graph.temporalEarliestArrival(es, Seq(0L).toDF("id"), 7)
+    val got = out.as[(Long, Long)].collect().toMap
+    assert(got == (0L to 7L).map(i => i -> i).toMap, s"arrivals: $got")
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val own = out.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(own.size == 1 && left == own, s"left $left, result owns $own")
   }
 
   test("degreeAssortativity: a star is perfectly disassortative (r = " +

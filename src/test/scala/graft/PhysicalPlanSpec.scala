@@ -14,6 +14,18 @@ class PhysicalPlanSpec extends SparkSpec {
     SparkEntry.queries(q)(spark, dir).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
 
+  test("stream gate queries leave no persisted RDD behind after the " +
+      "query and clearCache()") {
+    for (q <- Seq("q324_er_stream", "q330_dedup_stream",
+        "q353_ann_refresh_stream")) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      SparkEntry.queries(q)(spark, dir).collect()
+      spark.catalog.clearCache()
+      val left = spark.sparkContext.getPersistentRDDs.toMap -- before
+      assert(left.isEmpty, s"$q left: ${left.values.mkString(", ")}")
+    }
+  }
+
   test("flagship resample is one exchange with map-side partial aggregation") {
     val p = plan("q01_weekly_bars")
     assert("(?m)^\\s*\\(\\d+\\) Exchange".r.findAllIn(p).size == 1,

@@ -717,13 +717,10 @@ class StreamingSpec extends SparkSpec {
       val b0 = Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
       val b1 = Seq((3L, -5L), (4L, 40L)).toDF("id", "v") // poisoned
       val b2 = Seq((5L, 50L)).toDF("id", "v")
-      val in = SparkEntry.writeStreamBatches(Seq(b0, b1, b2),
+      val src = SparkEntry.replayBatches(spark, Seq(b0, b1, b2),
         dir.getAbsolutePath)
-      val schema = spark.read.parquet(in).schema
       def run(ck: String): Unit = Streams.wapStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in),
-        tbl, dir.getAbsolutePath + ck, col("v") < 0)
+        src, tbl, dir.getAbsolutePath + ck, col("v") < 0)
       run("/ck")
       val got = Snapshot.read(spark, tbl)
         .select($"id").as[Long].collect().toSet
@@ -827,6 +824,37 @@ class StreamingSpec extends SparkSpec {
       }
       // the target-like raw doc keeps, the spam doc drops
       assert(keep.contains(10L) && drop.contains(11L))
+    }
+  }
+
+  test("drain: a batch that throws fails the stream to the caller and " +
+      "leaves no persisted RDD of the batch or of the run behind") {
+    import graft.ops.Sampling
+    withTempDir { dir =>
+      val in = dir.getAbsolutePath + "/in"
+      val docs = Seq(
+        (1L, "wiki facts wiki archive history", true),
+        (11L, "buy spam now deal spam buy", false))
+        .toDF("doc_id", "text", "tgt")
+      val model = Sampling.dsirModel(docs, $"doc_id", $"text", $"tgt", 64)
+      docs.select($"doc_id", $"text").write.parquet(in)
+      // a regular file where the drop sink's directory belongs: the keep
+      // write materializes the batch's `scored` and the run's model pin,
+      // then the drop write throws
+      val dropFile = new java.io.File(dir, "drop")
+      java.nio.file.Files.writeString(dropFile.toPath, "not a directory")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streams.dsirStream(
+          spark.readStream.schema(docs.select($"doc_id", $"text").schema)
+            .parquet(in), model, 64,
+          dir.getAbsolutePath + "/keep", dropFile.getPath,
+          dir.getAbsolutePath + "/ck", 0L)
+      }
+      assert(new java.io.File(dir, "keep").isDirectory,
+        "the keep write must run before the failing drop write")
+      val left = spark.sparkContext.getPersistentRDDs.toMap -- before
+      assert(left.isEmpty, s"left behind: ${left.values.mkString(", ")}")
     }
   }
 
@@ -951,12 +979,8 @@ class StreamingSpec extends SparkSpec {
                 tag: String): Map[String, (String, Long, Long, Long)] = {
       val dir = java.nio.file.Files
         .createTempDirectory(s"prefstream$tag").toFile
-      val in = SparkEntry.writeStreamBatches(batches,
-        dir.getAbsolutePath)
-      val schema = spark.read.parquet(in).schema
       Streams.preferenceStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in),
+        SparkEntry.replayBatches(spark, batches, dir.getAbsolutePath),
         col("w"), col("l"), dir.getAbsolutePath + "/matrix",
         dir.getAbsolutePath + "/ck")
       Streams.streamedRatings(spark, dir.getAbsolutePath + "/matrix", 3)
@@ -974,12 +998,8 @@ class StreamingSpec extends SparkSpec {
     // replay does) leaves the accumulated matrix unchanged
     val dir = java.nio.file.Files
       .createTempDirectory("prefstreamreplay").toFile
-    val in = SparkEntry.writeStreamBatches(Seq(b0, b1),
-      dir.getAbsolutePath)
-    val schema = spark.read.parquet(in).schema
     Streams.preferenceStream(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(in),
+      SparkEntry.replayBatches(spark, Seq(b0, b1), dir.getAbsolutePath),
       col("w"), col("l"), dir.getAbsolutePath + "/matrix",
       dir.getAbsolutePath + "/ck")
     val p1 = dir.getAbsolutePath + "/matrix/batch=1"
@@ -1001,13 +1021,9 @@ class StreamingSpec extends SparkSpec {
         .createTempDirectory(s"erasure$tag").toFile
       val t = dir.getAbsolutePath + "/t"
       Snapshot.commit((1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"), t)
-      val in = SparkEntry.writeStreamBatches(
-        batches.map(b => b.map(Tuple1(_)).toDF("id")),
-        dir.getAbsolutePath)
-      val schema = spark.read.parquet(in).schema
       Streams.erasureStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in),
+        SparkEntry.replayBatches(spark,
+          batches.map(b => b.map(Tuple1(_)).toDF("id")), dir.getAbsolutePath),
         t, "id", dir.getAbsolutePath + "/ck")
       (Snapshot.read(spark, t).select($"id").as[Long].collect().toSet,
         Snapshot.versions(t).size)

@@ -279,8 +279,9 @@ class SuffixArraySpec extends SparkSpec {
         col("doc_id"), col("text"))
       val b = SuffixArray.build(c)
       SuffixArray.persistProbeIndex(c, b, idx, g)
-      val ranks = SuffixArray.probeGramRanks(spark, idx,
-        evalDocs.toDF("doc_id", "text"), col("doc_id"), col("text"), g)
+      val index = SuffixArray.loadProbeIndex(spark, idx, g)
+      val ranks = SuffixArray.probeGramRanks(index,
+        evalDocs.toDF("doc_id", "text"), col("doc_id"), col("text"))
         .as[(Long, Long, Long)].collect()
       val byDoc = (trainDocs ++ evalDocs).toMap
         .map { case (k, v) => k -> tok(v) }
@@ -305,7 +306,7 @@ class SuffixArraySpec extends SparkSpec {
       }}
       // candidate retrieval: exactly the train docs holding a hit gram,
       // never the unrelated doc 104 or the empty doc 106
-      val cand = SuffixArray.probeCandidateDocs(spark, idx,
+      val cand = SuffixArray.probeCandidateDocs(index,
           ranks.toSeq.toDF("doc_id", "pos", "rank"))
         .as[Long].collect().toSet
       val expectCand = trainGrams.filter { case (gr, _) =>
@@ -313,6 +314,7 @@ class SuffixArraySpec extends SparkSpec {
       }.map(_._2).toSet
       assert(cand == expectCand)
       assert(!cand.contains(104L) && !cand.contains(106L))
+      index.unpersistAll()
       b.unpersistAll()
     }
   }
@@ -328,9 +330,11 @@ class SuffixArraySpec extends SparkSpec {
       val c = SuffixArray.corpus(train, col("doc_id"), col("text"))
       val b = SuffixArray.build(c)
       SuffixArray.persistProbeIndex(c, b, idx, g)
-      val inc = SuffixArray.decontaminateIncrement(spark, idx, ev, g)
+      val index = SuffixArray.loadProbeIndex(spark, idx, g)
+      val inc = SuffixArray.decontaminateIncrement(index, ev)
         .as[(Long, Long, Option[Long])].collect()
         .map(t => (t._1, t._2) -> t._3.getOrElse(0L)).toMap
+      index.unpersistAll()
       val cf = SuffixArray.corpus(
         (trainDocs ++ evalDocs).toDF("doc_id", "text"),
         col("doc_id"), col("text"))
@@ -365,8 +369,10 @@ class SuffixArraySpec extends SparkSpec {
       val c = SuffixArray.corpus(train, col("doc_id"), col("text"))
       val b = SuffixArray.buildTo(c, g)
       SuffixArray.persistProbeIndex(c, b, idx, g)
-      val viaDisk = SuffixArray.decontaminateIncrement(spark, idx, ev, g)
+      val index = SuffixArray.loadProbeIndex(spark, idx, g)
+      val viaDisk = SuffixArray.decontaminateIncrement(index, ev)
         .as[(Long, Long, Option[Long])].collect().toSet
+      index.unpersistAll()
       val viaMem = SuffixArray.decontaminateIncrement(
           SuffixArray.probeFaces(c, b, g), ev)
         .as[(Long, Long, Option[Long])].collect().toSet

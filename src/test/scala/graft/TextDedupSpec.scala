@@ -503,6 +503,21 @@ class TextDedupSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L))
   }
 
+  test("duplicateClusters releases every round's local checkpoint: only " +
+      "the returned labels' RDD stays persisted") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a 40-link chain: the seed leaves it unconverged, so several
+    // adopt + pointer-jump rounds checkpoint and hand over
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val labels = Dedup.duplicateClusters(pairs)
+    assert(labels.as[(Long, Long)].collect().forall(_._2 == 1L))
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val own = labels.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(own.size == 1 && left == own, s"left $left, labels own $own")
+  }
+
   test("duplicateClusters: a chain far deeper than maxIter rounds still converges") {
     // a 60-hop path needs 60 rounds of plain min-propagation — past the
     // maxIter=20 cap, where the pre-doubling implementation silently
