@@ -873,13 +873,6 @@ private[graft] object EntriesSimilarityAnn {
           round((coalesce(col("n_hit"), lit(0L)).cast("double") / 5)
             .cast("decimal(20,10)"), 4).cast("double").as("recall_at_5"))
     }),
-    // Similarity: SCALAR QUANTIZATION (SQ8) — the compression tier
-    // between raw floats and PQ codes: one per-dim min/max pass (d-row
-    // aggregate, broadcast back), every vector snaps to d 8-bit bin
-    // indices (4× resident-index compression), and the fixed 100-query
-    // sample ranks corpus rows by exact-query-vs-reconstruction squared
-    // L2 — the scan touches only the codes plus the one stats row.
-    // Output: recall@5 of the SQ8 scan vs exact-L2 truth.
     // Retrieval: RECIPROCAL-RANK FUSION — three md5 retriever lists
     // (top 8 each) over a shared candidate pool, fused at k0=60 into
     // a top-5 per query; floored reciprocal contributions, doc-id
@@ -930,6 +923,13 @@ private[graft] object EntriesSimilarityAnn {
           round((coalesce(col("n_hit"), lit(0L)).cast("double") / 5)
             .cast("decimal(20,10)"), 4).cast("double").as("recall_at_5"))
     }),
+    // Similarity: SCALAR QUANTIZATION (SQ8) — the compression tier
+    // between raw floats and PQ codes: one per-dim min/max pass (d-row
+    // aggregate, broadcast back), every vector snaps to d 8-bit bin
+    // indices (4× resident-index compression), and the fixed 100-query
+    // sample ranks corpus rows by exact-query-vs-reconstruction squared
+    // L2 — the scan touches only the codes plus the one stats row.
+    // Output: recall@5 of the SQ8 scan vs exact-L2 truth.
     "q128_sq8_recall" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -2489,10 +2489,6 @@ private[graft] object EntriesSimilarityAnn {
          |    AS DECIMAL(20,10)), 4) AS DOUBLE) AS recall_at_5
          |FROM q CROSS JOIN it
          |LEFT JOIN h ON q.id = h.query_id AND it.iters = h.iters""".stripMargin,
-    // SQ8 unrolled in CTEs: per-dim min/max lists, codes via the same
-    // fixed-association ((x−mn)/(mx−mn))·255 snap, reconstruction
-    // mn + (code/255)·(mx−mn), rank by rounded squared L2 to the
-    // reconstruction (asc, id) against brute-force L2 truth.
     // Same md5 lists via windows; integer // reciprocal terms,
     // identical fuse/tiebreak/top-5.
     "q503_rrf_fusion" ->
@@ -2576,6 +2572,10 @@ private[graft] object EntriesSimilarityAnn {
          |  CAST(round(CAST(CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 5
          |    AS DECIMAL(20,10)), 4) AS DOUBLE) AS recall_at_5
          |FROM q LEFT JOIN h ON q.id = h.query_id""".stripMargin,
+    // SQ8 unrolled in CTEs: per-dim min/max lists, codes via the same
+    // fixed-association ((x−mn)/(mx−mn))·255 snap, reconstruction
+    // mn + (code/255)·(mx−mn), rank by rounded squared L2 to the
+    // reconstruction (asc, id) against brute-force L2 truth.
     "q128_sq8_recall" ->
       s"""WITH st AS (
          |  SELECT list(mn ORDER BY pos) AS mns, list(mx ORDER BY pos) AS mxs

@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   *  - a left row at exactly a right row's timestamp matches it
   *    (the right side wins ties of the window ordering);
   *  - unmatched left rows survive with null right payload (left join);
-  *  - `tolerance`: matches further than `tolerance` from the left time
-  *    are discarded (null payload), mirroring pandas merge_asof;
+  *  - `tolerance` (backward join): matches further than `tolerance`
+  *    from the left time are discarded (null payload), mirroring
+  *    pandas merge_asof;
   *  - right (key, time) pairs must be unique for a deterministic pick —
   *    run Merge.keepLatest on the right side first when they are not.
   */
@@ -46,9 +47,8 @@ object Asof {
 
   /** Forward as-of join ("earliest right at or after each left row"). */
   def joinAsOfForward(left: DataFrame, right: DataFrame, by: Seq[String],
-                      leftTime: String, rightTime: String,
-                      tolerance: Option[Column] = None): DataFrame =
-    joinImpl(left, right, by, leftTime, rightTime, tolerance, forward = true)
+                      leftTime: String, rightTime: String): DataFrame =
+    joinImpl(left, right, by, leftTime, rightTime, None, forward = true)
 
   private def joinImpl(left: DataFrame, right: DataFrame, by: Seq[String],
                        leftTime: String, rightTime: String,
@@ -80,9 +80,9 @@ object Asof {
     val matchedRaw = last(col("__r"), ignoreNulls = true).over(w)
     val matched = tolerance match {
       case None => matchedRaw
+      // only the backward join takes a tolerance
       case Some(tol) => Cols.bound(matchedRaw)(m =>
-        when(if (forward) m("__rt") <= col("__t") + tol
-             else m("__rt") >= col("__t") - tol, m))
+        when(m("__rt") >= col("__t") - tol, m))
     }
 
     unioned

@@ -955,9 +955,9 @@ object Dedup {
     * explicit salt keeps the guarantee under static planning and
     * bounded for the agg-side combiners.
     */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 20,
-                        saltFactor: Int = 1): DataFrame = {
+  def duplicateClusters(pairs: DataFrame, saltFactor: Int = 1): DataFrame = {
     require(saltFactor >= 1, "saltFactor must be >= 1")
+    val maxIter = 20
     // persist the INPUT before the symmetric union: its two branches
     // are separate scans of `pairs`, and upstream pair generation (an
     // inverted join or LSH pipeline) is far too expensive to run twice.

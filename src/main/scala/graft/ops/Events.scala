@@ -840,8 +840,8 @@ object Events {
     * split the credit ∝ their effects.
     *
     * Numerics: conversion values ride as ×1e9-snapped longs — each
-    * unrolled step (`steps` of them, default 8 — geometric tail ≤
-    * p_max^steps) computes round((n/rt)·v9) per edge so both engines
+    * unrolled step (8 of them — geometric tail ≤ p_max^8) computes
+    * round((n/rt)·v9) per edge so both engines
     * (this and a SQL oracle) make identical IEEE double ops, and the
     * per-state sums are exact integers. Removal can only lower the
     * (snapped) conversion probability; the 0-clamp absorbs ±1-unit
@@ -849,7 +849,7 @@ object Events {
     *
     * Scale shape: only `transitions` is corpus-sized; the frame it
     * yields is ≤ |types+2|² rows — a MODEL matrix, not data — so the
-    * `steps`-round value iteration runs DRIVER-SIDE on the collected
+    * 8-round value iteration runs DRIVER-SIDE on the collected
     * matrix (the LinearModel.logisticGd / Preference Bradley-Terry
     * bounded-domain precedent, guarded by the limit-collect
     * convention).
@@ -871,9 +871,7 @@ object Events {
     * semantics — same exact long sums), and the q311 oracle gate
     * pins the equality.
     */
-  def markovRemovalEffect(transitions: DataFrame,
-                          steps: Int = 8): DataFrame = {
-    require(steps >= 1 && steps <= 64, s"steps out of [1,64]: $steps")
+  def markovRemovalEffect(transitions: DataFrame): DataFrame = {
     val spark = transitions.sparkSession
     // Spark round(double) semantics: BigDecimal.valueOf (canonical
     // shortest decimal) then setScale(HALF_UP) — NOT math.round, whose
@@ -931,7 +929,7 @@ object Events {
     val states = pc9.keys.toVector
     val pst = rms.map { rm =>
       var v: Map[String, Long] = pc9
-      for (_ <- 1 until steps) {
+      for (_ <- 1 until 8) {
         val sc = edges.iterator
           .filter(e => e._2 != rm && v.contains(e._2))
           .map(e => e._1 -> rnd9(e._3 * v(e._2).toDouble))

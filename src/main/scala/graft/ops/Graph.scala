@@ -36,6 +36,9 @@ object Graph {
   /** Checkpoint cadence for the iterative loops (see object scaladoc). */
   private val ckptEvery = 3
 
+  /** Damping `d` of [[pageRank]] and [[personalizedPageRank]]. */
+  private val Damping = 0.85
+
   /** Round-boundary lineage truncation: eager localCheckpoint of the
     * working frame, releasing the previous round's blocks. Returns the
     * checkpointed frame and the new "owned" handle.
@@ -48,13 +51,13 @@ object Graph {
   }
 
   /** `iters` PageRank iterations over `edges` (src, dst) with damping
-    * `d`: pr⁰ = 1/N; prⁱ⁺¹(v) = (1−d)/N + d·Σ_{(u,v)∈E} prⁱ(u)/out(u),
+    * `d` = 0.85: pr⁰ = 1/N; prⁱ⁺¹(v) = (1−d)/N + d·Σ_{(u,v)∈E} prⁱ(u)/out(u),
     * the per-edge term snapped to ×1e9 fixed point pre-sum. Nodes are
     * the union of both endpoint sets; sink nodes (no out-edges)
     * contribute nothing (their mass leaks — the plain formulation);
     * nodes with no in-edges hold the (1−d)/N base. Output: (id, pr).
     */
-  def pageRank(edges: DataFrame, iters: Int, d: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val big = iters > ckptEvery
     val e0 = edges.select(col("src"), col("dst"))
@@ -80,8 +83,8 @@ object Graph {
       pr = base
         .join(contrib, col("id") === col("dst"), "left")
         .select(col("id"),
-          (lit(1.0 - d) / col("n").cast("double") +
-            lit(d) * (coalesce(col("s"), lit(0L)).cast("double") / lit(1e9)))
+          (lit(1.0 - Damping) / col("n").cast("double") +
+            lit(Damping) * (coalesce(col("s"), lit(0L)).cast("double") / lit(1e9)))
             .as("pr"))
       if (big && (r % ckptEvery == 0 || r == iters)) {
         val (c, o) = truncate(pr, owned); pr = c; owned = o
@@ -159,8 +162,8 @@ object Graph {
     * cross-engine); the seed membership flag rides the node frame so
     * the base term never needs a per-iteration join.
     */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-                           d: Double = 0.85): DataFrame = {
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+                           iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val big = iters > ckptEvery
     val e0 = edges.select(col("src"), col("dst"))
@@ -190,9 +193,9 @@ object Graph {
         .groupBy(col("dst")).agg(sum(col("cfp")).as("s"))
       pr = tagged.join(contrib, col("id") === col("dst"), "left")
         .select(col("id"),
-          (when(col("is_seed"), lit(1.0 - d) / col("ns").cast("double"))
+          (when(col("is_seed"), lit(1.0 - Damping) / col("ns").cast("double"))
             .otherwise(lit(0.0)) +
-            lit(d) * (coalesce(col("s"), lit(0L)).cast("double") / lit(1e9)))
+            lit(Damping) * (coalesce(col("s"), lit(0L)).cast("double") / lit(1e9)))
             .as("pr"))
       if (big && (r % ckptEvery == 0 || r == iters)) {
         val (c, o) = truncate(pr, owned); pr = c; owned = o
@@ -361,20 +364,6 @@ object Graph {
       .select(col("n"), col("slope"), col("r"))
   }
 
-  /** Synchronous label-propagation community detection — `iters`
-    * rounds of: every node adopts the label most frequent among its
-    * (undirected) neighbors, ties to the SMALLEST label. The node set
-    * is the endpoints of NON-self-loop edges — a node with no edges,
-    * or only self-loops, has no neighbors to vote and is absent from
-    * the output (left-join it back as its own singleton community if
-    * the caller needs full coverage). Labels start as node ids, so the result is
-    * deterministic on any engine (plain LPA's random update order is
-    * replaced by the synchronous sweep + total-order tiebreak). Per
-    * round: one equi-join shuffle (labels × edges on the source key) +
-    * one count aggregate on (node, label) + one argmin — the same
-    * per-iteration economics as [[pageRank]], scaling to billions of
-    * edges. Output: (id, community).
-    */
   /** K-CORE membership after `rounds` synchronous peels — the
     * degeneracy screen that separates a graph's connected backbone
     * from its fringe (spam/link-farm detection reads it next to
@@ -508,6 +497,20 @@ object Graph {
         col("ra_micro"))
   }
 
+  /** Synchronous label-propagation community detection — `iters`
+    * rounds of: every node adopts the label most frequent among its
+    * (undirected) neighbors, ties to the SMALLEST label. The node set
+    * is the endpoints of NON-self-loop edges — a node with no edges,
+    * or only self-loops, has no neighbors to vote and is absent from
+    * the output (left-join it back as its own singleton community if
+    * the caller needs full coverage). Labels start as node ids, so the result is
+    * deterministic on any engine (plain LPA's random update order is
+    * replaced by the synchronous sweep + total-order tiebreak). Per
+    * round: one equi-join shuffle (labels × edges on the source key) +
+    * one count aggregate on (node, label) + one argmin — the same
+    * per-iteration economics as [[pageRank]], scaling to billions of
+    * edges. Output: (id, community).
+    */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val big = iters > ckptEvery

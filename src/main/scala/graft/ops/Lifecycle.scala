@@ -40,8 +40,6 @@ object Lifecycle {
       warehouseRoot: String,
       expectedMinSymbols: Long,
       asOf: String,
-      gapDays: Int = 14,
-      gapSince: String = "2024-01-01",
       useSnapshot: Boolean = false,
       startDate: Option[String] = None,
       endDate: Option[String] = None)
@@ -80,12 +78,7 @@ object Lifecycle {
       if (cfg.useSnapshot)
         graft.sources.Snapshot.latestVersion(prices)
           .map(_ => graft.sources.Snapshot.read(spark, prices))
-      else
-        try Some(spark.read.parquet(prices))
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => None
-        }
+      else Merge.readIfPresent(spark, prices)
     // Freshness gate (check_needs_update, main.py:100-111): sync iff
     // the store is absent, empty, or its MAX(date) predates `asOf`.
     val before = readStore()
@@ -109,7 +102,7 @@ object Lifecycle {
             cfg.endDate.map(d => col("date") <= to_date(lit(d))))
           .flatten
           .foldLeft(Pipeline.ingestCsvDir(spark, cfg.csvDir))(_.filter(_))
-        val slice = Pipeline.dailySlice(bars, cfg.gapDays, cfg.gapSince)
+        val slice = Pipeline.dailySlice(bars)
         val validBars = Quality.excludeRejected(
           bars.na.drop(Seq("open", "high", "low", "close")),
           col("symbol"), slice.rejections)

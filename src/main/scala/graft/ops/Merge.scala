@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Keyed upsert — the single most load-bearing semantic in the reference
@@ -78,6 +78,20 @@ object Merge {
       struct(Seq(col(versionCol), col("__src")) ++ tiebreaks: _*)
     ).drop("__src")
 
+  /** The parquet table at `path`, or None when nothing exists there.
+    * Absence is asked of the path's Hadoop FileSystem first, so a first
+    * write to a new table reads nothing and logs nothing. Only that
+    * definite absence means "absent": any other I/O or parse error
+    * PROPAGATES — treating it as absent would rewrite the table with
+    * just the incoming batch and silently drop history.
+    */
+  def readIfPresent(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+      Some(spark.read.parquet(path))
+    else None
+  }
+
   /** Partition-scoped physical merge: only date-partitions present in the
     * incoming batch are read, merged and rewritten (dynamic partition
     * overwrite, set on this write only — the session conf is untouched).
@@ -86,15 +100,7 @@ object Merge {
     */
   def upsertIntoPath(incoming: DataFrame, tablePath: String, keys: Seq[String],
                      versionCol: String, partitionCol: String): Unit = {
-    val spark = incoming.sparkSession
-    // Only a definite path-not-found means "table absent". A transient FS
-    // or parse error must PROPAGATE — treating it as absent would rewrite
-    // the table with just the incoming batch and silently drop history.
-    val table = try Some(spark.read.parquet(tablePath)) catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getCondition == "PATH_NOT_FOUND" => None
-    }
-    val merged = table.fold(incoming) { existing =>
+    val merged = readIfPresent(incoming.sparkSession, tablePath).fold(incoming) { existing =>
       // Partition-prune the existing side to the touched partitions only.
       val touched = incoming.select(col(partitionCol)).distinct()
       upsert(existing.join(broadcast(touched), Seq(partitionCol), "left_semi"),

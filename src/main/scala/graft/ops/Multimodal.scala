@@ -576,18 +576,18 @@ object Multimodal {
     h
   }
 
-  /** Decode → [[averageHash]] per payload, batched like every media
-    * stage (payloads never cross a shuffle; at most `batchSize`
-    * resident per task). Undecodable payloads emit hash −1 — flow on,
-    * never crash (the [[FormatDecoder]] convention).
+  /** Decode → [[averageHash]] per payload, streamed through one
+    * mapPartitions (payloads never cross a shuffle; each is decoded and
+    * dropped as the task's iterator reaches it). Undecodable payloads
+    * emit hash −1 — flow on, never crash (the [[FormatDecoder]]
+    * convention).
     */
-  def imageHashesBatched(media: Dataset[(Long, Array[Byte])],
-                         batchSize: Int = 64): DataFrame = {
+  def imageHashesBatched(media: Dataset[(Long, Array[Byte])]): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, bytes) =>
+      it.map { case (id, bytes) =>
         (id, parseBmp(bytes).map(averageHash).getOrElse(-1L))
-      })
+      }
     }.toDF("id", "hash")
   }
 
@@ -625,8 +625,9 @@ object Multimodal {
   }
 
   /** Image RESIZE stage: decode → nearest-neighbor resample → re-encode,
-    * one payload batch at a time inside a single mapPartitions (payloads
-    * never cross a shuffle; at most `batchSize` are resident per task).
+    * one payload at a time inside a single mapPartitions (payloads
+    * never cross a shuffle; each is decoded and dropped as the task's
+    * iterator reaches it).
     * Emits a media column again — stages compose: a downstream
     * [[decodeFeaturesBatched]] re-parses the resized bytes, so the full
     * decode→transform→encode→decode round trip is exercised, exactly the
@@ -636,18 +637,17 @@ object Multimodal {
     * other-modality rows flow on rather than killing the pipeline).
     */
   def resizeImagesBatched(media: Dataset[(Long, Array[Byte])],
-                          outW: Int, outH: Int,
-                          batchSize: Int = 64): Dataset[(Long, Array[Byte])] = {
+                          outW: Int, outH: Int): Dataset[(Long, Array[Byte])] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, bytes) =>
+      it.map { case (id, bytes) =>
         parseBmp(bytes) match {
           case Some(b) =>
             val r = resizeNearest(b, outW, outH)
             (id, bmpBytes(r.width, r.height, r.pixels))
           case None => (id, bytes)
         }
-      })
+      }
     }
   }
 
@@ -668,12 +668,11 @@ object Multimodal {
     * omission: a corrupt payload contributes silence, not a crash).
     */
   def wavFrameFeaturesBatched(media: Dataset[(Long, Array[Byte])],
-                              frameLen: Int,
-                              batchSize: Int = 64): Dataset[FrameFeatures] = {
+                              frameLen: Int): Dataset[FrameFeatures] = {
     require(frameLen > 0, "frameLen must be positive")
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
+      it.flatMap { case (id, bytes) =>
         parseWav(bytes).iterator.flatMap { w =>
           val n = w.samples.length / frameLen
           (0 until n).iterator.map { f =>
@@ -690,7 +689,7 @@ object Multimodal {
             FrameFeatures(id, f, zc, en)
           }
         }
-      })
+      }
     }
   }
 
@@ -719,14 +718,13 @@ object Multimodal {
     * [[wavFrameFeaturesBatched]] contract).
     */
   def wavSequencyEnergyBatched(media: Dataset[(Long, Array[Byte])],
-                               frameLen: Int,
-                               batchSize: Int = 64)
+                               frameLen: Int)
       : Dataset[SequencyEnergy] = {
     require(frameLen > 0 && (frameLen & (frameLen - 1)) == 0,
       "frameLen must be a positive power of two")
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
+      it.flatMap { case (id, bytes) =>
         parseWav(bytes).iterator.flatMap { w =>
           val nFrames = w.samples.length / frameLen
           if (nFrames == 0) Iterator.empty
@@ -762,7 +760,7 @@ object Multimodal {
               SequencyEnergy(id, k, acc(k)))
           }
         }
-      })
+      }
     }
   }
 
@@ -817,12 +815,11 @@ object Multimodal {
     * containers, and frames that fail the BMP parse, emit nothing.
     */
   def videoFrameSampleBatched(media: Dataset[(Long, Array[Byte])],
-                              stride: Int,
-                              batchSize: Int = 64): Dataset[SampledFrame] = {
+                              stride: Int): Dataset[SampledFrame] = {
     require(stride > 0, "stride must be positive")
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
+      it.flatMap { case (id, bytes) =>
         parseMbmp(bytes).iterator.flatMap { frames =>
           frames.iterator.zipWithIndex
             .filter { case (_, f) => f % stride == 0 }
@@ -836,7 +833,7 @@ object Multimodal {
               }
             }
         }
-      })
+      }
     }
   }
 
@@ -932,12 +929,11 @@ object Multimodal {
     * (emitting nothing further) rather than comparing garbage.
     */
   def sceneCutsBatched(media: Dataset[(Long, Array[Byte])],
-                       thresh: Long,
-                       batchSize: Int = 64): Dataset[FrameTransition] = {
+                       thresh: Long): Dataset[FrameTransition] = {
     require(thresh > 0, "thresh must be positive")
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
+      it.flatMap { case (id, bytes) =>
         parseMbmp(bytes).iterator.flatMap { frames =>
           val decoded = frames.iterator.map(parseBmp)
             .takeWhile(_.isDefined).map(_.get).toSeq
@@ -956,7 +952,7 @@ object Multimodal {
               FrameTransition(id, i + 1, sad, sad > thresh)
           }
         }
-      })
+      }
     }
   }
 
@@ -984,12 +980,11 @@ object Multimodal {
                              clip_micro: Long)
 
   def wavClippingBatched(media: Dataset[(Long, Array[Byte])],
-                         thresh: Int,
-                         batchSize: Int = 64): Dataset[ClipAudit] = {
+                         thresh: Int): Dataset[ClipAudit] = {
     require(thresh > 0, "thresh must be positive")
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
+      it.flatMap { case (id, bytes) =>
         parseWav(bytes).map { wv =>
           var clipped = 0
           var peak = 0
@@ -1004,17 +999,16 @@ object Multimodal {
           ClipAudit(id, n, clipped, peak,
             if (n == 0) 0L else clipped.toLong * 1000000L / n)
         }
-      })
+      }
     }
   }
 
   def wavTrimSilenceBatched(media: Dataset[(Long, Array[Byte])],
-                            thresh: Int,
-                            batchSize: Int = 64): Dataset[TrimAudit] = {
+                            thresh: Int): Dataset[TrimAudit] = {
     require(thresh >= 0, "thresh must be >= 0")
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, bytes) =>
+      it.flatMap { case (id, bytes) =>
         parseWav(bytes).map { w =>
           val s = w.samples
           var first = 0
@@ -1029,7 +1023,7 @@ object Multimodal {
               last - first + 1)
           }
         }
-      })
+      }
     }
   }
 }

@@ -19,12 +19,12 @@ object Notifier {
   private def pct1(num: Long, den: Long): String =
     if (den <= 0) "0.0" else f"${num * 100.0 / den}%.1f"
 
-  /** Fail-list sample: first `cap` entries, then a count suffix. */
-  def failSummary(fails: Seq[String], cap: Int = 20): String =
+  /** Fail-list sample: first 20 entries, then a count suffix. */
+  def failSummary(fails: Seq[String]): String =
     if (fails.isEmpty) "none"
     else {
-      val shown = fails.take(cap).mkString(", ")
-      if (fails.size > cap) s"$shown ...and ${fails.size - cap} more" else shown
+      val shown = fails.take(20).mkString(", ")
+      if (fails.size > 20) s"$shown ...and ${fails.size - 20} more" else shown
     }
 
   private def statusColor(s: MarketSummary): String =

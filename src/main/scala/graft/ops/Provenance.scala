@@ -81,15 +81,19 @@ object Provenance {
   }
 
   /** One halving level: pair ranks by DIV 2, md5 the ordered pair, a
-    * 1-node group (odd tail / post-root) passes through.
+    * 1-node group (odd tail / post-root) passes through. Frees `cur`'s
+    * checkpoint once the new level is materialized and no longer reads it.
     */
-  private def collapse(cur: DataFrame): DataFrame =
-    cur.groupBy(expr("r DIV 2").as("r"))
+  private def collapse(cur: DataFrame): DataFrame = {
+    val next = cur.groupBy(expr("r DIV 2").as("r"))
       .agg(count(lit(1)).as("c"), min_by(col("h"), col("r")).as("l"),
         max_by(col("h"), col("r")).as("x"))
       .select(col("r"), when(col("c") === 2,
         md5(concat(col("l"), col("x")))).otherwise(col("l")).as("h"))
       .localCheckpoint(true)
+    Frames.release(cur)
+    next
+  }
 
   /** The Merkle root of `df`'s rows hashed over `cols`. Returns a
     * one-row frame (n_leaves, levels, root). levels = ⌈log₂ n⌉;
@@ -109,6 +113,7 @@ object Provenance {
     }
     val root: Option[String] =
       if (leaves == 0) None else Some(cur.select(col("h")).head().getString(0))
+    Frames.release(cur)
     Seq((leaves, levels, root)).toDF("n_leaves", "levels", "root")
   }
 
@@ -158,6 +163,7 @@ object Provenance {
       n = cur.count()
     }
     val root = cur.select(col("h")).head().getString(0)
+    Frames.release(cur)
     path.toSeq.toDF("level", "side", "sibling", "acc")
       .withColumn("root", lit(root))
   }

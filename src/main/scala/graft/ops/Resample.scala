@@ -115,12 +115,10 @@ object Resample {
         (sum(col("term_c")).cast("double") / 100.0).as("decayed_sum"))
   }
 
-  def periodReturn(bars: DataFrame, key: String = "symbol",
-                   period: String = "period",
-                   close: String = "close"): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(period))
+  def periodReturn(bars: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("symbol")).orderBy(col("period"))
     bars.withColumn("return",
-      round(col(close) / lag(col(close), 1).over(w) - lit(1.0), 4))
+      round(col("close") / lag(col("close"), 1).over(w) - lit(1.0), 4))
   }
 
   /** MAXIMUM DRAWDOWN per series — the canonical risk read: the

@@ -179,8 +179,7 @@ object Similarity {
     * rel_micro, score_micro).
     */
   def mmrRerank(queries: DataFrame, candidates: DataFrame, poolK: Int,
-                k: Int, lamNum: Int = 7, lamDen: Int = 10,
-                maxQueries: Long = DefaultMaxQueries): DataFrame = {
+                k: Int, lamNum: Int = 7, lamDen: Int = 10): DataFrame = {
     require(poolK >= k && k >= 1, "need poolK >= k >= 1")
     require(lamNum >= 0 && lamNum <= lamDen, "need 0 <= lamNum <= lamDen")
     // Pool pairwise sims are |queries|·poolK² rows and each of the k
@@ -196,7 +195,7 @@ object Similarity {
       s"mmrRerank runs k driver-coordinated greedy rounds — k=$k exceeds" +
         " the 1000-round bound")
     val spark = queries.sparkSession
-    val rel = bruteForceTopK(queries, candidates, poolK, maxQueries)
+    val rel = bruteForceTopK(queries, candidates, poolK)
       .select(col("query_id").cast("long").as("qid"),
         col("neighbor_id").cast("long").as("cid"),
         snapMicro(col("sim")).as("rel_m"))
@@ -263,9 +262,8 @@ object Similarity {
     * stream unchanged. Output: (query_id, neighbor_id, rank, sim).
     */
   def hardNegatives(queries: DataFrame, candidates: DataFrame,
-                    dupThreshold: Double, k: Int,
-                    maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    guardBoundedQueries(queries, maxQueries, "hardNegatives")
+                    dupThreshold: Double, k: Int): DataFrame = {
+    guardBoundedQueries(queries, DefaultMaxQueries, "hardNegatives")
     // per-row norm hoist — see cosineHoisted (bit-identical recompose)
     val q = queries.select(col("id").as("query_id"),
       col("vec").cast("array<double>").as("qv"),
@@ -688,7 +686,18 @@ object Similarity {
     // re-analyzes the deepening tree each round, the duplicateClusters
     // super-linear pathology — and (b) pins the k rows for callers
     // that run SEVERAL separate actions against one trained set.
-    for (_ <- 1 to iters) c = kmeansStep(vecs, c).localCheckpoint(true)
+    for (_ <- 1 to iters) c = nextCentroids(c, init, kmeansStep(vecs, c))
+    c
+  }
+
+  /** Checkpoint `next` (eagerly), then free `prev` unless it is the
+    * caller's `init` — the shared loop step of [[kmeansTrain]] and
+    * [[kmeansTrainL2]].
+    */
+  private def nextCentroids(prev: DataFrame, init: DataFrame,
+                            next: DataFrame): DataFrame = {
+    val c = next.localCheckpoint(true)
+    if (prev ne init) Frames.release(prev)
     c
   }
 
@@ -705,7 +714,7 @@ object Similarity {
 
   /** IVF cell-count chooser — the scale contract the frozen-k gate
     * queries pin only by constant (NOTES 100): k = ⌈c·√n⌉ clamped to
-    * [kMin, kMax]. √n is the COST-balanced point of the two phases of
+    * [4, 65536]. √n is the COST-balanced point of the two phases of
     * every cell-blocked kernel: assignment work is n·k (each vector
     * scores every centroid) and same-cell verify work is Σ occupancy²
     * ≈ n²/k for balanced cells — equal at k = √n, total Θ(n^1.5).
@@ -714,10 +723,9 @@ object Similarity {
     * (pure arithmetic on a count the caller supplies — at scale the
     * count comes from a manifest stat, never a full scan).
     */
-  def chooseK(n: Long, c: Double = 1.0, kMin: Int = 4,
-              kMax: Int = 65536): Int = {
+  def chooseK(n: Long, c: Double = 1.0): Int = {
     require(n >= 0, "n must be >= 0")
-    math.max(kMin, math.min(kMax,
+    math.max(4, math.min(65536,
       math.ceil(c * math.sqrt(n.toDouble)).toInt))
   }
 
@@ -1043,7 +1051,7 @@ object Similarity {
   def kmeansTrainL2(vecs: DataFrame, init: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
     var c = init
-    for (_ <- 1 to iters) c = kmeansStepL2(vecs, c).localCheckpoint(true)
+    for (_ <- 1 to iters) c = nextCentroids(c, init, kmeansStepL2(vecs, c))
     c
   }
 
@@ -1057,10 +1065,8 @@ object Similarity {
     * [[bruteForceTopKL2]] (spec-pinned).
     */
   def ivfSearchL2(queries: DataFrame, corpus: DataFrame,
-                  centroids: DataFrame, k: Int, nprobe: Int = 1,
-                  preAssigned: Boolean = false): DataFrame = {
-    val assigned =
-      if (preAssigned) corpus else ivfAssignL2(corpus, centroids)
+                  centroids: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
+    val assigned = ivfAssignL2(corpus, centroids)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("dist"), col("neighbor_id"))
     ivfProbeCellsL2(queries, centroids, nprobe)
@@ -1106,9 +1112,8 @@ object Similarity {
     */
   def ivfPqSearch(queries: DataFrame, corpus: DataFrame,
                   centroids: DataFrame, codebook: DataFrame,
-                  m: Int, k: Int, nprobe: Int = 1,
-                  maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    guardBoundedQueries(queries, maxQueries, "ivfPqSearch")
+                  m: Int, k: Int, nprobe: Int = 1): DataFrame = {
+    guardBoundedQueries(queries, DefaultMaxQueries, "ivfPqSearch")
     val assigned = ivfAssignL2(corpus, centroids).select(col("id"), col("cell"))
     val codes = pqEncode(corpus, codebook, m)
     val lut = subVectors(queries, m)
@@ -1153,11 +1158,10 @@ object Similarity {
     */
   def ivfPqSearchTiered(queries: DataFrame, corpus: DataFrame,
                         centroids: DataFrame, codebook: DataFrame,
-                        m: Int, k: Int, nprobes: Seq[Int],
-                        maxQueries: Long = DefaultMaxQueries): DataFrame = {
+                        m: Int, k: Int, nprobes: Seq[Int]): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1),
       "nprobes must be non-empty positive")
-    guardBoundedQueries(queries, maxQueries, "ivfPqSearchTiered")
+    guardBoundedQueries(queries, DefaultMaxQueries, "ivfPqSearchTiered")
     val assigned = ivfAssignL2(corpus, centroids).select(col("id"), col("cell"))
     val codes = pqEncode(corpus, codebook, m)
     val lut = subVectors(queries, m)
@@ -1215,9 +1219,8 @@ object Similarity {
   def ivfPqSearchResidual(queries: DataFrame, corpus: DataFrame,
                           centroids: DataFrame, m: Int, ksub: Int,
                           k: Int, nprobe: Int = 1,
-                          seedFrom: Long = 0L,
-                          maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    guardBoundedQueries(queries, maxQueries, "ivfPqSearchResidual")
+                          seedFrom: Long = 0L): DataFrame = {
+    guardBoundedQueries(queries, DefaultMaxQueries, "ivfPqSearchResidual")
     val assigned = ivfAssignL2(corpus, centroids)
     val resid = assigned.join(broadcast(centroids),
         col("cell") === col("cid"))
@@ -1338,8 +1341,8 @@ object Similarity {
     * broadcast against the streaming code scan.
     */
   def sqTopK(queries: DataFrame, codes: DataFrame, stats: DataFrame,
-             k: Int, maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    guardBoundedQueries(queries, maxQueries, "sqTopK")
+             k: Int): DataFrame = {
+    guardBoundedQueries(queries, DefaultMaxQueries, "sqTopK")
     val dec = codes.crossJoin(broadcast(stats))
       .select(col("id").as("neighbor_id"),
         transform(arrays_zip(col("codes"), col("mns"), col("mxs")), q =>
@@ -1441,9 +1444,8 @@ object Similarity {
     * the [[bruteForceTopK]] contract.
     */
   def binaryTopC(queryCodes: DataFrame, codes: DataFrame,
-                 shortlist: Int,
-                 maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    guardBoundedQueries(queryCodes, maxQueries, "binaryTopC")
+                 shortlist: Int): DataFrame = {
+    guardBoundedQueries(queryCodes, DefaultMaxQueries, "binaryTopC")
     val q = queryCodes.select(col("id").as("qid"),
       col("words").as("qw"))
     val w = Window.partitionBy(col("qid"))
@@ -1474,9 +1476,8 @@ object Similarity {
     * CONTRACT: `queries` bounded — their prefixes broadcast.
     */
   def truncatedCandidates(queries: DataFrame, corpus: DataFrame,
-                          prefixDims: Int, shortlist: Int,
-                          maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    guardBoundedQueries(queries, maxQueries, "truncatedCandidates")
+                          prefixDims: Int, shortlist: Int): DataFrame = {
+    guardBoundedQueries(queries, DefaultMaxQueries, "truncatedCandidates")
     val q = queries.select(col("id").as("qid"),
         slice(col("vec"), 1, prefixDims).cast("array<double>").as("qp"))
       .withColumn("qpn", normHoisted(col("qp")))
@@ -1749,9 +1750,8 @@ object Similarity {
     * edges). Brute-force kNN — the exact read; sample `vecs` upstream
     * at corpus scale (the B² guard applies).
     */
-  def hubnessStats(vecs: DataFrame, k: Int,
-                   maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    val tk = bruteForceTopK(vecs, vecs, k, maxQueries)
+  def hubnessStats(vecs: DataFrame, k: Int): DataFrame = {
+    val tk = bruteForceTopK(vecs, vecs, k)
     val indeg = vecs.select(col("id"))
       .join(tk.groupBy(col("neighbor_id").as("id"))
         .agg(count(lit(1)).as("d")), Seq("id"), "left")
@@ -2055,10 +2055,10 @@ object Similarity {
     * bounded window. Production valuations sample the pool per probe.
     * Output: (id, rank, y_match, sim_micro, shapley_nano).
     */
-  def knnShapley(probeVec: DataFrame, candidates: DataFrame, k: Int,
-                 maxCandidates: Long = 100000L): DataFrame = {
+  def knnShapley(probeVec: DataFrame, candidates: DataFrame,
+                 k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    guardBoundedQueries(candidates, maxCandidates, "knnShapley")
+    guardBoundedQueries(candidates, 100000L, "knnShapley")
     val p = probeVec.select(col("vec").as("pv"), col("y").as("py"))
     val scored = candidates.crossJoin(broadcast(p))
       .select(col("id"),
@@ -2087,10 +2087,9 @@ object Similarity {
         col("shapley_nano"))
   }
 
-  def marginMining(left: DataFrame, right: DataFrame, k: Int,
-                   maxQueries: Long = DefaultMaxQueries): DataFrame = {
-    val lr = bruteForceTopK(left, right, k, maxQueries)
-    val rl = bruteForceTopK(right, left, k, maxQueries)
+  def marginMining(left: DataFrame, right: DataFrame, k: Int): DataFrame = {
+    val lr = bruteForceTopK(left, right, k)
+    val rl = bruteForceTopK(right, left, k)
     val ml = lr.groupBy(col("query_id").as("id_l"))
       .agg(tdiv(sum(snapMicro(col("sim"))), count(lit(1))).as("ml"))
     val mr = rl.groupBy(col("query_id").as("id_r"))
@@ -2118,10 +2117,9 @@ object Similarity {
     * (query_id, neighbor_id, rank, maxsim_micro).
     */
   def lateInteractionTopK(queries: DataFrame, docs: DataFrame,
-                          m: Int, k: Int,
-                          maxQueries: Long = DefaultMaxQueries): DataFrame = {
+                          m: Int, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    guardBoundedQueries(queries, maxQueries, "lateInteractionTopK")
+    guardBoundedQueries(queries, DefaultMaxQueries, "lateInteractionTopK")
     // slot norms hoisted out of the m²·|Q|·|D| pair block (subVectors
     // enforces equal slot lengths, so cosineHoisted's equal-dim
     // precondition holds across every slot pair)

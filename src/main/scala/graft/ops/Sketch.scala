@@ -21,7 +21,7 @@ import graft.ops.Cols.{dec, fdiv}
   * tables, never a rescan.
   *
   * Determinism details:
-  *  - bucket = first `bHex` hex chars of md5 (4·bHex bits);
+  *  - bucket = first `BHex` hex chars of md5 (4·BHex bits);
   *  - rho = leading-zero count of the REMAINING hex string + 1, derived
   *    with string ops only (no floating log2, whose libm rounding could
   *    disagree between engines near powers of two);
@@ -34,13 +34,21 @@ import graft.ops.Cols.{dec, fdiv}
   */
 object Sketch {
 
+  /** HLL bucket width in hex digits: m = 16^BHex = 4096 registers. */
+  private val BHex = 3
+  /** Count-min geometry: CmDepth hash rows × CmWidth buckets. */
+  private val CmDepth = 4
+  private val CmWidth = 1024
+  /** Bloom geometry: BloomK hash rows over BloomM buckets. */
+  private val BloomK = 5
+  private val BloomM = 8192
+
   /** Register table: `groups ++ (bucket, rho)` with rho = max over the
-    * group's values. `bHex` hex digits of bucket → m = 16^bHex registers.
+    * group's values. `BHex` hex digits of bucket → m = 16^BHex registers.
     */
-  def hllRegisters(df: DataFrame, groups: Seq[String], value: Column,
-                   bHex: Int = 3): DataFrame = {
+  def hllRegisters(df: DataFrame, groups: Seq[String], value: Column): DataFrame = {
     val h = md5(value.cast("string"))
-    val rest = substring(h, bHex + 1, 32 - bHex)
+    val rest = substring(h, BHex + 1, 32 - BHex)
     val stripped = ltrim(rest, "0")
     val firstNz = substring(stripped, 1, 1)
     // extra zero BITS inside the first non-zero hex digit
@@ -48,17 +56,17 @@ object Sketch {
       .when(firstNz.isin("2", "3"), 2)
       .when(firstNz.isin("4", "5", "6", "7"), 1)
       .otherwise(0)
-    val rho = when(length(stripped) === 0, lit(4 * (32 - bHex) + 1))
+    val rho = when(length(stripped) === 0, lit(4 * (32 - BHex) + 1))
       .otherwise((length(rest) - length(stripped)) * 4 + extra + 1)
     df.select(
         groups.map(col) ++ Seq(
-          conv(substring(h, 1, bHex), 16, 10).cast("int").as("bucket"),
+          conv(substring(h, 1, BHex), 16, 10).cast("int").as("bucket"),
           rho.cast("int").as("rho")): _*)
       .groupBy(groups.map(col) :+ col("bucket"): _*)
       .agg(max(col("rho")).as("rho"))
   }
 
-  /** Merge two register tables (same groups/bHex): per-bucket max —
+  /** Merge two register tables (same groups): per-bucket max —
     * the associative/commutative sketch union.
     */
   def hllMerge(a: DataFrame, b: DataFrame, groups: Seq[String]): DataFrame =
@@ -70,9 +78,8 @@ object Sketch {
     * the linear-counting small-range correction, rounded to 2 decimals
     * through a decimal(20,10) snap.
     */
-  def hllEstimate(registers: DataFrame, groups: Seq[String],
-                  bHex: Int = 3): DataFrame = {
-    val m = math.pow(16.0, bHex) // exact for bHex <= 7
+  def hllEstimate(registers: DataFrame, groups: Seq[String]): DataFrame = {
+    val m = math.pow(16.0, BHex) // exact for BHex <= 7
     // Σ 2^(50-rho) as exact integers: floor() pins the >50 underflow to
     // 0 on engines that round rather than truncate their bigint cast
     val term = floor(pow(lit(2.0), lit(50) - col("rho"))).cast("long")
@@ -94,9 +101,8 @@ object Sketch {
   }
 
   /** One-shot convenience: registers → estimate. */
-  def hllDistinct(df: DataFrame, groups: Seq[String], value: Column,
-                  bHex: Int = 3): DataFrame =
-    hllEstimate(hllRegisters(df, groups, value, bHex), groups, bHex)
+  def hllDistinct(df: DataFrame, groups: Seq[String], value: Column): DataFrame =
+    hllEstimate(hllRegisters(df, groups, value), groups)
 
   // ----- Count-min: point-frequency estimation, same portability rules -----
 
@@ -117,9 +123,8 @@ object Sketch {
     * matter the stream size; the shuffle carries (row, bucket) cells,
     * never the items.
     */
-  def cmRegisters(items: DataFrame, value: Column,
-                  d: Int = 4, w: Int = 1024): DataFrame =
-    items.select(cmCells(value, d, w).as("rb"))
+  def cmRegisters(items: DataFrame, value: Column): DataFrame =
+    items.select(cmCells(value, CmDepth, CmWidth).as("rb"))
       .select(col("rb.row").as("row"), col("rb.bucket").as("bucket"))
       .groupBy(col("row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
@@ -130,20 +135,19 @@ object Sketch {
       .agg(sum(col("cnt")).as("cnt"))
 
   /** Equi-join cardinality estimate from two count-min register tables
-    * (same d/w): |A ⋈ B| ≈ min over hash rows of Σ_bucket cntA·cntB.
+    * |A ⋈ B| ≈ min over hash rows of Σ_bucket cntA·cntB.
     * Each row's inner product equals the true join size plus
     * NON-NEGATIVE collision noise, so the minimum never underestimates
     * (the AMS/CM inner-product bound). All-integer, mergeable inputs,
     * no join executed — the planning probe that decides broadcast vs
     * shuffle vs skew-salt at 100 TB from d·w-cell state per side.
     */
-  def cmJoinSizeEstimate(ra: DataFrame, rb: DataFrame,
-                         d: Int = 4): DataFrame = {
+  def cmJoinSizeEstimate(ra: DataFrame, rb: DataFrame): DataFrame = {
     val spark = ra.sparkSession
     // every hash row participates in the min: a row whose sketches
     // share NO bucket has inner product 0 (and proves the true join is
     // empty) — dropping it from the inner join would overestimate
-    val rows = spark.range(d).select(col("id").cast("int").as("row"))
+    val rows = spark.range(CmDepth).select(col("id").cast("int").as("row"))
     val sums = ra.select(col("row"), col("bucket"), col("cnt").as("ca"))
       .join(rb.select(col("row"), col("bucket"), col("cnt").as("cb")),
         Seq("row", "bucket"))
@@ -156,9 +160,8 @@ object Sketch {
   /** Point estimates for `probes`: min over the d cells a probe hashes
     * to (absent cell = 0). Never underestimates the true count.
     */
-  def cmEstimate(registers: DataFrame, probes: DataFrame, value: String,
-                 d: Int = 4, w: Int = 1024): DataFrame =
-    probes.select(col(value), cmCells(col(value), d, w).as("rb"))
+  def cmEstimate(registers: DataFrame, probes: DataFrame, value: String): DataFrame =
+    probes.select(col(value), cmCells(col(value), CmDepth, CmWidth).as("rb"))
       .select(col(value), col("rb.row").as("row"), col("rb.bucket").as("bucket"))
       .join(registers, Seq("row", "bucket"), "left")
       .groupBy(col(value))
@@ -174,13 +177,12 @@ object Sketch {
     * exactly (e.g. "already-ingested document ids") with zero false
     * negatives, before the exact anti-join touches only survivors.
     */
-  def bloomRegisters(df: DataFrame, value: Column,
-                     k: Int = 5, m: Int = 8192): DataFrame =
-    df.select(cmCells(value, k, m).as("rb"))
+  def bloomRegisters(df: DataFrame, value: Column): DataFrame =
+    df.select(cmCells(value, BloomK, BloomM).as("rb"))
       .select(col("rb.row").as("row"), col("rb.bucket").as("bucket"))
       .distinct()
 
-  /** Union of two Bloom filters (same k/m): set union of cells. */
+  /** Union of two Bloom filters: set union of cells. */
   def bloomMerge(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).distinct()
 
@@ -188,14 +190,14 @@ object Sketch {
     * possibly-in-set (false positives shrink with m), never a false
     * negative.
     */
-  def bloomMightContain(registers: DataFrame, probes: DataFrame, value: String,
-                        k: Int = 5, m: Int = 8192): DataFrame =
-    probes.select(col(value), cmCells(col(value), k, m).as("rb"))
+  def bloomMightContain(registers: DataFrame, probes: DataFrame,
+                        value: String): DataFrame =
+    probes.select(col(value), cmCells(col(value), BloomK, BloomM).as("rb"))
       .select(col(value), col("rb.row").as("row"), col("rb.bucket").as("bucket"))
       .join(registers.withColumn("__hit", lit(1)),
         Seq("row", "bucket"), "left")
       .groupBy(col(value))
-      .agg((sum(coalesce(col("__hit"), lit(0))) === k).as("might_contain"))
+      .agg((sum(coalesce(col("__hit"), lit(0))) === BloomK).as("might_contain"))
 
   // ----- Histogram quantiles: one-pass mergeable percentiles -----
 

@@ -122,22 +122,6 @@ object SuffixArray {
     Corpus(real.unionByName(sents), numDocs, numSlots, maxSlots, vr)
   }
 
-  /** The doubling loop shared by [[build]] and [[buildTo]] (see the
-    * object scaladoc for the count-below/freeze mechanics; exits as
-    * soon as no tied group remains, and each round eagerly
-    * localCheckpoints — the measured iterative-op convention). The
-    * per-round unresolved count rides a Dataset.observe metric
-    * collected DURING the checkpoint's own materialization action —
-    * no separate count job per round (r15: at gate scale that was one
-    * extra scheduler round per doubling round; at 100 TB one extra
-    * full pass over the rank frame per round). A narrow
-    * (gpos, rank, cnt)-only variant with an end join-back for the
-    * identity columns was ALSO measured this round and REJECTED: the
-    * re-attach join's own exchange+checkpoint cost more than the
-    * narrower tied-side shuffles saved (BenchSome q356–q373 sum 61.0 s
-    * vs 52.2 s at HEAD), and the geometric tie shrinkage means round 1
-    * is the only wide shuffle that matters.
-    */
   /** Bounded read of the observed unresolved count. `obs.get` blocks
     * INDEFINITELY; it was safe only because the eager localCheckpoint
     * routes through withAction and fires the metric listener (r15
@@ -174,6 +158,22 @@ object SuffixArray {
     (full, unresolvedOf(obs0, full.filter(col("cnt") > 1).count()))
   }
 
+  /** The doubling loop shared by [[build]] and [[buildTo]] (see the
+    * object scaladoc for the count-below/freeze mechanics; exits as
+    * soon as no tied group remains, and each round eagerly
+    * localCheckpoints — the measured iterative-op convention). The
+    * per-round unresolved count rides a Dataset.observe metric
+    * collected DURING the checkpoint's own materialization action —
+    * no separate count job per round (r15: at gate scale that was one
+    * extra scheduler round per doubling round; at 100 TB one extra
+    * full pass over the rank frame per round). A narrow
+    * (gpos, rank, cnt)-only variant with an end join-back for the
+    * identity columns was ALSO measured this round and REJECTED: the
+    * re-attach join's own exchange+checkpoint cost more than the
+    * narrower tied-side shuffles saved (BenchSome q356–q373 sum 61.0 s
+    * vs 52.2 s at HEAD), and the geometric tie shrinkage means round 1
+    * is the only wide shuffle that matters.
+    */
   private def doublingRounds(full: DataFrame, unresolved0: Long,
                              maxLen: Long,
                              rounds: Int): (DataFrame, Long,

@@ -1128,11 +1128,11 @@ object Text {
   def fuzzyJoinMultiBlock(probes: DataFrame, refs: DataFrame,
                           probeId: String, probeName: Column,
                           refId: String, refName: Column,
-                          maxDist: Int, maxBlockPairs: Long = 0L): DataFrame = {
+                          maxDist: Int): DataFrame = {
     val first = fuzzyPass(probes, refs, probeId, probeName, refId, refName,
-      maxDist, n => substring(n, 1, 1), maxBlockPairs)
+      maxDist, n => substring(n, 1, 1), 0L)
     val last = fuzzyPass(probes, refs, probeId, probeName, refId, refName,
-      maxDist, n => substring(n, -1, 1), maxBlockPairs)
+      maxDist, n => substring(n, -1, 1), 0L)
     first.unionByName(last)
       .groupBy(col("probe_id"), col("ref_id"))
       .agg(min(col("dist")).as("dist"))
@@ -1359,12 +1359,10 @@ object Text {
     * the equality).
     */
   def fuzzyJoinIncremental(oldRefs: DataFrame, batch: DataFrame,
-                           id: String, name: Column, maxDist: Int,
-                           maxBlockPairs: Long = 0L): DataFrame = {
-    val vsOld = fuzzyJoin(batch, oldRefs, id, name, id, name,
-      maxDist, maxBlockPairs)
-    val vsNew = fuzzyJoin(batch, batch, id, name, id, name,
-      maxDist, maxBlockPairs)
+                           id: String, name: Column,
+                           maxDist: Int): DataFrame = {
+    val vsOld = fuzzyJoin(batch, oldRefs, id, name, id, name, maxDist)
+    val vsNew = fuzzyJoin(batch, batch, id, name, id, name, maxDist)
       .filter(col("ref_id") < col("probe_id"))
     vsOld.unionByName(vsNew)
   }
@@ -1378,12 +1376,12 @@ object Text {
     * exactly that loss).
     */
   def fuzzyJoinIncrementalSegments(oldRefs: DataFrame, batch: DataFrame,
-                                   id: String, name: Column, maxDist: Int,
-                                   maxBlockPairs: Long = 0L): DataFrame = {
+                                   id: String, name: Column,
+                                   maxDist: Int): DataFrame = {
     val vsOld = fuzzyJoinSegments(batch, oldRefs, id, name, id, name,
-      maxDist, maxBlockPairs)
+      maxDist)
     val vsNew = fuzzyJoinSegments(batch, batch, id, name, id, name,
-      maxDist, maxBlockPairs)
+      maxDist)
       .filter(col("ref_id") < col("probe_id"))
     vsOld.unionByName(vsNew)
   }
@@ -1663,7 +1661,7 @@ object Text {
     * arithmetic on counts (cross-multiplied thresholds — never a float
     * ratio), so a SQL oracle replays it bit-for-bit and the same doc
     * passes identically on any engine:
-    *   r_word_count    — minWords ≤ words ≤ maxWords
+    *   r_word_count    — 50 ≤ words ≤ 100000
     *   r_mean_word_len — 3·words ≤ Σ token length ≤ 10·words
     *   r_symbol_ratio  — 10·(# '#' + # '…'-as-'...') ≤ words
     *   r_bullet_lines  — 10·(lines starting - * •) ≤ lines
@@ -1674,8 +1672,7 @@ object Text {
     * shuffle, no join; the filter a 100 TB screen wants pushed into
     * the first read. Output: (id, n_words, the 7 rule booleans, pass).
     */
-  def gopherRules(docs: DataFrame, id: Column, text: Column,
-                  minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
+  def gopherRules(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val gopherStops = Seq("the", "be", "to", "of", "and", "that",
       "have", "with")
     docs.select(id.as("id"), text.as("t"), tokens(text).as("tk"))
@@ -1692,7 +1689,7 @@ object Text {
         size(array_intersect(array_distinct(col("tk")),
           array(gopherStops.map(lit): _*))).cast("long").as("stop_hits"))
       .select(col("id"), col("nw").as("n_words"),
-        (col("nw") >= minWords && col("nw") <= maxWords)
+        (col("nw") >= 50 && col("nw") <= 100000)
           .as("r_word_count"),
         (lit(3L) * col("nw") <= col("sum_len") &&
           col("sum_len") <= lit(10L) * col("nw")).as("r_mean_word_len"),
@@ -1872,8 +1869,9 @@ object Text {
     * matched doc, not per posting.
     */
   def bm25(docs: DataFrame, idCol: String, text: Column,
-           queryTerms: DataFrame, k: Int,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+           queryTerms: DataFrame, k: Int): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     val lens = docs.select(col(idCol).as("id"), tokenCount(text).as("dl"),
       tokens(text).as("tk"))
     // N and total length in ONE row; avgdl enters every term as the

@@ -60,15 +60,15 @@ object ListAdapters {
     }.toSeq
   }
 
-  /** One pre-fetched HTML table → DataFrame with the first row as the
+  /** The document's first HTML table → DataFrame with the first row as the
     * header (pandas `read_html(header=0)`, downloader_tw.py:57). Ragged
     * rows pad with null; duplicate/blank header names are disambiguated
     * positionally.
     */
-  def htmlTableDf(spark: SparkSession, html: String, tableIndex: Int = 0): DataFrame = {
+  def htmlTableDf(spark: SparkSession, html: String): DataFrame = {
     val tables = parseHtmlTables(html)
-    require(tableIndex < tables.size, s"no table #$tableIndex in document (found ${tables.size})")
-    val rows = tables(tableIndex)
+    require(tables.nonEmpty, "no table in document")
+    val rows = tables.head
     require(rows.nonEmpty, "table has no rows")
     fromCells(spark, rows.head, rows.tail)
   }
@@ -96,15 +96,17 @@ object ListAdapters {
 
   // ---- S3: Excel scan with header-row discovery ------------------------
 
+  /** Leading rows of a sheet scan searched for its header row. */
+  private val ProbeRows = 20
+
   /** Find the header row of a headerless sheet scan: the first of the
-    * leading `probeRows` rows in which every required marker appears as
+    * leading `ProbeRows` rows in which every required marker appears as
     * a substring of some (cleaned) cell — the reference probes the first
     * 20 rows for "Stock Code" and "Short Name" (downloader_hk.py:74-81).
     * Only the tiny probe prefix ever reaches the driver.
     */
-  def discoverHeaderRow(rows: Seq[Seq[String]], required: Seq[String],
-                        probeRows: Int = 20): Option[Int] =
-    rows.take(probeRows).zipWithIndex.collectFirst {
+  def discoverHeaderRow(rows: Seq[Seq[String]], required: Seq[String]): Option[Int] =
+    rows.take(ProbeRows).zipWithIndex.collectFirst {
       case (r, i) if required.forall(m => r.exists(c => cleanCellStr(c).contains(m))) => i
     }
 
@@ -113,10 +115,10 @@ object ListAdapters {
     * the column names (downloader_hk.py:83-85).
     */
   def reHeader(spark: SparkSession, rows: Seq[Seq[String]],
-               required: Seq[String], probeRows: Int = 20): DataFrame = {
-    val idx = discoverHeaderRow(rows, required, probeRows).getOrElse(
+               required: Seq[String]): DataFrame = {
+    val idx = discoverHeaderRow(rows, required).getOrElse(
       throw new IllegalArgumentException(
-        s"no header row with ${required.mkString(", ")} in the first $probeRows rows"))
+        s"no header row with ${required.mkString(", ")} in the first $ProbeRows rows"))
     fromCells(spark, rows(idx), rows.drop(idx + 1))
   }
 
@@ -161,17 +163,14 @@ object ListAdapters {
     * alnum codes of length >= 4 survive, symbol = code + market suffix,
     * sector falls back to "Unknown" when the column is absent/null-ish.
     */
-  def twStockList(listed: DataFrame, suffix: String,
-                  codeCol: String = "有價證券代號",
-                  nameCol: String = "有價證券名稱",
-                  sectorCol: String = "產業別"): DataFrame = {
+  def twStockList(listed: DataFrame, suffix: String): DataFrame = {
     val sector =
-      if (listed.columns.contains(sectorCol))
-        Normalize.normalizeSector(cleanCell(col(sectorCol)))
+      if (listed.columns.contains("產業別"))
+        Normalize.normalizeSector(cleanCell(col("產業別")))
       else lit("Unknown")
     listed
-      .select(cleanCell(col(codeCol)).as("code"),
-        cleanCell(col(nameCol)).as("name"), sector.as("sector"))
+      .select(cleanCell(col("有價證券代號")).as("code"),
+        cleanCell(col("有價證券名稱")).as("name"), sector.as("sector"))
       .filter(Normalize.validSymbol(col("code")))
       .select(concat(col("code"), lit(suffix)).as("symbol"),
         col("name"), col("sector"))
@@ -202,19 +201,15 @@ object ListAdapters {
     * "ETFs*" products, symbol = code + ".T", sector defaulting to
     * Unknown, market = the Section/Products cell.
     */
-  def jpStockList(df: DataFrame,
-                  codeCol: String = "Local Code",
-                  nameCol: String = "Name (English)",
-                  prodCol: String = "Section/Products",
-                  sectorCol: String = "33 Sector(name)"): DataFrame =
-    df.filter(col(codeCol).isNotNull)
-      .withColumn("code", trim(Normalize.excelIntFix(col(codeCol))))
+  def jpStockList(df: DataFrame): DataFrame =
+    df.filter(col("Local Code").isNotNull)
+      .withColumn("code", trim(Normalize.excelIntFix(col("Local Code"))))
       .filter(Normalize.jpCommonStock(col("code")))
-      .withColumn("market", cleanCell(col(prodCol)))
+      .withColumn("market", cleanCell(col("Section/Products")))
       .filter(!col("market").startsWith("ETFs"))
       .select(concat(col("code"), lit(".T")).as("symbol"),
-        cleanCell(col(nameCol)).as("name"),
-        Normalize.normalizeSector(cleanCell(col(sectorCol))).as("sector"),
+        cleanCell(col("Name (English)")).as("name"),
+        Normalize.normalizeSector(cleanCell(col("33 Sector(name)"))).as("sector"),
         col("market"))
 
   // ---- S5: KIND industry map -------------------------------------------
@@ -222,10 +217,8 @@ object ListAdapters {
   /** KIND industry mapping (downloader_kr.py:27-50): 6-digit zero-padded
     * code → sector, the enrichment side of the KR sector join (J1).
     */
-  def kindIndustryMap(df: DataFrame,
-                      codeCol: String = "종목코드",
-                      sectorCol: String = "업종"): DataFrame =
+  def kindIndustryMap(df: DataFrame): DataFrame =
     df.select(
-      Normalize.zfill(cleanCell(col(codeCol)), 6).as("code"),
-      cleanCell(col(sectorCol)).as("sector"))
+      Normalize.zfill(cleanCell(col("종목코드")), 6).as("code"),
+      cleanCell(col("업종")).as("sector"))
 }

@@ -384,11 +384,12 @@ object Snapshot {
       perFile.map(p => p._1 -> p._2).toMap)
   }
 
-  /** Exact `count(*)` from manifest stats alone — no scan, no Spark job.
+  /** Exact `count(*)` of the latest version from manifest stats alone —
+    * no scan, no Spark job.
     * None when any directory predates stats (unknown ≠ zero).
     */
-  def countStar(table: String, version: Option[Long] = None): Option[Long] = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
+  def countStar(table: String): Option[Long] = {
+    val v = latestVersion(table).getOrElse(
       throw new IllegalArgumentException(s"$table has no committed snapshot"))
     val m = readManifest(table, v)
     // outstanding deletion vectors make the manifest row counts an
@@ -1275,11 +1276,10 @@ object Snapshot {
     * at write time. Returns the new version, or None when refused.
     */
   def commitChecked(df: DataFrame, table: String,
-                    constraints: Seq[(String, Column)],
-                    partitionCol: Option[String] = None): Option[Long] = {
+                    constraints: Seq[(String, Column)]): Option[Long] = {
     val bad = checkConstraints(df, constraints)
       .agg(sum(col("n_violations"))).head().getLong(0)
-    if (bad > 0) None else Some(commit(df, table, partitionCol))
+    if (bad > 0) None else Some(commit(df, table))
   }
 
   /** MERGE-ON-READ vs COPY-ON-WRITE cost advisor — the table-property
@@ -1332,14 +1332,13 @@ object Snapshot {
     perDir.crossJoin(broadcast(totals))
   }
 
-  def compact(spark: SparkSession, table: String,
-              targetFiles: Int = 1): Long = {
+  def compact(spark: SparkSession, table: String): Long = {
     val v = latestVersion(table).getOrElse(
       throw new IllegalArgumentException(s"$table has no committed snapshot"))
     val m = readManifest(table, v)
     val df = read(spark, table, Some(v))
     val compacted =
-      if (m.partitionCol.isEmpty) df.coalesce(targetFiles)
+      if (m.partitionCol.isEmpty) df.coalesce(1)
       else df.repartition(col(m.partitionCol)) // one shuffle → one file per partition dir
     val (newDirs, newStats, newFStats) = writeData(compacted, table,
       Option(m.partitionCol).filter(_.nonEmpty))
@@ -1540,7 +1539,7 @@ object Snapshot {
     * like mergeRetrying) and un-stage it. Returns the published
     * version.
     */
-  def publish(table: String, name: String, maxRetries: Int = 20): Long = {
+  def publish(table: String, name: String): Long = {
     val m = readStagedManifest(table, name)
     var attempts = 0
     var v = -1L
@@ -1552,7 +1551,7 @@ object Snapshot {
       catch {
         case e: ConcurrentCommitException =>
           attempts += 1
-          if (attempts > maxRetries) throw e
+          if (attempts > 20) throw e
       }
     }
     Files.deleteIfExists(stagedDir(table).resolve(name))
@@ -1576,11 +1575,10 @@ object Snapshot {
     * callers that vacuum mid-stream keep the content-convergence
     * guarantee only (the wapStream contract before this face existed).
     */
-  def publishIdempotent(table: String, name: String,
-                        maxRetries: Int = 20): Long =
+  def publishIdempotent(table: String, name: String): Long =
     publishedWap(table, name) match {
       case Some(v) => discardStaged(table, name); v
-      case None => publish(table, name, maxRetries)
+      case None => publish(table, name)
     }
 
   /** Reject a staged snapshot: drop its manifest; the data dirs age
@@ -1706,7 +1704,7 @@ object Snapshot {
   def readAsOf(spark: SparkSession, table: String, tsMs: Long): DataFrame =
     read(spark, table, Some(versionAsOf(table, tsMs)))
 
-  /** FSCK — manifest/data integrity audit of a retained version (the
+  /** FSCK — manifest/data integrity audit of the latest version (the
     * ops tool run before trusting a restored or hand-migrated table):
     * per referenced data/DV/UV directory, flag `missing_dir`; per
     * manifest-listed file, `missing_file`; per directory carrying row
@@ -1716,10 +1714,9 @@ object Snapshot {
     * stats-carrying dir (columnar count-star, no row materialization).
     * Output: (path, issue).
     */
-  def fsck(spark: SparkSession, table: String,
-           version: Option[Long] = None): DataFrame = {
+  def fsck(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(latestVersion(table)).getOrElse(
+    val v = latestVersion(table).getOrElse(
       throw new IllegalArgumentException(s"$table has no committed snapshot"))
     val m = readManifest(table, v)
     val issues = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -1781,10 +1778,9 @@ object Snapshot {
     * sandboxes and short-lived branches, [[rollback]] for in-table
     * undo, full commits for archival copies.
     */
-  def cloneTable(src: String, dst: String,
-                 version: Option[Long] = None): Long = {
+  def cloneTable(src: String, dst: String): Long = {
     require(latestVersion(dst).isEmpty, s"$dst already exists")
-    val v = version.orElse(latestVersion(src)).getOrElse(
+    val v = latestVersion(src).getOrElse(
       throw new IllegalArgumentException(s"$src has no committed snapshot"))
     val m = readManifest(src, v)
     writeManifest(dst, Manifest(1L, m.partitionCol, m.partitionType,

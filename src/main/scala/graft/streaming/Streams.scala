@@ -26,6 +26,11 @@ import graft.ops.Frames
   */
 object Streams {
 
+  /** Partition-directory count at which the dedup and ER streams
+    * compact their snapshot table (see [[erStream]]).
+    */
+  private val CompactEvery = 16
+
   /** The frames the running [[drain]] batch holds. */
   private val batchFrames =
     new scala.util.DynamicVariable[ArrayBuffer[DataFrame]](null)
@@ -246,8 +251,7 @@ object Streams {
     * asserts full recovery.
     */
   def sketchStream(in: DataFrame, registerPath: String, checkpoint: String,
-                   groups: Seq[String], value: org.apache.spark.sql.Column,
-                   bHex: Int = 3): Unit = {
+                   groups: Seq[String], value: org.apache.spark.sql.Column): Unit = {
     // repair an interrupted swap BEFORE waiting on input: a crash
     // between the two renames leaves the data one rename away, and a
     // restart with no pending files would otherwise never run a batch
@@ -259,7 +263,7 @@ object Streams {
       val live = new java.io.File(registerPath)
       val staged = new java.io.File(registerPath + ".staged")
       val retired = new java.io.File(registerPath + ".retired")
-      val fresh = graft.ops.Sketch.hllRegisters(batch, groups, value, bHex)
+      val fresh = graft.ops.Sketch.hllRegisters(batch, groups, value)
       val merged =
         if (live.exists())
           graft.ops.Sketch.hllMerge(
@@ -367,8 +371,7 @@ object Streams {
   def hygieneStream(in: DataFrame, benchDocs: DataFrame,
                     acceptPath: String, rejectPath: String,
                     checkpoint: String, minQuality: Double = 0.2,
-                    maxRepetition: Double = 0.5,
-                    maxSharedShingles: Long = 0L): Unit = {
+                    maxRepetition: Double = 0.5): Unit = {
     import graft.ops.{Dedup, Text}
     // the benchmark set is static: shingle it ONCE and persist, so each
     // micro-batch broadcasts from the cache instead of re-running the
@@ -390,7 +393,7 @@ object Streams {
           .withColumn("reason",
             when(col("quality") < minQuality, lit("low_quality"))
               .when(col("repetition") > maxRepetition, lit("repetitive"))
-              .when(col("n_shared") > maxSharedShingles, lit("contaminated")))
+              .when(col("n_shared") > 0L, lit("contaminated")))
           .persist())
         routed.filter(col("reason").isNull)
           .drop("hs", "reason")
@@ -670,16 +673,15 @@ object Streams {
     *
     * Compaction: same policy as [[erStream]] — when the manifest holds
     * ≥ `compactEvery` per-batch partition dirs, collapse them into one
-    * via [[graft.sources.Snapshot.compactInto]], and `vacuumKeep > 0`
-    * additionally drops superseded versions (disk, not just manifest,
-    * stays bounded). Replay-safe for the same reason replay is
+    * via [[graft.sources.Snapshot.compactInto]]. Replay-safe for the
+    * same reason replay is
     * idempotent at all: a replayed survivor is re-detected against the
     * COMPACTED corpus by content (jaccard 1.0 with its committed
     * copy), never by partition lookup or old versions.
     */
   def dedupStream(in: DataFrame, table: String, checkpoint: String,
-                  threshold: Double = 0.5, compactEvery: Int = 16,
-                  vacuumKeep: Int = 0): Unit = {
+                  threshold: Double = 0.5,
+                  compactEvery: Int = CompactEvery): Unit = {
     import graft.ops.{Dedup, Text}
     import graft.sources.Snapshot
     drain(in, checkpoint) { (batch, batchId) =>
@@ -717,10 +719,8 @@ object Streams {
           Snapshot.merge(survivors, table, Seq("doc_id"), "doc_id",
             "ingest_batch"): Unit
         if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery)
             Snapshot.compactInto(spark, table, lit(batchId))
-            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-          }
         }
       }
     }
@@ -740,8 +740,7 @@ object Streams {
     * the snapshot merge touches only the replayed batch's partition.
     * Compaction mirrors [[dedupStream]]'s policy.
     */
-  def urlDedupStream(in: DataFrame, table: String, checkpoint: String,
-                     compactEvery: Int = 16, vacuumKeep: Int = 0): Unit = {
+  def urlDedupStream(in: DataFrame, table: String, checkpoint: String): Unit = {
     import graft.ops.Web
     import graft.sources.Snapshot
     drain(in, checkpoint) { (batch, batchId) =>
@@ -766,11 +765,9 @@ object Streams {
         if (!survivors.isEmpty)
           Snapshot.merge(survivors, table, Seq("canonical_url"),
             "doc_id", "ingest_batch"): Unit
-        if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+        Snapshot.latestVersion(table).foreach { v =>
+          if (Snapshot.readManifest(table, v).dirs.size >= CompactEvery)
             Snapshot.compactInto(spark, table, lit(batchId))
-            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-          }
         }
       }
     }
@@ -859,12 +856,11 @@ object Streams {
     * LSH is the approximate path: a true near-dup pair is dropped only
     * if NO band collides (the standard S-curve miss probability);
     * exact duplicates always collide (equal signatures ⇒ equal bands).
-    * Same compaction + retention policy as [[dedupStream]].
+    * Same compaction policy as [[dedupStream]].
     */
   def lshDedupStream(in: DataFrame, table: String, indexTable: String,
                      checkpoint: String, threshold: Double = 0.5,
-                     bands: Int = 4, rowsPerBand: Int = 4,
-                     compactEvery: Int = 16, vacuumKeep: Int = 0): Unit = {
+                     bands: Int = 4, rowsPerBand: Int = 4): Unit = {
     import graft.ops.{Dedup, Text}
     import graft.sources.Snapshot
     drain(in, checkpoint) { (batch, batchId) =>
@@ -956,14 +952,13 @@ object Streams {
         // keeps per-file footer id-ranges disjoint, so the next
         // batches' readForKeys verification stays a point lookup
         // even after history collapses into one partition dir
-        for (t <- Seq(table, indexTable) if compactEvery > 0)
+        for (t <- Seq(table, indexTable))
           Snapshot.latestVersion(t).foreach { v =>
-            if (Snapshot.readManifest(t, v).dirs.size >= compactEvery) {
+            if (Snapshot.readManifest(t, v).dirs.size >= CompactEvery) {
               if (t == table)
                 Snapshot.compactInto(spark, t, lit(batchId),
-                  targetFiles = compactEvery, clusterBy = Some("doc_id"))
+                  targetFiles = CompactEvery, clusterBy = Some("doc_id"))
               else Snapshot.compactInto(spark, t, lit(batchId))
-              if (vacuumKeep > 0) Snapshot.vacuum(t, vacuumKeep)
             }
           }
       }
@@ -1015,13 +1010,12 @@ object Streams {
     *  - `table`: (doc_id, vec, cell, ingest_batch) — survivors, with
     *    their cell stored so history is never re-assigned between
     *    refreshes
-    * Compaction/retention: [[lshDedupStream]]'s policy, corpus
+    * Compaction: [[lshDedupStream]]'s policy, corpus
     * range-clustered on doc_id to keep point lookups pruned.
     */
   def annDedupStream(in: DataFrame, table: String, modelTable: String,
                      checkpoint: String, threshold: Double = 0.99,
-                     centroidsK: Int = 16, compactEvery: Int = 16,
-                     vacuumKeep: Int = 0,
+                     centroidsK: Int = 16,
                      refreshFactor: Double = 0.0): Unit = {
     import graft.ops.Similarity
     import graft.sources.Snapshot
@@ -1132,12 +1126,10 @@ object Streams {
         if (!survivors.isEmpty)
           Snapshot.merge(survivors, table, Seq("doc_id"), "doc_id",
             "ingest_batch"): Unit
-        if (compactEvery > 0) Snapshot.latestVersion(table).foreach { v =>
-          if (Snapshot.readManifest(table, v).dirs.size >= compactEvery) {
+        Snapshot.latestVersion(table).foreach { v =>
+          if (Snapshot.readManifest(table, v).dirs.size >= CompactEvery)
             Snapshot.compactInto(spark, table, lit(batchId),
-              targetFiles = compactEvery, clusterBy = Some("doc_id"))
-            if (vacuumKeep > 0) Snapshot.vacuum(table, vacuumKeep)
-          }
+              targetFiles = CompactEvery, clusterBy = Some("doc_id"))
         }
       }
     }
@@ -1184,7 +1176,7 @@ object Streams {
     * content matching, never from old versions.
     */
   def erStream(in: DataFrame, table: String, checkpoint: String,
-               maxDist: Int = 1, compactEvery: Int = 16,
+               maxDist: Int = 1, compactEvery: Int = CompactEvery,
                vacuumKeep: Int = 0): Unit = {
     import graft.ops.Text
     import graft.sources.Snapshot
@@ -1315,10 +1307,9 @@ object Streams {
     * deployment mode (replaces the reference's GitHub Actions cron with
     * a restartable, checkpointed run).
     */
-  def runAvailableNow(out: DataFrame, path: String, checkpoint: String,
-                      mode: OutputMode = OutputMode.Append): Unit = {
+  def runAvailableNow(out: DataFrame, path: String, checkpoint: String): Unit = {
     val q = out.writeStream
-      .outputMode(mode)
+      .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .format("parquet")

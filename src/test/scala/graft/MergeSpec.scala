@@ -115,6 +115,38 @@ class MergeSpec extends SparkSpec {
     }
   }
 
+  test("upsertIntoPath: a first write to a new table logs no FileNotFoundException") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("merge-spec-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warnings.add(e.toImmutable): Unit
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      Merge.upsertIntoPath(batch(("A", "2024-01-01", 10.0, 0L)), path,
+        Seq("symbol", "date"), "version", "date")
+      assert(spark.read.parquet(path).count() == 1L)
+      def chain(t: Throwable): Seq[Throwable] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+      val notFound = warnings.toArray(Array.empty[LogEvent]).toSeq.filter(e =>
+        Option(e.getThrown).exists(chain(_).exists(
+          _.isInstanceOf[java.io.FileNotFoundException])))
+      assert(notFound.isEmpty, notFound.map(_.getMessage.getFormattedMessage)
+        .mkString("WARN with FileNotFoundException: ", "; ", ""))
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("upsertIntoPath overwrites partitions dynamically without changing the session") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prior = spark.conf.getOption(key)

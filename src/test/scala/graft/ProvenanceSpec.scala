@@ -87,6 +87,18 @@ class ProvenanceSpec extends SparkSpec {
     assert(got == exp)
   }
 
+  test("merkleRoot and merkleProof release every level's checkpoint: " +
+      "no persisted RDD is left") {
+    val df = (1 to 9).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val cols = Seq(col("id"), col("v"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Provenance.merkleRoot(df, cols).collect()
+    Provenance.merkleRoot(df.limit(0), cols).collect()
+    Provenance.merkleProof(df, cols, col("id") === 4).collect()
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"left $left")
+  }
+
   test("merkleRoot: empty input and null columns are canonical") {
     val empty = Provenance.merkleRoot(
       Seq.empty[(Long, String)].toDF("id", "v"),

@@ -155,6 +155,38 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("kmeansTrain and kmeansTrainL2 release every earlier iteration's " +
+      "checkpoint: only the result's RDD stays, the caller's init is kept") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    def rdds(df: DataFrame): Set[Int] =
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val rnd = new scala.util.Random(29)
+    val floats = (0L until 60L).map(i =>
+      (i, Seq.fill(4)(rnd.nextGaussian().toFloat))).toDF("id", "vec")
+    val doubles = (0L until 60L).map(i =>
+      (i, Seq.fill(4)(rnd.nextGaussian()))).toDF("id", "vec")
+    val trainers = Seq[(String, DataFrame,
+        (DataFrame, DataFrame, Int) => DataFrame)](
+      ("kmeansTrain", floats, Similarity.kmeansTrain),
+      ("kmeansTrainL2", doubles, Similarity.kmeansTrainL2))
+    for ((name, vecs, train) <- trainers) {
+      // a checkpointed init, as when a trained set is trained further
+      val init = vecs.filter($"id" < 4)
+        .select($"id".as("cid"), $"vec".as("cvec")).localCheckpoint(true)
+      val before = persisted
+      val c = train(vecs, init, 3)
+      assert(c.count() > 0L)
+      val left = persisted -- before
+      assert(rdds(c).size == 1 && left == rdds(c),
+        s"$name left $left, result owns ${rdds(c)}")
+      assert(rdds(init).subsetOf(persisted), s"$name released its init")
+      graft.ops.Frames.release(c)
+      graft.ops.Frames.release(init)
+    }
+  }
+
   test("ivfSearchL2 at nprobe=|centroids| equals bruteForceTopKL2") {
     val rnd = new scala.util.Random(17)
     val vecs = (0L until 50L).map(i =>
