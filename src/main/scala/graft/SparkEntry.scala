@@ -1163,7 +1163,9 @@ object SparkEntry {
         round(sum(col("vol")), 2).cast("long").as("volume"))
     // synthetic shipdates are sparse (~3 bars/symbol/6y), so the
     // continuity gate uses a cadence-appropriate threshold — at 14d
-    // (daily-bar cadence) every symbol here would be rejected
+    // (daily-bar cadence) every symbol here would be rejected. `weekly`
+    // reads the slice's checkpoint, so its release is left to the
+    // ContextCleaner, as for the other gate queries.
     Pipeline.dailySlice(dayBars, gapDays = 600, gapSince = "1995-01-01").weekly
   }
 }

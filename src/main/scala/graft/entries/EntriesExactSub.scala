@@ -63,6 +63,9 @@ private[graft] object EntriesExactSub {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 4 === 0)
       val c = SuffixArray.corpus(docs, col("doc_id"), col("text"))
       val b = SuffixArray.build(c)
+      // the result reads only the final round; the layout and the
+      // earlier rounds' checkpoints are free once build returns
+      b.owned.filterNot(_ eq b.sa).foreach(Frames.release)
       b.sa.filter(!col("sent"))
         .select(col("doc_id"), (col("rank") - c.numDocs).as("r"))
         .groupBy(col("doc_id"))

@@ -11,11 +11,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Engine posture: one market reads a directory of pre-fetched day-bar
   * CSVs (the network fetch stays outside the engine; see ListAdapters).
-  * Its rejection set is resolved by one driver action into a local
-  * relation of at most one row per symbol (`Pipeline.dailySlice`), and
-  * the merge, the period writes, the summary and the report all read
-  * that relation. Markets run side by side on one shared session, one
-  * thread each. Everything here reuses the operator library —
+  * The plain-parquet freshness gate reads the store's `date=` directory
+  * names, not its rows, so it launches no Spark job. `Pipeline.dailySlice`
+  * shuffles the drop once and holds one materialization (period bars
+  * plus one verdict row per symbol) that its rejection set, period
+  * writes and summary all read; the rejection set is a local relation
+  * of at most one row per symbol, which the merge and the report reuse.
+  * The merge reads and rewrites only the dates the drop carries.
+  * Markets run side by side on one shared session, one thread each.
+  * Everything here reuses the operator library —
   * `Pipeline.dailySlice` (validate/resample), `Merge.upsertIntoPath`
   * (K1 partition-scoped MERGE), `Report` (A2-A6 + K7) — so the lifecycle
   * adds sequencing, not new semantics.
@@ -62,32 +66,55 @@ object Lifecycle {
   private val rejectionSchema = StructType(Seq(
     StructField("key", StringType), StructField("reason", StringType)))
 
+  /** The newest ISO date among the `date=` partition directories of the
+    * plain-parquet store at `path`, from one directory listing: no
+    * Spark job, no footer read. Directory values that are not ISO dates
+    * (`__HIVE_DEFAULT_PARTITION__`, the null date) are skipped; None when
+    * the store is absent or has no dated partition.
+    */
+  private def latestDatePartition(spark: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) None
+    else fs.listStatus(p).iterator
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .collect { case n if n.startsWith("date=") =>
+        scala.util.Try(java.time.LocalDate.parse(n.stripPrefix("date="))).toOption }
+      .flatten
+      .maxOption
+      .map(_.toString)
+  }
+
+  /** Freshness gate (check_needs_update, main.py:100-111): sync iff the
+    * store is absent, empty, or its MAX(date) predates `asOf`. A plain
+    * store answers from its partition listing; a snapshot store from a
+    * `max(date)` over its latest version.
+    */
+  def needsSync(spark: SparkSession, cfg: MarketConfig): Boolean = {
+    val prices = pricesPath(cfg)
+    val latest =
+      if (cfg.useSnapshot)
+        graft.sources.Snapshot.latestVersion(prices).flatMap { _ =>
+          val mx = graft.sources.Snapshot.read(spark, prices)
+            .agg(max(col("date"))).first()
+          if (mx.isNullAt(0)) None else Some(mx.getDate(0).toString)
+        }
+      else latestDatePartition(spark, prices)
+    latest.forall(_ < cfg.asOf)
+  }
+
   /** One market through the full loop: freshness gate → CSV ingest →
     * validation gates → MERGE of the valid day bars into the prices
     * store (version = ingest day, so re-running a day is idempotent) →
     * W/M/Y period outputs + audit row → summary computed FROM THE STORE
     * (the reference summarizes the database, not the batch —
-    * main.py:113-124).
+    * main.py:113-124). The slice's materialization is released before
+    * this returns, also when a step throws.
     */
   def runMarket(spark: SparkSession, cfg: MarketConfig): (MarketSummary, DataFrame) = {
     val prices = pricesPath(cfg)
-    // With useSnapshot, the prices store is a transactional snapshot
-    // table (sources.Snapshot): merges publish atomically, a crashed run
-    // never half-rewrites the store, re-runs are idempotent versions.
-    def readStore(): Option[DataFrame] =
-      if (cfg.useSnapshot)
-        graft.sources.Snapshot.latestVersion(prices)
-          .map(_ => graft.sources.Snapshot.read(spark, prices))
-      else Merge.readIfPresent(spark, prices)
-    // Freshness gate (check_needs_update, main.py:100-111): sync iff
-    // the store is absent, empty, or its MAX(date) predates `asOf`.
-    val before = readStore()
-    val ran = before match {
-      case None => true
-      case Some(df) =>
-        val mx = df.agg(max(col("date"))).first()
-        mx.isNullAt(0) || mx.getDate(0).toString < cfg.asOf
-    }
+    val ran = needsSync(spark, cfg)
     val (rejections, nRejected) =
       if (!ran) (spark.createDataFrame(
         java.util.Collections.emptyList[Row](), rejectionSchema), 0L)
@@ -103,23 +130,29 @@ object Lifecycle {
           .flatten
           .foldLeft(Pipeline.ingestCsvDir(spark, cfg.csvDir))(_.filter(_))
         val slice = Pipeline.dailySlice(bars)
-        val validBars = Quality.excludeRejected(
-          bars.na.drop(Seq("open", "high", "low", "close")),
-          col("symbol"), slice.rejections)
-          .withColumn("version",
-            datediff(to_date(lit(cfg.asOf)), to_date(lit("1970-01-01"))).cast("long"))
-        if (cfg.useSnapshot)
-          graft.sources.Snapshot.merge(validBars, prices,
-            Seq("symbol", "date"), "version", "date")
-        else
-          Merge.upsertIntoPath(validBars, prices,
-            Seq("symbol", "date"), "version", "date")
-        val n = Pipeline.writeSlice(slice,
-          s"${cfg.warehouseRoot}/${cfg.marketId}", cfg.marketId)
-        (slice.rejections, n)
+        try {
+          val validBars = Quality.excludeRejected(
+            bars.na.drop(Seq("open", "high", "low", "close")),
+            col("symbol"), slice.rejections)
+            .withColumn("version",
+              datediff(to_date(lit(cfg.asOf)), to_date(lit("1970-01-01"))).cast("long"))
+          // With useSnapshot, the prices store is a transactional snapshot
+          // table (sources.Snapshot): merges publish atomically, a crashed
+          // run never half-rewrites the store, re-runs are idempotent versions.
+          if (cfg.useSnapshot)
+            graft.sources.Snapshot.merge(validBars, prices,
+              Seq("symbol", "date"), "version", "date")
+          else
+            Merge.upsertIntoPath(validBars, prices,
+              Seq("symbol", "date"), "version", "date")
+          val n = Pipeline.writeSlice(slice,
+            s"${cfg.warehouseRoot}/${cfg.marketId}", cfg.marketId)
+          (slice.rejections, n)
+        } finally Frames.release(slice.held)
       }
-    // a skipped run left the store as the gate read it
-    val store = (if (ran) readStore() else before).get
+    val store =
+      if (cfg.useSnapshot) graft.sources.Snapshot.read(spark, prices)
+      else Merge.readIfPresent(spark, prices).get
     val stats = Report.summaryStats(store, col("symbol"), col("date")).first()
     val success = stats.getLong(0)
     val endDate = Option(stats.getDate(1)).map(_.toString).getOrElse("N/A")

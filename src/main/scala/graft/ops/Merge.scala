@@ -97,13 +97,23 @@ object Merge {
     * overwrite, set on this write only — the session conf is untouched).
     * This is the 100 TB write path: cost scales with the touched dates,
     * not the table.
+    *
+    * The batch's distinct partition values are collected (bounded by the
+    * partitions one batch touches) and filter the existing side with a static
+    * `isin`, so the file index hands the scan only those partitions. A
+    * broadcast semi-join against the batch would not prune: dynamic
+    * partition pruning needs a selective predicate on the other side,
+    * and a bare batch has none. The existing side keeps its inferred
+    * schema, so a column only one side has fails `unionByName` loudly
+    * instead of being null-filled or dropped. An empty batch reads
+    * nothing.
     */
   def upsertIntoPath(incoming: DataFrame, tablePath: String, keys: Seq[String],
                      versionCol: String, partitionCol: String): Unit = {
     val merged = readIfPresent(incoming.sparkSession, tablePath).fold(incoming) { existing =>
-      // Partition-prune the existing side to the touched partitions only.
-      val touched = incoming.select(col(partitionCol)).distinct()
-      upsert(existing.join(broadcast(touched), Seq(partitionCol), "left_semi"),
+      val touched = incoming.select(col(partitionCol)).distinct().collect().map(_.get(0))
+      if (touched.isEmpty) incoming
+      else upsert(existing.filter(col(partitionCol).isin(touched.toIndexedSeq: _*)),
         incoming, keys, versionCol)
     }
     merged.write

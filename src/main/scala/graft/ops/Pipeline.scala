@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,8 +17,8 @@ import scala.jdk.CollectionConverters._
   *
   * Distributed scans and aggregates replace the reference's per-file
   * thread pool: file-split parallelism subsumes the pool, per-symbol
-  * isolation becomes groupBy-key isolation, and every validator is a
-  * single aggregate pass (no per-symbol loops).
+  * isolation becomes symbol-partition isolation, and the validators and
+  * resamples share one shuffle (no per-symbol loops).
   */
 object Pipeline {
 
@@ -47,67 +48,108 @@ object Pipeline {
 
   final case class SliceOutputs(weekly: DataFrame, monthly: DataFrame,
                                 yearly: DataFrame, rejections: DataFrame,
-                                summary: DataFrame)
+                                summary: DataFrame, held: DataFrame)
 
   /** Run the validated resample slice over day bars
     * (symbol, date, open, high, low, close, volume).
     *
     * Validation semantics (SURVEY §2.11): a symbol failing ANY gate
     * contributes no rows to ANY period output but appears once in
-    * `rejections(key, reason)`. The reference computes all three period
-    * frames and then rejects (order matters for V3) — here V3 is
-    * evaluated on the resampled weekly/monthly/yearly union, so a
-    * violation in any period output rejects the symbol everywhere.
+    * `rejections(key, reason)`, by priority price > gap > OHLC. The
+    * reference computes all three period frames and then rejects (order
+    * matters for V3) — here V3 is evaluated on the pre-gate survivors'
+    * resampled weekly/monthly/yearly bars, so a violation in any period
+    * output rejects the symbol everywhere.
     *
-    * The rejection set is resolved with ONE driver action (all gates,
-    * all three resamples) into a local relation. It holds at most one
-    * row per symbol, so the collect is bounded by the listed universe,
-    * not by bar volume. Every returned frame reads that relation instead
-    * of re-running the gates, and nothing is cached, so nothing outlives
-    * the call.
+    * Shape: ONE exchange, `hashpartitioning(symbol)`. On it, window
+    * aggregates give every bar its symbol's V1 price verdict and V2 gap
+    * verdict (the gap to the last in-window predecessor). Each pre-gate
+    * survivor's bar then fans out to its W, M and Y bucket, and every
+    * symbol gets one tally row; `groupBy(symbol, kind, period)`, the
+    * return window and the V3 window all cluster on `symbol`, so none
+    * needs another exchange. A pre-rejected symbol is never resampled:
+    * under ANSI, its zero close would make the return's division throw.
+    *
+    * That tagged union (W+M+Y bars plus one verdict row per symbol) is
+    * `held`: a lazy local checkpoint, filled by the one driver action
+    * that collects the rejection set (at most one row per symbol) into a
+    * local relation. A checkpoint, not a persist, because it keeps the
+    * partitions adaptive execution coalesced, so each period write makes
+    * as many files as a fresh plan would. The period frames and the
+    * summary read `held`, not the input; the caller releases it with
+    * `Frames.release` once they are consumed. It holds about a quarter
+    * of the bars, never the store.
     */
   def dailySlice(bars: DataFrame,
                  gapDays: Int = 14, gapSince: String = "2024-01-01"): SliceOutputs = {
-    val clean0 = bars.na.drop(Seq("open", "high", "low", "close")) // P15
-    // ordered-first/last surrogate: date-major, unique per (symbol,date)
-    // because day bars are PK'd on (date,symbol) post-merge
-    val withOrd = clean0.withColumn("ord",
-      Resample.ordinal(col("date"), lit(0)))
+    val bySymbol = Window.partitionBy(col("symbol"))
+    val inWindow = when(col("date") >= to_date(lit(gapSince)), col("date"))
+    val earlier = bySymbol.orderBy(col("date"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val gated = bars.na.drop(Seq("open", "high", "low", "close")) // P15
+      // ordered-first/last surrogate: date-major, unique per (symbol,date)
+      // because day bars are PK'd on (date,symbol) post-merge
+      .withColumn("ord", Resample.ordinal(col("date"), lit(0)))
+      .withColumn("bad_price", max(col("close") <= 0).over(bySymbol))
+      .withColumn("__gap", datediff(inWindow, max(inWindow).over(earlier)))
+      .withColumn("max_gap", max(col("__gap")).over(bySymbol))
+    val gapBad = coalesce(col("max_gap") > gapDays, lit(false))
 
-    def periods(valid: DataFrame): Seq[DataFrame] =
-      Seq(Resample.weekEndFri(col("date")), Resample.monthEnd(col("date")),
-          Resample.yearStart(col("date"))).map { bucket =>
-        Resample.periodReturn(
-          Resample.ohlcFromBars(valid, col("symbol"), bucket,
-            col("open"), col("high"), col("low"), col("close"),
-            col("volume"), col("ord")))
-      }
+    def tag(kind: String, period: Column): Column =
+      struct(lit(kind).as("kind"), period.as("period"))
+    val tally = tag("S", lit(null).cast(DateType))
+    val buckets = Seq(tag("W", Resample.weekEndFri(col("date"))),
+      tag("M", Resample.monthEnd(col("date"))),
+      tag("Y", Resample.yearStart(col("date"))))
+    val bySeries = Window.partitionBy(col("symbol"), col("kind"))
+      .orderBy(col("period"))
+    val resampled = gated
+      .withColumn("__t", explode(
+        when(!col("bad_price") && !gapBad, array(buckets :+ tally: _*))
+          .otherwise(array(tally))))
+      .groupBy(col("symbol"), col("__t.kind").as("kind"),
+        col("__t.period").as("period"))
+      .agg(
+        min_by(col("open"), col("ord")).as("open"),
+        max(col("high")).as("high"),
+        min(col("low")).as("low"),
+        max_by(col("close"), col("ord")).as("close"),
+        sum(col("volume")).as("volume"),
+        count(lit(1)).as("n_bars"),
+        max(col("date")).as("end_date"),
+        max(col("bad_price")).as("bad_price"),
+        max(col("max_gap")).as("max_gap"))
+      // Resample.periodReturn, per (symbol, kind)
+      .withColumn("return",
+        round(col("close") / lag(col("close"), 1).over(bySeries) - lit(1.0), 4))
+      // V3 on every resampled bar of the pre-gate survivors
+      .withColumn("ohlc_bad", max(col("kind") =!= "S" &&
+        (col("close") > col("high") || col("close") < col("low"))).over(bySymbol))
+    val held = resampled.withColumn("reason",
+        when(col("bad_price"), lit(Quality.ReasonInvalidPrice))
+          .when(gapBad, concat(lit("gap_"), col("max_gap").cast("string"), lit("d")))
+          .when(col("ohlc_bad"), lit(Quality.ReasonOhlcLogic)))
+      .localCheckpoint(false)
 
-    val priceRejects = Quality.invalidPriceKeys(withOrd, col("symbol"), col("close"))
-    val gapRejects = Quality.gapKeys(withOrd, col("symbol"), col("date"),
-      gapDays, gapSince)
-    val preRejects = Quality.firstReasonPerKey(
-      priceRejects.unionByName(gapRejects))
-    // V3 on every resampled bar of the pre-gate survivors
-    val ohlcRejects = Quality.ohlcViolationKeys(
-      periods(Quality.excludeRejected(withOrd, col("symbol"), preRejects))
-        .reduce(_.unionByName(_)),
-      col("symbol"), col("low"), col("close"), col("high"))
-    val resolved = Quality.firstReasonPerKey(preRejects.unionByName(ohlcRejects))
-    val rows = resolved.collect()
-    val rejections = bars.sparkSession.createDataFrame(rows.toSeq.asJava, resolved.schema)
+    val verdicts = held.filter(col("kind") === "S")
+    val rejected = verdicts.filter(col("reason").isNotNull)
+      .select(col("symbol").as("key"), col("reason"))
+    val rows = try rejected.collect() catch {
+      case e: Throwable => Frames.release(held); throw e
+    }
+    val rejections = bars.sparkSession.createDataFrame(rows.toSeq.asJava, rejected.schema)
 
-    // V3 only sees pre-gate survivors, so the two reason sets are
-    // disjoint; resampling is per symbol, so dropping every rejected
-    // symbol before the resample equals dropping V3's after it
-    val valid = Quality.excludeRejected(withOrd, col("symbol"),
-      rejections.filter(col("reason") =!= Quality.ReasonOhlcLogic))
-    val Seq(weekly, monthly, yearly) =
-      periods(Quality.excludeRejected(withOrd, col("symbol"), rejections))
-    val summary = Report.summaryStats(valid, col("symbol"), col("date"))
+    def period(kind: String): DataFrame =
+      held.filter(col("kind") === kind && col("reason").isNull)
+        .select("symbol", "period", "open", "high", "low", "close", "volume", "return")
+    // over the valid bars: every bar but the pre-gate rejects'
+    val summary = verdicts
+      .filter(col("reason").isNull || col("reason") === Quality.ReasonOhlcLogic)
+      .agg(count(lit(1)).as("n_symbols"), max(col("end_date")).as("end_date"),
+        coalesce(sum(col("n_bars")), lit(0L)).as("total_rows"))
       .withColumn("n_rejected", lit(rows.length.toLong))
 
-    SliceOutputs(weekly, monthly, yearly, rejections, summary)
+    SliceOutputs(period("W"), period("M"), period("Y"), rejections, summary, held)
   }
 
   /** K3/K4: persist the slice — one parquet dataset per period plus an

@@ -32,16 +32,15 @@ object Report {
     * truncated to `sampleN` with an "...and N more" suffix
     * (notifier.py:56-57); timestamps render in UTC+8
     * (notifier.py:14-17); dates format `yyyy-MM-dd` to preserve the
-    * lexicographic-order contract. The only collect is the summary
-    * table itself (a handful of rows by construction).
+    * lexicographic-order contract. The stamp is formatted on the driver;
+    * the collects are the summary table itself (a handful of rows by
+    * construction) and a `sampleN + 1` sample of the failures, which
+    * are counted in full only when that sample overflows.
     */
   def renderReport(summary: DataFrame, failures: DataFrame,
                    sampleN: Int = 10): String = {
-    val stamp = summary.sparkSession.range(1)
-      .select(date_format(
-        from_utc_timestamp(current_timestamp(), "Asia/Taipei"),
-        "yyyy-MM-dd HH:mm:ss").as("t"))
-      .collect()(0).getString(0)
+    val stamp = java.time.ZonedDateTime.now(java.time.ZoneId.of("Asia/Taipei"))
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
     val header = s"Stock Warehouse Report ($stamp UTC+8)"
     val lines = summary.collect().map { r =>
       val cols = summary.columns.zipWithIndex.map { case (c, i) =>
@@ -57,7 +56,7 @@ object Report {
     val failBlock: Seq[String] =
       if (fails.isEmpty) Seq("  (no failures)")
       else {
-        val total = failures.count()
+        val total = if (fails.length > sampleN) failures.count() else fails.length.toLong
         val shown = fails.take(sampleN).map("  " + _).toSeq
         if (total > sampleN) shown :+ s"  ...and ${total - sampleN} more"
         else shown

@@ -1,8 +1,8 @@
 package graft
 
-import graft.ops.{Lifecycle, Report}
+import graft.ops.{Lifecycle, Pipeline, Report}
 import graft.ops.Lifecycle.MarketConfig
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{lit, raise_error, when}
 
 import scala.jdk.CollectionConverters._
 
@@ -94,6 +94,71 @@ class LifecycleSpec extends SparkSpec {
       val left = Thread.getAllStackTraces.keySet.asScala
         .filter(t => t.getName.startsWith("lifecycle-") && t.isAlive)
       assert(left.isEmpty, left.map(_.getName))
+    }
+  }
+
+  test("Lifecycle.run leaves no persisted RDD behind, also when a market throws") {
+    withTempDir { tmp =>
+      val badDir = new java.io.File(tmp, "bad"); val okDir = new java.io.File(tmp, "ok")
+      writeCsv(badDir, "2330_day.csv", Seq("2024-01-02,10,12,9,11,100"))
+      writeCsv(okDir, "aapl_day.csv", Seq(
+        "2024-01-02,10,12,9,11,100", "2024-01-03,11,13,10,12,100"))
+      writeCsv(okDir, "badp_day.csv", Seq("2024-01-02,10,12,9,-5,100"))
+      val root = tmp.getAbsolutePath + "/wh"
+      val bad = MarketConfig("bad", badDir.getAbsolutePath, root, 1, asOf = "2024-01-02")
+      val ok = MarketConfig("ok", okDir.getAbsolutePath, root, 1, asOf = "2024-01-04")
+      def leaked(before: Set[Int]): Set[Int] =
+        spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      Lifecycle.run(spark, Seq(bad, ok))
+      assert(leaked(before).isEmpty)
+
+      // the bad market throws in its merge, after its slice is materialized
+      new java.io.File(Lifecycle.pricesPath(bad), "date=2024-01-02").listFiles()
+        .filter(_.getName.endsWith(".parquet")).foreach { f =>
+          val w = new java.io.FileOutputStream(f); w.write(Array.fill(8)(0x00.toByte)); w.close()
+        }
+      intercept[Exception](Lifecycle.run(spark,
+        Seq(bad.copy(asOf = "2024-01-05"), ok.copy(asOf = "2024-01-05"))))
+      assert(leaked(before).isEmpty)
+
+      // a slice that throws while it materializes leaves nothing persisted
+      val boom = Pipeline.ingestCsvDir(spark, okDir.getAbsolutePath)
+        .withColumn("close", when($"close" > 11, raise_error(lit("bad bar")))
+          .otherwise($"close"))
+      intercept[Exception](Pipeline.dailySlice(boom))
+      assert(leaked(before).isEmpty)
+    }
+  }
+
+  test("freshness gate reads the partition listing: the null-date directory " +
+      "is skipped and no Spark job runs") {
+    withTempDir { tmp =>
+      val cfg = MarketConfig("tw", tmp.getAbsolutePath + "/csv",
+        tmp.getAbsolutePath + "/wh", 1, asOf = "2024-01-03")
+      val prices = Lifecycle.pricesPath(cfg)
+      val nullOnly = cfg.copy(marketId = "hk")
+      Seq[(String, java.sql.Date)](("A", java.sql.Date.valueOf("2024-01-03")), ("B", null))
+        .toDF("symbol", "date").write.partitionBy("date").parquet(prices)
+      Seq[(String, java.sql.Date)](("C", null))
+        .toDF("symbol", "date").write.partitionBy("date").parquet(Lifecycle.pricesPath(nullOnly))
+      assert(new java.io.File(prices, "date=__HIVE_DEFAULT_PARTITION__").isDirectory)
+
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val (fresh, stale, absent, undated) =
+        listening(new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet(): Unit
+        }) {
+          (Lifecycle.needsSync(spark, cfg),
+            Lifecycle.needsSync(spark, cfg.copy(asOf = "2024-01-04")),
+            Lifecycle.needsSync(spark, cfg.copy(marketId = "us")),
+            Lifecycle.needsSync(spark, nullOnly))
+        }
+      // the newest dated partition is 2024-01-03; absent and undated stores run
+      assert(!fresh && stale && absent && undated)
+      assert(jobs.get == 0)
     }
   }
 

@@ -69,6 +69,47 @@ class MergeSpec extends SparkSpec {
     }
   }
 
+  test("upsertIntoPath reads only the partitions the batch touches") {
+    withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      batch(("A", "2024-01-01", 10.0, 0L), ("B", "2024-01-01", 20.0, 0L),
+        ("A", "2024-01-02", 11.0, 0L), ("B", "2024-01-02", 21.0, 0L),
+        ("A", "2024-01-03", 12.0, 0L), ("B", "2024-01-03", 22.0, 0L))
+        .write.partitionBy("date").parquet(path)
+      val read = new java.util.concurrent.atomic.AtomicLong
+      listening(new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }) {
+        Merge.upsertIntoPath(batch(("A", "2024-01-02", 99.0, 1L)), path,
+          Seq("symbol", "date"), "version", "date")
+      }
+      // the two stored rows of 2024-01-02; the batch is a local relation
+      assert(read.get == 2)
+      val out = spark.read.parquet(path)
+        .select($"symbol", $"date".cast("string"), $"close")
+        .as[(String, String, Double)].collect().toSet
+      assert(out == Set(("A", "2024-01-01", 10.0), ("B", "2024-01-01", 20.0),
+        ("A", "2024-01-02", 99.0), ("B", "2024-01-02", 21.0),
+        ("A", "2024-01-03", 12.0), ("B", "2024-01-03", 22.0)))
+    }
+  }
+
+  test("upsertIntoPath fails loudly when the table has a column the batch lacks") {
+    withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      batch(("A", "2024-01-01", 10.0, 0L)).withColumn("note", lit("x"))
+        .write.partitionBy("date").parquet(path)
+      intercept[org.apache.spark.sql.AnalysisException] {
+        Merge.upsertIntoPath(batch(("A", "2024-01-01", 99.0, 1L)), path,
+          Seq("symbol", "date"), "version", "date")
+      }
+      val kept = spark.read.parquet(path).select($"close", $"note")
+        .as[(Double, String)].collect().toSeq
+      assert(kept == Seq((10.0, "x")))
+    }
+  }
+
   test("a merge that fails mid-write leaves the table intact and readable") {
     withTempDir { dir =>
       val path = dir.getAbsolutePath + "/prices"

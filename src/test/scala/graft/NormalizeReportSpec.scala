@@ -50,6 +50,21 @@ class NormalizeReportSpec extends SparkSpec {
     assert(empty.contains("(no failures)"))
   }
 
+  test("renderReport counts the failures only past its sample; the stamp is Taipei time") {
+    val summary = Seq(("tw", 3L)).toDF("market", "success")
+    def fails(n: Int) = (1 to n).map(i => (s"SYM$i", "invalid_price")).toDF("key", "reason")
+    val exact = Report.renderReport(summary, fails(10), sampleN = 10)
+    assert(exact.linesIterator.count(_.contains("invalid_price")) == 10)
+    assert(!exact.contains("...and"))
+    assert(Report.renderReport(summary, fails(11), sampleN = 10).contains("...and 1 more"))
+    val stamp = """Stock Warehouse Report \((\d{4}-\d\d-\d\d \d\d:\d\d:\d\d) UTC\+8\)""".r
+    val at = exact.linesIterator.next() match {
+      case stamp(t) => java.time.LocalDateTime.parse(t.replace(' ', 'T'))
+    }
+    val now = java.time.LocalDateTime.now(java.time.ZoneId.of("Asia/Taipei"))
+    assert(math.abs(java.time.Duration.between(at, now).getSeconds) < 120, (at, now))
+  }
+
   test("warehouse schemas expose the reference data model") {
     import graft.Schemas
     assert(Schemas.stockPrices.fieldNames.take(7).toSeq ==

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Merge, Pipeline}
+import graft.ops.{Frames, Merge, Pipeline}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 
@@ -44,8 +45,14 @@ class PipelineSpec extends SparkSpec {
       writeCsv(dir, "gappy_day.csv",
         Seq("2024-01-02,10,12,9,11,100", "2024-01-22,10,12,9,11,100"))
 
-      val out = Pipeline.dailySlice(
-        Pipeline.ingestCsvDir(spark, dir.getAbsolutePath))
+      val shuffles = new java.util.concurrent.atomic.AtomicInteger
+      val out = listening(new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+            shuffles.incrementAndGet(): Unit
+      }) {
+        Pipeline.dailySlice(Pipeline.ingestCsvDir(spark, dir.getAbsolutePath))
+      }
 
       val rej = out.rejections.as[(String, String)].collect().toMap
       assert(rej == Map("BADPRICE" -> "invalid_price", "GAPPY" -> "gap_20d"))
@@ -73,14 +80,78 @@ class PipelineSpec extends SparkSpec {
         .as[(Long, Long, Long)].head()
       assert(sm == ((1L, 10L, 2L)))
 
-      // the rejection set is resolved once: it scans no file, and every
-      // other output scans the CSVs once instead of re-running the gates
+      // the slice is materialized once, through exactly one shuffle of
+      // the bars, and no output scans a file
+      assert(shuffles.get == 1)
       def scans(df: org.apache.spark.sql.DataFrame): Int =
         df.queryExecution.optimizedPlan.collectLeaves()
           .count(_.isInstanceOf[LogicalRelation])
-      assert(scans(out.rejections) == 0)
-      for (df <- Seq(out.weekly, out.monthly, out.yearly, out.summary))
-        assert(scans(df) == 1, df.queryExecution.optimizedPlan)
+      for (df <- Seq(out.rejections, out.weekly, out.monthly, out.yearly, out.summary))
+        assert(scans(df) == 0, df.queryExecution.optimizedPlan)
+      Frames.release(out.held)
+    }
+  }
+
+  test("dailySlice: zero close, gap across gapSince, duplicated date, multi-gate symbols") {
+    withTempDir { dir =>
+      writeCsv(dir, "good_day.csv", Seq(
+        "2024-01-04,10,12,9,11,100", "2024-01-05,11,13,10,12,100",
+        "2024-01-08,12,14,11,13,100", "2024-01-09,1,1,1,,100",
+        "2024-01-12,13,15,12,14,100"))
+      // the only gap is from an out-of-window date to the first in-window
+      // one: V2 sees no predecessor there, so the symbol is valid
+      writeCsv(dir, "straddle_day.csv", Seq(
+        "2023-12-11,20,22,19,21,10", "2024-01-10,21,23,20,22,10",
+        "2024-01-11,22,24,21,23,10"))
+      writeCsv(dir, "dup_day.csv", Seq(
+        "2024-01-08,30,32,29,31,5", "2024-01-09,31,33,30,32,5",
+        "2024-01-09,31,33,30,32,5", "2024-01-10,32,34,31,33,5"))
+      // a zero week close: resampling this symbol would divide by it
+      writeCsv(dir, "zero_day.csv", Seq(
+        "2024-01-05,10,12,9,0,100", "2024-01-08,10,12,9,11,100"))
+      writeCsv(dir, "multi_day.csv", Seq(
+        "2024-01-02,10,12,9,-1,100", "2024-01-22,10,12,9,11,100"))
+      writeCsv(dir, "gapohlc_day.csv", Seq(
+        "2024-01-02,10,12,9,50,100", "2024-01-22,10,12,9,11,100"))
+      writeCsv(dir, "ohlc_day.csv", Seq(
+        "2024-01-03,10,12,9,11,100", "2024-01-04,10,12,9,99,100"))
+
+      val out = Pipeline.dailySlice(
+        Pipeline.ingestCsvDir(spark, dir.getAbsolutePath))
+
+      assert(out.rejections.as[(String, String)].collect().toMap == Map(
+        "ZERO" -> "invalid_price", "MULTI" -> "invalid_price",
+        "GAPOHLC" -> "gap_20d", "OHLC" -> "ohlc_logic_error"))
+
+      def bars(df: org.apache.spark.sql.DataFrame) =
+        df.select($"symbol", $"period".cast("string"), $"open", $"high", $"low",
+            $"close", $"volume", $"return")
+          .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2),
+            r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getLong(6),
+            if (r.isNullAt(7)) None else Some(r.getDouble(7)))).toSet
+      assert(bars(out.weekly) == Set(
+        ("GOOD", "2024-01-05", 10.0, 13.0, 9.0, 12.0, 200L, None),
+        ("GOOD", "2024-01-12", 12.0, 15.0, 11.0, 14.0, 200L, Some(0.1667)),
+        ("STRADDLE", "2023-12-15", 20.0, 22.0, 19.0, 21.0, 10L, None),
+        ("STRADDLE", "2024-01-12", 21.0, 24.0, 20.0, 23.0, 20L, Some(0.0952)),
+        ("DUP", "2024-01-12", 30.0, 34.0, 29.0, 33.0, 20L, None)))
+      assert(bars(out.monthly) == Set(
+        ("GOOD", "2024-01-31", 10.0, 15.0, 9.0, 14.0, 400L, None),
+        ("STRADDLE", "2023-12-31", 20.0, 22.0, 19.0, 21.0, 10L, None),
+        ("STRADDLE", "2024-01-31", 21.0, 24.0, 20.0, 23.0, 20L, Some(0.0952)),
+        ("DUP", "2024-01-31", 30.0, 34.0, 29.0, 33.0, 20L, None)))
+      assert(bars(out.yearly) == Set(
+        ("GOOD", "2024-01-01", 10.0, 15.0, 9.0, 14.0, 400L, None),
+        ("STRADDLE", "2023-01-01", 20.0, 22.0, 19.0, 21.0, 10L, None),
+        ("STRADDLE", "2024-01-01", 21.0, 24.0, 20.0, 23.0, 20L, Some(0.0952)),
+        ("DUP", "2024-01-01", 30.0, 34.0, 29.0, 33.0, 20L, None)))
+
+      // valid bars = all but the price and gap rejects' (OHLC's count)
+      val sm = out.summary
+        .select($"n_symbols", $"end_date".cast("string"), $"total_rows", $"n_rejected")
+        .as[(Long, String, Long, Long)].head()
+      assert(sm == ((4L, "2024-01-12", 13L, 4L)))
+      Frames.release(out.held)
     }
   }
 

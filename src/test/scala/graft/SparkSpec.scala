@@ -12,6 +12,16 @@ trait SparkSpec extends AnyFunSuite {
 
   def rowsOf(df: DataFrame): Set[Row] = df.collect().toSet
 
+  /** Run `f` with `l` on the listener bus; every event `f` caused has
+    * reached `l` when this returns.
+    */
+  def listening[A](l: org.apache.spark.scheduler.SparkListener)(f: => A): A = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try { val a = f; org.apache.spark.ListenerBusAccess.drain(sc); a }
+    finally sc.removeSparkListener(l)
+  }
+
   def withTempDir[A](f: java.io.File => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft-test").toFile
     try f(dir)
