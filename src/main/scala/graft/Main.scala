@@ -10,20 +10,32 @@ import graft.ops.Lifecycle
   *
   * Each market runs restore-check → freshness gate → ingest → validate →
   * merge → resample → summarize; one rendered report covers the fleet.
+  * Malformed arguments fail with the usage line before a session starts.
   */
 object Main {
+  private val Usage =
+    "usage: graft.Main <warehouseRoot> <asOf:yyyy-MM-dd> <market>=<csvDir>[:<expected>] ..."
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: graft.Main <warehouseRoot> <asOf:yyyy-MM-dd> <market>=<csvDir>[:<expected>] ...")
+    require(args.length >= 3, Usage)
     val root = args(0)
     val asOf = args(1)
+    // the freshness gate compares asOf to partition dates as strings,
+    // which orders dates only in the ISO form
+    require(scala.util.Try(java.time.LocalDate.parse(asOf)).isSuccess,
+      s"asOf '$asOf' is not an ISO date; $Usage")
     val configs = args.drop(2).toIndexedSeq.map { spec =>
-      val Array(market, rest) = spec.split("=", 2)
-      val (dir, expected) = rest.split(":", 2) match {
-        case Array(d, e) => (d, e.toLong)
+      val parts = spec.split("=", 2)
+      require(parts.length == 2 && parts(0).nonEmpty && parts(1).nonEmpty,
+        s"market spec '$spec' is not <market>=<csvDir>[:<expected>]; $Usage")
+      val (dir, expected) = parts(1).split(":", 2) match {
+        case Array(d, e) =>
+          require(e.toLongOption.isDefined,
+            s"expected symbol count '$e' in '$spec' is not a number; $Usage")
+          (d, e.toLong)
         case Array(d) => (d, 1L)
       }
-      Lifecycle.MarketConfig(market, dir, root, expected, asOf)
+      Lifecycle.MarketConfig(parts(0), dir, root, expected, asOf)
     }
     val spark = Session.local()
     try {

@@ -1036,7 +1036,8 @@ object SparkEntry {
       math.round((m to k).map(d => ws(d - 1).toDouble / d).sum))
   }
 
-  /** DuckDB MinHash signature over shingle list `sh` (Dedup.minhashSignature). */
+  /** DuckDB MinHash signature over shingle list `sh`: the universal-hash
+    * family of `Dedup.minhashSignatureNative` over md5-60 element hashes. */
   private[graft] def minhashSql(k: Int): String =
     s"""[coalesce(list_min(list_transform(sh,
        |    s -> ((2*i+1) * (${h60("s")} % 2147483647) + 7 + 13*i) % 2147483647)),

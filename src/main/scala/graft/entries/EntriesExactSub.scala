@@ -145,7 +145,7 @@ private[graft] object EntriesExactSub {
     // the screen now builds the TRAIN-ONLY index to window 8 and
     // rank-descends the EVAL half against its in-memory probe faces
     // (q373's increment machinery, minus the snapshot round-trip) —
-    // diagonal chaining gives the exact longestCrossMatch value for
+    // diagonal chaining gives the exact full-rebuild cross-match value for
     // every match ≥ 8, and the query only consumes matches ≥ 8 (the
     // filter and the contaminated_starts predicate), so the output is
     // provably identical to the former full-corpus build(+full
@@ -234,7 +234,7 @@ private[graft] object EntriesExactSub {
     // joins; an absent pair proves the window never occurs in train)
     // and DIAGONAL-CHAINS the hits: consecutive positions hitting one
     // (train doc, alignment) diagonal are ONE contiguous match of
-    // exactly run+8 tokens — the full-rebuild longestCrossMatch value
+    // exactly run+8 tokens — the full-rebuild cross-match value
     // for every match ≥ 8, with NO rebuild and cost tracking the
     // increment, never the corpus. The oracle rebuilds the FULL
     // combined SA, so the gate IS that equality.

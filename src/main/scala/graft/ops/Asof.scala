@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Spark lacks natively: for every left row, attach the single newest
   * right row with the same key and right.time <= left.time (backward;
   * "latest quote at or before each trade"), optionally bounded by a
-  * tolerance. `joinAsOfForward` mirrors it ("next quote at or after").
+  * tolerance.
   *
   * The reference never aligns series across symbols (SURVEY §2.4 scopes
   * as-of out), but any consumer of its warehouse doing trade/quote or
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *  - a left row at exactly a right row's timestamp matches it
   *    (the right side wins ties of the window ordering);
   *  - unmatched left rows survive with null right payload (left join);
-  *  - `tolerance` (backward join): matches further than `tolerance`
+  *  - `tolerance`: matches further than `tolerance`
   *    from the left time are discarded (null payload), mirroring
   *    pandas merge_asof;
   *  - right (key, time) pairs must be unique for a deterministic pick —
@@ -42,17 +42,7 @@ object Asof {
     */
   def joinAsOf(left: DataFrame, right: DataFrame, by: Seq[String],
                leftTime: String, rightTime: String,
-               tolerance: Option[Column] = None): DataFrame =
-    joinImpl(left, right, by, leftTime, rightTime, tolerance, forward = false)
-
-  /** Forward as-of join ("earliest right at or after each left row"). */
-  def joinAsOfForward(left: DataFrame, right: DataFrame, by: Seq[String],
-                      leftTime: String, rightTime: String): DataFrame =
-    joinImpl(left, right, by, leftTime, rightTime, None, forward = true)
-
-  private def joinImpl(left: DataFrame, right: DataFrame, by: Seq[String],
-                       leftTime: String, rightTime: String,
-                       tolerance: Option[Column], forward: Boolean): DataFrame = {
+               tolerance: Option[Column] = None): DataFrame = {
     val payload = right.columns.filterNot(c => by.contains(c) || c == rightTime).toIndexedSeq
     require(payload.intersect(left.columns).isEmpty,
       s"right payload ${payload.mkString(",")} collides with left columns")
@@ -74,13 +64,11 @@ object Asof {
     // right rows sort before left rows at equal time (side 0 < 1), so a
     // left row at exactly a right timestamp sees that right row
     val w = Window.partitionBy(by.map(col): _*)
-      .orderBy(if (forward) col("__t").desc else col("__t").asc,
-        col("__side").asc)
+      .orderBy(col("__t").asc, col("__side").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val matchedRaw = last(col("__r"), ignoreNulls = true).over(w)
     val matched = tolerance match {
       case None => matchedRaw
-      // only the backward join takes a tolerance
       case Some(tol) => Cols.bound(matchedRaw)(m =>
         when(m("__rt") >= col("__t") - tol, m))
     }

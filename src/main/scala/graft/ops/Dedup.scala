@@ -31,23 +31,6 @@ object Dedup {
   def bound(value: Column)(body: Column => Column): Column =
     Cols.bound(value)(body)
 
-  /** Base hashes of a shingle/token array: md5-hash mod P per element. */
-  def elementHashes(elems: Column): Column =
-    transform(elems, s => pmod(hashLong(s), lit(P)))
-
-  /** MinHash signature over pre-hashed elements (see elementHashes):
-    * k values, the i-th being min over elements of ((2i+1)·h + 7+13i)
-    * mod P. Empty sets sign to all-P (matches nothing).
-    *
-    * One aggregate fold: each element hash is a *bound variable* in the
-    * merge lambda, so it is computed exactly once no matter how many
-    * hash functions consume it.
-    */
-  def minhashFromHashes(hashes: Column, k: Int): Column =
-    aggregate(hashes, array_repeat(lit(P), lit(k)),
-      (acc, h) => transform(acc,
-        (a, i) => least(a, pmod((lit(2) * i + 1) * h + lit(7) + lit(13) * i, lit(P)))))
-
   /** ONE-PERMUTATION HASHING with rotation densification (Li et al.
     * 2012; Shrivastava & Li 2014) — the k×-cheaper MinHash: instead
     * of k independent hashes PER ELEMENT, each element is hashed
@@ -132,10 +115,6 @@ object Dedup {
       .select(col("id_a"), col("id_b")).distinct()
   }
 
-  /** Convenience one-shot signature. */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    minhashFromHashes(elementHashes(shingles), k)
-
   /** Native hashed word shingles (graftshim.HashedShingles): the
     * distinct 60-bit md5 hashes of every n-token window in one JVM pass —
     * value-equal to `transform(array_distinct(Text.wordShingles(t, n)),
@@ -145,8 +124,9 @@ object Dedup {
   def hashedShingles(toks: Column, n: Int): Column =
     graft.functions.NativeFunctions.hashedShingles(toks, n)
 
-  /** Native MinHash signature over hashed shingles — same universal-hash
-    * family as `minhashFromHashes`, one primitive loop per doc.
+  /** Native MinHash signature over hashed shingles: k values, the i-th
+    * the min over elements of ((2i+1)·(h mod P) + 7+13i) mod P; empty
+    * sets sign to all-P (matches nothing). One primitive loop per doc.
     */
   def minhashSignatureNative(hashedShingles: Column, k: Int): Column =
     graft.functions.NativeFunctions.minhashSig(hashedShingles, k)
@@ -238,40 +218,19 @@ object Dedup {
           .as("exp_fp_rate"))
   }
 
-  /** Exact Jaccard over two distinct-shingle arrays (intersection bound
-    * once — array_intersect on big string arrays is the dominant cost of
-    * candidate verification).
-    */
-  def jaccard(shA: Column, shB: Column): Column =
-    bound(size(array_intersect(shA, shB)).cast("double"))(shared =>
-      shared / (size(shA) + size(shB) - shared))
-
-  /** [[jaccard]] for LONG hash arrays via the native sorted-merge
-    * intersect count (graftshim.IntersectCountLong): value-identical —
-    * set-intersection cardinality, same |∩|/(|A|+|B|−|∩|) double chain
-    * — but no per-pair hash-set build, no boxing, codegen'd. The
-    * verification joins of the hashed Jaccard family run this over
-    * every surviving candidate pair, which at sf0.1 is ~10²× the true
-    * pair count even after the positional filter.
+  /** Exact Jaccard over two distinct LONG hash arrays via the native
+    * sorted-merge intersect count (graftshim.IntersectCountLong):
+    * |∩|/(|A|+|B|−|∩|) as a double chain, with no per-pair hash-set
+    * build, no boxing, codegen'd. The verification joins of the hashed
+    * Jaccard family run this over every surviving candidate pair,
+    * which at sf0.1 is ~10²× the true pair count even after the
+    * positional filter.
     */
   def jaccardHashed(shA: Column, shB: Column): Column =
     bound(graft.functions.NativeFunctions.intersectCountLong(shA, shB)
       .cast("double"))(shared =>
       shared / (size(shA) + size(shB) - shared))
 
-  /** Exact Jaccard near-dup pairs via a hashed inverted index: explode
-    * 60-bit shingle hashes, self-equi-join on the hash, count shared
-    * shingles per pair in one hash-aggregate, then jac = |∩|/|∪| against
-    * broadcast per-doc sizes. No array_intersect, long join keys (cheap
-    * shuffle). Exact up to md5-60bit shingle collisions (~n²/2⁶¹ —
-    * negligible below billions of distinct shingles).
-    *
-    * Cost is Σ_shingle C(df,2) — fine while document frequencies are
-    * bounded (measured 5.7M pairs / ~3 s at sf0.1, max df 250). For
-    * corpora with hot shingles (df in the millions) use
-    * jaccardPairsPrefix, which indexes only each doc's rare-shingle
-    * prefix. Input carries (`id`, `shingles`); output (id_a, id_b, jac).
-    */
   /** Rational effective-threshold bounds shared by every prune below.
     *
     * Each pair-generation prune must be consistent with its VERIFY
@@ -320,18 +279,20 @@ object Dedup {
       nb.cast("long") - pb.cast("long")) >=
       greatest(minShared(na, numer), minShared(nb, numer))
 
-  def jaccardPairs(docs: DataFrame, id: String, shingles: String,
-                   threshold: Double): DataFrame =
-    jaccardPairsHashed(
-      docs.select(col(id).as("id"),
-        transform(array_distinct(col(shingles)), s => hashLong(s)).as("hs")),
-      "id", "hs", threshold)
-
-  /** The inverted-join core over PRE-HASHED distinct shingles (see
-    * `hashedShingles`): explode the hash set, self-equi-join on the
-    * hash, count shared shingles per pair in one hash-aggregate, then
-    * jac = |∩|/|∪| against per-doc sizes derived FROM THE PERSISTED
-    * INDEX (no second pass over the shingling chain).
+  /** Exact Jaccard near-dup pairs over PRE-HASHED distinct shingles
+    * (see `hashedShingles`): explode the hash set, self-equi-join on
+    * the hash, count shared shingles per pair in one hash-aggregate,
+    * then jac = |∩|/|∪| against per-doc sizes derived FROM THE
+    * PERSISTED INDEX (no second pass over the shingling chain). Exact
+    * up to md5-60bit shingle collisions (~n²/2⁶¹ — negligible below
+    * billions of distinct shingles). Input carries (`id`, hashes);
+    * output (id_a, id_b, jac).
+    *
+    * Cost is Σ_shingle C(df,2) — fine while document frequencies are
+    * bounded (measured 5.7M pairs / ~3 s at sf0.1, max df 250). For
+    * corpora with hot shingles (df in the millions) use
+    * jaccardPairsPrefixHashed, which indexes only each doc's
+    * rare-shingle prefix.
     */
   def jaccardPairsHashed(docs: DataFrame, id: String, hashedShingles: String,
                          threshold: Double): DataFrame = {
@@ -362,55 +323,6 @@ object Dedup {
       .withColumn("jac",
         round(col("shared").cast("double") /
           (col("sa.n") + col("sb.n") - col("shared")), 4))
-      .filter(col("jac") >= threshold)
-      .select("id_a", "id_b", "jac")
-  }
-
-  /** Exact Jaccard near-dup pairs with PPJoin-style prefix filtering —
-    * the skew-proof variant for corpora where some shingles appear in
-    * millions of documents (a plain inverted join would emit C(df,2)
-    * pairs per hot shingle):
-    *
-    *  1. order every document's shingle set by ascending global
-    *     frequency (rarest first, total order tie-broken by value);
-    *  2. index only the first n−⌈θ·n⌉+1 shingles (the "prefix") — any
-    *     pair with Jaccard ≥ θ must collide inside both prefixes
-    *     (prefix-filter theorem), and prefixes are by construction the
-    *     RARE shingles, so the candidate join has no hot keys;
-    *  3. size-ratio prune (θ·|B| ≤ |A| ≤ |B|/θ, necessary for jac ≥ θ);
-    *  4. verify every candidate against the FULL shingle sets —
-    *     the output is identical to the all-pairs definition.
-    */
-  def jaccardPairsPrefix(docs: DataFrame, id: String, shingles: String,
-                         threshold: Double): DataFrame = {
-    val d = docs.select(col(id).as("id"), array_distinct(col(shingles)).as("sh"))
-    val inv = d.select(col("id"), explode(col("sh")).as("s"))
-    val numer = ratNumer(threshold)
-    val prefixLen = (size(col("sorted_sh")) -
-      minShared(size(col("sorted_sh")), numer) + 1).cast("int")
-    // df attaches as count-over-partition: ONE exchange of the posting
-    // stream (plus the in-partition sort WindowExec needs) instead of
-    // the groupBy+join-back pair; see prefixIndex for the measurement
-    val pidx = inv
-      .withColumn("f", count(lit(1)).over(Window.partitionBy(col("s"))))
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("f"), col("s")))).as("rs"))
-      .select(col("id"), transform(col("rs"), r => r.getField("s")).as("sorted_sh"))
-      .select(col("id"), size(col("sorted_sh")).as("n"),
-        posexplode(slice(col("sorted_sh"), lit(1), prefixLen))
-          .as(Seq("pos", "s")))
-    val cands = pidx.as("a").join(pidx.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id") &&
-          sizeBandLe(col("b.n"), col("a.n"), numer) &&
-          sizeBandLe(col("a.n"), col("b.n"), numer) &&
-          positionalLe(col("a.n"), col("a.pos"),
-            col("b.n"), col("b.pos"), numer))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cands
-      .join(d.select(col("id").as("id_a"), col("sh").as("sha")), Seq("id_a"))
-      .join(d.select(col("id").as("id_b"), col("sh").as("shb")), Seq("id_b"))
-      .withColumn("jac", round(jaccard(col("sha"), col("shb")), 4))
       .filter(col("jac") >= threshold)
       .select("id_a", "id_b", "jac")
   }
@@ -455,13 +367,21 @@ object Dedup {
   }
 
   /** PPJoin-style prefix filtering over PRE-HASHED shingles — the
-    * skew-proof Jaccard variant (see `jaccardPairsPrefix` for the
-    * theorem): index only each doc's n−⌈θ·n⌉+1 globally-rarest hashes
-    * (rarity = document frequency, ties by hash value — a total order),
-    * candidate-join on the prefix postings, size-ratio prune, then
-    * verify every candidate against the FULL hash sets. Identical
-    * output to `jaccardPairsHashed`; the candidate stream shrinks
-    * superlinearly because hot shingles never make a prefix.
+    * skew-proof Jaccard variant for corpora where some shingles appear
+    * in millions of documents (a plain inverted join would emit
+    * C(df,2) pairs per hot shingle):
+    *
+    *  1. order every document's hash set by ascending global frequency
+    *     (rarest first, ties by hash value — a total order);
+    *  2. index only the first n−⌈θ·n⌉+1 hashes (the "prefix") — any
+    *     pair with Jaccard ≥ θ must collide inside both prefixes
+    *     (prefix-filter theorem), and prefixes are by construction the
+    *     RARE shingles, so the candidate join has no hot keys;
+    *  3. size-ratio prune (θ·|B| ≤ |A| ≤ |B|/θ, necessary for jac ≥ θ);
+    *  4. verify every candidate against the FULL hash sets.
+    *
+    * Identical output to `jaccardPairsHashed`; the candidate stream
+    * shrinks superlinearly because hot shingles never make a prefix.
     */
   def jaccardPairsPrefixHashed(docs: DataFrame, id: String,
                                hashedShingles: String,
@@ -790,29 +710,10 @@ object Dedup {
     * Routed through the native codegen'd Catalyst expression
     * (graftshim.SimHash): one JVM loop per doc instead of an
     * interpreted per-token lambda fold — same values bit-for-bit
-    * (TextDedupSpec asserts parity with `simhashHof`).
+    * (TextDedupSpec asserts parity with its HOF reference fold).
     */
   def simhash(toks: Column, bits: Int): Column =
     graft.functions.NativeFunctions.simHash(toks, bits)
-
-  /** Built-ins-only simhash — the portable reference formulation the
-    * native expression is verified against.
-    */
-  def simhashHof(toks: Column, bits: Int): Column =
-    bound(transform(toks, t => hashLong(t)))(hs =>
-      simhashFromHashes(hs, size(hs), bits))
-
-  /** SimHash over pre-hashed tokens (60-bit full hashes, NOT mod P).
-    * Single aggregate fold carrying per-bit set-counts; the finish
-    * lambda packs the majority bits — each token hash touched once.
-    */
-  def simhashFromHashes(hashes: Column, nTokens: Column, bits: Int): Column =
-    aggregate(hashes, array_repeat(lit(0L), lit(bits)),
-      (acc, h) => array((0 until bits).map(i =>
-        element_at(acc, i + 1) + shiftright(h, i).bitwiseAND(1L)): _*),
-      counts => (0 until bits).map(i =>
-        when(element_at(counts, i + 1) * 2 > nTokens, lit(1L << i))
-          .otherwise(lit(0L))).reduce(_ + _))
 
   /** Hamming distance between two simhash sketches. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

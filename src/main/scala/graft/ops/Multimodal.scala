@@ -30,12 +30,6 @@ object Multimodal {
     df.withColumn("n_bytes", octet_length(blob))
       .withColumn("header_hex", substring(hex(blob), 1, 16))
 
-  /** Byte value at 1-based position i, via the hex encoding (engine
-    * portable; avoids binary indexing differences).
-    */
-  def byteAt(blob: Column, i: Column): Column =
-    conv(hex(blob).substr((i - 1) * 2 + 1, lit(2)), 16, 10).cast("int")
-
   /** Frame sampling: every `stride`-th window of `frameLen` bytes,
     * returned as hex strings (a real decoder would emit tensors). Pure
     * column expression — the sampling plan is identical with a real
@@ -57,23 +51,6 @@ object Multimodal {
       conv(substring(frameHex, (i - 1) * 2 + 1, 2), 16, 10).cast("long")
     }.reduce(_ + _)
 
-  /** The mapPartitions decode path — the real plumbing a Pandas-UDF /
-    * Arrow batch decoder would use on a Python stack: iterate a partition
-    * of (id, payload) rows, run the (stubbed) decoder per payload, emit a
-    * typed feature record. Batch shape: one partition in, one typed
-    * Dataset out; no shuffle, no driver involvement.
-    */
-  def decodeFeatures(media: Dataset[(Long, Array[Byte])]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { case (id, bytes) =>
-      // STUB decoder: replace with a real codec (JNI/ffmpeg/JPEG) —
-      // contract: Array[Byte] => fixed-shape features, no side effects.
-      val checksum = bytes.foldLeft(0L)((a, b) => a + (b & 0xff))
-      val first = if (bytes.nonEmpty) bytes(0) & 0xff else -1
-      MediaFeatures(id, bytes.length, checksum, first)
-    })
-  }
-
   /** The pluggable decode SEAM: a codec turns one payload batch into
     * fixed-shape feature records. Implementations must be pure
     * (payload bytes → features, no side effects) and serializable —
@@ -86,25 +63,6 @@ object Multimodal {
     */
   trait Decoder extends Serializable {
     def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[MediaFeatures]
-  }
-
-  /** The (stub) default decoder with an expensive handle — stands in
-    * for a JNI / ffmpeg / tokenizer context whose construction
-    * dominates per-row costs if done naively. `open()` is what must be
-    * amortized.
-    */
-  final class StubDecoder private () extends Decoder {
-    def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[MediaFeatures] =
-      batch.map { case (id, bytes) =>
-        val checksum = bytes.foldLeft(0L)((a, b) => a + (b & 0xff))
-        val first = if (bytes.nonEmpty) bytes(0) & 0xff else -1
-        MediaFeatures(id, bytes.length, checksum, first)
-      }
-  }
-  object StubDecoder {
-    /** Executor-side open counter, observable from specs (local mode). */
-    val opened = new java.util.concurrent.atomic.AtomicInteger(0)
-    def open(): StubDecoder = { opened.incrementAndGet(); new StubDecoder }
   }
 
   /** Canonical RIFF/WAVE writer (PCM16 mono): 44-byte header +
@@ -894,19 +852,18 @@ object Multimodal {
   /** Batched decode — the JVM face of the Arrow-batch (mapInArrow /
     * mapInPandas) contract a Python stack would use: the decoder handle
     * opens ONCE per partition, payloads stream through in bounded
-    * batches (vectorization unit; also the memory bound — at most
-    * `batchSize` payloads are resident per task), typed records come
-    * out. Identical results to the per-row path; only the batching
-    * shape differs.
+    * batches (vectorization unit; also the memory bound — at most 64
+    * payloads are resident per task), typed records come out.
+    * Identical results to decoding each payload alone; only the
+    * batching shape differs.
     */
   def decodeFeaturesBatched(media: Dataset[(Long, Array[Byte])],
-                            batchSize: Int = 64,
                             open: () => Decoder = () => FormatDecoder.open())
       : Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       val decoder = open() // once per partition, NOT per row
-      it.grouped(batchSize).flatMap(batch => decoder.decodeBatch(batch.toSeq))
+      it.grouped(64).flatMap(batch => decoder.decodeBatch(batch.toSeq))
     }
   }
 

@@ -21,37 +21,6 @@ object Quality {
   val ReasonInvalidPrice = "invalid_price"
   val ReasonOhlcLogic = "ohlc_logic_error"
 
-  /** Fixed gate order for a key rejected by several gates at once —
-    * the reference evaluates gates sequentially and reports the FIRST
-    * failure (empty → invalid_price → gap → ohlc,
-    * downloader_wmy.py:94-122), so a multi-gate failure must resolve to
-    * the same reason on every run, never to whichever union branch an
-    * unordered `first()` happened to see.
-    */
-  def reasonPriority(reason: Column): Column =
-    when(reason === ReasonEmpty, 0)
-      .when(reason === ReasonInvalidPrice, 1)
-      .when(reason.startsWith("gap_"), 2)
-      .when(reason === ReasonOhlcLogic, 3)
-      .otherwise(4)
-
-  /** Collapse a (key, reason) union to one deterministic reason per key,
-    * by gate priority then lexicographic reason as the total-order tiebreak.
-    */
-  def firstReasonPerKey(rejections: DataFrame): DataFrame =
-    rejections.groupBy("key")
-      .agg(min_by(col("reason"),
-        struct(reasonPriority(col("reason")), col("reason"))).as("reason"))
-
-  /** V1 positive-price gate (downloader_wmy.py:98-99): reject a key if ANY
-    * close <= 0.
-    */
-  def invalidPriceKeys(df: DataFrame, key: Column, close: Column): DataFrame =
-    df.groupBy(key.as("key"))
-      .agg(max(when(close <= 0, 1).otherwise(0)).as("bad"))
-      .filter(col("bad") === 1)
-      .select(col("key"), lit(ReasonInvalidPrice).as("reason"))
-
   /** V2 continuity gate (downloader_wmy.py:101-107): reject a key whose
     * sorted dates (restricted to >= since) contain a gap > maxGapDays.
     * Reason carries the observed max gap, e.g. "gap_20d".

@@ -29,16 +29,16 @@ object Report {
   /** K7/O2 parity: render the per-market run report from the (tiny)
     * summary table — the notifier's text payload (reference
     * notifier.py:40-119) up to the network boundary. The fail list is
-    * truncated to `sampleN` with an "...and N more" suffix
+    * truncated to 10 with an "...and N more" suffix
     * (notifier.py:56-57); timestamps render in UTC+8
     * (notifier.py:14-17); dates format `yyyy-MM-dd` to preserve the
     * lexicographic-order contract. The stamp is formatted on the driver;
     * the collects are the summary table itself (a handful of rows by
-    * construction) and a `sampleN + 1` sample of the failures, which
+    * construction) and an 11-row sample of the failures, which
     * are counted in full only when that sample overflows.
     */
-  def renderReport(summary: DataFrame, failures: DataFrame,
-                   sampleN: Int = 10): String = {
+  def renderReport(summary: DataFrame, failures: DataFrame): String = {
+    val sampleN = 10
     val stamp = java.time.ZonedDateTime.now(java.time.ZoneId.of("Asia/Taipei"))
       .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
     val header = s"Stock Warehouse Report ($stamp UTC+8)"

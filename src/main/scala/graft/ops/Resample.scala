@@ -60,22 +60,6 @@ object Resample {
         max_by(price, ord).as("close"),
         round(sum(volume), 2).as("volume"))
 
-  /** Four-column OHLC resample — reference parity for day-bar inputs
-    * that already carry open/high/low/close (downloader_wmy.py:44-51:
-    * open→first, high→max, low→min, close→last, volume→sum per bucket).
-    * Same single-shuffle hash-aggregate shape as `ohlc`.
-    */
-  def ohlcFromBars(df: DataFrame, key: Column, bucket: Column,
-                   open: Column, high: Column, low: Column, close: Column,
-                   volume: Column, ord: Column): DataFrame =
-    df.groupBy(key.as("symbol"), bucket.as("period"))
-      .agg(
-        min_by(open, ord).as("open"),
-        max(high).as("high"),
-        min(low).as("low"),
-        max_by(close, ord).as("close"),
-        sum(volume).as("volume"))
-
   /** pct_change parity (downloader_wmy.py:54-58): (close - prev)/prev,
     * rounded to 4, null on each key's first period. One shuffle on key;
     * the window sort is per-key and tiny (periods per key).

@@ -666,9 +666,9 @@ object Sampling {
     * are the exact integer binning constants carried on every stats
     * row so a STREAMING consumer can bin new rows identically.
     */
-  private def profileGrid(df: DataFrame, group: Column, value: Column,
-                          rowKey: Column,
-                          bins: Int): (DataFrame, DataFrame) = {
+  private[graft] def profileGrid(df: DataFrame, group: Column, value: Column,
+                                 rowKey: Column,
+                                 bins: Int): (DataFrame, DataFrame) = {
     require(bins >= 2, "bins must be >= 2")
     val rows = df.select(group.as("g"), value.cast("long").as("v"),
       rowKey.cast("string").as("k"))
@@ -713,16 +713,6 @@ object Sampling {
   def profileMatchStats(df: DataFrame, group: Column, value: Column,
                         bins: Int): DataFrame =
     profileGrid(df, group, value, lit(""), bins)._2
-
-  /** The kept ROWS (g, bin, k) of [[profileMatchThinning]] — the
-    * materialized sample rather than the audit counts.
-    */
-  def profileMatchKept(df: DataFrame, group: Column, value: Column,
-                       rowKey: Column, bins: Int): DataFrame = {
-    val (binned, stats) = profileGrid(df, group, value, rowKey, bins)
-    profileMatchRule(binned, stats).select(col("g"), col("bin"),
-      col("k"))
-  }
 
   def profileMatchThinning(df: DataFrame, group: Column, value: Column,
                            rowKey: Column, bins: Int): DataFrame = {

@@ -26,7 +26,7 @@ object Similarity {
   /** Runtime enforcement of the bounded-query contract shared by every
     * search that BROADCASTS its query side ([[bruteForceTopK]] /
     * [[bruteForceTopKL2]] broadcast the queries themselves;
-    * [[pqAdcTopK]] / [[ivfPqSearch]] / [[ivfPqSearchTiered]] /
+    * [[pqAdcTopK]] / [[ivfPqSearchTiered]] /
     * [[ivfPqSearchResidual]] broadcast a |queries|·m·ksub LUT). A
     * caller that passes the corpus as queries would broadcast the
     * corpus — the exact failure the contract forbids — so the guard
@@ -65,21 +65,13 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity — the native codegen'd Catalyst expression
     * (graft.functions.CosineSimilarity). Same numerics as the
-    * composable HOF formulation `cosineHof`; ~10× faster per pair.
+    * composable HOF formulation dot/(√dot(a,a)·√dot(b,b)), which a spec
+    * checks bit-for-bit; ~10× faster per pair.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.NativeFunctions.cosineSim(a, b)
-
-  /** Built-ins-only cosine (higher-order functions). Kept as the
-    * portable reference implementation; a spec asserts bit-for-bit
-    * agreement with the native expression.
-    */
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Per-ROW norm for the hoisted pair-kernel form: √dot(v,v) with the
     * native sequential ascending accumulation — the exact value the
@@ -281,24 +273,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "sim")
   }
-
-  /** Near-duplicate pairs by embedding cosine ≥ threshold, composable
-    * column form. All-pairs via interpreted lambda expressions — fine for
-    * candidate verification on thousands of rows, NOT the n² scan path
-    * (use cosineNearDupPairsExact for that).
-    */
-  def cosineNearDupPairs(vecs: DataFrame, threshold: Double): DataFrame =
-    vecs.select(col("id").as("id_a"),
-        col("vec").cast("array<double>").as("va"),
-        normHoisted(col("vec")).as("na")).as("a")
-      .join(vecs.select(col("id").as("id_b"),
-          col("vec").cast("array<double>").as("vb"),
-          normHoisted(col("vec")).as("nb")).as("b"),
-        col("id_a") < col("id_b"))
-      .withColumn("cos", round(cosineHoisted(col("va"), col("vb"),
-        col("na"), col("nb")), 6))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
 
   /** Exact all-pairs cosine near-dup scan as a blocked B²-pair kernel —
     * fully distributed, nothing ever materializes on the driver:
@@ -713,7 +687,7 @@ object Similarity {
         sum(round(col("csim") * 1e6).cast("long")).as("obj_fp"))
 
   /** IVF cell-count chooser — the scale contract the frozen-k gate
-    * queries pin only by constant (NOTES 100): k = ⌈c·√n⌉ clamped to
+    * queries pin only by constant (NOTES 100): k = ⌈√n⌉ clamped to
     * [4, 65536]. √n is the COST-balanced point of the two phases of
     * every cell-blocked kernel: assignment work is n·k (each vector
     * scores every centroid) and same-cell verify work is Σ occupancy²
@@ -723,10 +697,10 @@ object Similarity {
     * (pure arithmetic on a count the caller supplies — at scale the
     * count comes from a manifest stat, never a full scan).
     */
-  def chooseK(n: Long, c: Double = 1.0): Int = {
+  def chooseK(n: Long): Int = {
     require(n >= 0, "n must be >= 0")
     math.max(4, math.min(65536,
-      math.ceil(c * math.sqrt(n.toDouble)).toInt))
+      math.ceil(math.sqrt(n.toDouble)).toInt))
   }
 
   /** Probe-count companion of [[chooseK]]: recall under a √n-grown k
@@ -834,20 +808,12 @@ object Similarity {
   /** Squared L2 distance — the native codegen'd Catalyst expression
     * (graftshim.SquaredL2; the PQ metric: cosine ranks by angle, PQ's
     * codebooks quantize Euclidean cells). Same numerics as the
-    * composable HOF formulation [[sqDistHof]]; a spec asserts
-    * bit-for-bit agreement.
+    * composable HOF formulation (a sequential sum of squared
+    * differences in dimension order); a spec asserts bit-for-bit
+    * agreement.
     */
   def sqDist(a: Column, b: Column): Column =
     graft.functions.NativeFunctions.squaredL2(a, b)
-
-  /** Built-ins-only squared L2 (higher-order functions, sequential sum
-    * in dimension order) — the portable reference implementation.
-    */
-  def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) =>
-      (x.cast("double") - y.cast("double")) *
-        (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
 
   /** The `m` equal subvector slices of each vector: (id, sub, svec) with
     * sub ∈ [0, m). Pure narrow projection — the product-quantization
@@ -965,7 +931,7 @@ object Similarity {
 
   /** [[ivfAssign]] under the EUCLIDEAN metric (squared L2 rounded to 6
     * asc, centroid id tiebreak) — the coarse quantizer that composes
-    * coherently with PQ's L2 codebooks in [[ivfPqSearch]]. Same plan
+    * coherently with PQ's L2 codebooks in [[ivfPqSearchTiered]]. Same plan
     * shape as the cosine variant: broadcast centroids, min_by argmin,
     * map-side collapse to one row per id.
     */
@@ -1059,7 +1025,7 @@ object Similarity {
     * `nprobe` L2-nearest cells ([[ivfProbeCellsL2]]) and rank only
     * the corpus vectors assigned there ([[ivfAssignL2]]) by rounded
     * squared distance (asc, neighbor id) — the plain-IVF sibling of
-    * [[ivfPqSearch]] when the corpus floats are affordable. Same
+    * [[ivfPqSearchTiered]] when the corpus floats are affordable. Same
     * nesting guarantee: candidates grow monotonically with nprobe,
     * and at nprobe = |centroids| the result equals
     * [[bruteForceTopKL2]] (spec-pinned).
@@ -1095,66 +1061,31 @@ object Similarity {
       .select(col("qid"), col("qv"), col("cid").as("cell"), col("pr"))
   }
 
-  /** IVF-PQ search — the canonical 100 TB ANN shape, end to end and
-    * all-Euclidean: a coarse quantizer ([[ivfAssignL2]], broadcast
-    * `centroids`) routes every corpus vector to one cell; the corpus is
-    * PQ-encoded ([[pqEncode]], `m` code bytes per vector); each query
-    * probes its `nprobe` nearest cells and ranks ONLY those cells'
-    * members, by asymmetric distance over the codes (per-query LUT,
-    * fixed-point sums — [[pqAdcTopK]]'s arithmetic exactly). Per-query
-    * cost is probed-cell occupancy × m table lookups; the corpus floats
-    * are touched only at assign/encode time, never per query.
+  /** IVF-PQ search at SEVERAL nprobe tiers in ONE pass — the canonical
+    * 100 TB ANN shape, end to end and all-Euclidean: a coarse quantizer
+    * ([[ivfAssignL2]], broadcast `centroids`) routes every corpus vector
+    * to one cell; the corpus is PQ-encoded ([[pqEncode]], `m` code bytes
+    * per vector); each query probes its nearest cells and ranks ONLY
+    * those cells' members, by asymmetric distance over the codes
+    * (per-query LUT, fixed-point sums — [[pqAdcTopK]]'s arithmetic
+    * exactly). Per-query cost is probed-cell occupancy × m table
+    * lookups; the corpus floats are touched only at assign/encode time,
+    * never per query.
     *
-    * Candidate sets nest as nprobe grows, and at nprobe = |centroids|
-    * the result EQUALS the full [[pqAdcTopK]] scan (spec-pinned) — the
-    * recall knob is explicit, monotone, and bounded by the PQ scan's
-    * own quality.
-    */
-  def ivfPqSearch(queries: DataFrame, corpus: DataFrame,
-                  centroids: DataFrame, codebook: DataFrame,
-                  m: Int, k: Int, nprobe: Int = 1): DataFrame = {
-    guardBoundedQueries(queries, DefaultMaxQueries, "ivfPqSearch")
-    val assigned = ivfAssignL2(corpus, centroids).select(col("id"), col("cell"))
-    val codes = pqEncode(corpus, codebook, m)
-    val lut = subVectors(queries, m)
-      .select(col("id").as("lqid"), col("sub"), col("svec"))
-      .join(codebook, Seq("sub"))
-      .select(col("lqid"), col("sub"), col("cid"),
-        round(round(sqDist(col("svec"), col("cvec")), 6) * 1e6)
-          .cast("long").as("dfp"))
-    val cand = ivfProbeCellsL2(queries, centroids, nprobe)
-      .select(col("qid"), col("cell"))
-      .join(assigned, Seq("cell"))
-      .filter(col("qid") =!= col("id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist_fp"), col("neighbor_id"))
-    cand.join(codes, Seq("id"))
-      .join(broadcast(lut),
-        col("qid") === col("lqid") &&
-          codes("sub") === lut("sub") && codes("code") === lut("cid"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("dfp")).as("adist_fp"))
-      .select(col("qid").as("query_id"), col("id").as("neighbor_id"),
-        col("adist_fp"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adist_fp")
-  }
-
-  /** [[ivfPqSearch]] at SEVERAL nprobe tiers in ONE pass — the recall-
-    * sweep shape (every IVF evaluation wants recall at 2–4 tiers). A
-    * naive per-tier loop rebuilds assign + encode + LUT + ADC once per
-    * tier; but candidate sets NEST as nprobe grows, so one ADC pass at
-    * max(nprobes) carrying each candidate's probe rank `pr` (the rank
-    * of its cell among the query's nearest) contains every tier: tier
-    * np is exactly the candidates with pr ≤ np, filtered BEFORE the
-    * per-tier ranking. One assign, one encode, one LUT, one ADC
-    * aggregate in the plan regardless of tier count; the tier fan-out
-    * (explode × |nprobes|) happens on the already-collapsed
-    * (query, neighbor) rows. Per tier, results are bit-identical to
-    * [[ivfPqSearch]] at that nprobe (spec-pinned).
+    * The tiers are the recall-sweep shape (every IVF evaluation wants
+    * recall at 2–4 tiers). A naive per-tier loop rebuilds assign +
+    * encode + LUT + ADC once per tier; but candidate sets NEST as
+    * nprobe grows, so one ADC pass at max(nprobes) carrying each
+    * candidate's probe rank `pr` (the rank of its cell among the
+    * query's nearest) contains every tier: tier np is exactly the
+    * candidates with pr ≤ np, filtered BEFORE the per-tier ranking. One
+    * assign, one encode, one LUT, one ADC aggregate in the plan
+    * regardless of tier count; the tier fan-out (explode × |nprobes|)
+    * happens on the already-collapsed (query, neighbor) rows. Per tier,
+    * results are bit-identical to a single-nprobe IVF-PQ search
+    * (SimilaritySpec pins it).
     *
-    * Output adds an `nprobe` column; same contract otherwise.
+    * Output: (query_id, neighbor_id, nprobe, rank, adist_fp).
     */
   def ivfPqSearchTiered(queries: DataFrame, corpus: DataFrame,
                         centroids: DataFrame, codebook: DataFrame,
@@ -1595,8 +1526,8 @@ object Similarity {
     * Overflow throws via add/multiplyExact instead of wrapping (shard
     * + sum shards past ~9·10¹² unit-norm rows at scale 10³ — see the
     * aggregator scaladoc). The eigen-solve on the collected d² matrix
-    * is a DRIVER-side step ([[topEigen]]) — the canonical tall-skinny
-    * PCA split: distribute XᵀX, solve locally. G[i][j] = Σ_rows cᵢ·cⱼ,
+    * is a DRIVER-side step (a local power iteration) — the canonical
+    * tall-skinny PCA split: distribute XᵀX, solve locally. G[i][j] = Σ_rows cᵢ·cⱼ,
     * exact integers, bit-identical on any engine.
     * Output: (i, j, g DECIMAL(38,0)), d² rows, 0-based dims; empty
     * input yields zero rows.
@@ -1633,29 +1564,10 @@ object Similarity {
           .cast("decimal(38,0)").as("g"))
   }
 
-  /** Driver-side power iteration for the top eigenpair of a (tiny,
-    * symmetric, collected) Gramian — d² doubles, the local half of the
-    * [[gramianFixedPoint]] PCA split. Deterministic: starts from the
-    * all-ones direction. Returns (unit eigenvector, eigenvalue as the
-    * Rayleigh quotient).
-    */
-  def topEigen(g: Array[Array[Double]], iters: Int): (Array[Double], Double) = {
-    val d = g.length
-    var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-    for (_ <- 1 to iters) {
-      val w = Array.tabulate(d)(i =>
-        (0 until d).map(j => g(i)(j) * v(j)).sum)
-      val n = math.sqrt(w.map(x => x * x).sum)
-      if (n > 0) v = w.map(_ / n)
-    }
-    val gv = Array.tabulate(d)(i => (0 until d).map(j => g(i)(j) * v(j)).sum)
-    val lambda = (0 until d).map(i => v(i) * gv(i)).sum
-    (v, lambda)
-  }
-
   /** FIXED-POINT power iteration for the Gramian's top eigenvector —
-    * [[topEigen]]'s determinism-contract sibling: every step is either
-    * an exact integer operation or one IEEE-correctly-rounded double
+    * the determinism-contract form of a driver-side power iteration
+    * over the collected Gramian: every step is either an exact integer
+    * operation or one IEEE-correctly-rounded double
     * op in a pinned order, so a SQL oracle replays the whole
     * trajectory bit-for-bit (the [[graft.ops.LinearModel.logisticGd]]
     * convention applied to PCA). Per iteration from v = all-1e6

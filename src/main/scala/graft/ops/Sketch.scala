@@ -129,11 +129,6 @@ object Sketch {
       .groupBy(col("row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Cellwise merge — sketch of a union equals sum of sketches. */
-  def cmMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("row"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-
   /** Equi-join cardinality estimate from two count-min register tables
     * |A ⋈ B| ≈ min over hash rows of Σ_bucket cntA·cntB.
     * Each row's inner product equals the true join size plus
@@ -182,10 +177,6 @@ object Sketch {
       .select(col("rb.row").as("row"), col("rb.bucket").as("bucket"))
       .distinct()
 
-  /** Union of two Bloom filters: set union of cells. */
-  def bloomMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).distinct()
-
   /** Membership test for `probes`: true iff ALL k cells are present —
     * possibly-in-set (false positives shrink with m), never a false
     * negative.
@@ -212,12 +203,6 @@ object Sketch {
     df.groupBy(groups.map(col) :+
         floor(value / width).cast("long").as("bucket"): _*)
       .agg(count(lit(1)).as("cnt"))
-
-  /** Cellwise merge — histogram of a union equals the sum of histograms. */
-  def histMerge(a: DataFrame, b: DataFrame, groups: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy(groups.map(col) :+ col("bucket"): _*)
-      .agg(sum(col("cnt")).as("cnt"))
 
   /** Quantile estimates from histogram registers: for each p in (0,1],
     * locate the bucket where the cumulative count first reaches p·n and

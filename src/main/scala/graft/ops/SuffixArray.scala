@@ -325,60 +325,6 @@ object SuffixArray {
       .drop("island")
   }
 
-  /** EXACT-SPAN DECONTAMINATION: for every EVAL suffix position, the
-    * length of its longest exact token match against the TRAIN side
-    * of the corpus — max of the LCPs with the nearest train suffix
-    * above and below in SA order (the standard identity: LCP is the
-    * interval min of adjacent LCPs, maximized at the nearest
-    * same-side neighbor). Computed with two SEGMENTED running mins:
-    * segment ids are train-counts from the two-level prefix kernel
-    * (left segments [Tᵢ, Tᵢ₊₁) carry the train at their START and
-    * scan prev-pair LCPs forward; right segments (Tᵢ, Tᵢ₊₁] carry it
-    * at their END and scan next-pair LCPs backward) — windows
-    * partition by segment, never globally, and a segment with no
-    * train (before the first / after the last) yields null on that
-    * side. Output: (doc_id, pos, train_match) for every eval
-    * position, train_match null when no train suffix exists on
-    * either side. `isTrain` maps the doc_id column to the split
-    * predicate (the caller's leakage-safe hash split).
-    */
-  def longestCrossMatch(b: Built, numDocs: Long,
-                        isTrain: Column => Column): DataFrame = {
-    val pairs = adjacentLcp(b, numDocs).select(col("rank_sa"), col("lcp"))
-    val real = b.sa.filter(!col("sent"))
-      .select((col("rank") - numDocs).as("rank_sa"), col("doc_id"),
-        col("pos"))
-      .withColumn("tr", isTrain(col("doc_id")).cast("long"))
-    val withL = real
-      .join(pairs.select((col("rank_sa") + 1).as("rank_sa"),
-        col("lcp").as("prev_lcp")), Seq("rank_sa"), "left")
-      .join(pairs.select(col("rank_sa"), col("lcp").as("next_lcp")),
-        Seq("rank_sa"), "left")
-    val seg = Ranks.withRunningBelow(withL, "rank_sa", 16384L, Seq("tr"))
-      .withColumn("seg_l", col("tr_below") + col("tr"))
-      .withColumn("seg_r", col("tr_below"))
-    val wl = Window.partitionBy(col("seg_l")).orderBy(col("rank_sa"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wr = Window.partitionBy(col("seg_r"))
-      .orderBy(col("rank_sa").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // the segment's own train contributes no pair (its prev/next pair
-    // lies outside the interval) — nulled out of the min
-    val scanned = seg
-      .withColumn("lmin", min(when(col("tr") === 1, lit(null))
-        .otherwise(col("prev_lcp"))).over(wl))
-      .withColumn("l_ok",
-        max(col("tr")).over(Window.partitionBy(col("seg_l"))) === 1)
-      .withColumn("rmin", min(when(col("tr") === 1, lit(null))
-        .otherwise(col("next_lcp"))).over(wr))
-      .withColumn("r_ok",
-        max(col("tr")).over(Window.partitionBy(col("seg_r"))) === 1)
-    scanned.filter(col("tr") === 0)
-      .select(col("doc_id"), col("pos"),
-        greatest(when(col("l_ok"), col("lmin")),
-          when(col("r_ok"), col("rmin"))).as("train_match"))
-  }
-
   /** Lee et al.'s dedup-mass read: per doc, how many suffix positions
     * START a repeated run of ≥ `minLen` tokens (max of the two
     * SA-neighbor LCPs — the standard "longest match anywhere else in
@@ -713,18 +659,6 @@ object SuffixArray {
     cur
   }
 
-  /** The train documents an increment could share a g-token span with:
-    * distinct docs holding any g-window the probe matched. Any train
-    * match of length ≥ g tiles into aligned g-grams inside ONE train
-    * doc, so the candidate set provably contains every doc a ≥ g
-    * span lives in — retrieval by rank equality, never similarity.
-    */
-  def probeCandidateDocs(index: ProbeIndex,
-                         gramRanks: DataFrame): DataFrame =
-    index.occ
-      .join(gramRanks.select(col("rank")).distinct(), Seq("rank"))
-      .select(col("doc_id")).distinct()
-
   /** INCREMENTAL exact-span decontamination: score a NEW eval batch
     * against an existing train corpus WITHOUT rebuilding any suffix
     * array — probe, then DIAGONAL RUN CHAINING:
@@ -743,8 +677,9 @@ object SuffixArray {
     *      q+g — or the text ends). So the longest train match from
     *      position p via that diagonal is run_end(p) − p + g, and
     *      train_match(p) is the max over diagonals — EXACTLY the
-    *      full-rebuild [[longestCrossMatch]] value whenever it is
-    *      ≥ g, with no rebuild, no corpus-sized shuffle: the runs
+    *      full-rebuild longest cross match (the segmented LCP scan
+    *      over the combined train∪eval suffix array, which the specs
+    *      compare against) whenever it is ≥ g, with no rebuild, no corpus-sized shuffle: the runs
     *      window partitions by diagonal (doc-bounded), never globally.
     *
     * Positions with no gram hit have NO train match of length ≥ g
@@ -756,8 +691,8 @@ object SuffixArray {
     * grams cost occurrence rows, never whole candidate documents.
     *
     * `evalDocs` carries (doc_id, text), ids disjoint from train.
-    * Returns (doc_id, pos, train_match) for every eval position, the
-    * [[longestCrossMatch]] shape thresholded at g.
+    * Returns (doc_id, pos, train_match) for every eval position: the
+    * full-rebuild longest cross match thresholded at g.
     */
   def decontaminateIncrement(index: ProbeIndex, evalDocs: DataFrame,
                              materializeLevels: Boolean = false)

@@ -153,17 +153,6 @@ object Text {
   def collapseWhitespace(text: Column): Column =
     trim(regexp_replace(text, "[ \t\n\r\f]+", " "))
 
-  /** The full crawl CANONICALIZER for dedup keys: NFC (composed
-    * bytes), invisible strip, whitespace collapse, lowercase — in
-    * that order (NFC first so stripped/collapsed offsets see composed
-    * code points). Two renders of the same page — NFD vs NFC, zero-
-    * width-injected, re-wrapped — canonicalize to one byte string;
-    * [[fingerprint]] on raw text misses all three classes.
-    */
-  def canonicalizeForDedup(text: Column): Column =
-    lower(collapseWhitespace(stripInvisible(
-      graft.functions.NativeFunctions.unicodeNorm(text, "NFC"))))
-
   /** BPE-ish subword tokenization: letter runs, digit runs, and single
     * non-alphanumeric marks — the shape of a byte-pair pre-tokenizer's
     * split pattern, engine-portable (no lookarounds). Feeds token-count
@@ -938,9 +927,9 @@ object Text {
     *
     * `maxBlockPairs` > 0 arms the density guard: before the verify
     * join runs, a histogram over the block key counts candidate pairs
-    * per block (`fuzzyBlockStats`) and the total + hottest blocks are
+    * per block (`blockHistogram`) and the total + hottest blocks are
     * logged; any single block above the limit throws instead of
-    * silently going quadratic — the `jaccardPairsPrefix` hot-shingle
+    * silently going quadratic — the `jaccardPairsPrefixHashed` hot-shingle
     * lesson applied to the edit-distance path. The stats pass is two
     * small hash aggregates (block-key cardinality, not row count), so
     * arming it costs one extra scan of each side's key projection.
@@ -1013,29 +1002,6 @@ object Text {
       .join(pAll, Seq("pn"))
       .join(rAll, Seq("rn"))
       .select(col("probe_id"), col("ref_id"), col("dist"))
-  }
-
-  /** Candidate-pair histogram for the blocked fuzzy join: one row per
-    * (block char, length) block with the probe rows, ref rows, and
-    * candidate pairs (= probes × refs) it would generate. This is the
-    * pre-flight a production ER run does before committing to a
-    * verify join — pair volume grows with the square of block size,
-    * so a single hot block (single-letter vocabulary, constant-length
-    * codes) can dominate the whole job.
-    */
-  def fuzzyBlockStats(probes: DataFrame, refs: DataFrame, probeId: String,
-                      probeName: Column, refId: String, refName: Column,
-                      maxDist: Int): DataFrame = {
-    val p = probes
-      .select(col(probeId).as("probe_id"), probeName.as("pn"))
-      .select(substring(col("pn"), 1, 1).as("bc"),
-        explode(sequence(length(col("pn")) - maxDist,
-          length(col("pn")) + maxDist)).as("blen"))
-    val r = refs
-      .select(col(refId).as("ref_id"), refName.as("rn"))
-      .select(substring(col("rn"), 1, 1).as("bc"),
-        length(col("rn")).as("blen"))
-    blockHistogram(p, r)
   }
 
   private def blockHistogram(p: DataFrame, r: DataFrame,

@@ -660,9 +660,8 @@ object Snapshot {
     * it (DROP + CREATE are metadata-only on an external table).
     */
   def readBucketed(spark: SparkSession, table: String,
-                   catalogName: String,
-                   version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
+                   catalogName: String): DataFrame = {
+    val v = latestVersion(table).getOrElse(
       sys.error(s"no committed version at $table"))
     val m = readManifest(table, v)
     require(m.dirs.size == 1,
@@ -946,19 +945,18 @@ object Snapshot {
   /** `merge` with the standard optimistic-concurrency loop: a writer
     * losing the version race re-reads the winner's snapshot and re-merges
     * on top of it. Safe because merge is keep-latest (re-applying the
-    * same batch over any newer snapshot converges); bounded so a
-    * livelocked table surfaces as an error, not an infinite loop.
+    * same batch over any newer snapshot converges); bounded at 5 retries
+    * so a livelocked table surfaces as an error, not an infinite loop.
     */
   def mergeRetrying(incoming: DataFrame, table: String, keys: Seq[String],
-                    versionCol: String, partitionCol: String,
-                    maxRetries: Int = 5): Long = {
+                    versionCol: String, partitionCol: String): Long = {
     var attempt = 0
     while (true) {
       try return merge(incoming, table, keys, versionCol, partitionCol)
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
-          if (attempt > maxRetries) throw e
+          if (attempt > 5) throw e
       }
     }
     -1L // unreachable
@@ -1350,8 +1348,8 @@ object Snapshot {
   /** Collapse a partitioned snapshot's accumulated partition DIRECTORIES
     * into one — the compaction face a per-micro-batch append stream
     * needs. `compact` keeps one file per partition dir, but a stream
-    * that merges a fresh partition value every batch (erStream/
-    * snapshotMergeStream tag by ingest batch) grows one DIR per batch,
+    * that merges a fresh partition value every batch (erStream tags
+    * by ingest batch) grows one DIR per batch,
     * so file count still tracks stream age; this re-tags every row's
     * partition value to `intoValue`, writes `targetFiles` files under a
     * single directory, and commits atomically as the next version.
@@ -1467,11 +1465,6 @@ object Snapshot {
     val v = tags(table).getOrElse(name,
       throw new IllegalArgumentException(s"$table has no tag '$name'"))
     read(spark, table, Some(v))
-  }
-
-  def dropTag(table: String, name: String): Unit = {
-    checkTagName(name)
-    Files.deleteIfExists(tagDir(table).resolve(name)): Unit
   }
 
   // ---- WRITE–AUDIT–PUBLISH staging (the Iceberg wap.id pattern) ----

@@ -205,31 +205,6 @@ object Streams {
         versionCol, partitionCol)
     }
 
-  /** mergeStream's transactional sibling: each micro-batch lands as an
-    * ATOMIC snapshot commit (Snapshot.merge) — a crash mid-batch leaves
-    * the previous snapshot fully live, and readers never see a
-    * half-written batch. Replays after checkpoint recovery re-merge to
-    * identical content (keep-latest), just as a new vacuumable version.
-    *
-    * Small-file growth: unlike [[erStream]]/[[dedupStream]], no
-    * automatic compaction is wired here — `partitionCol` is
-    * caller-chosen and usually MEANINGFUL (a date), and replay
-    * correctness relies on merge touching only a batch's own
-    * partitions, so collapsing values is not universally safe. When
-    * the partition is a per-batch ingest tag, run
-    * [[graft.sources.Snapshot.compactInto]] on the caller's own
-    * cadence; when it is a real dimension, [[graft.sources.Snapshot
-    * .compact]] (one file per partition dir) is the safe bound.
-    */
-  def snapshotMergeStream(in: DataFrame, table: String, checkpoint: String,
-                          keys: Seq[String], versionCol: String,
-                          partitionCol: String): Unit =
-    drain(in, checkpoint, OutputMode.Update) { (batch, _) =>
-      if (!batch.isEmpty)
-        graft.sources.Snapshot.merge(batch, table, keys,
-          versionCol, partitionCol): Unit
-    }
-
   /** Streaming distinct-count sketching: fold each micro-batch's HLL
     * registers into a running register table (per-bucket max). The
     * state is ≤ groups × m tiny rows — the estimate never rescans
@@ -370,8 +345,7 @@ object Streams {
 
   def hygieneStream(in: DataFrame, benchDocs: DataFrame,
                     acceptPath: String, rejectPath: String,
-                    checkpoint: String, minQuality: Double = 0.2,
-                    maxRepetition: Double = 0.5): Unit = {
+                    checkpoint: String, minQuality: Double = 0.2): Unit = {
     import graft.ops.{Dedup, Text}
     // the benchmark set is static: shingle it ONCE and persist, so each
     // micro-batch broadcasts from the cache instead of re-running the
@@ -392,7 +366,7 @@ object Streams {
         val routed = hold(scored.join(shared, "doc_id")
           .withColumn("reason",
             when(col("quality") < minQuality, lit("low_quality"))
-              .when(col("repetition") > maxRepetition, lit("repetitive"))
+              .when(col("repetition") > 0.5, lit("repetitive"))
               .when(col("n_shared") > 0L, lit("contaminated")))
           .persist())
         routed.filter(col("reason").isNull)
@@ -615,7 +589,7 @@ object Streams {
   def driftStream(in: DataFrame, value: org.apache.spark.sql.Column,
                   binWidth: Double, refHist: DataFrame,
                   registerTable: String, alarmPath: String,
-                  checkpoint: String, psiAlarm: Double = 0.2): Unit = {
+                  checkpoint: String): Unit = {
     import graft.ops.{Dedup, Quality}
     import graft.sources.Snapshot
     require(binWidth > 0, "binWidth must be positive")
@@ -644,7 +618,7 @@ object Streams {
             col("n_bins"),
             col("psi"),
             when(col("n_bins") === 0, lit(true))
-              .otherwise(col("psi") >= psiAlarm).as("alarm"))
+              .otherwise(col("psi") >= 0.2).as("alarm"))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(alarmPath)
       }

@@ -46,8 +46,8 @@ case class HashedShingles(child: Expression, n: Int)
 /** Native MinHash signature over pre-hashed shingles (`HashedShingles`
   * output): k values, the i-th being min over elements of
   * ((2i+1)·(h mod P) + 7 + 13i) mod P with P = 2³¹−1 — the identical
-  * universal-hash family as `Dedup.minhashFromHashes`, evaluated as one
-  * primitive double loop instead of an interpreted aggregate fold.
+  * universal-hash family as the HOF aggregate fold the specs check it
+  * against, evaluated as one primitive double loop.
   * Empty inputs sign to all-P (matches nothing).
   */
 case class MinHashSig(child: Expression, k: Int)

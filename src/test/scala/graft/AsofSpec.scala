@@ -53,18 +53,6 @@ class AsofSpec extends SparkSpec {
       5L -> None))
   }
 
-  test("forward: earliest quote at or after each trade") {
-    val got = Asof.joinAsOfForward(trades, quotes, Seq("sym"), "t", "t")
-      .select($"trade_id", $"quote_px").as[(Long, Option[Double])]
-      .collect().toMap
-    assert(got == Map(
-      1L -> Some(1.0),   // next quote is @200
-      2L -> Some(2.0),   // next is @300
-      3L -> Some(2.0),   // exact timestamp matches forward too
-      4L -> None,        // no B quote at/after 500
-      5L -> None))
-  }
-
   test("left columns and key columns survive untouched") {
     val out = Asof.joinAsOf(trades, quotes, Seq("sym"), "t", "t")
     assert(out.columns.toSeq == Seq("sym", "trade_id", "t", "trade_px", "quote_px"))

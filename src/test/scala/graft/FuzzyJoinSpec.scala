@@ -268,16 +268,6 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(!fused.exists(_._1 == 23L)) // no row for unmatched probes
   }
 
-  test("fuzzyBlockStats reports per-block candidate volume") {
-    val probes = Seq((1L, "aa"), (2L, "ab"), (3L, "ba")).toDF("id", "name")
-    val refs = Seq((4L, "ac"), (5L, "bd")).toDF("id", "name")
-    val stats = Text.fuzzyBlockStats(probes, refs, "id", $"name",
-        "id", $"name", 0)
-      .as[(String, Int, Long, Long, Long)].collect().toSet
-    // block ("a", len 2): 2 probes x 1 ref; block ("b", len 2): 1 x 1
-    assert(stats == Set(("a", 2, 2L, 1L, 2L), ("b", 2, 1L, 1L, 1L)))
-  }
-
   test("sortedNeighborhoodPairs: two-level rank = global sort, window " +
       "bounds pairing, lev verifies — brute-force parity") {
     import graft.ops.Text

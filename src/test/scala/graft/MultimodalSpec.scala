@@ -13,14 +13,6 @@ class MultimodalSpec extends SparkSpec {
     assert(r == ((4, "41424344")))
   }
 
-  test("byteAt decodes positional byte values") {
-    val df = Seq("AZ").toDF("text")
-    val r = df.select(
-      Multimodal.byteAt($"text".cast("binary"), lit(1)),
-      Multimodal.byteAt($"text".cast("binary"), lit(2))).as[(Int, Int)].head()
-    assert(r == ((65, 90)))
-  }
-
   test("sampleFrames: stride windows in hex; short payloads give none") {
     // 12 bytes, frameLen 4, stride 4 -> 3 frames
     val r = Seq("ABCDEFGHIJKL", "AB").toDF("text")
@@ -41,22 +33,21 @@ class MultimodalSpec extends SparkSpec {
   test("decodeFeatures: typed mapPartitions stub decoder matches column math") {
     val media = Seq((1L, "ABC".getBytes("UTF-8")), (2L, Array.empty[Byte]))
       .toDS()
-    val r = Multimodal.decodeFeatures(media).collect().map(f =>
+    val r = Reference.decodeFeatures(media).collect().map(f =>
       (f.doc_id, f.n_bytes, f.checksum, f.first_byte)).toSet
     assert(r == Set((1L, 3, 65L + 66L + 67L, 65), (2L, 0, 0L, -1)))
   }
 
   test("batched decode: one decoder open per partition, same results") {
-    val media = spark.range(0, 100).map(i =>
+    val media = spark.range(0, 1000).map(i =>
       (i.toLong, s"payload-$i".getBytes("UTF-8"))).repartition(4)
-    val perRow = Multimodal.decodeFeatures(media).collect().toSet
+    val perRow = Reference.decodeFeatures(media).collect().toSet
     Multimodal.FormatDecoder.opened.set(0)
     // non-WAV payloads: the sniffing default falls back to the stub
     // arithmetic, so the batched path must equal the per-row stub path
-    val batched = Multimodal.decodeFeaturesBatched(media, batchSize = 8)
-      .collect().toSet
+    val batched = Multimodal.decodeFeaturesBatched(media).collect().toSet
     assert(batched == perRow)
-    // 100 rows across 4 partitions, batch size 8: the decoder handle
+    // 1000 rows across 4 partitions, batches of 64: the decoder handle
     // opened once per PARTITION, never per row or per batch
     assert(Multimodal.FormatDecoder.opened.get() == 4,
       s"opened ${Multimodal.FormatDecoder.opened.get()} times")
@@ -369,8 +360,8 @@ class MultimodalSpec extends SparkSpec {
     }
     val media = spark.range(0, 40).map(i =>
       (i.toLong, s"payload-$i".getBytes("UTF-8"))).repartition(4)
-    val stub = Multimodal.decodeFeaturesBatched(media, batchSize = 8)
-    val golden = Multimodal.decodeFeaturesBatched(media, batchSize = 8,
+    val stub = Multimodal.decodeFeaturesBatched(media)
+    val golden = Multimodal.decodeFeaturesBatched(media,
       open = () => new GoldenDecoder)
     // the pipeline around the seam is unchanged: same schema, same row
     // set keyed by (doc_id, n_bytes) — only the decoder-computed

@@ -42,7 +42,7 @@ class NormalizeReportSpec extends SparkSpec {
       .toDF("market", "success", "end_date")
     val failures = (1 to 14).map(i => (s"SYM$i", "invalid_price"))
       .toDF("key", "reason")
-    val text = Report.renderReport(summary, failures, sampleN = 10)
+    val text = Report.renderReport(summary, failures)
     assert(text.contains("market=tw success=3 end_date=2024-03-01"))
     assert(text.contains("...and 4 more"))
     assert(text.linesIterator.count(_.contains("invalid_price")) == 10)
@@ -53,10 +53,10 @@ class NormalizeReportSpec extends SparkSpec {
   test("renderReport counts the failures only past its sample; the stamp is Taipei time") {
     val summary = Seq(("tw", 3L)).toDF("market", "success")
     def fails(n: Int) = (1 to n).map(i => (s"SYM$i", "invalid_price")).toDF("key", "reason")
-    val exact = Report.renderReport(summary, fails(10), sampleN = 10)
+    val exact = Report.renderReport(summary, fails(10))
     assert(exact.linesIterator.count(_.contains("invalid_price")) == 10)
     assert(!exact.contains("...and"))
-    assert(Report.renderReport(summary, fails(11), sampleN = 10).contains("...and 1 more"))
+    assert(Report.renderReport(summary, fails(11)).contains("...and 1 more"))
     val stamp = """Stock Warehouse Report \((\d{4}-\d\d-\d\d \d\d:\d\d:\d\d) UTC\+8\)""".r
     val at = exact.linesIterator.next() match {
       case stamp(t) => java.time.LocalDateTime.parse(t.replace(' ', 'T'))

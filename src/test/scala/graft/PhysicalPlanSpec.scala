@@ -122,7 +122,7 @@ class PhysicalPlanSpec extends SparkSpec {
       "inside WholeStageCodegen with no fallback to interpreted eval") {
     import graft.ops.Text
     val df = spark.read.parquet(s"$dir/documents.parquet")
-      .select(Text.canonicalizeForDedup(col("text")).as("canon"))
+      .select(Reference.canonicalizeForDedup(col("text")).as("canon"))
     val p = df.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     // formatted mode marks codegen'd operators with a * prefix in the

@@ -41,6 +41,10 @@ class PipelineSpec extends SparkSpec {
       // BADPRICE: a non-positive close -> invalid_price
       writeCsv(dir, "badprice_day.csv",
         Seq("2024-01-02,10,12,9,-1,100", "2024-01-03,10,12,9,11,100"))
+      // NEGMID: positive closes around ONE negative close -> the whole
+      // symbol is rejected invalid_price, not just its bad day
+      writeCsv(dir, "negmid_day.csv", Seq("2024-01-02,10,12,9,11,100",
+        "2024-01-03,10,12,9,-2,100", "2024-01-04,10,12,9,12,100"))
       // GAPPY: a 20-day hole after the window start -> gap_20d
       writeCsv(dir, "gappy_day.csv",
         Seq("2024-01-02,10,12,9,11,100", "2024-01-22,10,12,9,11,100"))
@@ -55,7 +59,8 @@ class PipelineSpec extends SparkSpec {
       }
 
       val rej = out.rejections.as[(String, String)].collect().toMap
-      assert(rej == Map("BADPRICE" -> "invalid_price", "GAPPY" -> "gap_20d"))
+      assert(rej == Map("BADPRICE" -> "invalid_price", "NEGMID" -> "invalid_price",
+        "GAPPY" -> "gap_20d"))
 
       // rejected symbols appear in NO period output
       for (df <- Seq(out.weekly, out.monthly, out.yearly))
@@ -78,7 +83,7 @@ class PipelineSpec extends SparkSpec {
       val sm = out.summary
         .select($"n_symbols", $"total_rows", $"n_rejected")
         .as[(Long, Long, Long)].head()
-      assert(sm == ((1L, 10L, 2L)))
+      assert(sm == ((1L, 10L, 3L)))
 
       // the slice is materialized once, through exactly one shuffle of
       // the bars, and no output scans a file

@@ -1,16 +1,24 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Quality
+import graft.ops.{Frames, Pipeline, Quality}
 
 class QualitySpec extends SparkSpec {
   import spark.implicits._
 
   test("invalidPriceKeys: any close <= 0 rejects the whole key") {
-    val df = Seq(("A", 10.0), ("A", -1.0), ("B", 5.0)).toDF("symbol", "close")
-    val r = Quality.invalidPriceKeys(df, $"symbol", $"close")
-      .as[(String, String)].collect().toSet
-    assert(r == Set(("A", "invalid_price")))
+    // the V1 price verdict is computed inside Pipeline.dailySlice
+    val df = Seq(("A", "2024-01-02", 10.0), ("A", "2024-01-03", -1.0),
+        ("B", "2024-01-02", 5.0))
+      .toDF("symbol", "date", "close")
+      .select($"symbol", to_date($"date").as("date"), $"close".as("open"),
+        $"close".as("high"), $"close".as("low"), $"close", lit(1L).as("volume"))
+    val out = Pipeline.dailySlice(df)
+    try {
+      val r = out.rejections.as[(String, String)].collect().toSet
+      assert(r == Set(("A", Quality.ReasonInvalidPrice)))
+      assert(out.weekly.select($"symbol").as[String].collect().toSet == Set("B"))
+    } finally Frames.release(out.held)
   }
 
   test("gapKeys: boundary — gap of exactly maxGapDays passes, one more rejects") {

@@ -14,7 +14,7 @@ class SimilaritySpec extends SparkSpec {
     val native = df.select(Similarity.cosine(
       transform($"a", x => x.cast("double")),
       transform($"b", x => x.cast("double")))).as[Double].collect()
-    val hof = df.select(Similarity.cosineHof(
+    val hof = df.select(Reference.cosineHof(
       transform($"a", x => x.cast("double")),
       transform($"b", x => x.cast("double")))).as[Double].collect()
     assert(native.toSeq == hof.toSeq) // exact equality, not approximate
@@ -296,7 +296,7 @@ class SimilaritySpec extends SparkSpec {
       (Seq.fill(64)(rnd.nextGaussian().toFloat),
         Seq.fill(64)(rnd.nextGaussian().toFloat))).toDF("a", "b")
     val native = df.select(Similarity.sqDist($"a", $"b")).as[Double].collect()
-    val hof = df.select(Similarity.sqDistHof($"a", $"b")).as[Double].collect()
+    val hof = df.select(Reference.sqDistHof($"a", $"b")).as[Double].collect()
     assert(native.toSeq == hof.toSeq) // exact equality, not approximate
     assert(native.forall(_ >= 0.0))
   }
@@ -365,7 +365,7 @@ class SimilaritySpec extends SparkSpec {
       .select($"id", $"cell")
     val probe1 = Similarity.ivfProbeCellsL2(vecs, cents, 1)
       .select($"qid".as("query_id"), $"cell".as("probed"))
-    val r1 = Similarity.ivfPqSearch(vecs, vecs, cents, cb, 2, 3, 1)
+    val r1 = Reference.ivfPqSearch(vecs, vecs, cents, cb, 2, 3, 1)
     val breach = r1.join(assigned.withColumnRenamed("id", "neighbor_id"),
         Seq("neighbor_id"))
       .join(probe1, Seq("query_id"))
@@ -375,7 +375,7 @@ class SimilaritySpec extends SparkSpec {
     val full = Similarity.pqAdcTopK(vecs,
       Similarity.pqEncode(vecs, cb, 2), cb, 2, 3)
       .select("query_id", "neighbor_id", "rank", "adist_fp")
-    val rAll = Similarity.ivfPqSearch(vecs, vecs, cents, cb, 2, 3, 4)
+    val rAll = Reference.ivfPqSearch(vecs, vecs, cents, cb, 2, 3, 4)
       .select("query_id", "neighbor_id", "rank", "adist_fp")
     assert(rAll.except(full).count() == 0 && full.except(rAll).count() == 0)
   }
@@ -394,7 +394,7 @@ class SimilaritySpec extends SparkSpec {
     for (np <- Seq(1, 2, 4)) {
       val tier = tiered.filter($"nprobe" === np)
         .select("query_id", "neighbor_id", "rank", "adist_fp")
-      val direct = Similarity.ivfPqSearch(qs, vecs, cents, cb, 2, 3, np)
+      val direct = Reference.ivfPqSearch(qs, vecs, cents, cb, 2, 3, np)
         .select("query_id", "neighbor_id", "rank", "adist_fp")
       assert(tier.except(direct).count() == 0 &&
         direct.except(tier).count() == 0, s"tier $np diverged")
@@ -507,7 +507,7 @@ class SimilaritySpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val vecs = (0L until 40L).map(i =>
       (i, Seq.fill(16)(rnd.nextGaussian()))).toDF("id", "vec")
-    val hof = Similarity.cosineNearDupPairs(vecs, 0.3)
+    val hof = Reference.cosineNearDupPairs(vecs, 0.3)
       .as[(Long, Long, Double)].collect().toSet
     assert(hof.nonEmpty, "test corpus should produce at least one pair")
     // the blocked kernel must agree for any block count, including a
@@ -782,7 +782,7 @@ class SimilaritySpec extends SparkSpec {
       assert(got((i, j)) == got((j, i)))
     // power iteration on the collected matrix finds the planted axis
     val gm = Array.tabulate(d, d)((i, j) => got((i, j)).toDouble)
-    val (v, lambda) = Similarity.topEigen(gm, 50)
+    val (v, lambda) = Reference.topEigen(gm, 50)
     val align = math.abs((0 until d).map(i => v(i) * u(i)).sum)
     assert(align > 0.99, s"eigenvector alignment $align")
     assert(lambda > 0, "top eigenvalue of a Gramian is positive")
@@ -831,7 +831,7 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(got.toSeq == vv.toSeq)
     // direction agrees with the double-precision solver
-    val (vd, _) = Similarity.topEigen(
+    val (vd, _) = Reference.topEigen(
       Array.tabulate(d, d)((i, j) => g(i)(j).toDouble), 50)
     val align = math.abs((0 until d)
       .map(i => vd(i) * got(i).toDouble / 1e6).sum)
@@ -1032,7 +1032,6 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.chooseK(10000) == 100)
     assert(Similarity.chooseK(40000) == 200)
     assert(Similarity.chooseK(1L << 40) == 65536) // kMax cap
-    assert(Similarity.chooseK(100, c = 2.0) == 20)
     intercept[IllegalArgumentException](Similarity.chooseK(-1))
     assert(Similarity.chooseNProbe(200) == 4)
     assert(Similarity.chooseNProbe(2) == 2) // never more probes than cells

@@ -109,34 +109,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("snapshotMergeStream lands each micro-batch as an atomic snapshot commit") {
-    withTempDir { dir =>
-      val in = dir.getAbsolutePath + "/in"
-      val table = dir.getAbsolutePath + "/table"
-      def rows(vs: ((String, String, Double, Long))*) =
-        vs.toSeq.toDF("date", "symbol", "close", "version")
-      rows(("2024-01-01", "A", 10.0, 1L), ("2024-01-02", "A", 11.0, 1L))
-        .write.parquet(in)
-      val schema = spark.read.parquet(in).schema
-      Streams.snapshotMergeStream(spark.readStream.schema(schema).parquet(in),
-        table, dir.getAbsolutePath + "/ck1", Seq("date", "symbol"),
-        "version", "date")
-      rows(("2024-01-02", "A", 99.0, 2L), ("2024-01-03", "B", 12.0, 2L))
-        .write.mode("append").parquet(in)
-      Streams.snapshotMergeStream(spark.readStream.schema(schema).parquet(in),
-        table, dir.getAbsolutePath + "/ck2", Seq("date", "symbol"),
-        "version", "date")
-      val got = graft.sources.Snapshot.read(spark, table)
-        .select($"date".cast("string"), $"symbol", $"close")
-        .as[(String, String, Double)].collect().toSet
-      assert(got == Set(("2024-01-01", "A", 10.0),
-        ("2024-01-02", "A", 99.0), ("2024-01-03", "B", 12.0)))
-      // each processed batch is one committed, time-travelable version
-      assert(graft.sources.Snapshot.versions(table).nonEmpty)
-      assert(graft.sources.Snapshot.countStar(table).contains(3L))
-    }
-  }
-
   test("sketchStream folds batches into a running register table; replays are no-ops") {
     withTempDir { dir =>
       val in = dir.getAbsolutePath + "/in"
@@ -240,7 +212,7 @@ class StreamingSpec extends SparkSpec {
       val ref = (0 until 10).map(b => (b.toLong, 100L)).toDF("bin", "n_r")
       def run(): Unit = Streams.driftStream(
         spark.readStream.schema("v LONG").parquet(in),
-        $"v", 100.0, ref, regs, alarms, ck, psiAlarm = 0.2)
+        $"v", 100.0, ref, regs, alarms, ck)
 
       // batch 1: the reference distribution itself -> psi 0, no alarm
       (0L until 1000L).toDF("v").write.mode("append").parquet(in)
@@ -271,7 +243,7 @@ class StreamingSpec extends SparkSpec {
       val replayIn = dir.getAbsolutePath + "/replay"
       (0L until 1000L).toDF("v").write.parquet(replayIn)
       Streams.driftStream(spark.readStream.schema("v LONG").parquet(replayIn),
-        $"v", 100.0, ref, regs, alarms, dir.getAbsolutePath + "/ck2", 0.2)
+        $"v", 100.0, ref, regs, alarms, dir.getAbsolutePath + "/ck2")
       assert(graft.sources.Snapshot.latestVersion(regs).get > vBefore)
       val cumAfter = graft.sources.Snapshot.read(spark, regs)
         .groupBy($"bin").agg(sum($"n_c").as("n_c"))
@@ -457,7 +429,7 @@ class StreamingSpec extends SparkSpec {
       val fit = ((1 to 30).map(i => ("a", 0L, s"a$i")) ++
         (1 to 10).map(i => ("b", 100L, s"b$i"))).toDF("g", "v", "k")
       val stats = Sampling.profileMatchStats(fit, $"g", $"v", 2)
-      val batchKept = Sampling.profileMatchKept(fit, $"g", $"v", $"k", 2)
+      val batchKept = Reference.profileMatchKept(fit, $"g", $"v", $"k", 2)
         .select($"k").as[String].collect().toSet
       assert(batchKept.nonEmpty && batchKept.size < 40,
         "the skewed fixture must actually thin")
@@ -770,7 +742,7 @@ class StreamingSpec extends SparkSpec {
       Streams.hygieneStream(
         spark.readStream.schema(schema).parquet(in), bench,
         acc, rej, dir.getAbsolutePath + "/ck",
-        minQuality = 0.2, maxRepetition = 0.5)
+        minQuality = 0.2)
 
       val accepted = spark.read.parquet(acc)
         .select($"doc_id").as[Long].collect().toSet

@@ -281,19 +281,21 @@ class TextDedupSpec extends SparkSpec {
   test("jaccard golden value") {
     // A={a,b,c,d}, B={b,c,d,e}: 3 shared / 5 union = 0.6
     val df = Seq((Seq("a", "b", "c", "d"), Seq("b", "c", "d", "e"))).toDF("x", "y")
-    assert(df.select(round(Dedup.jaccard($"x", $"y"), 4)).as[Double].head() == 0.6)
+      .select(transform($"x", Dedup.hashLong(_)).as("x"), transform($"y", Dedup.hashLong(_)).as("y"))
+    assert(df.select(round(Dedup.jaccardHashed($"x", $"y"), 4)).as[Double].head() == 0.6)
   }
 
-  test("jaccardPairs and jaccardPairsPrefix agree and find the known pair") {
+  test("jaccardPairsHashed and jaccardPairsPrefixHashed agree and find the known pair") {
     val docs = Seq(
       (1L, Seq("a b c", "b c d", "c d e", "d e f")),
       (2L, Seq("a b c", "b c d", "c d e", "x y z")), // jac 3/5 with doc 1
       (3L, Seq("p q r", "q r s", "r s t", "s t u"))
     ).toDF("id", "shingles")
+      .select($"id", transform(array_distinct($"shingles"), Dedup.hashLong(_)).as("hs"))
     val want = Set((1L, 2L, 0.6))
-    val a = Dedup.jaccardPairs(docs, "id", "shingles", 0.5)
+    val a = Dedup.jaccardPairsHashed(docs, "id", "hs", 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val b = Dedup.jaccardPairsPrefix(docs, "id", "shingles", 0.5)
+    val b = Dedup.jaccardPairsPrefixHashed(docs, "id", "hs", 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(a == want && b == want)
   }
@@ -351,7 +353,7 @@ class TextDedupSpec extends SparkSpec {
     ).toDF("id", "text")
       .select($"id", Text.wordShingles(Text.tokens($"text"), 3).as("sh"))
     val sig = docs.select($"id", $"sh",
-      Dedup.minhashSignature($"sh", 16).as("sig"))
+      Reference.minhashSignature($"sh", 16).as("sig"))
     val sigs = sig.select($"id", $"sig").as[(Long, Seq[Long])].collect().toMap
     assert(sigs(1).size == 16)
     val cands = Dedup.lshCandidatePairs(sig, "id", "sig", 4, 4)
@@ -366,7 +368,7 @@ class TextDedupSpec extends SparkSpec {
     val mk = (ids: Seq[Long]) => ids.map(i => (i, text(i.toInt % 6)))
       .toDF("id", "text")
       .select($"id", Text.wordShingles(Text.tokens($"text"), 3).as("sh"))
-      .select($"id", $"sh", Dedup.minhashSignature($"sh", 16).as("sig"))
+      .select($"id", $"sh", Reference.minhashSignature($"sh", 16).as("sig"))
     val old = mk(0L until 12L)
     val inc = mk(12L until 20L) // seeds repeat → cross old/new dups
     val incr = Dedup.lshCandidatePairsIncremental(old, inc, "id", "sig", 4, 4)
@@ -405,7 +407,7 @@ class TextDedupSpec extends SparkSpec {
       "single", "", "a a a a a b b c").toDF("text")
     val pairs = docs
       .select(Dedup.simhash(Text.tokens($"text"), 32).as("native"),
-        Dedup.simhashHof(Text.tokens($"text"), 32).as("hof"))
+        Reference.simhashHof(Text.tokens($"text"), 32).as("hof"))
       .as[(Long, Long)].collect()
     assert(pairs.forall { case (n, h) => n == h }, pairs.mkString(","))
     graft.functions.NativeFunctions.register(spark)
@@ -430,7 +432,7 @@ class TextDedupSpec extends SparkSpec {
     val sigs = docs.select(
       Dedup.minhashSignatureNative(
         Dedup.hashedShingles(Text.tokens($"text"), 3), 16).as("native"),
-      Dedup.minhashSignature(
+      Reference.minhashSignature(
         Text.wordShingles(Text.tokens($"text"), 3), 16).as("hof"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(sigs.forall { case (n, h) => n == h }, sigs.mkString(";"))
@@ -1157,7 +1159,7 @@ class TextDedupSpec extends SparkSpec {
       base + "\tCaf\u00e9\n")                   // exotic whitespace
     val df = variants.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
-    val canon = df.select(Text.canonicalizeForDedup($"text"))
+    val canon = df.select(Reference.canonicalizeForDedup($"text"))
       .as[String].collect().toSet
     assert(canon.size == 1, s"canonical keys diverged: $canon")
     val raw = df.select(Text.fingerprint($"text"))
