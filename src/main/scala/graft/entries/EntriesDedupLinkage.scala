@@ -465,13 +465,15 @@ private[graft] object EntriesDedupLinkage {
             lit("mirror2").as("source"), col("text")))
         .select(col("doc_id"), col("source"),
           Text.fingerprint(col("text")).as("fp"))
-      val keep = corpus.groupBy(col("fp"))
+      // the kept key gets its own name: `keep` derives from `corpus`,
+      // so `keep("fp")` would resolve to corpus's own fp attribute and
+      // turn the fingerprint half of the join into fp = fp
+      val keep = corpus.groupBy(col("fp").as("keep_fp"))
         .agg(min(col("doc_id")).as("keep_id"))
       val before = corpus.groupBy(col("source"))
         .agg(count(lit(1)).as("n_before"))
       val after = corpus.join(keep,
-          corpus("fp") === keep("fp") &&
-            corpus("doc_id") === keep("keep_id"))
+          col("fp") === col("keep_fp") && col("doc_id") === col("keep_id"))
         .groupBy(col("source")).agg(count(lit(1)).as("n_after"))
       val tots = before.agg(sum(col("n_before")).as("tb"))
         .crossJoin(after.agg(sum(col("n_after")).as("ta")))

@@ -62,11 +62,7 @@ private[graft] object EntriesExactSub {
     "q356_suffix_array" -> ((s, dir) => withShufflePartitions(s, 8) {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 4 === 0)
       val c = SuffixArray.corpus(docs, col("doc_id"), col("text"))
-      val b = SuffixArray.build(c)
-      // the result reads only the final round; the layout and the
-      // earlier rounds' checkpoints are free once build returns
-      b.owned.filterNot(_ eq b.sa).foreach(Frames.release)
-      b.sa.filter(!col("sent"))
+      SuffixArray.build(c).finalFrame().filter(!col("sent"))
         .select(col("doc_id"), (col("rank") - c.numDocs).as("r"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_tokens"), sum(col("r")).as("sum_rank"),
@@ -86,6 +82,8 @@ private[graft] object EntriesExactSub {
       // session's 32)
       val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
         .filter(col("lcp") >= 8).localCheckpoint(true)
+      // the result reads the checkpointed pairs, never the build
+      b.unpersistAll()
       val tk = docs.select(col("doc_id").as("doc_a"),
         Text.tokens(col("text")).as("tk"))
       lcps.join(tk, "doc_a")
@@ -98,40 +96,42 @@ private[graft] object EntriesExactSub {
         .limit(40)
     }),
     // Dedup/exact: Lee et al.'s DEDUP-MASS statistic — per doc, how
-    // many suffix positions start a repeated run ≥ 8 (max of the two
-    // SA-neighbor LCPs = longest match anywhere else in the corpus)
-    // and the token coverage of the UNION of those runs: the number
-    // that decides how aggressive span-level dedup should be before
-    // anyone deletes a byte. Interval union per doc, never global.
+    // many positions start a repeated run ≥ 8 (longest match anywhere
+    // else in the corpus ≥ 8 ⟺ the position's 8-window repeats) and
+    // the token coverage of the UNION of those runs (= the union of
+    // the repeated 8-windows): the number that decides how aggressive
+    // span-level dedup should be before anyone deletes a byte. Three
+    // doubling rounds, no complete order, no LCP; interval union per
+    // doc, never global.
     "q358_dup_span_coverage" -> ((s, dir) => withShufflePartitions(s, 8) {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
       val c = SuffixArray.corpus(docs, col("doc_id"), col("text"))
-      val b = SuffixArray.build(c)
-      // descent materialized inside the partition scope (see q357)
-      val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-        .localCheckpoint(true)
+      val spans = SuffixArray.repeatedWindows(c, 8L)
+        .select(col("doc_id"), col("pos"), lit(8L).as("l"))
       val nTok = docs.select(col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("n_tokens"))
-      SuffixArray.dupSpanCoverage(lcps, nTok, 8L)
+      SuffixArray.dupSpanCoverage(spans, nTok)
     }),
     // Dedup/exact: REPEATED n-GRAM FAMILIES — the "most duplicated
-    // substrings" census. Maximal SA runs with adjacent LCP ≥ 8 ARE
-    // the 8-gram equivalence classes, so block size = exact corpus
-    // occurrence count — derived from N−1 adjacent LCPs, never an
-    // n-gram explosion. The ORACLE counts grams brute-force: two
+    // substrings" census. The window-8 count-below rank IS the 8-gram
+    // equivalence class, so grouping the repeated windows by rank
+    // gives each gram's exact corpus occurrence count — off three
+    // doubling rounds, never an n-gram explosion. Any member slices
+    // the same gram text. The ORACLE counts grams brute-force: two
     // unrelated algorithms must emit identical rows.
     "q359_repeat_families" -> ((s, dir) => withShufflePartitions(s, 8) {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
       val c = SuffixArray.corpus(docs, col("doc_id"), col("text"))
-      val b = SuffixArray.build(c)
-      val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-        .localCheckpoint(true)
-      val fams = SuffixArray.repeatFamilies(lcps, 8L)
+      val fams = SuffixArray.repeatedWindows(c, 8L)
+        .groupBy(col("rank"))
+        .agg(count(lit(1)).as("occurrences"),
+          countDistinct(col("doc_id")).as("n_docs"),
+          min(struct(col("doc_id"), col("pos"))).as("rep"))
       val tk = docs.select(col("doc_id").as("rep_doc"),
         Text.tokens(col("text")).as("tk"))
-      fams.join(tk, "rep_doc")
+      fams.join(tk, col("rep.doc_id") === col("rep_doc"))
         .select(concat_ws(" ", slice(col("tk"),
-          (col("rep_pos") + 1).cast("int"), lit(8))).as("gram"),
+          (col("rep.pos") + 1).cast("int"), lit(8))).as("gram"),
           col("occurrences"), col("n_docs"))
         .orderBy(col("occurrences").desc, col("gram"))
         .limit(30)
@@ -208,22 +208,22 @@ private[graft] object EntriesExactSub {
     }),
     // Dedup/exact: duplicate-span EXCISION — the rewrite a dedup user
     // actually runs after the q357/q358 census: every token inside a
-    // repeated run ≥ 8 (also occurring elsewhere in the corpus) is
+    // repeated 8-window (also occurring elsewhere in the corpus) is
     // cut; overlapping spans coalesce through the per-doc running-max
     // pass before any token is removed, and clean_fp pins the rewrite
-    // BYTE-EXACTLY (the scrubBoilerplateLines convention). The oracle
-    // recomputes removal from brute-force 8-gram counts — two
-    // unrelated algorithms must emit identical hashes.
+    // BYTE-EXACTLY (the scrubBoilerplateLines convention). The same
+    // cut pass as the incremental q480 stream, fed the repeated
+    // windows instead of probe hits. The oracle recomputes removal
+    // from brute-force 8-gram counts — two unrelated algorithms must
+    // emit identical hashes.
     "q372_excise_spans" -> ((s, dir) => withShufflePartitions(s, 8) {
       val docs = t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
       val c = SuffixArray.corpus(docs, col("doc_id"), col("text"))
-      val b = SuffixArray.build(c)
-      // descent materialized inside the partition scope (see q357)
-      val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-        .localCheckpoint(true)
+      val spans = SuffixArray.repeatedWindows(c, 8L)
+        .select(col("doc_id"), col("pos"), lit(8L).as("l"))
       val toks = docs.select(col("doc_id"),
         Text.tokens(col("text")).as("tk"))
-      SuffixArray.exciseDuplicateSpans(lcps, toks, 8L)
+      SuffixArray.cutSpans(spans, toks)
     }),
     // Dedup/exact: INCREMENTAL decontamination — the q114/q119
     // increment contract at the exact-substring tier. The TRAIN
@@ -395,8 +395,11 @@ private[graft] object EntriesExactSub {
          |WHERE lc.lcp >= 8
          |ORDER BY lc.lcp DESC, lc.doc_a, lc.pos_a, lc.doc_b
          |LIMIT 40""".stripMargin,
-    // Same per-position max-neighbor-LCP spans, same per-doc interval
-    // union via the running max of previous span ends.
+    // INDEPENDENT verification: the engine reads repeated 8-windows off
+    // the window-8 ranks; the oracle replays the LCP definition (per
+    // position the max of the two SA-neighbor LCPs, spans ≥ 8) and the
+    // same per-doc interval union via the running max of previous span
+    // ends.
     "q358_dup_span_coverage" ->
       s"""WITH ${saCteSql("doc_id % 3 = 0")},
          |sp0 AS (SELECT doc_a AS doc_id, pos_a AS pos, lcp
@@ -422,9 +425,9 @@ private[graft] object EntriesExactSub {
          |      AS DOUBLE) / CAST(len(tk.tk) AS DOUBLE)
          |      AS DECIMAL(20,10)), 4) AS DOUBLE) END AS covered_ratio
          |FROM tk LEFT JOIN ag ON ag.doc_id = tk.doc_id""".stripMargin,
-    // INDEPENDENT verification: the engine derives families from SA
-    // islands; the oracle brute-counts every 8-gram — identical rows
-    // only if the suffix array is right everywhere.
+    // INDEPENDENT verification: the engine groups repeated windows by
+    // their window-8 rank; the oracle brute-counts every 8-gram —
+    // identical rows only if the ranks are right everywhere.
     "q359_repeat_families" ->
       s"""WITH tk AS (SELECT doc_id, $tokSql AS tk
          |  FROM documents WHERE doc_id % 3 = 0),
@@ -467,11 +470,11 @@ private[graft] object EntriesExactSub {
          |  CAST(min(pos) AS BIGINT) AS first_pos
          |FROM g JOIN bl ON g.gram = bl.phrase GROUP BY 1, 2""".stripMargin,
     // INDEPENDENT verification of the rewrite: the engine cuts the
-    // interval union of SA max-neighbor-LCP spans; the oracle removes
-    // every token inside some duplicated 8-gram (brute counts) and
-    // re-hashes the kept tokens in order — identical clean_fp only if
-    // the two formulations coincide everywhere (they are provably
-    // equal; see SuffixArray.exciseDuplicateSpans).
+    // interval union of the repeated windows its window-8 ranks find;
+    // the oracle removes every token inside some duplicated 8-gram
+    // (brute string counts) and re-hashes the kept tokens in order —
+    // identical clean_fp only if the ranks are right everywhere (see
+    // SuffixArray.repeatedWindows and SuffixArray.cutSpans).
     "q372_excise_spans" ->
       s"""WITH tk AS (SELECT doc_id, $tokSql AS tk
          |  FROM documents WHERE doc_id % 3 = 0),

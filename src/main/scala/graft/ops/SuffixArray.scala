@@ -48,6 +48,17 @@ import org.apache.spark.sql.functions._
   * sentinel and all ranks are provably distinct. A 100 TB corpus of
   * ≤64 Ki-token documents pays at most 16 rounds regardless of row
   * count, and the early-exit usually stops far sooner.
+  *
+  * Two depths, one loop ([[buildTo]]): the COMPLETE order ([[build]],
+  * doubling to the sentinel bound) only for what needs every rank
+  * distinct — the array itself and [[adjacentLcp]]'s exact lengths.
+  * Every fixed-threshold question stops at window g: "does this
+  * position's g-window occur anywhere else?" is `cnt > 1` in the
+  * window-g frame ([[repeatedWindows]]), because a position's longest
+  * match with its SA neighbours reaches g exactly when its g-window
+  * ties, and the union of [p, p + longest match) over those positions
+  * equals the union of [p, p + g). Duplicate coverage, repeated-gram
+  * census, excision and the persisted probe index all read that frame.
   */
 object SuffixArray {
 
@@ -63,18 +74,28 @@ object SuffixArray {
                           numSlots: Long, maxSlots: Long,
                           vocab: DataFrame)
 
-  /** `sa` is the final positions frame (every rank distinct = the SA
-    * index); `tables` holds (windowLen, frame(gpos, rank)) for every
-    * power of two reached — the LCP descent's witness set, each the
-    * EXACT count-below rank at its window length. `owned` are the
-    * eagerly localCheckpointed frames backing them; call
-    * [[Built.unpersistAll]] when the caller owns the lifecycle (gate
-    * queries leave release to the ContextCleaner, the repo's
-    * iterative-op convention).
+  /** `sa` is the final positions frame (from [[build]]: every rank
+    * distinct = the SA index; from [[buildTo]]: the count-below ranks
+    * and tie-group sizes `cnt` at the last window reached); `tables`
+    * holds (windowLen, frame(gpos, rank)) for every power of two
+    * reached — the LCP descent's and the probe faces' witness set, each
+    * the EXACT count-below rank at its window length. `owned` are the
+    * eagerly localCheckpointed frames backing them:
+    * [[Built.unpersistAll]] frees all of them once nothing downstream
+    * reads the build, [[Built.finalFrame]] all but `sa`.
     */
   final case class Built(sa: DataFrame, tables: Seq[(Long, DataFrame)],
                          owned: Seq[DataFrame]) {
     def unpersistAll(): Unit = owned.foreach(Frames.release)
+
+    /** `sa`, with every other round's checkpoint released — for a
+      * result that reads the final frame alone, so only `sa`'s blocks
+      * outlive the build.
+      */
+    def finalFrame(): DataFrame = {
+      owned.filterNot(_ eq sa).foreach(Frames.release)
+      sa
+    }
   }
 
   /** Tokenize + lay out the global sequence. `docs` must carry one row
@@ -145,49 +166,39 @@ object SuffixArray {
     }
   }
 
-  /** The corpus layout checkpointed once, with the round-0 unresolved
-    * count observed during that same materialization.
+  /** `df` eagerly localCheckpointed, with its count of still-tied rows
+    * (`cnt > 1`) observed during that same materialization — a
+    * separate count would cost one more scheduler round per doubling
+    * round, and at 100 TB one more full pass over the rank frame.
     */
-  private def checkpointFull(positions: DataFrame)
-      : (DataFrame, Long) = {
-    val obs0 = org.apache.spark.sql.Observation()
-    val full = positions
-      .observe(obs0, sum(when(col("cnt") > 1, 1L).otherwise(0L))
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val held = df
+      .observe(obs, sum(when(col("cnt") > 1, 1L).otherwise(0L))
         .as("unresolved"))
       .localCheckpoint(true)
-    (full, unresolvedOf(obs0, full.filter(col("cnt") > 1).count()))
+    (held, unresolvedOf(obs, held.filter(col("cnt") > 1).count()))
   }
 
-  /** The doubling loop shared by [[build]] and [[buildTo]] (see the
-    * object scaladoc for the count-below/freeze mechanics; exits as
-    * soon as no tied group remains, and each round eagerly
-    * localCheckpoints — the measured iterative-op convention). The
-    * per-round unresolved count rides a Dataset.observe metric
-    * collected DURING the checkpoint's own materialization action —
-    * no separate count job per round (r15: at gate scale that was one
-    * extra scheduler round per doubling round; at 100 TB one extra
-    * full pass over the rank frame per round). A narrow
-    * (gpos, rank, cnt)-only variant with an end join-back for the
-    * identity columns was ALSO measured this round and REJECTED: the
-    * re-attach join's own exchange+checkpoint cost more than the
-    * narrower tied-side shuffles saved (BenchSome q356–q373 sum 61.0 s
-    * vs 52.2 s at HEAD), and the geometric tie shrinkage means round 1
-    * is the only wide shuffle that matters.
+  /** The doubling loop behind [[build]] and [[buildTo]] (see the object
+    * scaladoc for the count-below/freeze mechanics): doubles the window
+    * while it is below `maxLen` and some group still ties, and each
+    * round eagerly localCheckpoints — the measured iterative-op
+    * convention. Returns the build and its count of still-tied rows. A
+    * narrow (gpos, rank, cnt)-only variant with an end join-back for
+    * the identity columns was measured and REJECTED: the re-attach
+    * join's own exchange+checkpoint cost more than the narrower
+    * tied-side shuffles saved (BenchSome q356–q373 sum 61.0 s vs
+    * 52.2 s), and the geometric tie shrinkage means round 1 is the only
+    * wide shuffle that matters.
     */
-  private def doublingRounds(full: DataFrame, unresolved0: Long,
-                             maxLen: Long,
-                             rounds: Int): (DataFrame, Long,
-                               ArrayBuffer[(Long, DataFrame)],
-                               ArrayBuffer[DataFrame], Int) = {
-    var cur = full
+  private def doublingRounds(c: Corpus, maxLen: Long): (Built, Long) = {
+    var (cur, unresolved) = checkpointCounted(c.positions)
     val owned = ArrayBuffer[DataFrame](cur)
     val tables = ArrayBuffer[(Long, DataFrame)](
       (1L, cur.select(col("gpos"), col("rank"))))
     var len = 1L
-    var round = 0
-    var unresolved = unresolved0
-    while (round < rounds && len < maxLen && unresolved > 0) {
-      round += 1
+    while (len < maxLen && unresolved > 0) {
       // successor ranks live on the FULL frame (frozen ranks are exact
       // at every later round); only tied rows pair and re-rank. AQE
       // broadcasts the tied side once it shrinks under the threshold.
@@ -204,52 +215,64 @@ object SuffixArray {
         .select(col("gpos"), col("doc_id"), col("pos"), col("sent"),
           (col("rank") + col("below")).as("rank"),
           col("ties").as("cnt"))
-      val obs = org.apache.spark.sql.Observation()
-      cur = cur.filter(col("cnt") === 1).unionByName(upd)
-        .observe(obs, sum(when(col("cnt") > 1, 1L).otherwise(0L))
-          .as("unresolved"))
-        .localCheckpoint(true)
+      val (next, left) = checkpointCounted(
+        cur.filter(col("cnt") === 1).unionByName(upd))
+      cur = next
+      unresolved = left
       owned += cur
       len *= 2
       tables += ((len, cur.select(col("gpos"), col("rank"))))
-      unresolved = unresolvedOf(obs, cur.filter(col("cnt") > 1).count())
     }
-    (cur, unresolved, tables, owned, round)
+    (Built(cur, tables.toSeq, owned.toSeq), unresolved)
   }
 
+  /** The complete suffix array: [[buildTo]] at the sentinel bound, the
+    * smallest power of two ≥ the longest document's slot count. At that
+    * window every window holds a unique sentinel, so every rank is
+    * distinct — checked, not assumed.
+    */
   def build(c: Corpus): Built = {
-    val rounds = math.max(1,
-      math.ceil(math.log(c.maxSlots.toDouble) / math.log(2.0)).toInt)
-    val (full, unresolved0) = checkpointFull(c.positions)
-    val (cur, unresolved, tables, owned, round) =
-      doublingRounds(full, unresolved0, Long.MaxValue, rounds)
-    // the sentinel bound proves this: at window len ≥ maxSlots every
-    // window holds a unique sentinel
-    require(unresolved == 0,
-      s"suffix ranks not distinct after $round rounds ($unresolved tied)")
-    Built(cur, tables.toSeq, owned.toSeq)
+    val bound =
+      if (c.maxSlots <= 1) 1L
+      else java.lang.Long.highestOneBit(c.maxSlots - 1) << 1
+    val (b, unresolved) = doublingRounds(c, bound)
+    require(unresolved == 0, s"suffix ranks not distinct after " +
+      s"${b.tables.size - 1} rounds ($unresolved tied)")
+    b
   }
 
   /** Prefix doubling to a FIXED window length, WITHOUT requiring full
-    * rank distinctness — all a threshold-g probe index needs: the
+    * rank distinctness — all a threshold-g question needs: the
     * count-below rank at window w is the same value whether or not
     * longer windows still tie, so stopping at w = `windowLen` yields
     * tables bit-identical to [[build]]'s first log₂ w rounds at a
     * fraction of the rounds (an 8-token threshold pays 3 rounds
-    * whatever the corpus's longest repeat — measured as the dominant
-    * cost of the increment gates against [[build]]'s full ceiling).
-    * Early-exits when ranks resolve sooner; `sa` is the last frame
-    * (NOT necessarily distinct — callers needing the full array use
-    * [[build]]).
+    * whatever the corpus's longest repeat). Early-exits when ranks
+    * resolve sooner; `sa` is the last frame (NOT necessarily distinct —
+    * callers needing the full array use [[build]]).
     */
   def buildTo(c: Corpus, windowLen: Long): Built = {
     require(windowLen >= 1 && (windowLen & (windowLen - 1)) == 0,
       s"windowLen must be a power of two, got $windowLen")
-    val (full, unresolved0) = checkpointFull(c.positions)
-    val (cur, _, tables, owned, _) =
-      doublingRounds(full, unresolved0, windowLen, Int.MaxValue)
-    Built(cur, tables.toSeq, owned.toSeq)
+    doublingRounds(c, windowLen)._1
   }
+
+  /** Every REPEATED g-window: (doc_id, pos, rank, cnt) for each real
+    * position whose g-token window occurs at least twice in the corpus
+    * (same doc included) — `cnt > 1` in [[buildTo]]'s window-g frame.
+    * `rank` identifies the window (count-below ranks are injective on
+    * window values) and `cnt` is its exact occurrence count. A window
+    * that runs past its document's end holds that document's unique
+    * sentinel and never ties, so every row is an in-document window;
+    * when ranks resolve before window g, nothing repeats and the frame
+    * is empty. As (pos, g) spans these rows feed [[dupSpanCoverage]]
+    * and [[cutSpans]]; grouped by `rank` they are the repeated-gram
+    * census. Only the final frame's checkpoint is kept.
+    */
+  def repeatedWindows(c: Corpus, g: Long): DataFrame =
+    buildTo(c, g).finalFrame()
+      .filter(!col("sent") && col("cnt") > 1)
+      .select(col("doc_id"), col("pos"), col("rank"), col("cnt"))
 
   /** LCP between SA-adjacent REAL suffixes via rank-table descent:
     * walk window lengths 2^(rounds−1)…1 high-to-low, advancing both
@@ -290,58 +313,16 @@ object SuffixArray {
     p
   }
 
-  /** REPEATED n-GRAM FAMILIES: a maximal run of consecutive SA ranks
-    * whose adjacent LCPs all reach `minLen` is exactly the equivalence
-    * class of positions sharing one minLen-token gram (the boundary
-    * pairs share < minLen by maximality), so the block size is the
-    * gram's EXACT corpus occurrence count — the "most duplicated
-    * substrings" table of Lee et al., derived from N−1 adjacent LCPs
-    * instead of enumerating every n-gram. Island ids come from the
-    * two-level prefix kernel over the qualifying pairs' ranks (island
-    * = rank − #qualifying-below; never a global window); members are
-    * the pairs' endpoints (the a-side of rank r and b-side of rank
-    * r+1 coincide, so the distinct covers the whole block). Output:
-    * one row per family — (occurrences, n_docs, rep_doc, rep_pos)
-    * with the representative being the SA-first member (callers slice
-    * its tokens for the gram text).
+  /** Lee et al.'s dedup-mass read over `spans` (doc_id, pos, l) — the
+    * repeated runs, one row per run start (for the queries the
+    * [[repeatedWindows]] positions with l = g): per doc, how many
+    * positions START a repeated run (`dup_starts`) and how many TOKENS
+    * lie inside the union of the runs. Interval union via a per-doc
+    * running max of span ends — span-sized, partitioned by doc, never
+    * global. `docTokens` must be (doc_id, n_tokens); docs with no run
+    * report zeros.
     */
-  def repeatFamilies(lcps: DataFrame, minLen: Long): DataFrame = {
-    val qual = lcps.filter(col("lcp") >= minLen)
-      .select(col("rank_sa"), col("doc_a"), col("pos_a"),
-        col("doc_b"), col("pos_b"))
-    val isl = Ranks.withRunningBelow(qual.withColumn("one", lit(1L)),
-        "rank_sa", 4096L, Seq("one"))
-      .withColumn("island", col("rank_sa") - col("one_below"))
-    val members = isl.select(col("island"), col("doc_a").as("doc_id"),
-        col("pos_a").as("pos"), col("rank_sa").as("r"))
-      .unionByName(isl.select(col("island"), col("doc_b").as("doc_id"),
-        col("pos_b").as("pos"), (col("rank_sa") + 1).as("r")))
-      .distinct()
-    members.groupBy(col("island"))
-      .agg(count(lit(1)).as("occurrences"),
-        countDistinct(col("doc_id")).as("n_docs"),
-        min_by(col("doc_id"), col("r")).as("rep_doc"),
-        min_by(col("pos"), col("r")).as("rep_pos"))
-      .drop("island")
-  }
-
-  /** Lee et al.'s dedup-mass read: per doc, how many suffix positions
-    * START a repeated run of ≥ `minLen` tokens (max of the two
-    * SA-neighbor LCPs — the standard "longest match anywhere else in
-    * the corpus" identity) and how many TOKENS lie inside the union
-    * of those runs. Interval union via a per-doc running max of span
-    * ends — partitioned by doc, never global. `docTokens` must be
-    * (doc_id, n_tokens); docs with no repeated run report zeros.
-    */
-  def dupSpanCoverage(lcps: DataFrame, docTokens: DataFrame,
-                      minLen: Long): DataFrame = {
-    val hits = lcps.filter(col("lcp") >= minLen)
-    val spans = hits
-      .select(col("doc_a").as("doc_id"), col("pos_a").as("pos"),
-        col("lcp"))
-      .unionByName(hits.select(col("doc_b").as("doc_id"),
-        col("pos_b").as("pos"), col("lcp")))
-      .groupBy(col("doc_id"), col("pos")).agg(max(col("lcp")).as("l"))
+  def dupSpanCoverage(spans: DataFrame, docTokens: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val cov = spans
@@ -364,59 +345,35 @@ object SuffixArray {
 
   /** EXACT duplicate-span EXCISION — the step a dedup user actually
     * runs after the census: REWRITE every document with each token
-    * that lies inside a repeated run of ≥ `minLen` tokens (a span
-    * that also occurs somewhere else in the corpus, same doc
-    * included) removed, the Lee et al. 2022 cut applied corpus-wide.
-    * Spans per position come from the SA-neighbor max-LCP identity
-    * ([[dupSpanCoverage]]); OVERLAPPING spans COALESCE before any
-    * token is cut — coverage is the per-doc running max of span ends
-    * interleaved with the token stream in ONE ordered pass (a span
-    * row sorts before the token at its own start), never an exploded
-    * position set, so a span of length L costs one row, not L.
+    * inside a span of `spans` (doc_id, pos, l) removed. One pass serves
+    * both faces: the batch cut (spans = the [[repeatedWindows]]
+    * positions with l = g, the Lee et al. 2022 cut at minLen = g
+    * applied corpus-wide) and the incremental one
+    * ([[exciseAgainstIndex]], spans = the probe hits). Removing every
+    * token inside some duplicated g-window is the whole rule, which is
+    * what lets a brute-force gram-count oracle verify the rewrite
+    * byte-exactly.
     *
-    * The removed set provably equals "every token inside some
-    * duplicated minLen-gram": a duplicated gram at s forces
-    * maxNeighborLcp(s) ≥ minLen, and a span (pos, l) is itself a
-    * repeat, so each of its minLen-grams occurs elsewhere and
-    * together they tile [pos, pos+l) — which is what lets a
-    * brute-force gram-count oracle verify the rewrite byte-exactly.
+    * OVERLAPPING spans COALESCE before any token is cut — coverage is
+    * the per-doc running max of span ends interleaved with the token
+    * stream in ONE ordered pass (a span row sorts before the token at
+    * its own start), never an exploded position set, so a span of
+    * length L costs one row, not L.
     *
     * Output one row per doc: (doc_id, n_tokens, n_removed, clean_fp)
     * — clean_fp the md5 of the kept tokens space-joined in original
     * order (the [[Dedup.scrubBoilerplateLines]] clean_fp convention;
     * zero-token and fully-excised docs hash the empty string).
     * `docToks` is (doc_id, tk: array&lt;string&gt;) — the same
-    * tokenization the corpus was built from.
+    * tokenization the spans were found in.
     *
-    * Scale shape: the span rollup shuffles on (doc_id, pos); the
-    * coverage window partitions by doc (doc-sized partitions, the
-    * interval-union convention); reassembly is one
+    * Scale shape: the coverage window partitions by doc (doc-sized
+    * partitions, the interval-union convention); reassembly is one
     * sort_array(collect_list) per doc — a doc-sized array, the same
     * bound as the text itself. Nothing corpus-global, nothing
     * collected.
     */
-  def exciseDuplicateSpans(lcps: DataFrame, docToks: DataFrame,
-                           minLen: Long): DataFrame = {
-    val hits = lcps.filter(col("lcp") >= minLen)
-    val spans = hits
-      .select(col("doc_a").as("doc_id"), col("pos_a").as("pos"),
-        col("lcp"))
-      .unionByName(hits.select(col("doc_b").as("doc_id"),
-        col("pos_b").as("pos"), col("lcp")))
-      .groupBy(col("doc_id"), col("pos")).agg(max(col("lcp")).as("l"))
-    cutSpans(spans, docToks)
-  }
-
-  /** The coalesce-and-cut pass shared by the batch
-    * ([[exciseDuplicateSpans]]) and incremental
-    * ([[exciseAgainstIndex]]) excision faces: `spans` is
-    * (doc_id, pos, l) token intervals to remove; overlaps coalesce
-    * via the running end-max before any token is cut (one row per
-    * span, never an exploded position set). Output per doc:
-    * (doc_id, n_tokens, n_removed, clean_fp).
-    */
-  private[graft] def cutSpans(spans: DataFrame,
-                              docToks: DataFrame): DataFrame = {
+  def cutSpans(spans: DataFrame, docToks: DataFrame): DataFrame = {
     val toks = docToks
       .select(col("doc_id"), posexplode(col("tk")).as(Seq("pos", "token")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
@@ -450,8 +407,7 @@ object SuffixArray {
   }
 
   /** INCREMENTAL span excision against a persisted train index — the
-    * q372 rewrite at the q373 increment contract (the last batch-only
-    * member of the exact tier made incremental): every token of an
+    * q372 rewrite at the q373 increment contract: every token of an
     * increment document that lies inside a g-gram OCCURRING IN TRAIN
     * is removed — a train match of length L ≥ g is tiled by its
     * g-grams, so the coalesced cover equals the Lee et al. cut at
@@ -459,8 +415,9 @@ object SuffixArray {
     * tracking the increment ([[probeGramRanks]]: log₂ g inner joins
     * against the persisted doubling maps; an absent window drops
     * immediately). Each hit position is one (pos, g) span row into
-    * the shared [[cutSpans]] pass. Output per increment doc:
-    * (doc_id, n_tokens, n_removed, clean_fp).
+    * [[cutSpans]] — the same formulation as the batch cut, whose spans
+    * are the [[repeatedWindows]] positions at (pos, g). Output per
+    * increment doc: (doc_id, n_tokens, n_removed, clean_fp).
     */
   def exciseAgainstIndex(index: ProbeIndex, docs: DataFrame,
                          idCol: Column, textCol: Column): DataFrame = {

@@ -1628,12 +1628,37 @@ object Snapshot {
     rows.toDF("version", "n_cols", "added_cols", "removed_cols")
   }
 
+  private def rmTree(p: Path): Unit = {
+    if (Files.isDirectory(p)) listDir(p).foreach(rmTree)
+    Files.deleteIfExists(p)
+  }
+
+  /** The retention step [[vacuum]] and [[expireByAge]] share: delete the
+    * `drop` versions' manifests and every data, DV and UV dir they
+    * reference that no `keep` manifest and no live staged write
+    * references. Returns the dirs still live. Each policy picks
+    * `drop` itself, tag pins included.
+    */
+  private def dropVersions(table: String, keep: Seq[Long],
+                           drop: Seq[Long]): Set[String] = {
+    // staged (write-audit-publish) dirs are live until published or
+    // discarded — an audit window must survive any retention cadence
+    val stagedLive = stagedNames(table)
+      .flatMap(n => readStagedManifest(table, n).dirs).toSet
+    // deletion-vector dirs are references too: a retained manifest's
+    // DVs must survive exactly like its data dirs
+    def refs(v: Long): Seq[String] = {
+      val mm = readManifest(table, v); mm.dirs ++ mm.dvDirs ++ mm.uvDirs
+    }
+    val live = keep.flatMap(refs).toSet ++ stagedLive
+    val dead = drop.flatMap(refs).toSet -- live
+    dead.foreach(d => rmTree(Paths.get(d)))
+    drop.foreach(v => Files.deleteIfExists(manifestPath(table, v)))
+    live
+  }
+
   def vacuum(table: String, keepVersions: Int = 1,
              orphanAgeMs: Long = 3600000L): Unit = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
     def newestMtime(p: Path): Long = {
       val own = Files.getLastModifiedTime(p).toMillis
       if (Files.isDirectory(p)) (own +: listDir(p).map(newestMtime)).max
@@ -1645,21 +1670,8 @@ object Snapshot {
     // tagged versions are pinned: their manifests and data survive
     // any retention window until the tag is dropped
     val pinned = tags(table).values.toSet
-    val keep = keepRaw ++ dropRaw.filter(pinned)
-    val drop = dropRaw.filterNot(pinned)
-    // staged (write-audit-publish) dirs are live until published or
-    // discarded — an audit window must survive any vacuum cadence
-    val stagedLive = stagedNames(table)
-      .flatMap(n => readStagedManifest(table, n).dirs).toSet
-    // deletion-vector dirs are references too: a retained manifest's
-    // DVs must survive exactly like its data dirs
-    def refs(v: Long): Seq[String] = {
-      val mm = readManifest(table, v); mm.dirs ++ mm.dvDirs ++ mm.uvDirs
-    }
-    val live = keep.flatMap(refs).toSet ++ stagedLive
-    val dead = drop.flatMap(refs).toSet -- live
-    dead.foreach(d => rm(Paths.get(d)))
-    drop.foreach(v => Files.deleteIfExists(manifestPath(table, v)))
+    val live = dropVersions(table, keepRaw ++ dropRaw.filter(pinned),
+      dropRaw.filterNot(pinned))
     // orphan sweep: a commit dir is live iff some retained manifest
     // references it (partitioned dirs are data/<uuid>/<pc>=<v>;
     // unpartitioned, data/<uuid> itself)
@@ -1673,7 +1685,7 @@ object Snapshot {
       listDir(dataRoot)
         .filterNot(p => liveCommits.contains(p.toAbsolutePath.normalize))
         .filter(p => newestMtime(p) < cutoff)
-        .foreach(rm)
+        .foreach(rmTree)
     }
   }
 
@@ -1839,28 +1851,13 @@ object Snapshot {
     */
   def expireByAge(table: String, maxAgeMs: Long,
                   nowMs: Long = System.currentTimeMillis()): Seq[Long] = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).foreach(rm)
-      Files.deleteIfExists(p)
-    }
     val vs = versions(table)
     val latest = vs.lastOption.toSet
     val pinned = tags(table).values.toSet
     val cutoff = nowMs - maxAgeMs
     val drop = vs.filter(v => !pinned(v) && !latest(v) &&
       Files.getLastModifiedTime(manifestPath(table, v)).toMillis < cutoff)
-    val keep = vs.filterNot(drop.contains)
-    val stagedLive = stagedNames(table)
-      .flatMap(n => readStagedManifest(table, n).dirs).toSet
-    // deletion-vector dirs are references too: a retained manifest's
-    // DVs must survive exactly like its data dirs
-    def refs(v: Long): Seq[String] = {
-      val mm = readManifest(table, v); mm.dirs ++ mm.dvDirs ++ mm.uvDirs
-    }
-    val live = keep.flatMap(refs).toSet ++ stagedLive
-    val dead = drop.flatMap(refs).toSet -- live
-    dead.foreach(d => rm(Paths.get(d)))
-    drop.foreach(v => Files.deleteIfExists(manifestPath(table, v)))
+    dropVersions(table, vs.filterNot(drop.contains), drop)
     drop
   }
 }

@@ -26,6 +26,32 @@ class PhysicalPlanSpec extends SparkSpec {
     }
   }
 
+  test("exact-span queries keep only what their result reads: q356, " +
+      "q358, q359 and q372 leave at most their final frame; q357 frees " +
+      "its build once its pairs are checkpointed") {
+    def left(q: String): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      SparkEntry.queries(q)(spark, dir).collect()
+      spark.catalog.clearCache()
+      (spark.sparkContext.getPersistentRDDs.toMap -- before).size
+    }
+    for (q <- Seq("q356_suffix_array", "q358_dup_span_coverage",
+        "q359_repeat_families", "q372_excise_spans"))
+      assert(left(q) <= 1, q)
+    // holding every build round beside its pairs, q357 kept 11
+    // checkpoints at sf0.001 (blocks counted with the cleaner off)
+    assert(left("q357_repeated_spans") < 11)
+  }
+
+  test("dedup bias joins on fingerprint AND kept id — no trivially true " +
+      "fp = fp") {
+    val p = plan("q298_dedup_bias")
+    assert("""Left keys \[2\]: \[fp#\d+, doc_id#\d+L\]""".r.findFirstIn(p)
+      .nonEmpty, p)
+    assert("""Right keys \[2\]: \[keep_fp#\d+, keep_id#\d+L\]""".r
+      .findFirstIn(p).nonEmpty, p)
+  }
+
   test("flagship resample is one exchange with map-side partial aggregation") {
     val p = plan("q01_weekly_bars")
     assert("(?m)^\\s*\\(\\d+\\) Exchange".r.findAllIn(p).size == 1,

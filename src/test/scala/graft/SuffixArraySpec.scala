@@ -52,9 +52,11 @@ class SuffixArraySpec extends SparkSpec {
     26L -> "stream merge sort",
     27L -> "sort stream merge the quick brown")
 
+  private def corpusAll() = SuffixArray.corpus(docs.toDF("doc_id", "text"),
+    col("doc_id"), col("text"))
+
   private def buildAll() = {
-    val c = SuffixArray.corpus(docs.toDF("doc_id", "text"),
-      col("doc_id"), col("text"))
+    val c = corpusAll()
     (c, SuffixArray.build(c))
   }
 
@@ -105,28 +107,53 @@ class SuffixArraySpec extends SparkSpec {
     b.unpersistAll()
   }
 
-  test("repeatFamilies: island occurrence counts equal the brute " +
-      "n-gram census (two unrelated algorithms, identical output)") {
-    val (c, b) = buildAll()
-    val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-    val byDoc = docs.toMap.map { case (k, v) => k -> tok(v) }
-    val got = SuffixArray.repeatFamilies(lcps, 3L)
-      .as[(Long, Long, Long, Long)].collect()
-      .map { case (occ, nd, rd, rp) =>
-        byDoc(rd).slice(rp.toInt, rp.toInt + 3).mkString(" ") ->
-          ((occ, nd))
-      }.toMap
-    // brute: every 3-gram with >= 2 occurrences
-    val ref = docs.flatMap { case (id, txt) =>
+  // brute n-gram census (the oracles' method): every in-document
+  // g-window's (doc_id, pos), keyed by its gram text
+  private def census(g: Long): Map[String, Seq[(Long, Long)]] =
+    docs.flatMap { case (id, txt) =>
       val w = tok(txt)
-      (0 to w.length - 3).map(i => (w.slice(i, i + 3).mkString(" "), id))
-    }.groupBy(_._1).collect {
-      case (g, occs) if occs.size >= 2 =>
-        g -> ((occs.size.toLong, occs.map(_._2).distinct.size.toLong))
+      (0 to w.length - g.toInt)
+        .map(i => w.slice(i, i + g.toInt).mkString(" ") -> ((id, i.toLong)))
+    }.groupBy(_._1).map { case (gr, occ) => gr -> occ.map(_._2) }
+
+  /** (doc_id, pos) of every g-window occurring at least twice. */
+  private def bruteRepeated(g: Long): Set[(Long, Long)] =
+    census(g).values.filter(_.size >= 2).flatten.toSet
+
+  private def repeatedSpans(g: Long) =
+    SuffixArray.repeatedWindows(corpusAll(), g)
+      .select(col("doc_id"), col("pos"), lit(g).as("l"))
+
+  test("repeatedWindows: at g in {2, 4} the rank groups equal the brute " +
+      "n-gram census (two unrelated algorithms, identical output) and " +
+      "no window crosses a document end") {
+    val byDoc = docs.toMap.map { case (k, v) => k -> tok(v) }
+    for (g <- Seq(2L, 4L)) {
+      val got = SuffixArray.repeatedWindows(corpusAll(), g)
+        .as[(Long, Long, Long, Long)].collect()
+      val fams = got.groupBy(_._3).values.toSeq.map { ms =>
+        val grams = ms.map { case (d, p, _, _) =>
+          byDoc(d).slice(p.toInt, p.toInt + g.toInt).mkString(" ") }.distinct
+        assert(grams.length == 1, s"g=$g: one rank, grams ${grams.mkString("|")}")
+        assert(ms.forall(_._4 == ms.length), s"g=$g: cnt is not the group size")
+        grams.head -> ((ms.length.toLong, ms.map(_._1).distinct.length.toLong))
+      }
+      assert(fams.map(_._1).distinct.size == fams.size,
+        s"g=$g: one gram split across ranks")
+      val ref = census(g).collect {
+        case (gr, occ) if occ.size >= 2 =>
+          gr -> ((occ.size.toLong, occ.map(_._1).distinct.size.toLong))
+      }
+      assert(fams.toMap == ref, s"g=$g")
+      // doc 26 ends with "sort" where 27 begins, and 20/21 end "today"
+      // where 21/22 begin "the": without a sentinel per document those
+      // windows would run on into the next doc (and "today the" would
+      // even repeat)
+      got.foreach { case (d, p, _, _) =>
+        assert(p + g <= byDoc(d).length, s"g=$g: ($d, $p) crosses its doc end")
+      }
+      assert(fams.nonEmpty)
     }
-    assert(got == ref)
-    // the identical docs force at least the full-doc gram chain
-    assert(got.nonEmpty)
   }
 
   test("longestCrossMatch: per eval position equals the brute max " +
@@ -153,95 +180,83 @@ class SuffixArraySpec extends SparkSpec {
     b.unpersistAll()
   }
 
-  test("dupSpanCoverage: interval union per doc matches a brute " +
-      "reference; overlap-heavy repetitive docs never overcount") {
-    val (c, b) = buildAll()
-    val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-    val nTok = docs.map { case (id, t) => (id, tok(t).length.toLong) }
-    val minLen = 3L
-    // brute: per position the max LCP with either SA neighbor, spans
-    // >= minLen union per doc
-    val ref = refSa(docs)
+  /** Per real position, its longest match with either suffix-array
+    * neighbour (brute force).
+    */
+  private lazy val maxNeighbourLcp: Map[(Long, Long), Long] = {
     val byDoc = docs.toMap.map { case (k, v) => k -> tok(v) }
     val nbr = scala.collection.mutable.Map[(Long, Long), Long]()
       .withDefaultValue(0L)
-    ref.sliding(2).foreach { case Seq((da, pa), (db, pb)) =>
+    refSa(docs).sliding(2).foreach { case Seq((da, pa), (db, pb)) =>
       val l = refLcp(byDoc(da).drop(pa.toInt), byDoc(db).drop(pb.toInt))
       nbr((da, pa)) = math.max(nbr((da, pa)), l)
       nbr((db, pb)) = math.max(nbr((db, pb)), l)
     }
-    val expect = nTok.map { case (id, n) =>
-      val spans = nbr.collect {
-        case ((d, p), l) if d == id && l >= minLen => (p, p + l)
-      }.toSeq.sorted
-      var end = -1L
-      var covered = 0L
-      spans.foreach { case (s, e) =>
-        covered += math.max(0L, e - math.max(s, end))
-        end = math.max(end, e)
-      }
-      (id, n, spans.size.toLong, covered)
-    }.toSet
-    val got = SuffixArray.dupSpanCoverage(lcps,
-        nTok.toDF("doc_id", "n_tokens"), minLen)
-      .select(col("doc_id"), col("n_tokens"), col("dup_starts"),
-        col("covered_tokens"))
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got == expect)
-    // the empty doc reports zeros, identical docs cover fully
-    assert(got.contains((25L, 0L, 0L, 0L)))
-    assert(got.contains((20L, 10L, 8L, 10L)))
-    b.unpersistAll()
+    nbr.toMap
+  }
+
+  test("dupSpanCoverage over the repeated g-windows: per-doc starts and " +
+      "interval union match the brute census at g in {2, 4}; " +
+      "overlap-heavy repetitive docs never overcount") {
+    val nTok = docs.map { case (id, t) => (id, tok(t).length.toLong) }
+    for (g <- Seq(2L, 4L)) {
+      val rep = bruteRepeated(g)
+      // the identity the bounded path rests on: a position's g-window
+      // repeats iff its longest match with an SA neighbour reaches g
+      assert(rep == maxNeighbourLcp.filter(_._2 >= g).keySet)
+      val expect = nTok.map { case (id, n) =>
+        val starts = rep.filter(_._1 == id).map(_._2)
+        (id, n, starts.size.toLong,
+          starts.flatMap(p => p until p + g).size.toLong)
+      }.toSet
+      val got = SuffixArray.dupSpanCoverage(repeatedSpans(g),
+          nTok.toDF("doc_id", "n_tokens"))
+        .select(col("doc_id"), col("n_tokens"), col("dup_starts"),
+          col("covered_tokens"))
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(got == expect, s"g=$g")
+      // the empty doc reports zeros, identical docs cover fully
+      assert(got.contains((25L, 0L, 0L, 0L)))
+      assert(got.contains((20L, 10L, 10L - g + 1, 10L)))
+    }
   }
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  test("exciseDuplicateSpans: rewrites equal a brute interval-union " +
-      "reference byte-exactly; OVERLAPPING spans coalesce before " +
-      "cutting; zero-token and fully-excised docs hash empty") {
-    val (c, b) = buildAll()
-    val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-    val byDoc = docs.toMap.map { case (k, v) => k -> tok(v) }
-    val minLen = 3L
-    // brute: per position the max neighbor LCP (= longest match with
-    // any other suffix), spans >= minLen, covered = interval union
-    val ref = refSa(docs)
-    val nbr = scala.collection.mutable.Map[(Long, Long), Long]()
-      .withDefaultValue(0L)
-    ref.sliding(2).foreach { case Seq((da, pa), (db, pb)) =>
-      val l = refLcp(byDoc(da).drop(pa.toInt), byDoc(db).drop(pb.toInt))
-      nbr((da, pa)) = math.max(nbr((da, pa)), l)
-      nbr((db, pb)) = math.max(nbr((db, pb)), l)
-    }
-    val expect = docs.map { case (id, txt) =>
-      val w = tok(txt)
-      val covered = w.indices.filter { p =>
-        nbr.exists { case ((d, s), l) =>
-          d == id && l >= minLen && s <= p && p < s + l }
-      }.toSet
-      val kept = w.indices.filterNot(covered).map(w)
-      (id, w.length.toLong, covered.size.toLong,
-        md5hex(kept.mkString(" ")))
-    }.toSet
+  test("cutSpans over the repeated g-windows: rewrites equal the brute " +
+      "census cut byte-exactly at g in {2, 4}; OVERLAPPING spans " +
+      "coalesce before cutting; zero-token and fully-excised docs hash " +
+      "empty") {
     val toks = docs.toDF("doc_id", "text")
       .select(col("doc_id"), graft.ops.Text.tokens(col("text")).as("tk"))
-    val got = SuffixArray.exciseDuplicateSpans(lcps, toks, minLen)
-      .as[(Long, Long, Long, String)].collect().toSet
-    assert(got == expect)
-    // doc 20/21 are identical -> fully excised, empty-string hash
-    assert(got.contains((20L, 10L, 10L, md5hex(""))))
-    // doc 24 shares "brown fox jumps over the lazy" with 20: spans
-    // (1,6),(2,5),(3,4),(4,3) all OVERLAP and must coalesce to cover
-    // pos 1..6 exactly once — 6 removed of 9, never a double count
-    val d24 = got.find(_._1 == 24L).get
-    assert(d24._2 == 9L && d24._3 == 6L)
-    // the empty doc flows through with the canonical empty hash
-    assert(got.contains((25L, 0L, 0L, md5hex(""))))
-    b.unpersistAll()
+    for (g <- Seq(2L, 4L)) {
+      // brute: every token inside some duplicated g-gram is cut
+      val rep = bruteRepeated(g)
+      val expect = docs.map { case (id, txt) =>
+        val w = tok(txt)
+        val covered = rep.filter(_._1 == id)
+          .flatMap { case (_, p) => (p until p + g).map(_.toInt) }
+        val kept = w.indices.filterNot(covered).map(w)
+        (id, w.length.toLong, covered.size.toLong,
+          md5hex(kept.mkString(" ")))
+      }.toSet
+      val got = SuffixArray.cutSpans(repeatedSpans(g), toks)
+        .as[(Long, Long, Long, String)].collect().toSet
+      assert(got == expect, s"g=$g")
+      // doc 20/21 are identical -> fully excised, empty-string hash
+      assert(got.contains((20L, 10L, 10L, md5hex(""))))
+      // doc 24 shares "brown fox jumps over the lazy" with 20: its
+      // repeated windows from pos 1 on all OVERLAP and must coalesce to
+      // cover pos 1..6 exactly once — 6 removed of 9, never a double
+      // count
+      val d24 = got.find(_._1 == 24L).get
+      assert(d24._2 == 9L && d24._3 == 6L)
+      // the empty doc flows through with the canonical empty hash
+      assert(got.contains((25L, 0L, 0L, md5hex(""))))
+    }
   }
-
   // ---- incremental tier: persisted probe index ----
 
   private val trainDocs: Seq[(Long, String)] = Seq(
