@@ -80,10 +80,11 @@ private[graft] object EntriesExactSub {
       // materialize the descent INSIDE the partition scope (the gate
       // queries' deferred action would otherwise run it at the
       // session's 32)
-      val lcps = SuffixArray.adjacentLcp(b, c.numDocs)
-        .filter(col("lcp") >= 8).localCheckpoint(true)
+      val (pairs, descent) = SuffixArray.adjacentLcp(b, c.numDocs)
+      val lcps = pairs.filter(col("lcp") >= 8).localCheckpoint(true)
       // the result reads the checkpointed pairs, never the build
       b.unpersistAll()
+      descent.foreach(Frames.release)
       val tk = docs.select(col("doc_id").as("doc_a"),
         Text.tokens(col("text")).as("tk"))
       lcps.join(tk, "doc_a")

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 
 /** The per-market orchestration loop — reference main.py:152-201: for
   * each market, restore-or-init the store, gate on freshness, ingest +
@@ -13,11 +13,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * CSVs (the network fetch stays outside the engine; see ListAdapters).
   * The plain-parquet freshness gate reads the store's `date=` directory
   * names, not its rows, so it launches no Spark job. `Pipeline.dailySlice`
-  * shuffles the drop once and holds one materialization (period bars
-  * plus one verdict row per symbol) that its rejection set, period
-  * writes and summary all read; the rejection set is a local relation
-  * of at most one row per symbol, which the merge and the report reuse.
-  * The merge reads and rewrites only the dates the drop carries.
+  * scans and shuffles the drop once and holds one materialization
+  * (period bars, the valid day bars and one verdict row per symbol)
+  * that its one driver action, the period writes and the merge read;
+  * that action returns the rejection set (a local relation of at most
+  * one row per symbol, which the report reuses), the valid bars'
+  * distinct dates and the summary counts. So one stage reads each
+  * day's CSV drop. The merge reads and rewrites only those dates, one
+  * file per date. The store summary reads the store with the two
+  * columns it needs declared, so no job infers its schema.
   * Markets run side by side on one shared session, one thread each.
   * Everything here reuses the operator library —
   * `Pipeline.dailySlice` (validate/resample), `Merge.upsertIntoPath`
@@ -65,6 +69,10 @@ object Lifecycle {
 
   private val rejectionSchema = StructType(Seq(
     StructField("key", StringType), StructField("reason", StringType)))
+
+  /** The store columns the summary reads. */
+  private val summarySchema = StructType(Seq(
+    StructField("symbol", StringType), StructField("date", DateType)))
 
   /** The newest ISO date among the `date=` partition directories of the
     * plain-parquet store at `path`, from one directory listing: no
@@ -131,9 +139,7 @@ object Lifecycle {
           .foldLeft(Pipeline.ingestCsvDir(spark, cfg.csvDir))(_.filter(_))
         val slice = Pipeline.dailySlice(bars)
         try {
-          val validBars = Quality.excludeRejected(
-            bars.na.drop(Seq("open", "high", "low", "close")),
-            col("symbol"), slice.rejections)
+          val validBars = slice.validBars
             .withColumn("version",
               datediff(to_date(lit(cfg.asOf)), to_date(lit("1970-01-01"))).cast("long"))
           // With useSnapshot, the prices store is a transactional snapshot
@@ -144,7 +150,7 @@ object Lifecycle {
               Seq("symbol", "date"), "version", "date")
           else
             Merge.upsertIntoPath(validBars, prices,
-              Seq("symbol", "date"), "version", "date")
+              Seq("symbol", "date"), "version", "date", slice.dates)
           val n = Pipeline.writeSlice(slice,
             s"${cfg.warehouseRoot}/${cfg.marketId}", cfg.marketId)
           (slice.rejections, n)
@@ -152,7 +158,7 @@ object Lifecycle {
       }
     val store =
       if (cfg.useSnapshot) graft.sources.Snapshot.read(spark, prices)
-      else Merge.readIfPresent(spark, prices).get
+      else spark.read.schema(summarySchema).parquet(prices)
     val stats = Report.summaryStats(store, col("symbol"), col("date")).first()
     val success = stats.getLong(0)
     val endDate = Option(stats.getDate(1)).map(_.toString).getOrElse("N/A")

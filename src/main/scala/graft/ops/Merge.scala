@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   * partitioned by a date column and a dynamic partition overwrite, a
   * merge only rewrites the date partitions present in the incoming batch —
   * the same "touch only what changed" property the reference gets from
-  * row-level REPLACE.
+  * row-level REPLACE. Every write clusters on the partition column, so
+  * each partition is one file: the store stays as compact as the
+  * reference keeps it with its per-run VACUUM (downloader_tw.py:126,
+  * main.py:192), with no compaction step.
   */
 object Merge {
 
@@ -92,44 +95,58 @@ object Merge {
     else None
   }
 
-  /** Partition-scoped physical merge: only date-partitions present in the
-    * incoming batch are read, merged and rewritten (dynamic partition
-    * overwrite, set on this write only — the session conf is untouched).
-    * This is the 100 TB write path: cost scales with the touched dates,
-    * not the table.
+  /** Partition-scoped physical merge, and the one way the table at
+    * `tablePath` is written: only the partitions in `touched` are read,
+    * merged and rewritten (dynamic partition overwrite, set on this write
+    * only — the session conf is untouched). This is the 100 TB write
+    * path: cost scales with the touched partitions, not the table.
     *
-    * The batch's distinct partition values are collected (bounded by the
-    * partitions one batch touches) and filter the existing side with a static
-    * `isin`, so the file index hands the scan only those partitions. A
-    * broadcast semi-join against the batch would not prune: dynamic
-    * partition pruning needs a selective predicate on the other side,
-    * and a bare batch has none. The existing side keeps its inferred
-    * schema, so a column only one side has fails `unionByName` loudly
-    * instead of being null-filled or dropped. An empty batch reads
-    * nothing.
+    * `touched` is the batch's distinct `partitionCol` values, from the
+    * caller, which knows them from an action it runs anyway or collects
+    * them itself. They filter the existing side with a static `isin`, so
+    * the file index hands the scan only those partitions (a broadcast
+    * semi-join against the batch would not prune: dynamic partition
+    * pruning needs a selective predicate on the other side, and a bare
+    * batch has none). A batch row whose non-null partition value is not
+    * in `touched` fails the write before anything commits, since its
+    * partition would be replaced without its stored rows.
+    *
+    * Every write, the first included, is ONE exchange: the touched
+    * existing rows (none on a first write) and the batch are
+    * hash-partitioned on `partitionCol`, and [[keepLatest]] groups on
+    * `keys` plus `partitionCol` on that same exchange. So each partition
+    * directory is written by exactly one task, as one file, and a key the
+    * batch carries twice is stored once. All rows of one partition value
+    * meet in one task: for the prices store that is at most one row per
+    * symbol per date, bounded by the market's universe. The partition
+    * value must be a function of the key (it is `date` itself for the
+    * prices store), so no key is split across partitions.
+    *
+    * The existing side keeps its inferred schema, so a column only one
+    * side has fails `unionByName` loudly instead of being null-filled or
+    * dropped. An empty `touched` reads nothing.
     */
   def upsertIntoPath(incoming: DataFrame, tablePath: String, keys: Seq[String],
-                     versionCol: String, partitionCol: String): Unit = {
-    val merged = readIfPresent(incoming.sparkSession, tablePath).fold(incoming) { existing =>
-      val touched = incoming.select(col(partitionCol)).distinct().collect().map(_.get(0))
-      if (touched.isEmpty) incoming
-      else upsert(existing.filter(col(partitionCol).isin(touched.toIndexedSeq: _*)),
-        incoming, keys, versionCol)
-    }
-    merged.write
+                     versionCol: String, partitionCol: String, touched: Seq[Any]): Unit = {
+    val part = col(partitionCol)
+    val batch = incoming
+      .withColumn(partitionCol, when(part.isNull || part.isInCollection(touched), part)
+        .otherwise(raise_error(concat(lit(s"$partitionCol "), part.cast("string"),
+          lit(" is not in the touched set")))))
+      .withColumn("__src", lit(1))
+    val existing =
+      if (touched.isEmpty) None
+      else readIfPresent(incoming.sparkSession, tablePath)
+        .map(_.filter(part.isInCollection(touched)).withColumn("__src", lit(0)))
+    keepLatest(existing.fold(batch)(_.unionByName(batch)).repartition(part),
+        (keys :+ partitionCol).distinct, struct(col(versionCol), col("__src")))
+      .drop("__src")
+      .write
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .mode(SaveMode.Overwrite)
       .parquet(tablePath)
   }
-
-  /** Small-file compaction — the reference's per-run VACUUM
-    * (downloader_tw.py:126, main.py:192). Rewrite with a target file
-    * count; on a cluster this is a per-partition coalesce sized to
-    * ~128 MB output files.
-    */
-  def compact(df: DataFrame, targetFiles: Int, outPath: String): Unit =
-    df.coalesce(targetFiles).write.mode(SaveMode.Overwrite).parquet(outPath)
 
   /** SCHEMA DIFF between two frames — the evolution linter a CI
     * contract check runs before a write lands: per column union,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -46,9 +46,18 @@ object Pipeline {
       .withColumn("symbol",
         upper(regexp_extract(input_file_name(), "([^/_]+)_[^/]*\\.csv$", 1)))
 
+  /** What [[dailySlice]] hands on. `rejections` (key, reason) and the
+    * one-row `summary` (n_symbols, end_date, total_rows, n_rejected) are
+    * local relations. `validBars` are the day bars of the symbols no
+    * gate rejects, one per (symbol, date), as (date, open, high, low,
+    * close, volume, symbol); `dates` are their distinct dates, the
+    * partitions a merge of them touches. `validBars` and the period
+    * frames read `held`, which the caller releases once they are written.
+    */
   final case class SliceOutputs(weekly: DataFrame, monthly: DataFrame,
                                 yearly: DataFrame, rejections: DataFrame,
-                                summary: DataFrame, held: DataFrame)
+                                summary: DataFrame, validBars: DataFrame,
+                                dates: Seq[Any], held: DataFrame)
 
   /** Run the validated resample slice over day bars
     * (symbol, date, open, high, low, close, volume).
@@ -64,21 +73,27 @@ object Pipeline {
     * Shape: ONE exchange, `hashpartitioning(symbol)`. On it, window
     * aggregates give every bar its symbol's V1 price verdict and V2 gap
     * verdict (the gap to the last in-window predecessor). Each pre-gate
-    * survivor's bar then fans out to its W, M and Y bucket, and every
-    * symbol gets one tally row; `groupBy(symbol, kind, period)`, the
-    * return window and the V3 window all cluster on `symbol`, so none
-    * needs another exchange. A pre-rejected symbol is never resampled:
-    * under ANSI, its zero close would make the return's division throw.
+    * survivor's bar then fans out to its W, M and Y bucket and to a D
+    * row of its own (symbol, date), and every symbol gets one tally row;
+    * `groupBy(symbol, kind, period)`, the return window and the V3
+    * window all cluster on `symbol`, so none needs another exchange. A
+    * pre-rejected symbol is never resampled: under ANSI, its zero close
+    * would make the return's division throw.
     *
-    * That tagged union (W+M+Y bars plus one verdict row per symbol) is
-    * `held`: a lazy local checkpoint, filled by the one driver action
-    * that collects the rejection set (at most one row per symbol) into a
-    * local relation. A checkpoint, not a persist, because it keeps the
-    * partitions adaptive execution coalesced, so each period write makes
-    * as many files as a fresh plan would. The period frames and the
-    * summary read `held`, not the input; the caller releases it with
-    * `Frames.release` once they are consumed. It holds about a quarter
-    * of the bars, never the store.
+    * That tagged union (W+M+Y bars, the D day bars and one verdict row
+    * per symbol, every row carrying its symbol's reason) is `held`: a
+    * lazy local checkpoint, filled by the one driver action of the
+    * slice. That action aggregates the verdict and D rows to one row:
+    * the rejection set (at most one row per symbol), the distinct dates
+    * of the valid bars (deduplicated on the executors, so the driver
+    * gets each date once) and the summary counts. Its only shuffle after
+    * the bars' is that aggregate's, one partial row per partition. A
+    * checkpoint, not a persist, because it keeps the partitions adaptive
+    * execution coalesced, so each period write makes as many files as a
+    * fresh plan would. The outputs read `held`, never the input, so the
+    * drop is scanned once; the caller releases it with `Frames.release`
+    * once they are consumed. It holds the drop's valid bars once plus
+    * about a quarter more, never the store.
     */
   def dailySlice(bars: DataFrame,
                  gapDays: Int = 14, gapSince: String = "2024-01-01"): SliceOutputs = {
@@ -100,7 +115,8 @@ object Pipeline {
     val tally = tag("S", lit(null).cast(DateType))
     val buckets = Seq(tag("W", Resample.weekEndFri(col("date"))),
       tag("M", Resample.monthEnd(col("date"))),
-      tag("Y", Resample.yearStart(col("date"))))
+      tag("Y", Resample.yearStart(col("date"))),
+      tag("D", col("date")))
     val bySeries = Window.partitionBy(col("symbol"), col("kind"))
       .orderBy(col("period"))
     val resampled = gated
@@ -114,7 +130,9 @@ object Pipeline {
         max(col("high")).as("high"),
         min(col("low")).as("low"),
         max_by(col("close"), col("ord")).as("close"),
-        sum(col("volume")).as("volume"),
+        // a (symbol, date) the drop repeats is one day bar, not a sum
+        when(col("__t.kind") === "D", max(col("volume")))
+          .otherwise(sum(col("volume"))).as("volume"),
         count(lit(1)).as("n_bars"),
         max(col("date")).as("end_date"),
         max(col("bad_price")).as("bad_price"),
@@ -123,7 +141,7 @@ object Pipeline {
       .withColumn("return",
         round(col("close") / lag(col("close"), 1).over(bySeries) - lit(1.0), 4))
       // V3 on every resampled bar of the pre-gate survivors
-      .withColumn("ohlc_bad", max(col("kind") =!= "S" &&
+      .withColumn("ohlc_bad", max(col("kind").isin("W", "M", "Y") &&
         (col("close") > col("high") || col("close") < col("low"))).over(bySymbol))
     val held = resampled.withColumn("reason",
         when(col("bad_price"), lit(Quality.ReasonInvalidPrice))
@@ -131,30 +149,48 @@ object Pipeline {
           .when(col("ohlc_bad"), lit(Quality.ReasonOhlcLogic)))
       .localCheckpoint(false)
 
-    val verdicts = held.filter(col("kind") === "S")
-    val rejected = verdicts.filter(col("reason").isNotNull)
-      .select(col("symbol").as("key"), col("reason"))
-    val rows = try rejected.collect() catch {
+    // the summary is over the valid bars: every bar but the pre-gate rejects'
+    val verdict = col("kind") === "S"
+    val counted = verdict &&
+      (col("reason").isNull || col("reason") === Quality.ReasonOhlcLogic)
+    val stats = held.filter(col("kind").isin("S", "D"))
+      .agg(
+        collect_list(when(verdict && col("reason").isNotNull,
+          struct(col("symbol").as("key"), col("reason")))).as("rejected"),
+        collect_set(when(col("kind") === "D" && col("reason").isNull, col("period")))
+          .as("dates"),
+        count(when(counted, lit(1))).as("n_symbols"),
+        max(when(counted, col("end_date"))).as("end_date"),
+        coalesce(sum(when(counted, col("n_bars"))), lit(0L)).as("total_rows"))
+    val row = try stats.first() catch {
       case e: Throwable => Frames.release(held); throw e
     }
-    val rejections = bars.sparkSession.createDataFrame(rows.toSeq.asJava, rejected.schema)
+    val spark = bars.sparkSession
+    val rows = row.getSeq[Row](0)
+    val rejections = spark.createDataFrame(rows.asJava,
+      stats.schema("rejected").dataType.asInstanceOf[ArrayType]
+        .elementType.asInstanceOf[StructType])
 
-    def period(kind: String): DataFrame =
+    def valid(kind: String): DataFrame =
       held.filter(col("kind") === kind && col("reason").isNull)
-        .select("symbol", "period", "open", "high", "low", "close", "volume", "return")
-    // over the valid bars: every bar but the pre-gate rejects'
-    val summary = verdicts
-      .filter(col("reason").isNull || col("reason") === Quality.ReasonOhlcLogic)
-      .agg(count(lit(1)).as("n_symbols"), max(col("end_date")).as("end_date"),
-        coalesce(sum(col("n_bars")), lit(0L)).as("total_rows"))
-      .withColumn("n_rejected", lit(rows.length.toLong))
+    def period(kind: String): DataFrame =
+      valid(kind).select("symbol", "period", "open", "high", "low", "close", "volume", "return")
+    val validBars = valid("D").select(col("period").as("date") +:
+      Seq("open", "high", "low", "close", "volume", "symbol").map(col): _*)
+    val summary = spark.createDataFrame(
+      Seq(Row(row.get(2), row.get(3), row.get(4), rows.length.toLong)).asJava,
+      StructType(stats.schema.fields.drop(2) :+
+        StructField("n_rejected", LongType, nullable = false)))
 
-    SliceOutputs(period("W"), period("M"), period("Y"), rejections, summary, held)
+    SliceOutputs(period("W"), period("M"), period("Y"), rejections, summary,
+      validBars, row.getSeq[Any](1), held)
   }
 
   /** K3/K4: persist the slice — one parquet dataset per period plus an
     * append-only audit row (reference downloader_wmy.py:62-83,165-167).
-    * Returns the number of rejected symbols the audit row records.
+    * The counts come from the slice's local summary, so only the writes
+    * run jobs. Returns the number of rejected symbols the audit row
+    * records.
     */
   def writeSlice(out: SliceOutputs, root: String, marketId: String): Long = {
     out.weekly.write.mode("overwrite").parquet(s"$root/weekly")

@@ -11,9 +11,10 @@ import graft.ops.Cols.{dec, fdiv, tdiv}
   * machine-readable reason (V1–V5 in SURVEY §2.11).
   *
   * Shape: every validator computes a per-key verdict as ONE aggregate pass
-  * (no per-key loops, no collect), returns the rejection table
-  * (key, reason), and clean data = input anti-joined against rejections —
-  * at scale the anti-join broadcasts the (small) rejection key set.
+  * (no per-key loops, no collect) and returns the rejection table
+  * (key, reason). The daily lifecycle's gates run inside
+  * `Pipeline.dailySlice`, whose held rows carry each symbol's verdict, so
+  * its clean data is a filter on that verdict, not an anti-join.
   */
 object Quality {
 
@@ -104,13 +105,6 @@ object Quality {
       .agg(count(lit(1)).as("n_bins"),
         round((sum(col("term_fp")).cast("double") / 1000000d)
           .cast("decimal(20,10)"), 4).cast("double").as("psi"))
-
-  /** Remove all rows belonging to rejected keys — rejection key sets are
-    * tiny relative to the fact table, so broadcast the anti-join side.
-    */
-  def excludeRejected(df: DataFrame, key: Column, rejections: DataFrame): DataFrame =
-    df.join(broadcast(rejections.select(col("key"))),
-      key === col("key"), "left_anti")
 
   /** Order-free table CHECKSUM for replica/rebuild reconciliation: the
     * XOR of a portable 60-bit row hash plus the row count — two tables

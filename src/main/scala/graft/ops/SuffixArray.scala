@@ -283,8 +283,13 @@ object SuffixArray {
     * N−1 pairs, never a quadratic compare. Output: (rank_sa, doc_a,
     * pos_a, doc_b, pos_b, lcp) where the `a` suffix holds SA index
     * rank_sa and `b` is its successor.
+    *
+    * Every third level is eagerly localCheckpointed, and each such
+    * checkpoint is released once the next one is taken. The last one,
+    * which the returned pairs read, is returned beside them: release it
+    * once the pairs are materialized.
     */
-  def adjacentLcp(b: Built, numDocs: Long): DataFrame = {
+  def adjacentLcp(b: Built, numDocs: Long): (DataFrame, Option[DataFrame]) = {
     val real = b.sa.filter(!col("sent"))
       .select((col("rank") - numDocs).as("rank_sa"), col("gpos"),
         col("doc_id"), col("pos"))
@@ -297,6 +302,7 @@ object SuffixArray {
         col("gpos_b"), col("doc_b"), col("pos_b"))
       .withColumn("lcp", lit(0L))
     val descent = b.tables.dropRight(1).reverse
+    var pinned = Option.empty[DataFrame]
     for (((len, tbl), i) <- descent.zipWithIndex) {
       val ra = tbl.select(col("gpos").as("qa"), col("rank").as("rka"))
       val rb = tbl.select(col("gpos").as("qb"), col("rank").as("rkb"))
@@ -307,10 +313,13 @@ object SuffixArray {
         .withColumn("lcp", when(col("rka") === col("rkb"),
           col("lcp") + len).otherwise(col("lcp")))
         .drop("qa", "qb", "rka", "rkb")
-      if ((i + 1) % 3 == 0 && i != descent.size - 1)
+      if ((i + 1) % 3 == 0 && i != descent.size - 1) {
         p = p.localCheckpoint(true)
+        pinned.foreach(Frames.release)
+        pinned = Some(p)
+      }
     }
-    p
+    (p, pinned)
   }
 
   /** Lee et al.'s dedup-mass read over `spans` (doc_id, pos, l) — the

@@ -201,8 +201,9 @@ object Streams {
                   keys: Seq[String], versionCol: String,
                   partitionCol: String): Unit =
     drain(in, checkpoint, OutputMode.Update) { (batch, _) =>
+      val touched = batch.select(col(partitionCol)).distinct().collect().map(_.get(0))
       graft.ops.Merge.upsertIntoPath(batch, tablePath, keys,
-        versionCol, partitionCol)
+        versionCol, partitionCol, touched.toIndexedSeq)
     }
 
   /** Streaming distinct-count sketching: fold each micro-batch's HLL

@@ -81,6 +81,7 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 1L))
       .toDF("src", "dst")
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val blocksBefore = org.apache.spark.RddBlocks.live(spark.sparkContext)
     // 7 iterations checkpoint at rounds 3, 6 and 7
     val pr = Graph.pageRank(edges, 7)
     assert(pr.count() == 4L)
@@ -88,6 +89,8 @@ class GraphSpec extends SparkSpec {
     val own = pr.queryExecution.logical
       .collect { case r: LogicalRDD => r.rdd.id }.toSet
     assert(own.size == 1 && left == own, s"left $left, result owns $own")
+    val blocksLeft = org.apache.spark.RddBlocks.live(spark.sparkContext) -- blocksBefore
+    assert(blocksLeft == own, s"blocks left $blocksLeft, result owns $own")
   }
 
   test("pageRank iterations are deterministic: same input, identical bits") {
@@ -207,6 +210,7 @@ class GraphSpec extends SparkSpec {
     val chain = (0L until 9L).map(i => (i, i + 1, i + 1))
     val es = (chain :+ ((0L, 3L, 100L))).toDF("src", "dst", "ts")
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val blocksBefore = org.apache.spark.RddBlocks.live(spark.sparkContext)
     val out = Graph.temporalEarliestArrival(es, Seq(0L).toDF("id"), 7)
     val got = out.as[(Long, Long)].collect().toMap
     assert(got == (0L to 7L).map(i => i -> i).toMap, s"arrivals: $got")
@@ -214,6 +218,8 @@ class GraphSpec extends SparkSpec {
     val own = out.queryExecution.logical
       .collect { case r: LogicalRDD => r.rdd.id }.toSet
     assert(own.size == 1 && left == own, s"left $left, result owns $own")
+    val blocksLeft = org.apache.spark.RddBlocks.live(spark.sparkContext) -- blocksBefore
+    assert(blocksLeft == own, s"blocks left $blocksLeft, result owns $own")
   }
 
   test("degreeAssortativity: a star is perfectly disassortative (r = " +

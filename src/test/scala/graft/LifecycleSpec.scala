@@ -107,10 +107,12 @@ class LifecycleSpec extends SparkSpec {
       val root = tmp.getAbsolutePath + "/wh"
       val bad = MarketConfig("bad", badDir.getAbsolutePath, root, 1, asOf = "2024-01-02")
       val ok = MarketConfig("ok", okDir.getAbsolutePath, root, 1, asOf = "2024-01-04")
-      def leaked(before: Set[Int]): Set[Int] =
-        spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      // by the persistent-RDD map and by the block manager master's blocks
+      def live(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet ++
+        org.apache.spark.RddBlocks.live(spark.sparkContext)
+      def leaked(before: Set[Int]): Set[Int] = live() -- before
 
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val before = live()
       Lifecycle.run(spark, Seq(bad, ok))
       assert(leaked(before).isEmpty)
 
@@ -129,6 +131,32 @@ class LifecycleSpec extends SparkSpec {
           .otherwise($"close"))
       intercept[Exception](Pipeline.dailySlice(boom))
       assert(leaked(before).isEmpty)
+    }
+  }
+
+  test("each market-day's CSV drop is read by one stage only") {
+    withTempDir { tmp =>
+      val dir = new java.io.File(tmp, "csv")
+      writeCsv(dir, "2330_day.csv", Seq(
+        "2024-01-02,10,12,9,11,100", "2024-01-03,11,13,10,12,100"))
+      writeCsv(dir, "badp_day.csv", Seq("2024-01-02,10,12,9,-5,100"))
+      val cfg = MarketConfig("tw", dir.getAbsolutePath, tmp.getAbsolutePath + "/wh", 1,
+        asOf = "2024-01-03")
+      // per run: the stages whose RDDs include a CSV file scan
+      def csvStages(run: => Any): Int = {
+        val n = new java.util.concurrent.atomic.AtomicInteger
+        listening(new org.apache.spark.scheduler.SparkListener {
+          override def onStageCompleted(
+              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+            if (e.stageInfo.rddInfos.exists(_.scope.exists(_.name.startsWith("Scan csv"))))
+              n.incrementAndGet(): Unit
+        })(run)
+        n.get
+      }
+      // a first write, then a merge into the stored dates
+      assert(csvStages(Lifecycle.runMarket(spark, cfg)) == 1)
+      assert(csvStages(Lifecycle.runMarket(spark, cfg.copy(asOf = "2024-01-04"))) == 1)
+      assert(spark.read.parquet(Lifecycle.pricesPath(cfg)).count() == 2)
     }
   }
 

@@ -9,6 +9,11 @@ class MergeSpec extends SparkSpec {
   private def batch(rows: (String, String, Double, Long)*) =
     rows.toDF("symbol", "date", "close", "version")
 
+  /** upsertIntoPath on (symbol, date), touching the batch's own dates. */
+  private def merge(inc: org.apache.spark.sql.DataFrame, path: String): Unit =
+    Merge.upsertIntoPath(inc, path, Seq("symbol", "date"), "version", "date",
+      inc.select($"date").distinct().as[String].collect().toSeq)
+
   test("upsert: newer version wins per key, old rows survive") {
     val existing = batch(("A", "2024-01-01", 10.0, 0L), ("A", "2024-01-02", 11.0, 0L))
     val incoming = batch(("A", "2024-01-02", 99.0, 1L), ("A", "2024-01-03", 12.0, 1L))
@@ -59,7 +64,7 @@ class MergeSpec extends SparkSpec {
       val before = day1.listFiles().map(f => (f.getName, f.lastModified)).toSet
 
       val inc = batch(("A", "2024-01-02", 99.0, 1L))
-      Merge.upsertIntoPath(inc, path, Seq("symbol", "date"), "version", "date")
+      merge(inc, path)
 
       val after = day1.listFiles().map(f => (f.getName, f.lastModified)).toSet
       assert(before == after, "untouched partition must not be rewritten")
@@ -81,8 +86,7 @@ class MergeSpec extends SparkSpec {
         override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
       }) {
-        Merge.upsertIntoPath(batch(("A", "2024-01-02", 99.0, 1L)), path,
-          Seq("symbol", "date"), "version", "date")
+        merge(batch(("A", "2024-01-02", 99.0, 1L)), path)
       }
       // the two stored rows of 2024-01-02; the batch is a local relation
       assert(read.get == 2)
@@ -101,8 +105,7 @@ class MergeSpec extends SparkSpec {
       batch(("A", "2024-01-01", 10.0, 0L)).withColumn("note", lit("x"))
         .write.partitionBy("date").parquet(path)
       intercept[org.apache.spark.sql.AnalysisException] {
-        Merge.upsertIntoPath(batch(("A", "2024-01-01", 99.0, 1L)), path,
-          Seq("symbol", "date"), "version", "date")
+        merge(batch(("A", "2024-01-01", 99.0, 1L)), path)
       }
       val kept = spark.read.parquet(path).select($"close", $"note")
         .as[(Double, String)].collect().toSeq
@@ -114,7 +117,7 @@ class MergeSpec extends SparkSpec {
     withTempDir { dir =>
       val path = dir.getAbsolutePath + "/prices"
       val b0 = batch(("A", "2024-01-01", 10.0, 0L), ("A", "2024-01-02", 11.0, 0L))
-      Merge.upsertIntoPath(b0, path, Seq("symbol", "date"), "version", "date")
+      merge(b0, path)
       val before = spark.read.parquet(path)
         .select($"date".cast("string"), $"close").as[(String, Double)].collect().toSet
 
@@ -124,7 +127,7 @@ class MergeSpec extends SparkSpec {
         .withColumn("close",
           when($"close" === 12.0, raise_error(lit("disk full"))).otherwise($"close"))
       intercept[Exception] {
-        Merge.upsertIntoPath(bomb, path, Seq("symbol", "date"), "version", "date")
+        merge(bomb, path)
       }
 
       // dynamic partition overwrite only swaps partitions at job commit,
@@ -139,7 +142,7 @@ class MergeSpec extends SparkSpec {
     withTempDir { dir =>
       val path = dir.getAbsolutePath + "/prices"
       val b0 = batch(("A", "2024-01-01", 10.0, 0L))
-      Merge.upsertIntoPath(b0, path, Seq("symbol", "date"), "version", "date")
+      merge(b0, path)
       // corrupt the store: an unreadable footer is NOT path-not-found, so
       // the probe must propagate instead of treating the table as absent
       // (which would silently drop history)
@@ -149,7 +152,7 @@ class MergeSpec extends SparkSpec {
       }
       val inc = batch(("A", "2024-01-02", 11.0, 1L))
       intercept[Exception] {
-        Merge.upsertIntoPath(inc, path, Seq("symbol", "date"), "version", "date")
+        merge(inc, path)
       }
       // the (corrupt) original bytes are still there — nothing was replaced
       assert(part.listFiles().exists(_.getName.endsWith(".parquet")))
@@ -172,8 +175,7 @@ class MergeSpec extends SparkSpec {
     root.addAppender(capture)
     try withTempDir { dir =>
       val path = dir.getAbsolutePath + "/prices"
-      Merge.upsertIntoPath(batch(("A", "2024-01-01", 10.0, 0L)), path,
-        Seq("symbol", "date"), "version", "date")
+      merge(batch(("A", "2024-01-01", 10.0, 0L)), path)
       assert(spark.read.parquet(path).count() == 1L)
       def chain(t: Throwable): Seq[Throwable] =
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
@@ -194,16 +196,77 @@ class MergeSpec extends SparkSpec {
     spark.conf.set(key, "STATIC")
     try withTempDir { dir =>
       val path = dir.getAbsolutePath + "/prices"
-      Merge.upsertIntoPath(batch(("A", "2024-01-01", 10.0, 0L)), path,
-        Seq("symbol", "date"), "version", "date")
-      Merge.upsertIntoPath(batch(("A", "2024-01-02", 11.0, 1L)), path,
-        Seq("symbol", "date"), "version", "date")
+      merge(batch(("A", "2024-01-01", 10.0, 0L)), path)
+      merge(batch(("A", "2024-01-02", 11.0, 1L)), path)
       assert(spark.conf.get(key) == "STATIC")
       // a static overwrite would have dropped the untouched partition
       val out = spark.read.parquet(path)
         .select($"date".cast("string"), $"close").as[(String, Double)].collect().toSet
       assert(out == Set(("2024-01-01", 10.0), ("2024-01-02", 11.0)))
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("upsertIntoPath: a first write stores one row per key, the newer version") {
+    withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      merge(batch(("A", "2024-01-01", 10.0, 0L), ("A", "2024-01-01", 12.0, 1L),
+        ("B", "2024-01-01", 20.0, 0L)), path)
+      val out = spark.read.parquet(path).select($"symbol", $"close")
+        .as[(String, Double)].collect().toSeq.sorted
+      assert(out == Seq(("A", 12.0), ("B", 20.0)))
+    }
+  }
+
+  test("upsertIntoPath: a batch row outside the touched set fails the write " +
+      "and leaves the table as it was") {
+    withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      merge(batch(("A", "2024-01-01", 10.0, 0L), ("A", "2024-01-02", 11.0, 0L)), path)
+      intercept[Exception] {
+        Merge.upsertIntoPath(batch(("A", "2024-01-01", 99.0, 1L), ("A", "2024-01-02", 98.0, 1L)),
+          path, Seq("symbol", "date"), "version", "date", Seq("2024-01-01"))
+      }
+      val out = spark.read.parquet(path)
+        .select($"date".cast("string"), $"close").as[(String, Double)].collect().toSet
+      assert(out == Set(("2024-01-01", 10.0), ("2024-01-02", 11.0)))
+    }
+  }
+
+  test("upsertIntoPath shuffles once, on the partition column, and keepLatest " +
+      "reuses that exchange: first write and merge alike") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val capture = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+          writes.add(qe): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    withTempDir { dir =>
+      val path = dir.getAbsolutePath + "/prices"
+      spark.listenerManager.register(capture)
+      try {
+        merge(batch(("A", "2024-01-01", 10.0, 0L), ("B", "2024-01-02", 20.0, 0L)), path)
+        merge(batch(("A", "2024-01-02", 11.0, 1L), ("A", "2024-01-03", 12.0, 1L)), path)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(capture)
+    }
+    assert(writes.size == 2)
+    writes.forEach { qe =>
+      val shuffles = Plans.collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }
+      assert(shuffles.size == 1, qe.executedPlan)
+      val keys = shuffles.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => Seq(other.toString)
+      }
+      assert(keys == Seq("date"), qe.executedPlan)
+    }
   }
 
   test("reconcile: exact cent classification with tolerance, missing keys both ways") {

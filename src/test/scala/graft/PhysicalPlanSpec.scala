@@ -19,28 +19,40 @@ class PhysicalPlanSpec extends SparkSpec {
     for (q <- Seq("q324_er_stream", "q330_dedup_stream",
         "q353_ann_refresh_stream")) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
+      val blocksBefore = org.apache.spark.RddBlocks.live(spark.sparkContext)
       SparkEntry.queries(q)(spark, dir).collect()
       spark.catalog.clearCache()
       val left = spark.sparkContext.getPersistentRDDs.toMap -- before
       assert(left.isEmpty, s"$q left: ${left.values.mkString(", ")}")
+      val blocksLeft = org.apache.spark.RddBlocks.live(spark.sparkContext) -- blocksBefore
+      assert(blocksLeft.isEmpty, s"$q left blocks of RDDs $blocksLeft")
     }
   }
 
   test("exact-span queries keep only what their result reads: q356, " +
       "q358, q359 and q372 leave at most their final frame; q357 frees " +
       "its build once its pairs are checkpointed") {
-    def left(q: String): Int = {
+    /** RDDs the query leaves persisted: by the persistent-RDD map and by
+      * the blocks the block manager master still tracks. */
+    def left(q: String): (Int, Int) = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
+      val blocksBefore = org.apache.spark.RddBlocks.live(spark.sparkContext)
       SparkEntry.queries(q)(spark, dir).collect()
       spark.catalog.clearCache()
-      (spark.sparkContext.getPersistentRDDs.toMap -- before).size
+      ((spark.sparkContext.getPersistentRDDs.toMap -- before).size,
+        (org.apache.spark.RddBlocks.live(spark.sparkContext) -- blocksBefore).size)
     }
     for (q <- Seq("q356_suffix_array", "q358_dup_span_coverage",
-        "q359_repeat_families", "q372_excise_spans"))
-      assert(left(q) <= 1, q)
+        "q359_repeat_families", "q372_excise_spans")) {
+      val (persisted, withBlocks) = left(q)
+      assert(persisted <= 1 && withBlocks <= 1, s"$q: $persisted, $withBlocks")
+    }
     // holding every build round beside its pairs, q357 kept 11
-    // checkpoints at sf0.001 (blocks counted with the cleaner off)
-    assert(left("q357_repeated_spans") < 11)
+    // checkpoints at sf0.001 (blocks counted with the cleaner off), and
+    // 3 LCP descent checkpoints once its build was freed; now only the
+    // pairs' own checkpoint, which the result reads
+    val (persisted, withBlocks) = left("q357_repeated_spans")
+    assert(persisted <= 1 && withBlocks == 1, s"q357: $persisted, $withBlocks")
   }
 
   test("dedup bias joins on fingerprint AND kept id — no trivially true " +

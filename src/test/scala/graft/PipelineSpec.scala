@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Frames, Merge, Pipeline}
+import graft.ops.{Frames, Lifecycle, Pipeline}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
@@ -49,11 +49,14 @@ class PipelineSpec extends SparkSpec {
       writeCsv(dir, "gappy_day.csv",
         Seq("2024-01-02,10,12,9,11,100", "2024-01-22,10,12,9,11,100"))
 
-      val shuffles = new java.util.concurrent.atomic.AtomicInteger
+      // (records read from files, records shuffled) of each shuffling stage
+      val shuffles = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
       val out = listening(new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
-            shuffles.incrementAndGet(): Unit
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          val m = e.stageInfo.taskMetrics
+          if (m.shuffleWriteMetrics.recordsWritten > 0)
+            shuffles.add((m.inputMetrics.recordsRead, m.shuffleWriteMetrics.recordsWritten)): Unit
+        }
       }) {
         Pipeline.dailySlice(Pipeline.ingestCsvDir(spark, dir.getAbsolutePath))
       }
@@ -86,8 +89,12 @@ class PipelineSpec extends SparkSpec {
       assert(sm == ((1L, 10L, 3L)))
 
       // the slice is materialized once, through exactly one shuffle of
-      // the bars, and no output scans a file
-      assert(shuffles.get == 1)
+      // the bars (the stage that scans the drop); the only other shuffle
+      // carries the one-row summary aggregate's partials, at most one per
+      // partition; and no output scans a file
+      val (scanned, partials) = shuffles.toArray(Array.empty[(Long, Long)]).partition(_._1 > 0)
+      assert(scanned.length == 1 && partials.length == 1 && partials.head._2 <= 4,
+        shuffles)
       def scans(df: org.apache.spark.sql.DataFrame): Int =
         df.queryExecution.optimizedPlan.collectLeaves()
           .count(_.isInstanceOf[LogicalRelation])
@@ -121,12 +128,22 @@ class PipelineSpec extends SparkSpec {
       writeCsv(dir, "ohlc_day.csv", Seq(
         "2024-01-03,10,12,9,11,100", "2024-01-04,10,12,9,99,100"))
 
-      val out = Pipeline.dailySlice(
-        Pipeline.ingestCsvDir(spark, dir.getAbsolutePath))
+      val in = Pipeline.ingestCsvDir(spark, dir.getAbsolutePath)
+      val out = Pipeline.dailySlice(in)
 
       assert(out.rejections.as[(String, String)].collect().toMap == Map(
         "ZERO" -> "invalid_price", "MULTI" -> "invalid_price",
         "GAPOHLC" -> "gap_20d", "OHLC" -> "ohlc_logic_error"))
+
+      // the valid day bars: the non-null-OHLC bars of the symbols no gate
+      // rejects, DUP's repeated 2024-01-09 bar once
+      val expected = Reference.excludeRejected(
+        in.na.drop(Seq("open", "high", "low", "close")), $"symbol", out.rejections)
+      assert(out.validBars.columns.toSeq == in.columns.toSeq)
+      assert(out.validBars.collect().toSeq.sortBy(_.toString) ==
+        expected.distinct().collect().toSeq.sortBy(_.toString))
+      assert(out.dates.map(_.toString).toSet ==
+        expected.select($"date".cast("string")).as[String].collect().toSet)
 
       def bars(df: org.apache.spark.sql.DataFrame) =
         df.select($"symbol", $"period".cast("string"), $"open", $"high", $"low",
@@ -219,15 +236,40 @@ class PipelineSpec extends SparkSpec {
     assert(once.filter($"sector".isNull && $"market".isNull).count() == 1)
   }
 
-  test("compact rewrites to a bounded file count") {
+  test("the prices store keeps one parquet file per date partition") {
+    // after a backfill read from several files and input splits, and
+    // again after a daily merge into the stored dates
     withTempDir { dir =>
-      val path = dir.getAbsolutePath + "/t"
-      spark.range(1000).repartition(8).write.parquet(path)
-      assert(new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet")) == 8)
-      val out = dir.getAbsolutePath + "/compacted"
-      Merge.compact(spark.read.parquet(path), 2, out)
-      assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 2)
-      assert(spark.read.parquet(out).count() == 1000)
+      val days = (0 until 20).map(java.time.LocalDate.parse("2024-01-01").plusDays(_))
+      val backfill = new java.io.File(dir, "backfill"); backfill.mkdirs()
+      val daily = new java.io.File(dir, "daily"); daily.mkdirs()
+      for (sym <- Seq("aaa", "bbb", "ccc", "ddd")) {
+        writeCsv(backfill, s"${sym}_day.csv", days.map(d => s"$d,10,12,9,11,100"))
+        // re-sends the last two days with revised closes, and one new day
+        writeCsv(daily, s"${sym}_day.csv", (days.takeRight(2) :+ days.last.plusDays(1))
+          .map(d => s"$d,10,12,9,10.5,100"))
+      }
+      val cfg = Lifecycle.MarketConfig("tw", backfill.getAbsolutePath,
+        dir.getAbsolutePath + "/wh", 4, asOf = "2024-01-20")
+      val prices = new java.io.File(Lifecycle.pricesPath(cfg))
+      def filesPerDate(): Map[String, Int] =
+        prices.listFiles().filter(_.getName.startsWith("date=")).map(d =>
+          d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+      val key = "spark.sql.files.maxPartitionBytes"
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, "256")
+      try {
+        // each ~650-byte file is read as three splits
+        assert(Pipeline.ingestCsvDir(spark, backfill.getAbsolutePath)
+          .rdd.getNumPartitions >= 8)
+        Lifecycle.runMarket(spark, cfg)
+        assert(filesPerDate() == days.map(d => s"date=$d" -> 1).toMap)
+        val (day, _) = Lifecycle.runMarket(spark,
+          cfg.copy(csvDir = daily.getAbsolutePath, asOf = "2024-01-21"))
+        assert(filesPerDate() == (days :+ days.last.plusDays(1)).map(d => s"date=$d" -> 1).toMap)
+        assert(day.totalRows == 4 * 21)
+        assert(spark.read.parquet(prices.getPath).filter($"close" === 10.5).count() == 4 * 3)
+      } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 }

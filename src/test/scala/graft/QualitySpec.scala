@@ -39,7 +39,7 @@ class QualitySpec extends SparkSpec {
     val bad = Quality.ohlcViolationKeys(bars, $"symbol", $"low", $"close", $"high")
     assert(bad.as[(String, String)].collect().toSet ==
       Set(("B", "ohlc_logic_error"), ("C", "ohlc_logic_error")))
-    val clean = Quality.excludeRejected(bars, $"symbol", bad)
+    val clean = Reference.excludeRejected(bars, $"symbol", bad)
     assert(clean.select("symbol").as[String].collect().toSeq == Seq("A"))
   }
 

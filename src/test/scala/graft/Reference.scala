@@ -12,6 +12,17 @@ import graft.ops.{Cols, Dedup, Multimodal, Ranks, Sampling, Similarity, SuffixAr
   */
 object Reference {
 
+  // ----- Quality: the valid bars as the gates' complement -----
+
+  /** Remove all rows belonging to rejected keys — the anti-join the
+    * lifecycle ran over the drop before `Pipeline.dailySlice` carried
+    * its valid day bars; rejection key sets are tiny relative to the
+    * fact table, so the anti-join side is broadcast.
+    */
+  def excludeRejected(df: DataFrame, key: Column, rejections: DataFrame): DataFrame =
+    df.join(broadcast(rejections.select(col("key"))),
+      key === col("key"), "left_anti")
+
   // ----- Dedup: the HOF forms of the native minhash and simhash -----
 
   /** MinHash signature over a shingle-string array: each element hashes
@@ -197,7 +208,7 @@ object Reference {
     */
   def longestCrossMatch(b: SuffixArray.Built, numDocs: Long,
                         isTrain: Column => Column): DataFrame = {
-    val pairs = SuffixArray.adjacentLcp(b, numDocs).select(col("rank_sa"), col("lcp"))
+    val pairs = SuffixArray.adjacentLcp(b, numDocs)._1.select(col("rank_sa"), col("lcp"))
     val real = b.sa.filter(!col("sent"))
       .select((col("rank") - numDocs).as("rank_sa"), col("doc_id"),
         col("pos"))

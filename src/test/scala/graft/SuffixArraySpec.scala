@@ -89,7 +89,7 @@ class SuffixArraySpec extends SparkSpec {
         (i.toLong, da, pa, db, pb,
           refLcp(byDoc(da).drop(pa.toInt), byDoc(db).drop(pb.toInt)))
     }.toSet
-    val got = SuffixArray.adjacentLcp(b, c.numDocs)
+    val got = SuffixArray.adjacentLcp(b, c.numDocs)._1
       .select(col("rank_sa"), col("doc_a"), col("pos_a"),
         col("doc_b"), col("pos_b"), col("lcp"))
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet

@@ -512,12 +512,15 @@ class TextDedupSpec extends SparkSpec {
     // adopt + pointer-jump rounds checkpoint and hand over
     val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val blocksBefore = org.apache.spark.RddBlocks.live(spark.sparkContext)
     val labels = Dedup.duplicateClusters(pairs)
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 1L))
     val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     val own = labels.queryExecution.logical
       .collect { case r: LogicalRDD => r.rdd.id }.toSet
     assert(own.size == 1 && left == own, s"left $left, labels own $own")
+    val blocksLeft = org.apache.spark.RddBlocks.live(spark.sparkContext) -- blocksBefore
+    assert(blocksLeft == own, s"blocks left $blocksLeft, labels own $own")
   }
 
   test("duplicateClusters: a chain far deeper than maxIter rounds still converges") {
